@@ -33,13 +33,17 @@ LANG_ORDER = ["en", "de", "fr", "es"]  # deterministic tie-break priority
 # ASCII flag: the Spark exprs (Java \s) and DuckDB oracle (RE2 \s) treat
 # only ASCII whitespace as separators; the Python twin must match exactly
 # or non-ASCII text (e.g. NBSP, 'für') breaks the three-way parity.
-_TOKEN_RE = re.compile(r"\S+", re.ASCII)
 _NORM_WS_RE = re.compile(r"\s+", re.ASCII)
 _ALPHA_RE = re.compile(r"[A-Za-z]")
 
 
 def tokenize(text: str) -> list[str]:
-    return _TOKEN_RE.findall(text or "")
+    """Split on ASCII whitespace runs after trimming spaces — the exact
+    shape of the Spark expr and the SQL twin: their trim removes only ' ',
+    so a leading or trailing tab or newline yields one empty token, and
+    text of tabs or newlines alone is two empty tokens."""
+    t = (text or "").strip(" ")
+    return _NORM_WS_RE.split(t) if t else []
 
 
 def token_count(text: str) -> int:

@@ -8,7 +8,12 @@ All distributed-first designs:
     path (candidate pairs only materialize for co-occurring shingles, never
     the O(n²) cross product).
   * MinHash + LSH: per-doc signature = min over shingles of seeded sha256
-    (engine-independent hex min) → band → bucket groupBy → candidate pairs.
+    (engine-independent hex min) or xxhash64 → band → bucket groupBy →
+    candidate pairs. The curate path verifies inside the same fold
+    (lsh_verified_pairs): bucket rows carry each member's shingle set and
+    the in-bucket pairs are scored before they are flattened, so no pair
+    rows are shuffled; shuffle volume is one shingle set per document and
+    band, not one row per candidate pair.
   * SimHash: 64-bit signature pUDF + hamming-band bucketing.
   * embedding cosine near-dup / ANN: see similarity.py.
 """
@@ -39,6 +44,17 @@ def exact_duplicates(df: DataFrame, id_col: str = "doc_id",
               .filter(F.col("dup_count") > 1))
 
 
+def _normalized_docs(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(id, _norm): the small-input fan-out (session.fanout_small), then
+    the normalized text projected once — Catalyst does not CSE the
+    normalization regex through the higher-order shingle expression."""
+    from docext_spark.operators.textops import normalized
+    from docext_spark.session import fanout_small
+    raw = fanout_small(df.select(F.col(id_col).alias("id"),
+                                 F.col(text_col).alias("_txt")))
+    return raw.select("id", normalized(F.col("_txt")).alias("_norm"))
+
+
 def shingle_table(df: DataFrame, id_col: str = "doc_id",
                   text_col: str = "text", n: int = 3) -> DataFrame:
     """(id, shingle) distinct pairs.
@@ -50,11 +66,7 @@ def shingle_table(df: DataFrame, id_col: str = "doc_id",
     through the higher-order shingle expression), AFTER a small-input
     fan-out (session.fanout_small) so the regex + shingle construction can
     use every core when the scan's effective parallelism is degenerate."""
-    from docext_spark.operators.textops import normalized
-    from docext_spark.session import fanout_small
-    raw = fanout_small(df.select(F.col(id_col).alias("id"),
-                                 F.col(text_col).alias("_txt")))
-    pre = raw.select("id", normalized(F.col("_txt")).alias("_norm"))
+    pre = _normalized_docs(df, id_col, text_col)
     return pre.select(
         "id",
         F.explode(F.array_distinct(
@@ -299,6 +311,26 @@ def lsh_plan(threshold: float, num_hashes: int = 16) -> dict:
             "curve_threshold": round(best[2], 4)}
 
 
+def _band_keys(sigs: list[Column], bands: int, engine: str) -> Column:
+    """array<struct<band, key>> over the signature components ``sigs``:
+    band b hashes components b*r .. b*r+r-1 (r = len(sigs) // bands) with
+    the signature's engine. The one banding scheme behind lsh_banded and
+    lsh_verified_pairs, so their bucket sets cannot drift."""
+    num_hashes = len(sigs)
+    if num_hashes % bands != 0:
+        raise ValueError(
+            f"num_hashes ({num_hashes}) must be divisible by bands ({bands}) "
+            "or trailing signature components would be silently unused")
+    rows_per_band = num_hashes // bands
+    band_cols = []
+    for b in range(bands):
+        cols = sigs[b * rows_per_band:(b + 1) * rows_per_band]
+        key = (F.xxhash64(*cols) if engine == "xxhash64"
+               else F.sha2(F.concat_ws("|", *cols), 256))
+        band_cols.append(F.struct(F.lit(b).alias("band"), key.alias("key")))
+    return F.array(*band_cols)
+
+
 def lsh_banded(df: DataFrame, id_col: str = "doc_id",
                text_col: str = "text", num_hashes: int = 16,
                bands: int = 4, n: int = 3,
@@ -307,19 +339,10 @@ def lsh_banded(df: DataFrame, id_col: str = "doc_id",
     candidate self-join. Exposed so flood diagnostics (bucket-size
     histograms, hot-bucket audits) share the exact banding scheme with
     lsh_candidate_pairs and cannot drift from it."""
-    if num_hashes % bands != 0:
-        raise ValueError(
-            f"num_hashes ({num_hashes}) must be divisible by bands ({bands}) "
-            "or trailing signature components would be silently unused")
+    keys = _band_keys([F.col(f"sig_{s}") for s in range(num_hashes)],
+                      bands, engine)
     sigs = minhash_signatures(df, id_col, text_col, num_hashes, n, engine)
-    rows_per_band = num_hashes // bands
-    band_cols = []
-    for b in range(bands):
-        cols = [F.col(f"sig_{b * rows_per_band + r}") for r in range(rows_per_band)]
-        key = (F.xxhash64(*cols) if engine == "xxhash64"
-               else F.sha2(F.concat_ws("|", *cols), 256))
-        band_cols.append(F.struct(F.lit(b).alias("band"), key.alias("key")))
-    return (sigs.select("id", F.explode(F.array(*band_cols)).alias("bk"))
+    return (sigs.select("id", F.explode(keys).alias("bk"))
                 .select("id", F.col("bk.band").alias("band"),
                         F.col("bk.key").alias("key")))
 
@@ -396,6 +419,103 @@ def _banded_pairs(banded: DataFrame,
     return (buckets
             .select(F.explode(_bucket_pairs(F.col("ids"))).alias("p"))
             .select("p.id_a", "p.id_b").distinct())
+
+
+_LONG_MAX = (1 << 63) - 1
+
+
+def lsh_verified_pairs(df: DataFrame, id_col: str = "doc_id",
+                       text_col: str = "text", num_hashes: int = 16,
+                       bands: int = 4, n: int = 3, engine: str = "sha256",
+                       threshold: float = 0.5,
+                       max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE
+                       ) -> DataFrame:
+    """MinHash-LSH candidates verified by exact Jaccard inside one bucket
+    fold: (id_a, id_b, inter, union, jaccard), id_a < id_b — the same rows
+    as ``jaccard_for_pairs(df, lsh_candidate_pairs(df, ...))`` with the
+    same arguments (ids must be unique, as for that pair of operators).
+
+    Each document's distinct shingle set is computed once and the
+    signature is derived from it map-side: for xxhash64 each component is
+    a fold over the set, for sha256 the worker-side UDF runs beside it.
+    Bucket rows carry struct(id, shingle set); the in-bucket i<j pairs are
+    scored and filtered before the flatten, so no pair row is shuffled or
+    joined — the only shuffles are the (band, key) fold, whose bytes are
+    one shingle set per document and band, and the distinct over the
+    verified pairs (a pair can pass in several bands). Shuffle volume is
+    O(docs · bands · |set|) instead of the two-step path's
+    O(|candidates|) pair shuffle plus two joins against re-computed sets.
+    A pair that collides in k bands is scored in each of those k bucket
+    rows, where the two-step path scores it once after its distinct: the
+    fused form pays off when few candidates verify (templated floods), so
+    run exact dedup first and identical documents never reach it.
+    ``max_bucket_size`` is the same flood cap as lsh_candidate_pairs; it
+    bounds the O(B²) pair work per bucket, while a hot bucket's row still
+    holds its B sets until the size filter drops it."""
+    pre = _normalized_docs(df, id_col, text_col)
+    sh = F.array_distinct(word_shingles(F.col("_norm"), n,
+                                        pre_normalized=True)).alias("sh")
+    if engine == "sha256":
+        # non-deterministic as in minhash_signatures: one UDF call per
+        # document, never re-evaluated per signature component
+        udf = _minhash_sha_udf(num_hashes, n).asNondeterministic()
+        sets = pre.select("id", sh, udf(F.col("_norm")).alias("_sigs"))
+        sigs = [F.col("_sigs")[s] for s in range(num_hashes)]
+    else:
+        sets = pre.select("id", sh)
+        sigs = [_set_min_hash(F.col("sh"), s, engine)
+                for s in range(num_hashes)]
+    # a document without shingles has no signature: explode(NULL) emits
+    # no band rows for it (a Filter here would be pushed below the fan-out
+    # exchange and re-run the normalization on the scan side)
+    keys = F.when(F.size("sh") > 0, _band_keys(sigs, bands, engine))
+    banded = (sets.select("id", "sh", F.explode(keys).alias("bk"))
+                  .select("id", "sh", F.col("bk.band").alias("band"),
+                          F.col("bk.key").alias("key")))
+    buckets = (banded.groupBy("band", "key")
+                     .agg(F.sort_array(F.collect_list(F.struct("id", "sh")))
+                           .alias("ms")))
+    if max_bucket_size is not None:
+        buckets = buckets.filter(F.size("ms") <= max_bucket_size)
+    return (buckets
+            .select(F.explode(_verified_bucket_pairs(F.col("ms"), threshold))
+                     .alias("p"))
+            .select("p.id_a", "p.id_b", "p.inter",
+                    (F.col("p.n") - F.col("p.inter")).alias("union"))
+            .distinct()
+            .withColumn("jaccard", F.round(F.col("inter") / F.col("union"), 6)))
+
+
+def _set_min_hash(sh: Column, seed: int, engine: str) -> Column:
+    """One MinHash component folded over a shingle-set column — equal to
+    minhash_signatures' min over the exploded shingles for a LONG engine
+    (the fold starts at LONG_MAX, which no xxhash64 value exceeds)."""
+    return F.aggregate(sh, F.lit(_LONG_MAX),
+                       lambda acc, x: F.least(
+                           acc, minhash_component(x, seed, engine)))
+
+
+def _verified_bucket_pairs(ms: Column, threshold: float) -> Column:
+    """The (ids[i], ids[j]) i<j pairs of a sorted struct(id, sh) member
+    array whose rounded Jaccard reaches ``threshold``, as struct(id_a,
+    id_b, inter, n) with n = |sh_a| + |sh_b| (so union = n - inter).
+    Same rounding as jaccard_for_pairs; ``ms`` must be a materialized
+    column (see _bucket_pairs)."""
+    def scored(x, y):
+        return F.struct(x["id"].alias("id_a"), y["id"].alias("id_b"),
+                        F.size(F.array_intersect(x["sh"], y["sh"]))
+                         .alias("inter"),
+                        (F.size(x["sh"]) + F.size(y["sh"])).alias("n"))
+
+    def verified(p):
+        return F.round(p["inter"] / (p["n"] - p["inter"]), 6) >= threshold
+
+    return F.flatten(F.transform(
+        ms,
+        lambda x, i: F.filter(
+            F.transform(F.slice(ms, i + F.lit(2), F.size(ms)),
+                        lambda y: scored(x, y)),
+            verified)))
 
 
 def duplicate_clusters(pairs: DataFrame, id_a: str = "id_a",

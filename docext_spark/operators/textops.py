@@ -37,35 +37,49 @@ def fingerprint(col: Column) -> Column:
     return F.sha2(normalized(col), 256)
 
 
-def stopword_hits(col: Column) -> Column:
-    stop = F.array(*[F.lit(s) for s in EN_STOPWORDS])
-    toks = F.transform(tokens(col), lambda t: F.lower(t))
-    return F.size(F.filter(toks, lambda t: F.array_contains(stop, t)))
+def lower_tokens(col: Column) -> Column:
+    """Lower-cased whitespace tokens (the input of every stopword ratio)."""
+    return F.transform(tokens(col), lambda t: F.lower(t))
 
 
-def stopword_ratio(col: Column) -> Column:
-    n = token_count(col)
-    return F.when(n == 0, F.lit(0.0)).otherwise(stopword_hits(col) / n)
-
-
-def lang_stopword_ratio(col: Column, lang: str) -> Column:
-    vocab = F.array(*[F.lit(s) for s in STOPWORDS_BY_LANG[lang]])
-    toks = F.transform(tokens(col), lambda t: F.lower(t))
-    hits = F.size(F.filter(toks, lambda t: F.array_contains(vocab, t)))
-    n = F.size(toks)
+def _vocab_ratio(low: Column, words: list[str]) -> Column:
+    """Share of the lower-cased tokens ``low`` that are in ``words``;
+    0.0 for no tokens. ``low`` is referenced twice, so pass a projected
+    column when the ratio sits in a larger expression."""
+    vocab = F.array(*[F.lit(s) for s in words])
+    n = F.size(low)
+    hits = F.size(F.filter(low, lambda t: F.array_contains(vocab, t)))
     return F.when(n == 0, F.lit(0.0)).otherwise(hits / n)
 
 
-def lang_id(col: Column, threshold: float = 0.08) -> Column:
+def stopword_ratio(col: Column) -> Column:
+    return _vocab_ratio(lower_tokens(col), EN_STOPWORDS)
+
+
+def lang_stopword_ratio(col: Column, lang: str) -> Column:
+    return _vocab_ratio(lower_tokens(col), STOPWORDS_BY_LANG[lang])
+
+
+def lang_id(col: Column, threshold: float = 0.08, *,
+            lowered: Column | None = None) -> Column:
     """Multi-language function-word LID (core.textstats.lang_id twin):
     argmax ratio over {en,de,fr,es}, LANG_ORDER tie-break, 'unknown' below
-    threshold."""
-    ratios = {lang: lang_stopword_ratio(col, lang) for lang in LANG_ORDER}
-    best = F.greatest(*ratios.values())
-    expr = F.lit("unknown")
-    for lang in reversed(LANG_ORDER):
-        expr = F.when(ratios[lang] == best, F.lit(lang)).otherwise(expr)
-    return F.when(best < threshold, F.lit("unknown")).otherwise(expr)
+    threshold.
+
+    Each ratio is computed once: the argmax is the greatest of
+    (ratio, -priority, lang) structs, so equal ratios resolve to the
+    earlier LANG_ORDER language, and the winning struct is bound once
+    (a one-element transform) for the threshold test and the label.
+    ``lowered`` is an already-projected ``lower_tokens(col)`` column."""
+    low = lower_tokens(col) if lowered is None else lowered
+    best = F.greatest(*[
+        F.struct(_vocab_ratio(low, STOPWORDS_BY_LANG[lang]).alias("r"),
+                 F.lit(-i).alias("p"), F.lit(lang).alias("lang"))
+        for i, lang in enumerate(LANG_ORDER)])
+    return F.transform(
+        F.array(best),
+        lambda b: F.when(b["r"] < threshold, F.lit("unknown"))
+                   .otherwise(b["lang"]))[0]
 
 
 def alpha_ratio(col: Column) -> Column:
@@ -74,11 +88,14 @@ def alpha_ratio(col: Column) -> Column:
     return F.when(F.length(t) == 0, F.lit(0.0)).otherwise(n_alpha / F.length(t))
 
 
-def quality_score(col: Column) -> Column:
-    """Composite quality ∈ [0,1] (core.textstats.quality_score twin)."""
-    return (0.4 * F.least(F.lit(1.0), token_count(col) / F.lit(100.0))
+def quality_score(col: Column, *, lowered: Column | None = None) -> Column:
+    """Composite quality ∈ [0,1] (core.textstats.quality_score twin).
+    ``lowered`` is an already-projected ``lower_tokens(col)`` column."""
+    low = lower_tokens(col) if lowered is None else lowered
+    return (0.4 * F.least(F.lit(1.0), F.size(low) / F.lit(100.0))
             + 0.3 * alpha_ratio(col)
-            + 0.3 * F.least(F.lit(1.0), stopword_ratio(col) / F.lit(0.4)))
+            + 0.3 * F.least(F.lit(1.0),
+                            _vocab_ratio(low, EN_STOPWORDS) / F.lit(0.4)))
 
 
 def word_shingles(col: Column, n: int = 3,
@@ -182,7 +199,7 @@ def max_token_frac(col: Column) -> Column:
     the token count. Nested higher-order expression (count per distinct
     token) — O(tokens · distinct) per row, fine for document-sized rows;
     still map-only JVM code, no shuffle, no Python."""
-    toks = F.transform(tokens(col), lambda t: F.lower(t))
+    toks = lower_tokens(col)
     counts = F.transform(F.array_distinct(toks),
                          lambda t: F.size(F.filter(toks, lambda x: x == t)))
     n = F.size(toks)

@@ -3,16 +3,18 @@ data-pipeline composition over the engine's own operators:
 
     quality gate (C4-style native filters)
       → exact dedup (sha256 fingerprint, keep lowest doc_id)
-      → fuzzy dedup (MinHash-LSH candidates → Jaccard verify
-                     → connected components → keep one per cluster)
+      → fuzzy dedup (MinHash-LSH buckets → Jaccard verify inside each
+                     bucket → connected components → keep one per cluster)
       → curated corpus + per-stage survivorship metrics
 
 Every stage is a DataFrame transform; the only driver-side loop is the
 bounded label-propagation convergence inside duplicate_clusters. Scale
 shape: the quality gate and fingerprints are map-only; exact dedup is one
-shuffle on a 64-char key; the fuzzy stage only materializes candidate
-pairs through LSH band buckets (never O(n²)); clustering shuffles the PAIR
-list, which is tiny relative to the corpus.
+shuffle on a 64-char key; the fuzzy stage shuffles one (band, key,
+id, shingle set) row per document and band, scores the candidate pairs
+inside each bucket row and shuffles only the verified pairs (never
+O(n²), and no candidate-pair rows); clustering shuffles the verified
+PAIR list, which is tiny relative to the corpus.
 
 The reference has no corpus curation (it is a per-document extraction
 tool); this plan is part of the beyond-parity training-data surface
@@ -23,14 +25,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from docext_spark.operators.dedup import (DEFAULT_MAX_BUCKET_SIZE,
+# lsh_candidate_pairs and jaccard_for_pairs are the two-step form of
+# lsh_verified_pairs; they stay importable from this module, where
+# perfbench's traced run times them as their own layers.
+from docext_spark.operators.dedup import (DEFAULT_MAX_BUCKET_SIZE,  # noqa: F401
                                           duplicate_clusters,
                                           jaccard_for_pairs,
-                                          lsh_candidate_pairs, lsh_plan)
+                                          lsh_candidate_pairs, lsh_plan,
+                                          lsh_verified_pairs)
 from docext_spark.operators.textops import (dup_line_frac, fingerprint,
-                                            lang_id, max_token_frac,
-                                            quality_score, redact_pii,
-                                            token_count)
+                                            lang_id, lower_tokens,
+                                            max_token_frac, quality_score,
+                                            redact_pii)
 
 
 def quality_gate(docs: DataFrame, text_col: str = "text",
@@ -42,19 +48,34 @@ def quality_gate(docs: DataFrame, text_col: str = "text",
     language allowlist; optional Gopher repetition gates
     (``max_dup_line_frac`` / ``max_tok_frac``, off by default so the
     pinned funnel oracle is unchanged). Pure native expressions —
-    evaluated inside the scan's whole-stage codegen, nothing shuffles."""
-    keep = ((F.col("_n_tokens") >= min_tokens)
-            & (F.col("_quality") >= min_quality)
-            & F.col("_lang").isin(*langs))
-    if max_dup_line_frac is not None:
-        keep = keep & (dup_line_frac(F.col(text_col)) <= max_dup_line_frac)
-    if max_tok_frac is not None:
-        keep = keep & (max_token_frac(F.col(text_col)) <= max_tok_frac)
-    return (docs
-            .withColumn("_n_tokens", token_count(F.col(text_col)))
-            .withColumn("_quality", F.round(quality_score(F.col(text_col)), 6))
-            .withColumn("_lang", lang_id(F.col(text_col)))
-            .filter(keep))
+    evaluated inside the scan's whole-stage codegen, nothing shuffles.
+
+    Single pass per document: the lower-cased token array is bound once
+    (a lambda over a one-element array) and the token count, quality and
+    language are all derived from it; the keep test filters that same
+    array and ``inline`` emits the zero or one surviving feature row. A
+    Filter above a Project would instead be pushed below it with every
+    feature inlined, re-splitting the text once per reference."""
+    text = F.col(text_col)
+
+    def features(low):
+        return F.struct(F.size(low).alias("_n_tokens"),
+                        F.round(quality_score(text, lowered=low), 6)
+                         .alias("_quality"),
+                        lang_id(text, lowered=low).alias("_lang"))
+
+    def keep(f):
+        ok = ((f["_n_tokens"] >= min_tokens)
+              & (f["_quality"] >= min_quality)
+              & f["_lang"].isin(*langs))
+        if max_dup_line_frac is not None:
+            ok = ok & (dup_line_frac(text) <= max_dup_line_frac)
+        if max_tok_frac is not None:
+            ok = ok & (max_token_frac(text) <= max_tok_frac)
+        return ok
+
+    feats = F.transform(F.array(lower_tokens(text)), features)
+    return docs.select("*", F.inline(F.filter(feats, keep)))
 
 
 def exact_dedup_keep_first(docs: DataFrame, id_col: str = "doc_id",
@@ -76,11 +97,13 @@ def fuzzy_dedup_keep_first(docs: DataFrame, id_col: str = "doc_id",
                            engine: str = "xxhash64",
                            max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
                            cluster_max_iter: int = 20) -> DataFrame:
-    """LSH candidates → exact Jaccard verification FOR THOSE PAIRS ONLY
-    (jaccard_for_pairs; the verify cost is O(|candidates|), never a full
-    shingle self-join — otherwise verification would cost exactly what LSH
-    exists to avoid) → connected components → drop every non-keeper.
+    """LSH candidates verified by exact Jaccard inside the bucket fold
+    (lsh_verified_pairs) → connected components → drop every non-keeper.
     Components merge transitive dup chains so A~B~C keeps one document.
+    The verify never materializes the candidate list: bucket rows carry
+    each member's shingle set and only verified pairs leave the fold, so
+    no pair rows are shuffled or joined (under a templated flood fewer
+    than 1% of the candidates verify).
 
     ``bands`` defaults to the MMDS S-curve plan for ``jaccard_threshold``
     (lsh_plan): callers state the similarity they care about and the
@@ -95,12 +118,10 @@ def fuzzy_dedup_keep_first(docs: DataFrame, id_col: str = "doc_id",
     dedup first (curate() ordering) so the cap only ever trims floods."""
     if bands is None:
         bands = lsh_plan(jaccard_threshold, num_hashes)["bands"]
-    cands = lsh_candidate_pairs(docs, id_col, text_col,
-                                num_hashes=num_hashes, bands=bands, n=n,
-                                engine=engine,
-                                max_bucket_size=max_bucket_size)
-    verified = jaccard_for_pairs(docs, cands, id_col, text_col, n=n,
-                                 threshold=jaccard_threshold)
+    verified = lsh_verified_pairs(docs, id_col, text_col,
+                                  num_hashes=num_hashes, bands=bands, n=n,
+                                  engine=engine, threshold=jaccard_threshold,
+                                  max_bucket_size=max_bucket_size)
     # cluster_max_iter is surfaced so a long dup-chain corpus (diameter >
     # 20) can be accommodated instead of hard-failing the whole job on
     # duplicate_clusters' non-convergence guard

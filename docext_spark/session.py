@@ -15,7 +15,9 @@ from pyspark.sql import SparkSession
 def get_spark(app_name: str = "docext_spark", master: str | None = None,
               shuffle_partitions: int | None = None,
               extra_conf: dict | None = None) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    # default: the cores this process may run on (a fixed count above
+    # that oversubscribes small hosts; a 4-vCPU box lost 62% at local[32])
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
         n = master[master.index("[") + 1:-1] if "[" in master else "32"

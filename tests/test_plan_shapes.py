@@ -90,6 +90,38 @@ def test_lsh_pairs_single_pipeline_no_join(spark):
     assert cap_probe not in off
 
 
+def test_lsh_verified_pairs_one_fold_no_join(spark):
+    """The curate fuzzy stage's fused verify: the pairs are scored inside
+    the (band, key) bucket rows, so the executed plan joins nothing and
+    scans the corpus once; the default flood cap is the bucket-size filter
+    and max_bucket_size=None removes it."""
+    from docext_spark.operators.dedup import (DEFAULT_MAX_BUCKET_SIZE,
+                                              lsh_verified_pairs)
+    cap_probe = f"<= {DEFAULT_MAX_BUCKET_SIZE})"
+    for engine in ("xxhash64", "sha256"):
+        guarded = _plan(lsh_verified_pairs(_docs(spark), num_hashes=8,
+                                           bands=4, engine=engine))
+        for node in ("SortMergeJoin", "BroadcastHashJoin", "ShuffledHashJoin",
+                     "CartesianProduct", "BroadcastNestedLoopJoin"):
+            assert node not in guarded, (engine, node)
+        assert guarded.count("Scan parquet") == 1, engine
+        assert cap_probe in guarded, engine
+        off = _plan(lsh_verified_pairs(_docs(spark), num_hashes=8, bands=4,
+                                       engine=engine, max_bucket_size=None))
+        assert cap_probe not in off, engine
+
+
+def test_quality_gate_computes_each_feature_once(spark):
+    """Each stopword ratio appears once in the gate's optimized plan (one
+    array_contains per language, plus English again for the quality
+    score): the token split is not re-inlined per feature reference."""
+    from docext_spark.plans.curate import quality_gate
+    plan = (quality_gate(_docs(spark))._jdf.queryExecution()
+            .optimizedPlan().toString())
+    assert plan.count("array_contains") <= 10
+    assert plan.count("split(") == 1
+
+
 def test_s5_native_png_decode_has_no_python_worker(spark):
     """s5 consumes dims decoded from PNG bytes via native expressions —
     the plan must contain no Python/Arrow eval node."""

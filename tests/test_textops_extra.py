@@ -93,3 +93,51 @@ def test_redact_pii_is_streaming_safe(spark, tmp_path):
      .trigger(availableNow=True).start().awaitTermination(120))
     got = {r["doc_id"]: r["text"] for r in spark.read.parquet(out_dir).collect()}
     assert got == {1: "write to <EMAIL> now", 2: "clean row"}
+
+
+# Edge texts for the Spark-vs-Python twin check: ratio ties resolve in
+# LANG_ORDER order, sub-threshold ratios give 'unknown', only ASCII
+# whitespace separates tokens (NBSP does not), and trim removes spaces only.
+_LID_EDGES = [
+    "the der cat dog",                          # en/de tie → en
+    "le el chat perro",                         # fr/es tie → fr
+    "the " + " ".join(f"w{i}" for i in range(12)),  # 1/13 < 0.08 → unknown
+    "",
+    "   \t\n  ",
+    "\tthe cat sat\n",                          # tab/newline survive trim
+    None,
+    "the\u00a0cat is\u00a0here",                # NBSP glues tokens
+    "für die Katze und der Hund",               # non-ASCII stopword → de
+    "THE Cat IS on THE mat, and IT is warm",
+    "Der Hund ist im Haus und die Katze ist nicht hier",
+    "12345 67890 !!! ???",
+]
+
+
+def test_text_features_match_python_twins(spark):
+    """lang_id, quality_score and token_count (standalone and as the
+    quality gate derives them from one token array) equal the
+    core.textstats twins on crafted edge texts."""
+    from docext_spark.core import textstats as ts
+    from docext_spark.operators.textops import (lang_id, quality_score,
+                                                token_count)
+    from docext_spark.plans.curate import quality_gate
+
+    df = spark.createDataFrame(list(enumerate(_LID_EDGES)),
+                               "doc_id int, text string")
+    t = F.col("text")
+    alone = {r["doc_id"]: r for r in df.select(
+        "doc_id", lang_id(t).alias("lang"), quality_score(t).alias("q"),
+        token_count(t).alias("n")).collect()}
+    gated = {r["doc_id"]: r for r in quality_gate(
+        df, min_tokens=0, min_quality=0.0,
+        langs=("en", "de", "fr", "es", "unknown")).collect()}
+    assert sorted(gated) == sorted(alone) == list(range(len(_LID_EDGES)))
+    for i, text in enumerate(_LID_EDGES):
+        want = (ts.lang_id(text), ts.quality_score(text), ts.token_count(text))
+        assert (alone[i]["lang"], alone[i]["q"], alone[i]["n"]) == want, text
+        g = gated[i]
+        assert (g["_lang"], g["_quality"], g["_n_tokens"]) == \
+            (want[0], round(want[1], 6), want[2]), text
+    assert [alone[i]["lang"] for i in range(3)] == ["en", "fr", "unknown"]
+    assert alone[8]["lang"] == "de"

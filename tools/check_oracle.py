@@ -68,7 +68,7 @@ def main():
     import __spark_entry__ as entry
     from docext_spark.session import get_spark
 
-    spark = get_spark(master="local[8]")
+    spark = get_spark()
     con = duckdb.connect()
     for t in entry.TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
