@@ -7,13 +7,14 @@ All distributed-first designs:
     per-pair intersection counts → Jaccard. The shingle join is the scale
     path (candidate pairs only materialize for co-occurring shingles, never
     the O(n²) cross product).
-  * MinHash + LSH: per-doc signature = min over shingles of seeded sha256
-    (engine-independent hex min) or xxhash64 → band → bucket groupBy →
-    candidate pairs. The curate path verifies inside the same fold
-    (lsh_verified_pairs): bucket rows carry each member's shingle set and
-    the in-bucket pairs are scored before they are flattened, so no pair
-    rows are shuffled; shuffle volume is one shingle set per document and
-    band, not one row per candidate pair.
+  * MinHash + LSH: per-doc signature = min over the distinct shingles of
+    seeded sha256 (engine-independent hex min) or xxhash64, map-side →
+    band → bucket groupBy → candidate pairs. The curate path verifies
+    inside the same fold (lsh_verified_pairs): bucket rows carry each
+    member's shingle set and the in-bucket pairs are scored before they
+    are flattened, so no pair rows are shuffled; the fold moves one
+    shingle set per document and band instead of one row per candidate
+    pair, and over-cap buckets are dropped before their sets are collected.
   * SimHash: 64-bit signature pUDF + hamming-band bucketing.
   * embedding cosine near-dup / ANN: see similarity.py.
 """
@@ -25,6 +26,7 @@ import pandas as pd
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from docext_spark.operators.textops import fingerprint, minhash_component, word_shingles
 
@@ -195,12 +197,26 @@ def jaccard_for_pairs(df: DataFrame, pairs: DataFrame,
 def minhash_signatures(df: DataFrame, id_col: str = "doc_id",
                        text_col: str = "text", num_hashes: int = 16,
                        n: int = 3, engine: str = "sha256") -> DataFrame:
-    """(id, sig_0..sig_{k-1}) MinHash signature columns.
+    """(id, sig_0..sig_{k-1}) MinHash signature columns, one row per
+    document with at least one shingle. Map-only — no explode, no
+    shuffle: engine='xxhash64' is the production hash (native XXH64, a
+    long min folded over the document's distinct shingle set); 'sha256'
+    is the engine-independent oracle hash (hex-string min)."""
+    return _signed_sets(df, id_col, text_col, num_hashes, n, engine).select(
+        "id", *[f"sig_{s}" for s in range(num_hashes)])
 
-    Computed as one explode + one groupBy: k mins aggregate in a single
-    shuffle pass (map-side partial min), not k passes. engine='xxhash64'
-    is the production hash (native XXH64, long min); 'sha256' is the
-    engine-independent oracle hash (hex-string min)."""
+
+def _signed_sets(df: DataFrame, id_col: str, text_col: str,
+                 num_hashes: int, n: int, engine: str) -> DataFrame:
+    """(id, sh, sig_0..sig_{k-1}): each document's distinct shingle set
+    and its MinHash signature, for documents with at least one shingle —
+    the one signature path behind minhash_signatures, lsh_banded and
+    lsh_verified_pairs. A caller that drops ``sh`` does not compute it on
+    the sha256 path (column pruning)."""
+    pre = _normalized_docs(df, id_col, text_col)
+    sh = F.array_distinct(word_shingles(F.col("_norm"), n,
+                                        pre_normalized=True)).alias("sh")
+    names = [f"sig_{s}" for s in range(num_hashes)]
     if engine == "sha256":
         # Arrow-batched worker-side path (guide §4.2): tokenizing,
         # shingling, sha256 and the per-slice running mins all happen in
@@ -220,20 +236,32 @@ def minhash_signatures(df: DataFrame, id_col: str = "doc_id",
         # normalized-text predicate below the fan-out exchange onto the
         # degenerate scan side (measured r7: the pushed filter re-ran the
         # full normalization regex single-task).
-        from docext_spark.operators.textops import normalized
-        from docext_spark.session import fanout_small
-        raw = fanout_small(df.select(F.col(id_col).alias("id"),
-                                     F.col(text_col).alias("_txt")))
         udf = _minhash_sha_udf(num_hashes, n).asNondeterministic()
-        sigs = (raw.select("id",
-                           udf(normalized(F.col("_txt"))).alias("_sigs"))
+        sigs = (pre.select("id", sh, udf(F.col("_norm")).alias("_sigs"))
                    .filter(F.col("_sigs").isNotNull()))
-        return sigs.select("id", *[
-            F.col("_sigs")[s].alias(f"sig_{s}") for s in range(num_hashes)])
-    sh = shingle_table(df, id_col, text_col, n)
-    aggs = [F.min(minhash_component(F.col("shingle"), s, engine)).alias(f"sig_{s}")
-            for s in range(num_hashes)]
-    return sh.groupBy("id").agg(*aggs)
+        return sigs.select("id", "sh", *[F.col("_sigs")[s].alias(name)
+                                         for s, name in enumerate(names)])
+    # each component is a fold over the set; a document without shingles
+    # gets no row through inline(NULL) (a Filter here would be pushed
+    # below the fan-out exchange and re-run the normalization on the scan
+    # side)
+    sets = pre.select("id", sh)
+    sig = F.struct(*[_set_min_hash(F.col("sh"), s, engine).alias(name)
+                     for s, name in enumerate(names)])
+    return sets.select("id", "sh",
+                       F.inline(F.when(F.size("sh") > 0, F.array(sig))))
+
+
+_LONG_MAX = (1 << 63) - 1
+
+
+def _set_min_hash(sh: Column, seed: int, engine: str) -> Column:
+    """One MinHash component folded over a shingle-set column — the min
+    of minhash_component over the set for a LONG engine (the fold starts
+    at LONG_MAX, which no xxhash64 value exceeds)."""
+    return F.aggregate(sh, F.lit(_LONG_MAX),
+                       lambda acc, x: F.least(
+                           acc, minhash_component(x, seed, engine)))
 
 
 def _minhash_sha_udf(num_hashes: int, n: int):
@@ -311,12 +339,12 @@ def lsh_plan(threshold: float, num_hashes: int = 16) -> dict:
             "curve_threshold": round(best[2], 4)}
 
 
-def _band_keys(sigs: list[Column], bands: int, engine: str) -> Column:
-    """array<struct<band, key>> over the signature components ``sigs``:
-    band b hashes components b*r .. b*r+r-1 (r = len(sigs) // bands) with
+def _banded(signed: DataFrame, num_hashes: int, bands: int, engine: str,
+            *carry: str) -> DataFrame:
+    """(id, *carry, band, key) over a _signed_sets frame: band b hashes
+    signature components b*r .. b*r+r-1 (r = num_hashes // bands) with
     the signature's engine. The one banding scheme behind lsh_banded and
     lsh_verified_pairs, so their bucket sets cannot drift."""
-    num_hashes = len(sigs)
     if num_hashes % bands != 0:
         raise ValueError(
             f"num_hashes ({num_hashes}) must be divisible by bands ({bands}) "
@@ -324,11 +352,15 @@ def _band_keys(sigs: list[Column], bands: int, engine: str) -> Column:
     rows_per_band = num_hashes // bands
     band_cols = []
     for b in range(bands):
-        cols = sigs[b * rows_per_band:(b + 1) * rows_per_band]
+        cols = [F.col(f"sig_{s}")
+                for s in range(b * rows_per_band, (b + 1) * rows_per_band)]
         key = (F.xxhash64(*cols) if engine == "xxhash64"
                else F.sha2(F.concat_ws("|", *cols), 256))
         band_cols.append(F.struct(F.lit(b).alias("band"), key.alias("key")))
-    return F.array(*band_cols)
+    return (signed.select("id", *carry,
+                          F.explode(F.array(*band_cols)).alias("bk"))
+                  .select("id", *carry, F.col("bk.band").alias("band"),
+                          F.col("bk.key").alias("key")))
 
 
 def lsh_banded(df: DataFrame, id_col: str = "doc_id",
@@ -339,12 +371,8 @@ def lsh_banded(df: DataFrame, id_col: str = "doc_id",
     candidate self-join. Exposed so flood diagnostics (bucket-size
     histograms, hot-bucket audits) share the exact banding scheme with
     lsh_candidate_pairs and cannot drift from it."""
-    keys = _band_keys([F.col(f"sig_{s}") for s in range(num_hashes)],
-                      bands, engine)
-    sigs = minhash_signatures(df, id_col, text_col, num_hashes, n, engine)
-    return (sigs.select("id", F.explode(keys).alias("bk"))
-                .select("id", F.col("bk.band").alias("band"),
-                        F.col("bk.key").alias("key")))
+    return _banded(_signed_sets(df, id_col, text_col, num_hashes, n, engine),
+                   num_hashes, bands, engine)
 
 
 def lsh_candidate_pairs(df: DataFrame, id_col: str = "doc_id",
@@ -421,9 +449,6 @@ def _banded_pairs(banded: DataFrame,
             .select("p.id_a", "p.id_b").distinct())
 
 
-_LONG_MAX = (1 << 63) - 1
-
-
 def lsh_verified_pairs(df: DataFrame, id_col: str = "doc_id",
                        text_col: str = "text", num_hashes: int = 16,
                        bands: int = 4, n: int = 3, engine: str = "sha256",
@@ -435,48 +460,37 @@ def lsh_verified_pairs(df: DataFrame, id_col: str = "doc_id",
     as ``jaccard_for_pairs(df, lsh_candidate_pairs(df, ...))`` with the
     same arguments (ids must be unique, as for that pair of operators).
 
-    Each document's distinct shingle set is computed once and the
-    signature is derived from it map-side: for xxhash64 each component is
-    a fold over the set, for sha256 the worker-side UDF runs beside it.
-    Bucket rows carry struct(id, shingle set); the in-bucket i<j pairs are
-    scored and filtered before the flatten, so no pair row is shuffled or
-    joined — the only shuffles are the (band, key) fold, whose bytes are
-    one shingle set per document and band, and the distinct over the
-    verified pairs (a pair can pass in several bands). Shuffle volume is
-    O(docs · bands · |set|) instead of the two-step path's
-    O(|candidates|) pair shuffle plus two joins against re-computed sets.
-    A pair that collides in k bands is scored in each of those k bucket
-    rows, where the two-step path scores it once after its distinct: the
-    fused form pays off when few candidates verify (templated floods), so
-    run exact dedup first and identical documents never reach it.
-    ``max_bucket_size`` is the same flood cap as lsh_candidate_pairs; it
-    bounds the O(B²) pair work per bucket, while a hot bucket's row still
-    holds its B sets until the size filter drops it."""
-    pre = _normalized_docs(df, id_col, text_col)
-    sh = F.array_distinct(word_shingles(F.col("_norm"), n,
-                                        pre_normalized=True)).alias("sh")
-    if engine == "sha256":
-        # non-deterministic as in minhash_signatures: one UDF call per
-        # document, never re-evaluated per signature component
-        udf = _minhash_sha_udf(num_hashes, n).asNondeterministic()
-        sets = pre.select("id", sh, udf(F.col("_norm")).alias("_sigs"))
-        sigs = [F.col("_sigs")[s] for s in range(num_hashes)]
-    else:
-        sets = pre.select("id", sh)
-        sigs = [_set_min_hash(F.col("sh"), s, engine)
-                for s in range(num_hashes)]
-    # a document without shingles has no signature: explode(NULL) emits
-    # no band rows for it (a Filter here would be pushed below the fan-out
-    # exchange and re-run the normalization on the scan side)
-    keys = F.when(F.size("sh") > 0, _band_keys(sigs, bands, engine))
-    banded = (sets.select("id", "sh", F.explode(keys).alias("bk"))
-                  .select("id", "sh", F.col("bk.band").alias("band"),
-                          F.col("bk.key").alias("key")))
+    Each document's distinct shingle set is computed once, beside its
+    signature (_signed_sets, shared with lsh_banded). Bucket rows carry
+    struct(id, shingle set); the in-bucket i<j pairs are scored and
+    filtered before the flatten, so no candidate-pair row is shuffled or
+    joined. The shuffles are the (band, key) fold, which moves one
+    shingle set per document and band, and the distinct over the verified
+    pairs (a pair can pass in several bands, and is scored in each). The
+    two-step path instead moves the set table once per join side plus one
+    set per candidate pair, so which form shuffles fewer bytes depends on
+    the corpus: the fused one when candidates far outnumber documents, as
+    under a templated flood. Measured on 4 vCPUs (num_hashes=8, bands=4),
+    the fused form was the faster one on the corpora tried: a templated
+    flood of 2,455 documents (157,453 candidates, 255 verify), and 2,040
+    random 600- and 2,000-token documents with no flood (40 candidates;
+    3.3 vs 4.7 s and 7.9 vs 9.2 s), where the two-step path also builds
+    the shingle sets a second time for its joins.
+
+    ``max_bucket_size`` is the same flood cap as lsh_candidate_pairs. It
+    applies to the banded rows, before the fold: a count over a (band,
+    key) window shares the fold's exchange, so an over-cap bucket's rows
+    are dropped before their shingle sets are collected into one row (the
+    window buffer spills; a collected flood bucket would not)."""
+    banded = _banded(_signed_sets(df, id_col, text_col, num_hashes, n,
+                                  engine), num_hashes, bands, engine, "sh")
+    if max_bucket_size is not None:
+        members = F.count(F.lit(1)).over(Window.partitionBy("band", "key"))
+        banded = (banded.withColumn("_members", members)
+                        .filter(F.col("_members") <= max_bucket_size))
     buckets = (banded.groupBy("band", "key")
                      .agg(F.sort_array(F.collect_list(F.struct("id", "sh")))
                            .alias("ms")))
-    if max_bucket_size is not None:
-        buckets = buckets.filter(F.size("ms") <= max_bucket_size)
     return (buckets
             .select(F.explode(_verified_bucket_pairs(F.col("ms"), threshold))
                      .alias("p"))
@@ -484,15 +498,6 @@ def lsh_verified_pairs(df: DataFrame, id_col: str = "doc_id",
                     (F.col("p.n") - F.col("p.inter")).alias("union"))
             .distinct()
             .withColumn("jaccard", F.round(F.col("inter") / F.col("union"), 6)))
-
-
-def _set_min_hash(sh: Column, seed: int, engine: str) -> Column:
-    """One MinHash component folded over a shingle-set column — equal to
-    minhash_signatures' min over the exploded shingles for a LONG engine
-    (the fold starts at LONG_MAX, which no xxhash64 value exceeds)."""
-    return F.aggregate(sh, F.lit(_LONG_MAX),
-                       lambda acc, x: F.least(
-                           acc, minhash_component(x, seed, engine)))
 
 
 def _verified_bucket_pairs(ms: Column, threshold: float) -> Column:

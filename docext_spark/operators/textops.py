@@ -60,18 +60,19 @@ def lang_stopword_ratio(col: Column, lang: str) -> Column:
     return _vocab_ratio(lower_tokens(col), STOPWORDS_BY_LANG[lang])
 
 
-def lang_id(col: Column, threshold: float = 0.08, *,
-            lowered: Column | None = None) -> Column:
+def lang_id(col: Column, threshold: float = 0.08) -> Column:
     """Multi-language function-word LID (core.textstats.lang_id twin):
     argmax ratio over {en,de,fr,es}, LANG_ORDER tie-break, 'unknown' below
-    threshold.
+    threshold."""
+    return _lang_from(lower_tokens(col), threshold)
 
-    Each ratio is computed once: the argmax is the greatest of
-    (ratio, -priority, lang) structs, so equal ratios resolve to the
-    earlier LANG_ORDER language, and the winning struct is bound once
-    (a one-element transform) for the threshold test and the label.
-    ``lowered`` is an already-projected ``lower_tokens(col)`` column."""
-    low = lower_tokens(col) if lowered is None else lowered
+
+def _lang_from(low: Column, threshold: float = 0.08) -> Column:
+    """lang_id over the lower-cased tokens ``low``. Each ratio is computed
+    once: the argmax is the greatest of (ratio, -priority, lang) structs,
+    so equal ratios resolve to the earlier LANG_ORDER language, and the
+    winning struct is bound once (a one-element transform) for the
+    threshold test and the label."""
     best = F.greatest(*[
         F.struct(_vocab_ratio(low, STOPWORDS_BY_LANG[lang]).alias("r"),
                  F.lit(-i).alias("p"), F.lit(lang).alias("lang"))
@@ -88,10 +89,13 @@ def alpha_ratio(col: Column) -> Column:
     return F.when(F.length(t) == 0, F.lit(0.0)).otherwise(n_alpha / F.length(t))
 
 
-def quality_score(col: Column, *, lowered: Column | None = None) -> Column:
-    """Composite quality ∈ [0,1] (core.textstats.quality_score twin).
-    ``lowered`` is an already-projected ``lower_tokens(col)`` column."""
-    low = lower_tokens(col) if lowered is None else lowered
+def quality_score(col: Column) -> Column:
+    """Composite quality ∈ [0,1] (core.textstats.quality_score twin)."""
+    return _quality_from(col, lower_tokens(col))
+
+
+def _quality_from(col: Column, low: Column) -> Column:
+    """quality_score of ``col`` given its lower-cased tokens ``low``."""
     return (0.4 * F.least(F.lit(1.0), F.size(low) / F.lit(100.0))
             + 0.3 * alpha_ratio(col)
             + 0.3 * F.least(F.lit(1.0),

@@ -33,9 +33,9 @@ from docext_spark.operators.dedup import (DEFAULT_MAX_BUCKET_SIZE,  # noqa: F401
                                           jaccard_for_pairs,
                                           lsh_candidate_pairs, lsh_plan,
                                           lsh_verified_pairs)
-from docext_spark.operators.textops import (dup_line_frac, fingerprint,
-                                            lang_id, lower_tokens,
-                                            max_token_frac, quality_score,
+from docext_spark.operators.textops import (_lang_from, _quality_from,
+                                            dup_line_frac, fingerprint,
+                                            lower_tokens, max_token_frac,
                                             redact_pii)
 
 
@@ -60,9 +60,9 @@ def quality_gate(docs: DataFrame, text_col: str = "text",
 
     def features(low):
         return F.struct(F.size(low).alias("_n_tokens"),
-                        F.round(quality_score(text, lowered=low), 6)
+                        F.round(_quality_from(text, low), 6)
                          .alias("_quality"),
-                        lang_id(text, lowered=low).alias("_lang"))
+                        _lang_from(low).alias("_lang"))
 
     def keep(f):
         ok = ((f["_n_tokens"] >= min_tokens)
@@ -102,8 +102,10 @@ def fuzzy_dedup_keep_first(docs: DataFrame, id_col: str = "doc_id",
     Components merge transitive dup chains so A~B~C keeps one document.
     The verify never materializes the candidate list: bucket rows carry
     each member's shingle set and only verified pairs leave the fold, so
-    no pair rows are shuffled or joined (under a templated flood fewer
-    than 1% of the candidates verify).
+    no pair rows are shuffled or joined (on a templated-flood corpus of
+    2,455 documents, 255 of 157,453 candidates verify). The shingle sets
+    are shuffled instead, once per band: see lsh_verified_pairs for when
+    that is the cheaper trade.
 
     ``bands`` defaults to the MMDS S-curve plan for ``jaccard_threshold``
     (lsh_plan): callers state the similarity they care about and the

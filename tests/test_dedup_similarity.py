@@ -264,59 +264,43 @@ def test_lsh_engine_parity(spark):
     assert planted.issubset(xx)  # the near-dups are actually found
 
 
-# flood buckets one over and one under this explicit cap; at the default
-# cap of 1000 the under-cap bucket alone verifies ~5·10^5 pairs
-_FLOOD_CAP = 40
-
-
 @pytest.fixture(scope="module")
-def capped_flood(spark):
-    """sf0.001 documents plus two planted templates: _FLOOD_CAP + 1
-    copies of one (every band bucket one over the cap) and _FLOOD_CAP - 1
-    of another (one under it). Copies share a shingle set, so their
-    signatures, and with them all band keys, are equal."""
+def flood_report():
+    """tests/flood_equivalence.py's per-(engine, cap) summaries of the
+    fused and the two-step verify over sf0.001 documents plus flood
+    buckets one over and one under the default cap, from a child JVM with
+    a 2 GB driver heap."""
+    import json
     import os
+    import subprocess
+    import sys
     sf = "/root/testdata/sf0.001/documents.parquet"
     if not os.path.exists(sf):
         pytest.skip("sf0.001 testdata not present")
-    over = "flood alpha " + " ".join(f"tok{k}" for k in range(12))
-    under = "spill beta " + " ".join(f"word{k}" for k in range(12))
-    flood = spark.range(2 * _FLOOD_CAP).select(
-        (F.col("id") + 10 ** 6).alias("doc_id"),
-        F.when(F.col("id") <= _FLOOD_CAP, F.lit(over))
-         .otherwise(F.lit(under)).alias("text"))
-    df = (spark.read.parquet(sf).select("doc_id", "text")
-          .unionByName(flood).persist())
-    df.count()
-    yield df
-    df.unpersist()
+    script = os.path.join(os.path.dirname(__file__), "flood_equivalence.py")
+    run = subprocess.run([sys.executable, script, sf], capture_output=True,
+                         text=True, timeout=1200,
+                         env=dict(os.environ, SPARK_DRIVER_MEM="2g"))
+    assert run.returncode == 0, run.stderr[-3000:]
+    rows = [json.loads(ln) for ln in run.stdout.splitlines()
+            if ln.startswith("{")]
+    return {(r["engine"], r["cap"]): r for r in rows}
 
 
 @pytest.mark.parametrize("engine", ["xxhash64", "sha256"])
-@pytest.mark.parametrize("cap", ["default", None, _FLOOD_CAP])
-def test_lsh_verified_pairs_equals_two_step(capped_flood, engine, cap):
+@pytest.mark.parametrize("cap", ["default", None])
+def test_lsh_verified_pairs_equals_two_step(flood_report, engine, cap):
     """The fused bucket-fold verify returns exactly the rows of
     jaccard_for_pairs over lsh_candidate_pairs, on the corpus and on
-    flood buckets either side of the cap."""
-    from docext_spark.operators.dedup import (DEFAULT_MAX_BUCKET_SIZE,
-                                              jaccard_for_pairs,
-                                              lsh_verified_pairs)
-    df = capped_flood
-    kw = {"num_hashes": 8, "bands": 4, "engine": engine,
-          "max_bucket_size": DEFAULT_MAX_BUCKET_SIZE if cap == "default"
-          else cap}
-    cols = ["id_a", "id_b", "inter", "union", "jaccard"]
-    fused = lsh_verified_pairs(df, threshold=0.5, **kw)
-    assert fused.columns == cols
-    got = sorted(tuple(r) for r in fused.collect())
-    want = sorted(tuple(r) for r in jaccard_for_pairs(
-        df, lsh_candidate_pairs(df, **kw), threshold=0.5).collect())
-    assert got == want
-    n_flood = sum(a >= 10 ** 6 for a, *_ in got)
-    n_over = (_FLOOD_CAP + 1) * _FLOOD_CAP // 2
-    n_under = (_FLOOD_CAP - 1) * (_FLOOD_CAP - 2) // 2
-    assert n_flood == n_under + (0 if cap == _FLOOD_CAP else n_over)
-    assert len(got) > n_flood  # corpus near-duplicates verified too
+    flood buckets either side of the default cap, within a 2 GB heap."""
+    r = flood_report[(engine, cap)]
+    assert r["columns"] == ["id_a", "id_b", "inter", "union", "jaccard"]
+    assert r["fused"] == r["two_step"]
+    n, _, rows = r["fused"]
+    c = r["cap_size"]
+    n_over, n_under = (c + 1) * c // 2, (c - 1) * (c - 2) // 2
+    assert n == len(rows) + n_under + (n_over if cap is None else 0)
+    assert rows  # corpus near-duplicates verified too
 
 
 def test_jaccard_hot_shingle_cap_bounds_candidates(spark):

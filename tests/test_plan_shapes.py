@@ -93,8 +93,11 @@ def test_lsh_pairs_single_pipeline_no_join(spark):
 def test_lsh_verified_pairs_one_fold_no_join(spark):
     """The curate fuzzy stage's fused verify: the pairs are scored inside
     the (band, key) bucket rows, so the executed plan joins nothing and
-    scans the corpus once; the default flood cap is the bucket-size filter
-    and max_bucket_size=None removes it."""
+    scans the corpus once; the default flood cap is a bucket-size filter
+    and max_bucket_size=None removes it. The cap filters the banded rows
+    below the fold (plan text lists a node's children after it), so an
+    over-cap bucket's shingle sets are never collected into one row, and
+    its windowed count reuses the fold's (band, key) exchange."""
     from docext_spark.operators.dedup import (DEFAULT_MAX_BUCKET_SIZE,
                                               lsh_verified_pairs)
     cap_probe = f"<= {DEFAULT_MAX_BUCKET_SIZE})"
@@ -105,7 +108,11 @@ def test_lsh_verified_pairs_one_fold_no_join(spark):
                      "CartesianProduct", "BroadcastNestedLoopJoin"):
             assert node not in guarded, (engine, node)
         assert guarded.count("Scan parquet") == 1, engine
-        assert cap_probe in guarded, engine
+        assert guarded.count(cap_probe) == 1, engine
+        fold = guarded.index("partial_collect_list")
+        assert fold < guarded.index(cap_probe) < guarded.index("Window ["), \
+            engine
+        assert guarded.count("Exchange hashpartitioning(band") == 1, engine
         off = _plan(lsh_verified_pairs(_docs(spark), num_hashes=8, bands=4,
                                        engine=engine, max_bucket_size=None))
         assert cap_probe not in off, engine

@@ -27,7 +27,7 @@ CLAIMS = {
     "x1_turn_markdown": "scan pruned to (doc_id, text) THROUGH the ArrowEvalPython node",
     "flagship_reassembly": "segmented two-phase aggregation: partial collect per (conv_id, seg), exchange, ordered merge",
     "dedup_lsh_pairs": "r7 single-pipeline shape: ONE corpus scan -> fan-out exchange -> ArrowEvalPython minhash UDF (sha256+mins worker-side, no explode) -> (band,key) bucket fold -> in-bucket pair generation; NO join node anywhere (the former self-join carried the full signature pipeline once per side)",
-    "dedup_lsh_pairs_fast": "same single-pipeline bucket-fold shape; xxhash64 stays a native JVM expression (long mins hash-aggregate; no Python boundary needed for a long hash)",
+    "dedup_lsh_pairs_fast": "same single-pipeline bucket-fold shape; xxhash64 stays a native JVM expression (each long min is a map-side fold over the document's distinct shingle set: no shingle explode, no signature aggregate, no Python boundary)",
     "ann_cosine_topk": "broadcast of the query side; corpus streams through one map stage + top-k window",
     "dedup_cosine_lsh": "multi-table hyperplane buckets via the worker-side signature UDF (ArrowEvalPython; ZERO plane literals in the plan at any dim); candidates dedup BEFORE the exact re-rank; no cartesian anywhere",
     "dedup_jaccard_capped": "r7 grouped-pair shape: one shingle pipeline -> per-shingle member fold -> doc-freq cap as a size(ids) filter -> in-group pair explode + count; no self-join of the shingle table",
