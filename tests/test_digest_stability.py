@@ -9,10 +9,16 @@ order-insensitive value digest must be identical. With exact decimal sums
 (operators/metrics.det_mean/det_sum, entry _dsum/_dmean) this holds by
 construction; any future `F.sum(double)`-under-rounding regression trips
 it immediately instead of flaking once a round in CORRECTNESS_r{N}.json.
+
+The config-A digest is also pinned to tests/oracle_digests.json, so the
+Spark side of every pair keeps the exact result recorded there; the
+DuckDB side is pinned to the same file by test_entry_contract.
 """
 from __future__ import annotations
 
 import importlib.util
+import json
+from pathlib import Path
 
 import pytest
 
@@ -22,6 +28,8 @@ SF_DIR = "/root/testdata/sf0.001"
 # splits and a wide shuffle so partial sums accumulate in a genuinely
 # different order than config A's near-serial plan
 CONFIGS = [("2", str(128 * 1024 * 1024)), ("64", str(64 * 1024))]
+
+MANIFEST = Path(__file__).with_name("oracle_digests.json")
 
 _RUNTIME_KEYS = ("spark.sql.shuffle.partitions",
                  "spark.sql.files.maxPartitionBytes")
@@ -54,6 +62,7 @@ def test_oracle_paired_digests_stable_across_parallelism(spark):
     checker = _load_checker()
     qs = entry.queries()
     paired = sorted(entry.oracle_sql())
+    pinned = json.loads(MANIFEST.read_text())["digests"]
     failures = []
     for name in paired:
         try:
@@ -68,6 +77,10 @@ def test_oracle_paired_digests_stable_across_parallelism(spark):
             failures.append(
                 f"{name}: digest {da[:12]} (cfg A, {len(ra)} rows) != "
                 f"{db[:12]} (cfg B, {len(rb)} rows)")
+        elif da != pinned.get(name):
+            failures.append(
+                f"{name}: digest {da} != manifest {pinned.get(name)}")
     assert not failures, (
         f"{len(failures)}/{len(paired)} oracle-paired queries are "
-        "partition-order-unstable:\n" + "\n".join(failures))
+        "partition-order-unstable or differ from the manifest:\n"
+        + "\n".join(failures))

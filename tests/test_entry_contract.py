@@ -1,9 +1,12 @@
-"""Driver-contract surface: entry() smoke, queries()/oracle_sql() shape, and
-a fast spot-check of two oracle pairs at sf0.001 (the full 36-pair sweep
-runs via tools/check_oracle.py at sf0.01)."""
+"""Driver-contract surface: entry() smoke, queries()/oracle_sql() shape, a
+fast spot-check of two oracle pairs at sf0.001 (the full sweep runs via
+tools/check_oracle.py), and every DuckDB twin pinned to the digest
+manifest tests/oracle_digests.json."""
 from __future__ import annotations
 
+import json
 import sys
+from pathlib import Path
 
 import duckdb
 import pytest
@@ -12,6 +15,15 @@ sys.path.insert(0, "/root/repo")
 import __spark_entry__ as entry  # noqa: E402
 
 SF = "/root/testdata/sf0.001"
+MANIFEST = Path(__file__).with_name("oracle_digests.json")
+
+
+def _duckdb():
+    con = duckdb.connect()
+    for t in entry.TABLES:
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM "
+                f"read_parquet('{SF}/{t}.parquet')")
+    return con
 
 
 def test_entry_smoke(spark):
@@ -34,16 +46,34 @@ def test_oracle_spot_check(spark, name):
     q = entry.queries()[name]
     sdf = q(spark, SF)
     srows = [tuple(r) for r in sdf.collect()]
-    con = duckdb.connect()
-    for t in entry.TABLES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM "
-                f"read_parquet('{SF}/{t}.parquet')")
+    con = _duckdb()
     rel = con.sql(entry.oracle_sql()[name])
     dcols = [d[0] for d in rel.description]
     drows = rel.fetchall()
     assert len(srows) == len(drows)
     assert sorted(sdf.columns) == sorted(dcols)
     assert table_digest(sdf.columns, srows) == table_digest(dcols, drows)
+
+
+def test_oracle_twins_match_digest_manifest():
+    """DuckDB side of every pair against the pinned digests (the Spark side
+    is pinned to the same file by test_digest_stability), plus the exact
+    queries() order the driver's correctness window reads. A PR that changes
+    a result on purpose edits the one manifest line the failure names."""
+    from tools.check_oracle import table_digest
+    pinned = json.loads(MANIFEST.read_text())
+    assert list(entry.queries()) == pinned["queries"]
+    twins = entry.oracle_sql()
+    assert sorted(twins) == sorted(pinned["digests"])
+    con = _duckdb()
+    failures = []
+    for name, sql in sorted(twins.items()):
+        rel = con.sql(sql)
+        got = table_digest([d[0] for d in rel.description], rel.fetchall())
+        if got != pinned["digests"][name]:
+            failures.append(f"{name}: duckdb {got} != manifest "
+                            f"{pinned['digests'][name]}")
+    assert not failures, "\n".join(failures)
 
 
 def test_approx_distinct_within_tolerance(spark):
