@@ -17,10 +17,9 @@ def main():
     names = sys.argv[1].split(",")
     n_runs = int(sys.argv[2]) if len(sys.argv) > 2 else 3
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf1.0")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     import __spark_entry__ as entry
     from docext_spark.session import get_spark
-    spark = get_spark(app_name="bench_extra", master=f"local[{cpus}]")
+    spark = get_spark(app_name="bench_extra")
     qs = entry.queries()
     # JVM + python-worker warmup (mirrors bench.py)
     qs["q1_pricing_summary"](spark, sf_dir).collect()

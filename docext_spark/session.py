@@ -33,9 +33,10 @@ def get_spark(app_name: str = "docext_spark", master: str | None = None,
         # over a few MB then runs on 1-4 cores of 32 (measured r7:
         # j1_field_alignment's scoring stage). Small partitions of
         # compute-bound work are fine locally; production can raise this
-        # back when shuffle-fetch overhead dominates compute.
+        # back through ``extra_conf`` when shuffle-fetch overhead
+        # dominates compute.
         .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-                os.environ.get("SPARK_GRAFT_MIN_PARTITION_SIZE", "64k"))
+                "64k")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # Prefer shuffled-hash over sort-merge when a side's per-partition
         # build fits (guide §3.1/§9): the engine's equi-joins key on ids
@@ -43,7 +44,7 @@ def get_spark(app_name: str = "docext_spark", master: str | None = None,
         # sorts is a strict win; AQE's OOM-guard threshold stays in force.
         .config("spark.sql.join.preferSortMergeJoin", "false")
         .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-                os.environ.get("SPARK_GRAFT_SHJ_THRESHOLD", "256m"))
+                "256m")
         # Broadcast only genuinely dimension-sized relations: building a
         # broadcast hash relation is SINGLE-THREADED on the driver and
         # every executor holds a copy — broadcasting a ~10 MB-estimate /
@@ -51,8 +52,7 @@ def get_spark(app_name: str = "docext_spark", master: str | None = None,
         # shuffled-hash path (q5's lineitem⋈orders, r7). Config-scale dims
         # (nation, aggregated key sets) stay under 4 MB and still
         # broadcast; explicit F.broadcast() hints are unaffected.
-        .config("spark.sql.autoBroadcastJoinThreshold",
-                os.environ.get("SPARK_GRAFT_BROADCAST_THRESHOLD", "4m"))
+        .config("spark.sql.autoBroadcastJoinThreshold", "4m")
         .config("spark.sql.session.timeZone", "UTC")
         # File-split sizing (guide §6): openCostInBytes models per-file
         # open latency. The 4 MB default is tuned for object stores; on
@@ -62,10 +62,9 @@ def get_spark(app_name: str = "docext_spark", master: str | None = None,
         # signature stage). With a small open cost, maxSplitBytes falls
         # back to totalBytes/defaultParallelism, so every scan can fill
         # the local cores. Production (object store, many large files)
-        # should raise SPARK_GRAFT_OPEN_COST_BYTES back toward 4 MB and
+        # should raise it back toward 4 MB through ``extra_conf`` and
         # rely on maxPartitionBytes for the split ceiling.
-        .config("spark.sql.files.openCostInBytes",
-                os.environ.get("SPARK_GRAFT_OPEN_COST_BYTES", "131072"))
+        .config("spark.sql.files.openCostInBytes", "131072")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))

@@ -84,7 +84,7 @@ def prepare_input(n_convs: int, input_dir: str = INPUT_DIR,
     sys.path.insert(0, "/root/repo")
     from docext_spark.session import get_spark
     from docext_spark.synth import transcripts_df
-    spark = get_spark(app_name="scalebench_prep", master="local[32]")
+    spark = get_spark(app_name="scalebench_prep")
     transcripts_df(spark, n_convs=n_convs, median_turns=8,
                    hot_factor=hot_factor,
                    partitions=64).write.mode("overwrite").parquet(input_dir)

@@ -51,7 +51,7 @@ def main():
     sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     import __spark_entry__ as entry
     from docext_spark.session import get_spark
-    spark = get_spark(master="local[8]")
+    spark = get_spark()
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     out = ["# PLANS — physical-plan evidence for the scale-posture claims",
            "", f"Generated by tools/explain_plans.py on {sf}.", ""]
