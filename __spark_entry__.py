@@ -2462,7 +2462,7 @@ def _dedup_winnow_flood_guard(spark, sf_dir):
     document frequency of 1200 > the default max_doc_freq=1000, so an
     uncapped join would put ~720k candidate pairs on EACH hot fingerprint
     (~10^7 joined rows from one template — quadratic in flood size). With
-    the default cap the hot fingerprints are broadcast-anti-joined out:
+    the default cap the hot fingerprints are filtered out of the fold:
     zero flood pairs survive, the base corpus' genuine overlap pairs are
     untouched, and the dropped pair mass is reported. Oracle replays the
     rolling-hash fingerprinting, the doc-freq cap, and both stat
@@ -2565,7 +2565,7 @@ def _simhash_flood_guard(spark, sf_dir):
     every one of the 4 hamming bands holds a 1500-member bucket —
     uncapped, that is 4 × 1500²/2 ≈ 4.5M joined rows collapsing onto four
     keys. With the default max_bucket_size=1000 the hot buckets are
-    broadcast-anti-joined out: zero flood pairs survive, the base corpus'
+    filtered out of the fold: zero flood pairs survive, the base corpus'
     chance band collisions are untouched, and the dropped pair mass is
     reported. Oracle replays the md5 bit-vote simhash, the band split,
     the cap, and both stat aggregates in DuckDB."""

@@ -77,32 +77,18 @@ def shingle_table(df: DataFrame, id_col: str = "doc_id",
 
 
 def hot_keys(df: DataFrame, key_cols: list[str], cap: int) -> DataFrame:
-    """Keys whose row count exceeds ``cap``, with the count — the shared
-    observability + guard primitive for every quadratic candidate join in
-    this module (hot shingles, hot LSH buckets, hot winnow fingerprints,
-    hot simhash bands). Exposed so the default caps are AUDITABLE, not
-    silent: callers can count what a cap dropped with the exact grouping
-    the cap used (ADVICE r3 — a silent default cap changes reported
-    similarity values with no runtime signal)."""
+    """Keys whose row count exceeds ``cap``, with the count — the
+    observability primitive for the caps on quadratic candidate groups
+    (hot shingles, hot LSH buckets, hot winnow fingerprints, hot simhash
+    bands). The caps themselves are ``size(ids) <= cap`` filters inside
+    each grouped fold; this counts what a cap dropped with the exact
+    grouping the cap used, so the default caps are AUDITABLE, not silent
+    (ADVICE r3 — a silent default cap changes reported similarity values
+    with no runtime signal). The flood-guard queries use it to report
+    the pair mass their caps dropped."""
     return (df.groupBy(*key_cols)
               .agg(F.count(F.lit(1)).alias("n_refs"))
               .filter(F.col("n_refs") > cap))
-
-
-def _drop_hot(df: DataFrame, key_cols: list[str], cap: int) -> DataFrame:
-    """Broadcast-anti-join out every row whose key is hot. The hot set
-    (boilerplate, templated floods) is by definition tiny relative to the
-    key vocabulary, so it broadcasts — the big table never shuffles for
-    the filter. Without a cap one ubiquitous key is a quadratic candidate
-    bucket at 100TB (a key shared by 1M docs → 5·10^11 pairs)."""
-    hot = hot_keys(df, key_cols, cap).select(*key_cols)
-    return df.join(F.broadcast(hot), key_cols, "left_anti")
-
-
-def capped_shingle_table(sh: DataFrame, max_doc_freq: int) -> DataFrame:
-    """Drop shingles whose document frequency exceeds ``max_doc_freq``
-    (broadcast-anti on the hot set — see _drop_hot)."""
-    return _drop_hot(sh, ["shingle"], max_doc_freq)
 
 
 DEFAULT_MAX_DOC_FREQ = 1000
@@ -392,8 +378,8 @@ def lsh_candidate_pairs(df: DataFrame, id_col: str = "doc_id",
     ``max_bucket_size`` guards the remaining skew vector at 100TB: a bucket
     of B identical-signature docs yields B²/2 candidate pairs, so one
     1M-member bucket (mass-duplicated boilerplate) is 5·10^11 pairs on one
-    key. Oversized buckets are dropped via the same broadcast-anti shape as
-    the hot-shingle cap. The guard is ON BY DEFAULT (pass
+    key. Oversized buckets are dropped by the same ``size(ids) <= cap``
+    filter on the grouped bucket fold as the hot-shingle cap. The guard is ON BY DEFAULT (pass
     ``max_bucket_size=None`` to explicitly opt out): a bucket of >1000
     near-identical docs is a flood, not recall — the default config must
     survive templated floods without a config flag. Run EXACT dedup first

@@ -305,8 +305,8 @@ def test_lsh_verified_pairs_equals_two_step(flood_report, engine, cap):
 
 def test_jaccard_hot_shingle_cap_bounds_candidates(spark):
     """One shingle in 50% of docs must not create a quadratic candidate
-    bucket: the doc-frequency cap drops it before the self-join."""
-    from docext_spark.operators.dedup import capped_shingle_table, shingle_table
+    bucket: the doc-frequency cap drops it before any pair is formed."""
+    from docext_spark.operators.dedup import jaccard_pairs, shingle_table
     boiler = "all rights reserved worldwide"
     rows = [(i, f"{boiler} unique document body number {i} alpha beta")
             for i in range(40)]
@@ -319,14 +319,10 @@ def test_jaccard_hot_shingle_cap_bounds_candidates(spark):
                       .filter(F.col("id_a") < F.col("id_b"))
                       .select("id_a", "id_b").distinct().count())
     assert uncapped_cands >= 40 * 39 / 2  # boilerplate = quadratic bucket
-    capped = capped_shingle_table(sh, max_doc_freq=10)
-    capped_cands = (capped.withColumnRenamed("id", "id_a")
-                    .join(capped.withColumnRenamed("id", "id_b"), "shingle")
-                    .filter(F.col("id_a") < F.col("id_b"))
-                    .select("id_a", "id_b").distinct().count())
-    assert capped_cands == 0  # everything shared was boilerplate
+    # everything the docs share is boilerplate: capped, not even a
+    # zero-score pair survives
+    assert jaccard_pairs(df, threshold=0.0, max_doc_freq=10).count() == 0
     # capped jaccard still finds REAL near-dups (shared non-hot shingles)
-    from docext_spark.operators.dedup import jaccard_pairs
     near = spark.createDataFrame(
         [(200, f"{boiler} same same same body here"),
          (201, f"{boiler} same same same body there")],

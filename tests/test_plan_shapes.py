@@ -27,15 +27,6 @@ def test_x4_kie_has_no_total_sort(spark):
     assert "Sort" not in plan  # display sort is opt-in, not in the oracle path
 
 
-def test_capped_jaccard_hot_filter_is_broadcast_anti(spark):
-    from docext_spark.operators.dedup import capped_shingle_table, shingle_table
-    sh = shingle_table(_docs(spark))
-    plan = _plan(capped_shingle_table(sh, 10))
-    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
-    # the hot-set filter must not shuffle the shingle table
-    assert "SortMergeJoin" not in plan
-
-
 def test_cosine_lsh_has_no_cartesian(spark):
     from docext_spark.operators.similarity import embedding_near_dups
     emb = (spark.read.parquet(f"{SF}/embeddings.parquet")
