@@ -2791,8 +2791,9 @@ FROM documents WHERE doc_id < 200
 
 
 def _media(spark, payloads, kind="image"):
-    """Driver-built fixture frame: row i is (media_id i, kind, payloads[i]),
-    or just (media_id i, payloads[i]) with ``kind=None``."""
+    """Fixture frame from Python-encoded payloads: row i is (media_id i,
+    kind, payloads[i]), or just (media_id i, payloads[i]) with
+    ``kind=None``."""
     import pandas as pd
     if kind is None:
         return spark.createDataFrame(

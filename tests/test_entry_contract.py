@@ -1,6 +1,6 @@
-"""Driver-contract surface: entry() smoke, queries()/oracle_sql() shape, a
-fast spot-check of two oracle pairs at sf0.001 (the full sweep runs via
-tools/check_oracle.py), and every DuckDB twin pinned to the digest
+"""Driver-contract surface: entry() smoke, queries()/oracle_sql() shape, and
+a fast spot-check of two oracle pairs at sf0.001 (the full sweep runs via
+tools/check_oracle.py), plus every DuckDB twin pinned to the digest
 manifest tests/oracle_digests.json."""
 from __future__ import annotations
 
@@ -58,8 +58,9 @@ def test_oracle_spot_check(spark, name):
 def test_oracle_twins_match_digest_manifest():
     """DuckDB side of every pair against the pinned digests (the Spark side
     is pinned to the same file by test_digest_stability), plus the exact
-    queries() order the driver's correctness window reads. A PR that changes
-    a result on purpose edits the one manifest line the failure names."""
+    queries() order, whose first 50 entries are the oracle-checked window.
+    A change that alters a result on purpose edits the one manifest line
+    the failure names."""
     from tools.check_oracle import table_digest
     pinned = json.loads(MANIFEST.read_text())
     assert list(entry.queries()) == pinned["queries"]
