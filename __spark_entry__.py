@@ -2807,7 +2807,7 @@ def _media(spark, payloads, kind="image"):
 
 
 def _doc_media(spark, sf_dir, fixture_hex):
-    """Natively built image fixtures over doc ids 0..119: widths 3..16,
+    """Natively built image fixtures for doc ids below 120: widths 3..16,
     heights 2..14, payload bytes from ``fixture_hex(id, width, height)``."""
     d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 120)
     width = (F.lit(3) + F.col("doc_id") % 14).cast("int")         # 3..16
