@@ -69,19 +69,20 @@ def run_pipeline(spark: SparkSession, transcripts: DataFrame,
         all_turns = extracted
 
     metrics = lineage_metrics(extracted)
+    if ckpt is not None:
+        # every consumer of the cached plan is materialized (commit wrote
+        # the turns; convs/turns re-read the committed files): release the
+        # executor storage on ALL code paths. metrics is tiny (one row per
+        # input partition) — localCheckpoint aggregates it once off the
+        # cached lineage before the release, and both the metrics write
+        # below and the returned frame read that checkpoint, so neither
+        # aggregates again or recomputes the extraction pUDF.
+        metrics = metrics.localCheckpoint(eager=True)
+        extracted.unpersist()
     if metrics_path is not None:
         metrics.write.mode("append").parquet(metrics_path)
 
     convs = reassemble_conversations(all_turns, segmented=segmented)
-    if ckpt is not None:
-        # every consumer of the cached plan is materialized (commit wrote
-        # the turns; convs/turns re-read the committed files): release the
-        # executor storage on ALL code paths, not only when metrics were
-        # written. metrics is tiny (one row per input partition) —
-        # localCheckpoint materializes it off the cached lineage first so
-        # the returned frame never recomputes the extraction pUDF.
-        metrics = metrics.localCheckpoint(eager=True)
-        extracted.unpersist()
     # output_root=None: convs/turns still read through the cached plan, so
     # the cache must outlive this call — the caller owns release via the
     # returned handle once its consumers are materialized.

@@ -11,6 +11,9 @@ import os
 
 from pyspark.sql import SparkSession
 
+# the directory that contains the docext_spark package
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(app_name: str = "docext_spark", master: str | None = None,
               shuffle_partitions: int | None = None,
@@ -69,6 +72,12 @@ def get_spark(app_name: str = "docext_spark", master: str | None = None,
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
         .config("spark.ui.enabled", "false")
+        # Python workers fork from a daemon that stops the per-task
+        # importlib.invalidate_caches() re-reading unchanged zip archives
+        # (0.15-0.3 s per task on 4 vCPUs, see worker_daemon.py); the
+        # PYTHONPATH lets it import from any working directory.
+        .config("spark.python.daemon.module", "docext_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
     # per-tool overrides (e.g. stressbench enables the UI to read stage
     # peakExecutionMemory from the REST API)

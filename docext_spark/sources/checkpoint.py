@@ -26,7 +26,7 @@ import json
 import os
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 KEY_COLS = ("conv_id", "turn_idx")
@@ -88,20 +88,17 @@ class CheckpointedResults:
     def commit(self, df: DataFrame) -> int:
         """Write one batch and commit it atomically. Returns rows written.
 
-        The marker row count must describe the FILES just written: when
-        the upstream is cached (the pipeline persists the expensive stage)
-        df.count() is a cheap cache read and provably equals the write;
-        when it is NOT cached, re-counting the plan could diverge from the
-        written data (nondeterministic stages) and would re-run it — so
-        the freshly written batch directory is counted instead (metadata-
-        cheap: parquet row-count comes from footers)."""
+        The marker's row count comes from an Observation attached to the
+        write, so it counts the rows the writer received in that same
+        execution, cached input or not, and no second job reads the batch
+        back. The Observation is unnamed (a fresh name per commit), so
+        concurrent committers in one session never share one."""
         batch = f"batch-{uuid.uuid4().hex[:12]}"
         path = os.path.join(self.root, batch)
-        df.write.mode("error").parquet(path)
-        if df.is_cached:
-            n = df.count()
-        else:
-            n = df.sparkSession.read.parquet(path).count()
+        rows = Observation()
+        (df.observe(rows, F.count(F.lit(1)).alias("n"))
+         .write.mode("error").parquet(path))
+        n = rows.get["n"]
         self._append_commit(batch, n)
         return n
 

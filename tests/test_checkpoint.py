@@ -122,3 +122,31 @@ def test_legacy_manifest_still_readable(spark, tmp_path):
     ckpt.commit(src.join(ckpt.committed(spark).select("conv_id"),
                          "conv_id", "left_anti"))
     assert ckpt.committed(spark).count() == 2
+
+
+def test_commit_counts_rows_in_its_write(spark, tmp_path):
+    """The marker's row count comes from the write itself: committing a
+    projection of a persisted frame (what run_pipeline passes) runs one
+    Spark job, with no read-back of the batch just written."""
+    import json
+    import os
+
+    src = spark.createDataFrame(
+        [(f"c{i}", i, f"text {i}") for i in range(6)],
+        "conv_id string, turn_idx int, md string").persist()
+    src.count()
+    ckpt = CheckpointedResults(str(tmp_path / "results"))
+    sc = spark.sparkContext
+    group = "checkpoint-commit-one-job"
+    sc.setJobGroup(group, "one commit")
+    try:
+        n = ckpt.commit(src.select("conv_id", "turn_idx", "md"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    src.unpersist()
+    assert n == 6
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    (batch,) = ckpt._committed_batches()
+    with open(os.path.join(ckpt.root, f"_commit-{batch}.json")) as f:
+        assert json.load(f)["rows"] == 6
+    assert ckpt.committed(spark).count() == 6
