@@ -7,14 +7,19 @@ data-pipeline composition over the engine's own operators:
                      bucket → connected components → keep one per cluster)
       → curated corpus + per-stage survivorship metrics
 
-Every stage is a DataFrame transform; the only driver-side loop is the
-bounded label-propagation convergence inside duplicate_clusters. Scale
-shape: the quality gate and fingerprints are map-only; exact dedup is one
-shuffle on a 64-char key; the fuzzy stage shuffles one (band, key,
-id, shingle set) row per document and band, scores the candidate pairs
-inside each bucket row and shuffles only the verified pairs (never
-O(n²), and no candidate-pair rows); clustering shuffles the verified
-PAIR list, which is tiny relative to the corpus.
+Every stage is a DataFrame transform except the component labelling in
+duplicate_clusters. It checkpoints the verified pair list once and
+collects at most 2**20 + 1 rows of it (one Arrow collect, no Python
+worker); a list of at most 2**20 pairs (~16 MB of ids) is labelled by
+numpy min-label propagation on the driver. The bound is exact because
+the gate counts the rows it collected rather than trusting a size
+estimate. A longer list runs the same rounds distributed, one shuffle
+join against the pair list per round. Scale shape: the quality gate and
+fingerprints are map-only; exact dedup is one shuffle on a 64-char key;
+the fuzzy stage shuffles one (band, key, id, shingle set) row per
+document and band, scores the candidate pairs inside each bucket row and
+shuffles only the verified pairs (never O(n²), and no candidate-pair
+rows); the verified PAIR list is tiny relative to the corpus.
 
 The reference has no corpus curation (it is a per-document extraction
 tool); this plan is part of the beyond-parity training-data surface

@@ -27,17 +27,18 @@ import statistics
 import subprocess
 import sys
 
+ROOT = os.path.dirname(os.path.abspath(__file__))
 INPUT_DIR = "/tmp/scalebench_input"
 SKEWED_INPUT_DIR = "/tmp/scalebench_input_skewed"   # hot_factor=200
 
 WORKER = r'''
 import json, os, sys, time, statistics
 
-cores, replicas, runs, input_dir, segmented = (
+cores, replicas, runs, input_dir, segmented, root = (
     int(sys.argv[1]), int(sys.argv[2]), int(sys.argv[3]), sys.argv[4],
-    bool(int(sys.argv[5])))
+    bool(int(sys.argv[5])), sys.argv[6])
 os.sched_setaffinity(0, set(range(cores)))
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, root)
 os.environ["SPARK_DRIVER_MEM"] = "60g"
 from pyspark.sql import functions as F
 from docext_spark.session import get_spark
@@ -81,7 +82,7 @@ def prepare_input(n_convs: int, input_dir: str = INPUT_DIR,
             and os.path.exists(marker)
             and open(marker).read().strip() == str(n_convs)):
         return
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, ROOT)
     from docext_spark.session import get_spark
     from docext_spark.synth import transcripts_df
     spark = get_spark(app_name="scalebench_prep")
@@ -97,7 +98,7 @@ def measure(cores: int, replicas: int, runs: int,
             input_dir: str = INPUT_DIR, segmented: bool = True) -> dict:
     out = subprocess.run(
         [sys.executable, "-c", WORKER, str(cores), str(replicas), str(runs),
-         input_dir, str(int(segmented))],
+         input_dir, str(int(segmented)), ROOT],
         capture_output=True, text=True, check=True)
     sample = json.loads(out.stdout.strip().splitlines()[-1])
     tps = statistics.median(sample["tps"])
@@ -117,7 +118,8 @@ def main():
     ap.add_argument("--runs", type=int, default=3)
     ap.add_argument("--convs", type=int, default=40000)
     ap.add_argument("--replicas", type=int, default=1)
-    ap.add_argument("--out", default="BENCH/scaling.json")
+    ap.add_argument("--out",
+                    default=os.path.join(ROOT, "BENCH", "scaling.json"))
     ap.add_argument("--mode", choices=["uniform", "skewed"],
                     default="uniform",
                     help="skewed: hot_factor=200 input (one conversation "

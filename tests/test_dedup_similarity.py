@@ -441,6 +441,87 @@ def test_duplicate_clusters_matches_union_find_twin(spark):
         assert got == expect, f"trial {trial} diverged"
 
 
+# the connected-components fixture: a triangle, a pair and a 4-hop chain
+_CC_PAIRS = [(1, 2), (2, 3), (10, 11),
+             (33, 34), (32, 33), (31, 32), (30, 31)]
+
+
+def _seeded_twin_edges():
+    """The three seeded random graphs of the union-find twin test above."""
+    import random
+    rng = random.Random(20260816)
+    return [sorted({tuple(sorted(rng.sample(range(60), 2)))
+                    for _ in range(50)}) for _ in range(3)]
+
+
+def _clusters_both_paths(monkeypatch, df, **kw):
+    """(driver-pass frame, distributed frame) of duplicate_clusters(df):
+    the default gate must take the driver pass on these small lists, and
+    a bound of 0 forces the distributed rounds."""
+    from docext_spark.operators import dedup
+    calls = []
+    local_clusters = dedup._local_clusters
+    with monkeypatch.context() as m:
+        m.setattr(dedup, "_local_clusters",
+                  lambda *a: calls.append(1) or local_clusters(*a))
+        local = dedup.duplicate_clusters(df, **kw)
+    assert calls == [1], "small pair list did not take the driver pass"
+    with monkeypatch.context() as m:
+        m.setattr(dedup, "_LOCAL_EDGES", 0)
+        distributed = dedup.duplicate_clusters(df, **kw)
+    return local, distributed
+
+
+@pytest.mark.parametrize("id_type", ["int", "bigint"])
+def test_duplicate_clusters_gate_paths_agree(spark, monkeypatch, id_type):
+    """Both sides of the size gate return equal rows and an equal schema:
+    the union-find twin graphs, the connected-components fixture and an
+    empty pair list."""
+    graphs = _seeded_twin_edges() + [_CC_PAIRS, []]
+    for edges in graphs:
+        df = spark.createDataFrame(edges, f"id_a {id_type}, id_b {id_type}")
+        local, distributed = _clusters_both_paths(monkeypatch, df)
+        assert local.schema == distributed.schema
+        assert local.schema["doc_id"].dataType.simpleString() == id_type
+        assert sorted(local.collect()) == sorted(distributed.collect())
+
+
+def test_duplicate_clusters_gate_paths_share_the_guard(spark, monkeypatch):
+    """The 10-chain raises on both sides of the gate at max_iter=5 and
+    both sides agree at max_iter=15."""
+    from docext_spark.operators import dedup
+    chain = spark.createDataFrame([(i, i + 1) for i in range(10)],
+                                  "id_a int, id_b int")
+    for bound in (dedup._LOCAL_EDGES, 0):
+        with monkeypatch.context() as m:
+            m.setattr(dedup, "_LOCAL_EDGES", bound)
+            with pytest.raises(RuntimeError, match="did not converge"):
+                dedup.duplicate_clusters(chain, max_iter=5)
+    local, distributed = _clusters_both_paths(monkeypatch, chain,
+                                              max_iter=15)
+    assert sorted(local.collect()) == sorted(distributed.collect())
+    assert {r["cluster_id"] for r in local.collect()} == {0}
+
+
+def test_duplicate_clusters_small_pair_list_job_count(spark):
+    """A small persisted pair list is labelled in at most 3 Spark jobs
+    (checkpoint, collect); the distributed rounds run 32 on it."""
+    from docext_spark.operators.dedup import duplicate_clusters
+    pairs = spark.createDataFrame(_CC_PAIRS, "id_a int, id_b int").persist()
+    pairs.count()
+    sc = spark.sparkContext
+    group = "duplicate-clusters-small-pair-list"
+    sc.setJobGroup(group, "small pair list")
+    try:
+        keepers = {r["doc_id"] for r in duplicate_clusters(pairs).collect()
+                   if r["is_keeper"]}
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    pairs.unpersist()
+    assert keepers == {1, 10, 30}
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 3
+
+
 def test_embedding_near_dups_requires_dim():
     from docext_spark.operators.similarity import embedding_near_dups
     with pytest.raises(ValueError, match="requires dim"):

@@ -37,7 +37,8 @@ _RUNTIME_KEYS = ("spark.sql.shuffle.partitions",
 
 def _load_checker():
     spec = importlib.util.spec_from_file_location(
-        "check_oracle", "/root/repo/tools/check_oracle.py")
+        "check_oracle",
+        Path(__file__).resolve().parents[1] / "tools" / "check_oracle.py")
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
     return mod

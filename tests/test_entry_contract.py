@@ -11,7 +11,7 @@ from pathlib import Path
 import duckdb
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 import __spark_entry__ as entry  # noqa: E402
 
 SF = "/root/testdata/sf0.001"

@@ -11,10 +11,12 @@ so a cross-engine last-ulp divergence on an unrounded DOUBLE column
 """
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 STRICT = False  # --strict: full-repr float canon (no 9-digit rounding)

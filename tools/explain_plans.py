@@ -7,9 +7,11 @@ two-phase.
 """
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 KEY_QUERIES = ["q1_pricing_summary", "q5_revenue_by_nation",
                "x1_turn_markdown", "flagship_reassembly",
@@ -67,7 +69,7 @@ def main():
                 lines.append(ln.rstrip()[:160])
         out += [f"## {name}", "", f"*Claim:* {CLAIMS[name]}", "", "```",
                 *lines[:40], "```", ""]
-    with open("/root/repo/BENCH/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "BENCH", "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print("wrote BENCH/PLANS.md")
     spark.stop()

@@ -24,7 +24,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from bench import is_contended  # noqa: E402  (single contention gate)
 
@@ -36,7 +37,7 @@ def _pressure_fields() -> dict:
 
 
 def _record(key: str, payload: dict,
-            path: str = "/root/repo/BENCH/scaling.json") -> None:
+            path: str = os.path.join(ROOT, "BENCH", "scaling.json")) -> None:
     existing = {}
     if os.path.exists(path):
         with open(path) as f:
