@@ -32,6 +32,7 @@ from pyspark.sql.types import (BooleanType, IntegralType, StringType,
 from pyspark.sql.window import Window
 
 from docext_spark.operators.textops import fingerprint, minhash_component, word_shingles
+from docext_spark.session import _per_jvm
 
 
 def exact_duplicates(df: DataFrame, id_col: str = "doc_id",
@@ -168,10 +169,7 @@ def jaccard_for_pairs(df: DataFrame, pairs: DataFrame,
     # shingle_table)
     pre = df.select(F.col(id_col).alias("id"),
                     normalized(F.col(text_col)).alias("_norm"))
-    sets = pre.select(
-        "id",
-        F.array_distinct(word_shingles(F.col("_norm"), n,
-                                       pre_normalized=True)).alias("sh"))
+    sets = pre.select("id", _shingle_set(n))
     sa = sets.select(F.col("id").alias("id_a"), F.col("sh").alias("sha"))
     sb = sets.select(F.col("id").alias("id_b"), F.col("sh").alias("shb"))
     return (pairs.select("id_a", "id_b").join(sa, "id_a").join(sb, "id_b")
@@ -203,9 +201,7 @@ def _signed_sets(df: DataFrame, id_col: str, text_col: str,
     lsh_verified_pairs. A caller that drops ``sh`` does not compute it on
     the sha256 path (column pruning)."""
     pre = _normalized_docs(df, id_col, text_col)
-    sh = F.array_distinct(word_shingles(F.col("_norm"), n,
-                                        pre_normalized=True)).alias("sh")
-    names = [f"sig_{s}" for s in range(num_hashes)]
+    sh = _shingle_set(n)
     if engine == "sha256":
         # Arrow-batched worker-side path (guide §4.2): tokenizing,
         # shingling, sha256 and the per-slice running mins all happen in
@@ -228,17 +224,28 @@ def _signed_sets(df: DataFrame, id_col: str, text_col: str,
         udf = _minhash_sha_udf(num_hashes, n).asNondeterministic()
         sigs = (pre.select("id", sh, udf(F.col("_norm")).alias("_sigs"))
                    .filter(F.col("_sigs").isNotNull()))
-        return sigs.select("id", "sh", *[F.col("_sigs")[s].alias(name)
-                                         for s, name in enumerate(names)])
-    # each component is a fold over the set; a document without shingles
-    # gets no row through inline(NULL) (a Filter here would be pushed
-    # below the fan-out exchange and re-run the normalization on the scan
-    # side)
-    sets = pre.select("id", sh)
-    sig = F.struct(*[_set_min_hash(F.col("sh"), s, engine).alias(name)
-                     for s, name in enumerate(names)])
-    return sets.select("id", "sh",
-                       F.inline(F.when(F.size("sh") > 0, F.array(sig))))
+        return sigs.select("id", "sh", *[F.col("_sigs")[s].alias(f"sig_{s}")
+                                         for s in range(num_hashes)])
+    return pre.select("id", sh).select("id", "sh",
+                                       _signature_row(num_hashes, engine))
+
+
+@_per_jvm
+def _shingle_set(n: int) -> Column:
+    """``sh``: the distinct word-n-gram shingles of the ``_norm`` column."""
+    return F.array_distinct(word_shingles(F.col("_norm"), n,
+                                          pre_normalized=True)).alias("sh")
+
+
+@_per_jvm
+def _signature_row(num_hashes: int, engine: str) -> Column:
+    """The sig_0..sig_{k-1} row of a long-engine signature over ``sh``.
+    Each component is a fold over the set; a document without shingles
+    gets no row through inline(NULL) (a Filter here would be pushed below
+    the fan-out exchange and re-run the normalization on the scan side)."""
+    sig = F.struct(*[_set_min_hash(F.col("sh"), s, engine).alias(f"sig_{s}")
+                     for s in range(num_hashes)])
+    return F.inline(F.when(F.size("sh") > 0, F.array(sig)))
 
 
 _LONG_MAX = (1 << 63) - 1
@@ -338,6 +345,14 @@ def _banded(signed: DataFrame, num_hashes: int, bands: int, engine: str,
         raise ValueError(
             f"num_hashes ({num_hashes}) must be divisible by bands ({bands}) "
             "or trailing signature components would be silently unused")
+    return (signed.select("id", *carry, _band_keys(num_hashes, bands, engine))
+                  .select("id", *carry, F.col("bk.band").alias("band"),
+                          F.col("bk.key").alias("key")))
+
+
+@_per_jvm
+def _band_keys(num_hashes: int, bands: int, engine: str) -> Column:
+    """``bk``: one struct(band, key) row per band of the sig_* columns."""
     rows_per_band = num_hashes // bands
     band_cols = []
     for b in range(bands):
@@ -346,10 +361,7 @@ def _banded(signed: DataFrame, num_hashes: int, bands: int, engine: str,
         key = (F.xxhash64(*cols) if engine == "xxhash64"
                else F.sha2(F.concat_ws("|", *cols), 256))
         band_cols.append(F.struct(F.lit(b).alias("band"), key.alias("key")))
-    return (signed.select("id", *carry,
-                          F.explode(F.array(*band_cols)).alias("bk"))
-                  .select("id", *carry, F.col("bk.band").alias("band"),
-                          F.col("bk.key").alias("key")))
+    return F.explode(F.array(*band_cols)).alias("bk")
 
 
 def lsh_banded(df: DataFrame, id_col: str = "doc_id",
@@ -470,7 +482,12 @@ def lsh_verified_pairs(df: DataFrame, id_col: str = "doc_id",
     applies to the banded rows, before the fold: a count over a (band,
     key) window shares the fold's exchange, so an over-cap bucket's rows
     are dropped before their shingle sets are collected into one row (the
-    window buffer spills; a collected flood bucket would not)."""
+    window buffer spills; a collected flood bucket would not).
+
+    The shingle-set, signature, band-key and in-bucket verify expressions
+    are built once per JVM for each argument set and reused by later calls
+    (session._per_jvm); the sha256 signature's pandas UDF is built on
+    every call."""
     banded = _banded(_signed_sets(df, id_col, text_col, num_hashes, n,
                                   engine), num_hashes, bands, engine, "sh")
     if max_bucket_size is not None:
@@ -481,20 +498,22 @@ def lsh_verified_pairs(df: DataFrame, id_col: str = "doc_id",
                      .agg(F.sort_array(F.collect_list(F.struct("id", "sh")))
                            .alias("ms")))
     return (buckets
-            .select(F.explode(_verified_bucket_pairs(F.col("ms"), threshold))
-                     .alias("p"))
+            .select(_verified_pairs_row(threshold))
             .select("p.id_a", "p.id_b", "p.inter",
                     (F.col("p.n") - F.col("p.inter")).alias("union"))
             .distinct()
             .withColumn("jaccard", F.round(F.col("inter") / F.col("union"), 6)))
 
 
-def _verified_bucket_pairs(ms: Column, threshold: float) -> Column:
-    """The (ids[i], ids[j]) i<j pairs of a sorted struct(id, sh) member
-    array whose rounded Jaccard reaches ``threshold``, as struct(id_a,
-    id_b, inter, n) with n = |sh_a| + |sh_b| (so union = n - inter).
-    Same rounding as jaccard_for_pairs; ``ms`` must be a materialized
-    column (see _bucket_pairs)."""
+@_per_jvm
+def _verified_pairs_row(threshold: float) -> Column:
+    """``p``: one row per (ids[i], ids[j]) i<j pair of the sorted
+    struct(id, sh) member array ``ms`` whose rounded Jaccard reaches
+    ``threshold``, as struct(id_a, id_b, inter, n) with n = |sh_a| + |sh_b|
+    (so union = n - inter). Same rounding as jaccard_for_pairs; ``ms`` must
+    be a materialized column (see _bucket_pairs)."""
+    ms = F.col("ms")
+
     def scored(x, y):
         return F.struct(x["id"].alias("id_a"), y["id"].alias("id_b"),
                         F.size(F.array_intersect(x["sh"], y["sh"]))
@@ -504,12 +523,12 @@ def _verified_bucket_pairs(ms: Column, threshold: float) -> Column:
     def verified(p):
         return F.round(p["inter"] / (p["n"] - p["inter"]), 6) >= threshold
 
-    return F.flatten(F.transform(
+    return F.explode(F.flatten(F.transform(
         ms,
         lambda x, i: F.filter(
             F.transform(F.slice(ms, i + F.lit(2), F.size(ms)),
                         lambda y: scored(x, y)),
-            verified)))
+            verified)))).alias("p")
 
 
 # Pair lists of at most this many rows are labelled on the driver (two id

@@ -42,6 +42,7 @@ from docext_spark.operators.textops import (_lang_from, _quality_from,
                                             dup_line_frac, fingerprint,
                                             lower_tokens, max_token_frac,
                                             redact_pii)
+from docext_spark.session import _per_jvm
 
 
 def quality_gate(docs: DataFrame, text_col: str = "text",
@@ -60,7 +61,20 @@ def quality_gate(docs: DataFrame, text_col: str = "text",
     language are all derived from it; the keep test filters that same
     array and ``inline`` emits the zero or one surviving feature row. A
     Filter above a Project would instead be pushed below it with every
-    feature inlined, re-splitting the text once per reference."""
+    feature inlined, re-splitting the text once per reference.
+
+    The feature-row expression is built once per JVM for each argument
+    set and reused by later calls (session._per_jvm): building it costs
+    ~1,500 py4j round trips."""
+    return docs.select("*", _gate_row(text_col, min_tokens, min_quality,
+                                      tuple(langs), max_dup_line_frac,
+                                      max_tok_frac))
+
+
+@_per_jvm
+def _gate_row(text_col, min_tokens, min_quality, langs, max_dup_line_frac,
+              max_tok_frac):
+    """quality_gate's ``inline(filter(transform(...)))`` feature row."""
     text = F.col(text_col)
 
     def features(low):
@@ -80,7 +94,7 @@ def quality_gate(docs: DataFrame, text_col: str = "text",
         return ok
 
     feats = F.transform(F.array(lower_tokens(text)), features)
-    return docs.select("*", F.inline(F.filter(feats, keep)))
+    return F.inline(F.filter(feats, keep))
 
 
 def exact_dedup_keep_first(docs: DataFrame, id_col: str = "doc_id",

@@ -7,12 +7,24 @@ default — on a real cluster this is set per-job from executor count.
 """
 from __future__ import annotations
 
+import functools
 import os
+import threading
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 # the directory that contains the docext_spark package
 _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def default_driver_memory() -> str:
+    """The driver heap when ``SPARK_DRIVER_MEM`` is unset: half of the
+    host's physical memory in whole GiB, at least 1g and at most 24g. A
+    fixed 24g on a 15 GB host let G1 grow the heap with garbage (a test
+    JVM whose live data fit in 1 GB reached 11 GB RSS)."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(24, max(1, phys // 2 // 2**30))}g"
 
 
 def get_spark(app_name: str = "docext_spark", master: str | None = None,
@@ -70,7 +82,8 @@ def get_spark(app_name: str = "docext_spark", master: str | None = None,
         .config("spark.sql.files.openCostInBytes", "131072")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory())
         .config("spark.ui.enabled", "false")
         # Python workers fork from a daemon that stops the per-task
         # importlib.invalidate_caches() re-reading unchanged zip archives
@@ -113,3 +126,40 @@ def fanout_small(df, max_bytes_per_slot: int = 8 << 20):
     if 0 <= size <= p * max_bytes_per_slot:
         return df.repartition(p)
     return df
+
+
+def _per_jvm(build):
+    """Memoize ``build``, a function of hashable positional arguments that
+    returns a native Column, for the life of the JVM.
+
+    Each ``F.*`` call and each lambda in a Column expression is a py4j
+    round trip, so a large expression tree costs tenths of a second to
+    build on every call. A Column stays valid after ``spark.stop()`` and a
+    new SparkContext in the same JVM, but not after a JVM relaunch: its
+    py4j id then names nothing, or an unrelated object. The memo is
+    therefore dropped whenever ``SparkContext._gateway`` changes.
+
+    Never wrap a builder of Columns that hold a Python UDF: a UDF binds
+    to the first SparkContext that runs it. Arguments are keyed with their
+    types, so ``5`` and ``5.0`` (different literals) build separately.
+    ``cached.cache_clear()`` empties the memo."""
+    memo = {"gateway": None, "cols": {}}
+    lock = threading.Lock()
+
+    @functools.wraps(build)
+    def cached(*args):
+        key = tuple((type(a), a) for a in args)
+        with lock:
+            if memo["gateway"] is not SparkContext._gateway:
+                memo["gateway"], memo["cols"] = SparkContext._gateway, {}
+            col = memo["cols"].get(key)
+            if col is None:
+                col = memo["cols"][key] = build(*args)
+            return col
+
+    def cache_clear():
+        with lock:
+            memo["gateway"], memo["cols"] = None, {}
+
+    cached.cache_clear = cache_clear
+    return cached

@@ -39,7 +39,6 @@ cores, replicas, runs, input_dir, segmented, root = (
     bool(int(sys.argv[5])), sys.argv[6])
 os.sched_setaffinity(0, set(range(cores)))
 sys.path.insert(0, root)
-os.environ["SPARK_DRIVER_MEM"] = "60g"
 from pyspark.sql import functions as F
 from docext_spark.session import get_spark
 from docext_spark.plans.pipeline import run_extraction

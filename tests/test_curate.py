@@ -2,6 +2,8 @@
 → keep-one, with a hand-computable fixture."""
 from __future__ import annotations
 
+import pytest
+
 from docext_spark.plans.curate import (curate, exact_dedup_keep_first,
                                        fuzzy_dedup_keep_first, quality_gate)
 
@@ -129,3 +131,91 @@ def test_curate_redact_and_repetition_gate(spark):
     assert "alice@example.com" not in got[1]
     for text in got.values():
         assert "@example.com" not in text
+
+
+def _gate_docs(spark):
+    """_docs plus a repetitive document (max token share 0.56), a document
+    with repeated lines (dup-line share 0.5) and a six-token one."""
+    extra = [(8, "the " + "spam spam spam wonderful spam and the " * 8),
+             (9, (GOOD + "\n") * 3 + "one more line about the garden"),
+             (10, "the cat sat on the mat")]
+    return spark.createDataFrame(
+        [tuple(r) for r in _docs(spark).collect()] + extra,
+        "doc_id int, text string")
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+@pytest.mark.parametrize("arg, value", [
+    ("min_tokens", 22), ("min_quality", 0.56), ("langs", ("de", "en")),
+    ("max_dup_line_frac", 0.3), ("max_tok_frac", 0.4)])
+def test_quality_gate_memo_keys_on_each_argument(spark, arg, value):
+    """The gate's feature row is memoized per JVM; a call that changes one
+    argument after another call returns the rows of a fresh build, and
+    they differ from the first call's rows."""
+    from docext_spark.plans.curate import _gate_row
+    docs = _gate_docs(spark)
+    base = dict(min_tokens=5, min_quality=0.3, langs=("en",),
+                max_dup_line_frac=None, max_tok_frac=None)
+    _gate_row.cache_clear()
+    first = _rows(quality_gate(docs, **base))
+    second = _rows(quality_gate(docs, **{**base, arg: value}))
+    assert second != first
+    _gate_row.cache_clear()
+    assert second == _rows(quality_gate(docs, **{**base, arg: value}))
+
+
+def test_quality_gate_memo_langs_order_list_and_tuple(spark):
+    """``langs`` given as a list and as a tuple, in either order, keep the
+    same documents as a fresh build; equal arguments reuse one Column."""
+    from docext_spark.plans.curate import _gate_row
+    docs = _gate_docs(spark)
+    _gate_row.cache_clear()
+    as_list = _rows(quality_gate(docs, langs=["de", "en"]))
+    as_tuple = _rows(quality_gate(docs, langs=("en", "de")))
+    _gate_row.cache_clear()
+    assert as_tuple == _rows(quality_gate(docs, langs=("en", "de")))
+    _gate_row.cache_clear()
+    assert as_list == _rows(quality_gate(docs, langs=("de", "en"))) == as_tuple
+    assert 6 in {r[0] for r in as_list}  # the German document
+    assert (_gate_row("text", 5, 0.3, ("en",), None, None)
+            is _gate_row("text", 5, 0.3, ("en",), None, None))
+
+
+def test_curate_rebuild_py4j_budget(spark):
+    """A second build of quality gate → exact dedup → LSH verify, with no
+    action, reuses the per-JVM expressions: at most 1,000 py4j commands
+    (an unmemoized build sends ~3,600). gc is off during the count so no
+    memory-delete commands are sent."""
+    import gc
+
+    import py4j.clientserver as cs
+
+    from docext_spark.operators.dedup import lsh_verified_pairs
+
+    docs = _docs(spark)
+
+    def build():
+        gated = quality_gate(docs)
+        exact = exact_dedup_keep_first(gated)
+        return lsh_verified_pairs(exact, num_hashes=8, bands=4,
+                                  engine="xxhash64")
+
+    build()
+    sent = [0]
+    send = cs.ClientServerConnection.send_command
+
+    def counting(self, command, *args, **kwargs):
+        sent[0] += 1
+        return send(self, command, *args, **kwargs)
+
+    gc.disable()
+    cs.ClientServerConnection.send_command = counting
+    try:
+        build()
+    finally:
+        cs.ClientServerConnection.send_command = send
+        gc.enable()
+    assert 50 < sent[0] <= 1000, sent[0]

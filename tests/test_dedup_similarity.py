@@ -892,3 +892,53 @@ def test_ann_recall_at_5_on_sf01_corpus(spark):
     assert r_ivf2 >= 0.5, f"ivf probe=2 recall@5 regressed: {r_ivf2}"
     assert r_ivf4 >= 0.65, f"ivf probe=4 recall@5 regressed: {r_ivf4}"
     assert r_ivf4 >= r_ivf2, "probing more lists must never lose recall"
+
+
+def _graded_near_dups(spark):
+    """Groups of a 40-token base text and copies with 1, 2 and 6 tokens
+    replaced (Jaccard over 3-shingles 0.95, 0.81 and 0.41 to the base) and
+    disjoint vocabularies between groups."""
+    rows = []
+    for g in range(4):
+        toks = [f"w{g}x{k}" for k in range(40)]
+        rows.append((g * 10, " ".join(toks)))
+        for j, k in enumerate((1, 2, 6), start=1):
+            edit = toks[:]
+            for p in range(k):
+                edit[(p * 40) // k] = f"w{g}e{j}p{p}"
+            rows.append((g * 10 + j, " ".join(edit)))
+    return spark.createDataFrame(rows, "doc_id int, text string")
+
+
+def _clear_dedup_memos():
+    from docext_spark.operators import dedup
+    for build in (dedup._shingle_set, dedup._signature_row,
+                  dedup._band_keys, dedup._verified_pairs_row):
+        build.cache_clear()
+
+
+@pytest.mark.parametrize("op, arg, value", [
+    ("verified", "n", 2), ("verified", "threshold", 0.83),
+    ("banded", "n", 2), ("banded", "num_hashes", 16),
+    ("banded", "bands", 2), ("banded", "engine", "sha256")])
+def test_lsh_memo_keys_on_each_argument(spark, op, arg, value):
+    """The shingle-set, signature, band-key and verify expressions are
+    memoized per JVM; a call that changes one argument after another call
+    returns the rows of a fresh build, and they differ from the first
+    call's rows."""
+    from docext_spark.operators.dedup import lsh_banded, lsh_verified_pairs
+    df = _graded_near_dups(spark)
+    build = {"verified": lsh_verified_pairs, "banded": lsh_banded}[op]
+    base = dict(num_hashes=8, bands=4, n=3, engine="xxhash64")
+    if op == "verified":
+        base["threshold"] = 0.5
+
+    def rows(**kw):
+        return sorted(tuple(r) for r in build(df, **kw).collect())
+
+    _clear_dedup_memos()
+    first = rows(**base)
+    second = rows(**{**base, arg: value})
+    assert first and second != first
+    _clear_dedup_memos()
+    assert second == rows(**{**base, arg: value})
