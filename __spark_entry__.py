@@ -50,7 +50,7 @@ def _flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("").alias("tool"),
         F.lit("2026-01-01 00:00:00").cast("timestamp").alias("ts"))
     turns = extract_turns(transcripts)
-    return reassemble_conversations(turns, segmented=True)
+    return reassemble_conversations(turns)
 
 
 def entry(spark: SparkSession) -> DataFrame:

@@ -17,7 +17,8 @@ sort, ~B× fewer shuffle records into the hot reducer. The conversation-level
 string itself is irreducibly conversation-grained; segmentation minimizes
 everything around it.
 
-Results are byte-identical to the direct path (asserted in tests).
+The output is pinned byte for byte against the pure-Python
+``conversation_markdown`` (tests/test_pipeline_golden.py).
 """
 from __future__ import annotations
 
@@ -38,6 +39,16 @@ def _segment(base: DataFrame, segment_size: int) -> DataFrame:
             .groupBy("conv_id", "seg")
             .agg(F.array_sort(F.collect_list(F.struct("turn_idx", "md")))
                   .alias("part")))
+
+
+def _merged_segments():
+    """Phase 2 aggregate → ``parts``: segments are disjoint ordered ranges,
+    so sorting the group's segment rows by ``seg`` and flattening yields
+    the fully ordered turn array without re-sorting the turns."""
+    return F.flatten(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("seg", "part"))),
+            lambda s: s["part"])).alias("parts")
 
 
 def _with_header(arr_col):
@@ -72,10 +83,7 @@ def reassemble_conversations_chunked(turns: DataFrame,
               .withColumn("chunk", (F.col("seg") / F.lit(segments_per_chunk))
                           .cast("long"))
               .groupBy("conv_id", "chunk")
-              .agg(F.flatten(
-                  F.transform(
-                      F.array_sort(F.collect_list(F.struct("seg", "part"))),
-                      lambda s: s["part"])).alias("parts")))
+              .agg(_merged_segments()))
     # window stats run over a SLIM (conv_id, chunk, chunk_turns) frame
     # derived straight from the BASE table (a count aggregation — the
     # payload never enters it): partitioning by conv_id over rows carrying
@@ -115,27 +123,13 @@ def reassemble_conversations_chunked(turns: DataFrame,
                          md.alias("conv_md"))
 
 
-def reassemble_conversations(turns: DataFrame, segmented: bool = True,
-                             segment_size: int = SEGMENT_SIZE) -> DataFrame:
-    """(conv_id, turn_idx, md, ...) → (conv_id, n_turns, conv_md).
-
-    ``segmented=True`` selects the skew-safe two-phase plan;
-    ``segmented=False`` is the direct single-shuffle plan (same results).
-    """
-    base = turns.select("conv_id", "turn_idx", "md")
-    if segmented:
-        seg = _segment(base, segment_size)
-        # segments are disjoint ordered ranges: sorting S segment rows then
-        # flattening yields the fully ordered turn array without re-sorting
-        merged = (seg.groupBy("conv_id")
-                  .agg(F.flatten(
-                      F.transform(
-                          F.array_sort(F.collect_list(F.struct("seg", "part"))),
-                          lambda s: s["part"])).alias("parts")))
-    else:
-        merged = (base.groupBy("conv_id")
-                  .agg(F.array_sort(F.collect_list(F.struct("turn_idx", "md")))
-                        .alias("parts")))
+def reassemble_conversations(turns: DataFrame) -> DataFrame:
+    """(conv_id, turn_idx, md, ...) → (conv_id, n_turns, conv_md), by the
+    skew-safe two-phase plan."""
+    merged = (_segment(turns.select("conv_id", "turn_idx", "md"),
+                       SEGMENT_SIZE)
+              .groupBy("conv_id")
+              .agg(_merged_segments()))
     return merged.select(
         "conv_id",
         F.size("parts").alias("n_turns"),

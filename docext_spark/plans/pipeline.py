@@ -39,52 +39,38 @@ def run_extraction(transcripts: DataFrame) -> DataFrame:
 
 
 def run_pipeline(spark: SparkSession, transcripts: DataFrame,
-                 output_root: str | None = None,
-                 metrics_path: str | None = None,
-                 segmented: bool = True) -> dict:
-    """Full job. When ``output_root`` is set, per-turn results are written
-    through the checkpoint protocol (resume = anti-join on committed keys).
+                 output_root: str,
+                 metrics_path: str | None = None) -> dict:
+    """Full job. Per-turn results are written through the checkpoint
+    protocol under ``output_root`` (resume = anti-join on committed keys).
 
     Returns {"turns": DataFrame, "convs": DataFrame, "metrics": DataFrame,
              "written": int}.
     """
-    if output_root is not None:
-        ckpt = CheckpointedResults(output_root)
-        todo = ckpt.remaining(spark, transcripts)
-    else:
-        ckpt, todo = None, transcripts
+    ckpt = CheckpointedResults(output_root)
+    todo = ckpt.remaining(spark, transcripts)
 
-    # persist: the extraction pUDF is the expensive stage and feeds the
-    # commit, the lineage aggregation, and (when uncheckpointed) the
-    # reassembly — without this it would re-execute per consumer
+    # persist: the extraction pUDF is the expensive stage and feeds both
+    # the commit and the lineage aggregation — without this it would
+    # re-execute per consumer
     extracted = run_extraction(todo).persist()
-    written = 0
-    if ckpt is not None:
-        written = ckpt.commit(
-            extracted.select("conv_id", "turn_idx", "role", "md", "kind",
-                             "blocks_kept", "blocks_dropped",
-                             "classifier_decisions", "parse_ok"))
-        all_turns = ckpt.committed(spark)
-    else:
-        all_turns = extracted
+    written = ckpt.commit(
+        extracted.select("conv_id", "turn_idx", "role", "md", "kind",
+                         "blocks_kept", "blocks_dropped",
+                         "classifier_decisions", "parse_ok"))
+    all_turns = ckpt.committed(spark)
 
-    metrics = lineage_metrics(extracted)
-    if ckpt is not None:
-        # every consumer of the cached plan is materialized (commit wrote
-        # the turns; convs/turns re-read the committed files): release the
-        # executor storage on ALL code paths. metrics is tiny (one row per
-        # input partition) — localCheckpoint aggregates it once off the
-        # cached lineage before the release, and both the metrics write
-        # below and the returned frame read that checkpoint, so neither
-        # aggregates again or recomputes the extraction pUDF.
-        metrics = metrics.localCheckpoint(eager=True)
-        extracted.unpersist()
+    # every consumer of the cached plan is materialized (commit wrote the
+    # turns; convs/turns re-read the committed files): release the executor
+    # storage. metrics is tiny (one row per input partition) —
+    # localCheckpoint aggregates it once off the cached lineage before the
+    # release, and both the metrics write below and the returned frame read
+    # that checkpoint, so neither aggregates again or recomputes the
+    # extraction pUDF.
+    metrics = lineage_metrics(extracted).localCheckpoint(eager=True)
+    extracted.unpersist()
     if metrics_path is not None:
         metrics.write.mode("append").parquet(metrics_path)
 
-    convs = reassemble_conversations(all_turns, segmented=segmented)
-    # output_root=None: convs/turns still read through the cached plan, so
-    # the cache must outlive this call — the caller owns release via the
-    # returned handle once its consumers are materialized.
-    return {"turns": all_turns, "convs": convs, "metrics": metrics,
-            "written": written, "unpersist": extracted.unpersist}
+    return {"turns": all_turns, "convs": reassemble_conversations(all_turns),
+            "metrics": metrics, "written": written}

@@ -28,15 +28,13 @@ def default_driver_memory() -> str:
 
 
 def get_spark(app_name: str = "docext_spark", master: str | None = None,
-              shuffle_partitions: int | None = None,
               extra_conf: dict | None = None) -> SparkSession:
     # default: the cores this process may run on (a fixed count above
     # that oversubscribes small hosts; a 4-vCPU box lost 62% at local[32])
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
     master = master or f"local[{cpus}]"
-    if shuffle_partitions is None:
-        n = master[master.index("[") + 1:-1] if "[" in master else "32"
-        shuffle_partitions = 32 if n == "*" else max(8, int(n))
+    n = master[master.index("[") + 1:-1] if "[" in master else "32"
+    shuffle_partitions = 32 if n == "*" else max(8, int(n))
     builder = (
         SparkSession.builder.master(master).appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
@@ -92,8 +90,8 @@ def get_spark(app_name: str = "docext_spark", master: str | None = None,
         .config("spark.python.daemon.module", "docext_spark.worker_daemon")
         .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
-    # per-tool overrides (e.g. stressbench enables the UI to read stage
-    # peakExecutionMemory from the REST API)
+    # per-caller overrides (e.g. perfbench turns the console progress bar
+    # off and points the JVM's temp files into its run directory)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

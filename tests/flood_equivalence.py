@@ -58,8 +58,7 @@ def main(documents: str) -> None:
                                               lsh_candidate_pairs,
                                               lsh_verified_pairs)
     from docext_spark.session import get_spark
-    spark = get_spark(app_name="flood_equivalence", master="local[4]",
-                      shuffle_partitions=8)
+    spark = get_spark(app_name="flood_equivalence", master="local[4]")
     spark.sparkContext.setLogLevel("ERROR")
     df = flood_corpus(spark, documents, DEFAULT_MAX_BUCKET_SIZE).persist()
     df.count()

@@ -1,6 +1,6 @@
 """The north invariant (SURVEY.md §5.2 item 1): per-turn byte equality
 between the Spark pipeline and the pure-Python oracle, under stable turn
-ordering; plus segmented == direct reassembly and lineage totals."""
+ordering; plus chunked == unchunked reassembly and lineage totals."""
 from __future__ import annotations
 
 from collections import defaultdict
@@ -50,7 +50,7 @@ def test_spans_match_oracle(turns_and_oracle):
 def test_conversation_reassembly_order(turns_and_oracle, spark):
     extracted, oracle = turns_and_oracle
     convs = {r["conv_id"]: r["conv_md"]
-             for r in reassemble_conversations(extracted, segmented=True).collect()}
+             for r in reassemble_conversations(extracted).collect()}
     byconv = defaultdict(list)
     for (cid, tid), o in oracle.items():
         byconv[cid].append((tid, o["md"]))
@@ -59,24 +59,20 @@ def test_conversation_reassembly_order(turns_and_oracle, spark):
         assert convs[cid] == conversation_markdown([m for _, m in items]), cid
 
 
-def test_segmented_equals_direct(turns_and_oracle):
-    extracted, _ = turns_and_oracle
-    a = {r["conv_id"]: r["conv_md"]
-         for r in reassemble_conversations(extracted, segmented=True).collect()}
-    b = {r["conv_id"]: r["conv_md"]
-         for r in reassemble_conversations(extracted, segmented=False).collect()}
-    assert a == b
-
-
 def test_chunked_reassembly_reproduces_unchunked(turns_and_oracle):
     from docext_spark.operators.reassemble import (
         reassemble_conversations_chunked)
     extracted, _ = turns_and_oracle
     whole = {r["conv_id"]: r["conv_md"]
              for r in reassemble_conversations(extracted).collect()}
+    turn_mds = defaultdict(list)
+    for r in extracted.orderBy("conv_id", "turn_idx").collect():
+        turn_mds[r["conv_id"]].append(r["md"])
     # tiny chunks force every conversation to split into many parts
+    segment_size, segments_per_chunk = 4, 2
     chunked = reassemble_conversations_chunked(
-        extracted, segment_size=4, segments_per_chunk=2).collect()
+        extracted, segment_size=segment_size,
+        segments_per_chunk=segments_per_chunk).collect()
     by_conv = {}
     for r in chunked:
         by_conv.setdefault(r["conv_id"], []).append(r)
@@ -85,9 +81,24 @@ def test_chunked_reassembly_reproduces_unchunked(turns_and_oracle):
         assert parts[0]["n_parts"] == len(parts)
         joined = "\n".join(p["conv_md"] for p in parts)
         assert joined == whole[cid], cid
-        # every part bounded by segment_size*segments_per_chunk turns
-        assert all(p["conv_md"].count("\nPage ") + 1 <= 8 or True
-                   for p in parts)
+        # walk the part's "Page k of N" headers, each followed by turn k's
+        # markdown (which may hold such lines itself): a part holds at most
+        # segment_size * segments_per_chunk turns, and its page numbers
+        # continue the previous part's
+        n = parts[0]["n_turns"]
+        k = 1
+        for p in parts:
+            md, pos, first = p["conv_md"], 0, k
+            while pos < len(md):
+                turn = f"Page {k} of {n}\n" + turn_mds[cid][k - 1]
+                assert md.startswith(turn, pos), (cid, p["part_idx"], k)
+                pos += len(turn)
+                assert md[pos:pos + 1] in ("", "\n"), (cid, p["part_idx"], k)
+                pos += 1
+                k += 1
+            assert 1 <= k - first <= segment_size * segments_per_chunk, \
+                (cid, p["part_idx"])
+        assert k == n + 1, cid
 
 
 def test_lineage_totals(turns_and_oracle):
@@ -102,10 +113,11 @@ def test_lineage_totals(turns_and_oracle):
         sum(0 if o["parse_ok"] else 1 for o in oracle.values())
 
 
-def test_empty_input(spark):
+def test_empty_input(spark, tmp_path):
     from docext_spark.schema import TRANSCRIPT_SCHEMA
     empty = spark.createDataFrame([], schema=TRANSCRIPT_SCHEMA)
-    res = run_pipeline(spark, empty)
+    res = run_pipeline(spark, empty, output_root=str(tmp_path / "out"))
+    assert res["written"] == 0
     assert res["turns"].count() == 0
     assert res["convs"].count() == 0
 

@@ -4,6 +4,7 @@ shuffled hot-set filter) fails CI instead of only dating the doc."""
 from __future__ import annotations
 
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -19,6 +20,37 @@ def _plan(df) -> str:
 
 def _docs(spark):
     return spark.read.parquet(f"{SF}/documents.parquet")
+
+
+def _query_plan(spark, name: str) -> str:
+    """The executed plan of ``queries()[name]`` with expression and plan
+    ids stripped, so node text can be matched literally."""
+    import __spark_entry__ as entry
+    return _strip_ids(_plan(entry.queries()[name](spark, SF)))
+
+
+def _strip_ids(plan: str) -> str:
+    return re.sub(r", \[plan_id=\d+\]|#\d+L?", "", plan)
+
+
+def _below(plan: str, line_part: str) -> str:
+    """The first line containing ``line_part`` and the subtree under it
+    (the following lines indented deeper than it)."""
+    lines = plan.splitlines()
+    i = next(i for i, ln in enumerate(lines) if line_part in ln)
+    depth = len(lines[i]) - len(lines[i].lstrip(" :|+-"))
+    sub = [lines[i]]
+    for ln in lines[i + 1:]:
+        if len(ln) - len(ln.lstrip(" :|+-")) <= depth:
+            break
+        sub.append(ln)
+    return "\n".join(sub)
+
+
+_JOINS = ("SortMergeJoin", "BroadcastHashJoin", "ShuffledHashJoin",
+          "CartesianProduct", "BroadcastNestedLoopJoin")
+_PYTHON_NODES = ("ArrowEvalPython", "BatchEvalPython", "MapInPandas",
+                 "MapInArrow", "FlatMapGroupsInPandas")
 
 
 def test_x4_kie_has_no_total_sort(spark):
@@ -228,3 +260,187 @@ def test_aqe_splits_planted_skew_join(spark):
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
+
+
+def test_q1_filter_pushed_and_columns_pruned(spark):
+    """q1's shipdate filter reaches the parquet scan as a pushed filter,
+    and the scan reads only the 6 columns the query uses."""
+    import __spark_entry__ as entry
+    df = entry.queries()["q1_pricing_summary"](spark, SF)
+    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode \
+        .fromString("formatted")
+    plan = df._jdf.queryExecution().explainString(mode)
+    [pushed] = [ln for ln in plan.splitlines()
+                if ln.startswith("PushedFilters")]
+    assert "LessThanOrEqual(l_shipdate," in pushed
+    [schema] = [ln for ln in plan.splitlines() if ln.startswith("ReadSchema")]
+    cols = re.findall(r"(\w+):", schema.split("struct<", 1)[1])
+    assert sorted(cols) == sorted(
+        ["l_quantity", "l_extendedprice", "l_discount", "l_returnflag",
+         "l_linestatus", "l_shipdate"])
+    assert len(spark.read.parquet(f"{SF}/lineitem.parquet").columns) > 6
+
+
+def test_flagship_reassembly_is_two_phase(spark):
+    """The reassembly first collects each (conv_id, seg) segment map-side
+    and shuffles on (conv_id, seg); only the sorted segment rows then
+    cross a second exchange on conv_id, again behind a partial collect."""
+    lines = _query_plan(spark, "flagship_reassembly").splitlines()
+
+    def after(pattern):
+        [i] = [i for i, ln in enumerate(lines) if re.search(pattern, ln)]
+        return lines[i + 1]
+    assert re.search(
+        r"ObjectHashAggregate\(keys=\[conv_id, seg\], "
+        r"functions=\[partial_collect_list\(struct\(turn_idx",
+        after(r"Exchange hashpartitioning\(conv_id, seg, \d+\)"))
+    assert re.search(
+        r"ObjectHashAggregate\(keys=\[conv_id\], "
+        r"functions=\[partial_collect_list\(struct\(seg",
+        after(r"Exchange hashpartitioning\(conv_id, \d+\)"))
+
+
+def test_lsh_pairs_fast_is_native_without_join(spark):
+    """The xxhash64 LSH path keeps every hash a native JVM expression (no
+    Python node) and generates pairs inside bucket rows (no join)."""
+    plan = _query_plan(spark, "dedup_lsh_pairs_fast")
+    for node in _PYTHON_NODES + _JOINS:
+        assert node not in plan, node
+    assert "xxhash64(" in plan
+
+
+def test_jaccard_capped_has_no_shingle_self_join(spark):
+    """Capped Jaccard folds each shingle's members into one row, drops
+    groups over the doc-frequency cap with a size(ids) filter and explodes
+    pairs inside the kept groups: no join is keyed on the shingle. The
+    static plan repeats the shingle pipeline for the set sizes; at run
+    time AQE reuses it, so the corpus is scanned once."""
+    import __spark_entry__ as entry
+    df = entry.queries()["dedup_jaccard_capped"](spark, SF)
+    plan = _strip_ids(_plan(df))
+    joins = [ln for ln in plan.splitlines()
+             if any(j in ln for j in _JOINS)]
+    assert joins and not any("shingle" in ln for ln in joins)
+    pairs = _below(plan, "Generate explode(flatten(transform(ids")
+    lines = pairs.splitlines()
+    assert "Filter (size(ids, false) <= 50)" in lines[1]
+    assert re.search(r"keys=\[shingle\], functions=\[collect_list", lines[2])
+    df.collect()
+    final = df._jdf.queryExecution().executedPlan().toString()
+    assert final.split("== Initial Plan ==")[0].count("FileScan") == 1
+
+
+def test_lsh_flood_guard_shares_one_bucket_fold(spark):
+    """The default-config flood cap is a size(ids) filter over the (band,
+    key) fold, once for the kept pairs and once for the hot-bucket stats.
+    The static plan prints that fold's exchange once per branch (not one
+    signature pipeline per statistic), and AQE reuses it at run time."""
+    from docext_spark.operators.dedup import DEFAULT_MAX_BUCKET_SIZE as cap
+    import __spark_entry__ as entry
+    df = entry.queries()["dedup_lsh_flood_guard"](spark, SF)
+    plan = _strip_ids(_plan(df))
+    assert len(re.findall(r"Exchange hashpartitioning\(band, key, \d+\)",
+                          plan)) == 2
+    for cond in (f"<= {cap})", f"> {cap})"):
+        lines = _below(plan, f"Filter (size(ids, false) {cond}").splitlines()
+        assert re.search(r"keys=\[band, key\], functions=\[collect_list",
+                         lines[1]), cond
+    df.collect()
+    final = _strip_ids(df._jdf.queryExecution().executedPlan().toString())
+    final = final.split("== Initial Plan ==")[0]
+    assert re.search(r"ReusedExchange .*Exchange hashpartitioning\(band, key",
+                     final)
+
+
+def test_ann_cosine_broadcasts_query_side(spark):
+    """Brute-force top-k broadcasts the (filtered) query vectors; the
+    corpus streams through one map stage with a partial top-k before the
+    only hash exchange."""
+    plan = _query_plan(spark, "ann_cosine_topk")
+    assert plan.count("BroadcastExchange") == 1
+    assert "(vec_id < 3)" in _below(plan, "BroadcastExchange")
+    assert "BroadcastNestedLoopJoin BuildRight" in plan
+    assert "CartesianProduct" not in plan and "SortMergeJoin" not in plan
+    assert plan.count("Exchange hashpartitioning") == 1
+    top = _below(plan, "Exchange hashpartitioning(qid")
+    assert "WindowGroupLimit" in top and "Partial" in top
+
+
+def test_sample_token_budget_has_no_running_total(spark):
+    """Token-budget sampling broadcasts the corpus total as one scalar
+    into a map-side filter: no Window and no Sort."""
+    plan = _query_plan(spark, "sample_token_budget")
+    assert "Window" not in plan and "Sort" not in plan
+    assert "_total_tokens" in _below(plan, "BroadcastExchange")
+
+
+def test_decontam_report_broadcasts_eval_ngrams(spark):
+    """The eval n-grams are aggregated and broadcast; the corpus never
+    shuffles on the n-gram to meet them, and its per-doc fold is the
+    one exchange on the document id."""
+    plan = _query_plan(spark, "decontam_report")
+    assert "BroadcastHashJoin [shingle], [shingle], LeftOuter, BuildRight" \
+        in plan
+    assert plan.count("Exchange hashpartitioning(shingle") == 1
+    assert "Exchange hashpartitioning(shingle" in _below(
+        plan, "BroadcastExchange")
+    assert len(re.findall(r"Exchange hashpartitioning\(id, \d+\)",
+                          plan)) == 1
+
+
+def test_decontam_filter_is_broadcast_anti_join(spark):
+    """The cleanup filter is a broadcast LeftAnti join of the corpus
+    against the contaminated ids; the corpus side reaches it straight
+    from the scan, unshuffled."""
+    plan = _query_plan(spark, "decontam_filter")
+    join = _below(plan, "BroadcastHashJoin [doc_id], [doc_id], LeftAnti, "
+                        "BuildRight").splitlines()
+    assert "FileScan parquet" in join[1]
+
+
+def test_asof_join_is_one_window_without_join(spark):
+    """The as-of join is a union feeding a last(ignorenulls) window over
+    one exchange on user_id; only the right side's pre-aggregation has
+    an exchange of its own."""
+    plan = _query_plan(spark, "asof_recent_view")
+    assert "Join" not in plan
+    assert len(re.findall(r"Exchange hashpartitioning\(user_id, \d+\)",
+                          plan)) == 1
+    assert plan.count("Exchange") == 2
+    assert "last(__r, true)" in plan
+
+
+def test_range_join_is_binned_equi_join(spark):
+    """The range join is an equi-join on (user_id, bin) with the exact
+    containment test as its residual: no nested-loop or cartesian join."""
+    plan = _query_plan(spark, "range_join_error_windows")
+    assert "BroadcastNestedLoopJoin" not in plan
+    assert "CartesianProduct" not in plan
+    [join] = [ln for ln in plan.splitlines()
+              if re.search(r"(BroadcastHash|ShuffledHash|SortMerge)Join", ln)]
+    assert "[user_id, __bin], [user_id, __bin], Inner" in join
+    assert "(win_start <= ts) AND (ts < win_end)" in join
+
+
+def test_rollup_cascade_reaggregates_hourly_partials(spark):
+    """The daily level re-aggregates the hourly aggregate (one scan), each
+    level combining map-side before its exchange; at run time the LONG
+    sums run inside whole-stage codegen."""
+    import __spark_entry__ as entry
+    df = entry.queries()["rollup_cascade"](spark, SF)
+    plan = _strip_ids(_plan(df))
+    assert plan.count("FileScan") == 1
+    nodes = [ln.lstrip(" :|+-").split("(")[0].split(" ")[0]
+             for ln in plan.splitlines()[1:]]
+    assert nodes[:6] == ["HashAggregate", "Exchange", "HashAggregate",
+                         "HashAggregate", "Exchange", "HashAggregate"]
+    lines = plan.splitlines()
+    for i, ln in enumerate(lines):
+        if "Exchange" in ln:
+            assert "partial_sum" in lines[i + 1]
+    df.collect()
+    final = _strip_ids(df._jdf.queryExecution().executedPlan().toString())
+    final = final.split("== Initial Plan ==")[0]
+    aggs = [ln for ln in final.splitlines() if "HashAggregate(" in ln]
+    assert len(aggs) == 4 and all("*(" in ln for ln in aggs)
+    assert any("as bigint)), count(1)" in ln for ln in aggs)
