@@ -803,6 +803,187 @@ FROM events
 """
 
 
+# ---- DuckDB twin builders shared by the text and dedup pairs --------------
+# Each rule of operators/textops.py and operators/dedup.py that more than
+# one twin replays is spelled once here. The whitespace class '\s' appears
+# only in _norm_sql and _tokens_sql (and in the frozen _curate_funnel_sql).
+
+def _norm_sql(col="text"):
+    """Twin of textops.normalized: lowercase, whitespace runs to one
+    space, trimmed; NULL stays NULL."""
+    return f"trim(regexp_replace(lower({col}), '\\s+', ' ', 'g'))"
+
+
+def _norm_or_empty_sql(col="text"):
+    """``_norm_sql`` with NULL read as '' (the simhash and winnow
+    kernels normalize ``text or ''``)."""
+    return _norm_sql(f"coalesce({col}, '')")
+
+
+def _tokens_sql(col="text"):
+    """Twin of textops.tokens: the whitespace split of trim(col) ('' has
+    no tokens). trim() strips spaces only, so a leading tab or newline
+    yields an empty first token, as in the engine; NULL stays NULL."""
+    return (f"CASE WHEN trim({col}) = '' THEN []::VARCHAR[] "
+            f"ELSE regexp_split_to_array(trim({col}), '\\s+') END")
+
+
+def _shingles_sql(src, n=3, id_col="doc_id", name="dsh"):
+    """CTE ``name``: the distinct n-word shingles (``shingle``) of each
+    normalized text ``n`` of ``src``, keyed by ``id_col``. A text of
+    fewer than n words is one shingle; '' has none (dedup.shingles)."""
+    return f"""{name} AS (
+  SELECT DISTINCT {id_col}, shingle FROM (
+    SELECT {id_col}, unnest(CASE
+      WHEN n = '' THEN []::VARCHAR[]
+      WHEN len(string_split(n, ' ')) < {n} THEN [n]
+      ELSE [array_to_string((string_split(n, ' '))[i:i+{n - 1}], ' ')
+            for i in generate_series(1, len(string_split(n, ' ')) - {n - 1})]
+    END) AS shingle
+    FROM {src})
+)"""
+
+
+def _minhash_sql(num_hashes, prefix="s"):
+    """The sha256 MinHash signature columns ``{prefix}0..`` over a
+    (doc_id, shingle) relation grouped by doc_id: slot k is the min of
+    hex chars 8k+1..8k+8 of sha256('0|' || shingle)."""
+    return ",\n         ".join(
+        f"min(substr(sha256('0|' || shingle), {8 * k + 1}, 8)) AS {prefix}{k}"
+        for k in range(num_hashes))
+
+
+def _lsh_banded_sql(src="dsh"):
+    """CTEs ``sigs`` (the 8-way sha256 MinHash of each ``src`` doc) and
+    ``banded`` (doc_id, band, key): 4 bands of 2 slots, key = sha256 of
+    the band's slots joined by '|' (dedup.lsh_banded, sha256 engine)."""
+    bands = "\n    UNION ALL ".join(
+        f"SELECT doc_id, {b} AS band, sha256(s{2 * b} || '|' || s{2 * b + 1})"
+        f" AS key FROM sigs" for b in range(4))
+    return f"""sigs AS (
+  SELECT doc_id,
+         {_minhash_sql(8)}
+  FROM {src} GROUP BY doc_id
+), banded AS (
+  SELECT doc_id, band, key FROM (
+    {bands})
+)"""
+
+
+def _jaccard_sql(src, threshold):
+    """CTE ``jac``: each pair id_a < id_b of ``src`` (doc_id, shingle)
+    whose 6dp Jaccard similarity is at least ``threshold``, with its
+    intersection and union sizes (dedup.jaccard_pairs)."""
+    sim = "round(inter * 1.0 / (sa.ns + sb.ns - inter), 6)"
+    return f"""sizes AS (SELECT doc_id, count(*) AS ns FROM {src} GROUP BY doc_id),
+inter AS (
+  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS inter
+  FROM {src} a JOIN {src} b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+  GROUP BY 1, 2
+), jac AS (
+  SELECT id_a, id_b, inter, sa.ns + sb.ns - inter AS "union", {sim} AS jaccard
+  FROM inter JOIN sizes sa ON id_a = sa.doc_id JOIN sizes sb ON id_b = sb.doc_id
+  WHERE {sim} >= {threshold}
+)"""
+
+
+def _simhash_ctes_sql(src):
+    """CTEs ending in ``sims`` (doc_id, u): the unsigned 64-bit SimHash of
+    each ``src`` text that has a token — md5 token hashes, one +1/-1 vote
+    per bit, bit set where the votes are positive (extract.simhash_udf)."""
+    votes = ",\n         ".join(
+        f"sum(CASE WHEN (h >> {b}) & 1 = 1 THEN 1 ELSE -1 END) AS v{b}"
+        for b in range(64))
+    bits = " + ".join(
+        f"(CASE WHEN v{b} > 0 THEN (1::HUGEINT << {b}) ELSE 0 END)"
+        for b in range(64))
+    return f"""norm AS (
+  SELECT doc_id, {_norm_or_empty_sql()} AS n FROM {src}
+), toks AS (
+  SELECT doc_id, unnest(string_split(n, ' ')) AS tok FROM norm WHERE n <> ''
+), hashed AS (
+  SELECT doc_id, ('0x' || substr(md5(tok), 1, 16))::UBIGINT AS h
+  FROM toks WHERE tok <> ''
+), voted AS (
+  SELECT doc_id, {votes}
+  FROM hashed GROUP BY doc_id
+), sims AS (
+  SELECT doc_id, ({bits}) AS u FROM voted
+)"""
+
+
+def _winnow_fps_sql(src, k=8, window=4):
+    """CTEs ending in ``fps`` (doc_id, fp): the winnowed fingerprint set
+    of each ``src`` text, NULL read as ''. A k-gram hashes to
+    sum(ord(c) * 257^j) mod 2^61-1, position-independent, so the set is
+    the min over each window of ``window`` consecutive grams (the single
+    min when a text has at most ``window``) (dedup.winnow_*)."""
+    poly = " + ".join(
+        f"unicode(substr(n, i+{j}, 1))::HUGEINT * {257 ** (k - 1 - j)}"
+        for j in range(k))
+    return f"""norm AS (
+  SELECT doc_id, {_norm_or_empty_sql()} AS n FROM {src}
+), pos AS (
+  SELECT doc_id, n, unnest(generate_series(1, len(n) - {k - 1})) AS i
+  FROM norm WHERE len(n) >= {k}
+), grams AS (
+  SELECT doc_id, i, (({poly}) % {(1 << 61) - 1})::BIGINT AS h FROM pos
+), wmin AS (
+  SELECT doc_id, i,
+         min(h) OVER (PARTITION BY doc_id ORDER BY i
+                      ROWS BETWEEN CURRENT ROW AND {window - 1} FOLLOWING) AS m,
+         count(*) OVER (PARTITION BY doc_id) AS nh
+  FROM grams
+), fps AS (
+  SELECT DISTINCT doc_id, m AS fp
+  FROM wmin WHERE nh > {window} AND i <= nh - {window - 1}
+  UNION
+  SELECT doc_id, min(h) AS fp FROM grams
+  GROUP BY doc_id HAVING count(*) <= {window}
+)"""
+
+
+def _flood_guard_sql(src, keys, cap, hot_name, dropped_name, min_shared=None):
+    """Twin of ``_flood_stats`` over a capped candidate join. ``src``
+    (doc_id, *keys) groups into keys; keys held by more than ``cap`` docs
+    are hot and dropped before the self-join. The pairs are the distinct
+    id_a < id_b sharing a kept key, or sharing at least ``min_shared``
+    kept keys. The one result row counts the kept pairs, the kept flood
+    pairs (both ids >= 1000000), the hot keys (``hot_name``) and the
+    pairs they held (``dropped_name``)."""
+    on = " AND ".join(f"a.{k} = b.{k}" for k in keys)
+    anti = " AND ".join(f"x.{k} = h.{k}" for k in keys)
+    cols = ", ".join(keys)
+    if min_shared is None:
+        pairs = f"""SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+  FROM kept a JOIN kept b ON {on} AND a.doc_id < b.doc_id"""
+    else:
+        pairs = f"""SELECT a.doc_id AS id_a, b.doc_id AS id_b
+  FROM kept a JOIN kept b ON {on} AND a.doc_id < b.doc_id
+  GROUP BY 1, 2 HAVING count(*) >= {min_shared}"""
+    return f"""szs AS (
+  SELECT {cols}, count(*) AS n_refs FROM {src} GROUP BY {cols}
+), hot AS (
+  SELECT {cols}, n_refs FROM szs WHERE n_refs > {cap}
+), kept AS (
+  SELECT x.* FROM {src} x ANTI JOIN hot h ON {anti}
+), pairs AS (
+  {pairs}
+), hot_stats AS (
+  SELECT count(*) AS {hot_name},
+         coalesce(sum(n_refs * (n_refs - 1) // 2), 0)::BIGINT AS {dropped_name}
+  FROM hot
+), pair_stats AS (
+  SELECT count(*) AS n_pairs_kept,
+         coalesce(sum(CASE WHEN id_a >= 1000000 AND id_b >= 1000000
+                           THEN 1 ELSE 0 END), 0)::BIGINT AS n_flood_pairs_kept
+  FROM pairs
+)
+SELECT n_pairs_kept, n_flood_pairs_kept, {hot_name}, {dropped_name}
+FROM pair_stats, hot_stats
+"""
+
+
 def _scalar_sha_b64(spark, sf_dir):
     from docext_spark.operators.textops import normalized
     d = _t(spark, sf_dir, "documents")
@@ -811,9 +992,8 @@ def _scalar_sha_b64(spark, sf_dir):
                     F.base64(F.substring("text", 1, 30).cast("binary")).alias("b64"))
 
 
-_SHA_SQL = """
-SELECT doc_id,
-       sha256(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS fp,
+_SHA_SQL = f"""
+SELECT doc_id, sha256({_norm_sql()}) AS fp,
        to_base64(substr(text, 1, 30)::BLOB) AS b64
 FROM documents
 """
@@ -825,9 +1005,8 @@ def _t_token_count(spark, sf_dir):
     return d.select("doc_id", token_count(F.col("text")).alias("n_tokens"))
 
 
-_TOK_SQL = """
-SELECT doc_id, CASE WHEN trim(text) = '' THEN 0
-                    ELSE len(regexp_split_to_array(trim(text), '\\s+')) END AS n_tokens
+_TOK_SQL = f"""
+SELECT doc_id, len({_tokens_sql()}) AS n_tokens
 FROM documents
 """
 
@@ -845,8 +1024,7 @@ def _lang_sql():
     ratio_cols, best, case = _lang_ratio_sql()
     return f"""
 WITH toks AS (
-  SELECT doc_id, CASE WHEN trim(text) = '' THEN []::VARCHAR[]
-                      ELSE regexp_split_to_array(trim(text), '\\s+') END AS t
+  SELECT doc_id, {_tokens_sql()} AS t
   FROM documents
 ), ratio AS (
   SELECT doc_id,
@@ -873,9 +1051,7 @@ def _quality_sql():
     stop = ", ".join(f"'{s}'" for s in EN_STOPWORDS)
     return f"""
 WITH base AS (
-  SELECT source, text,
-         CASE WHEN trim(text) = '' THEN []::VARCHAR[]
-              ELSE regexp_split_to_array(trim(text), '\\s+') END AS t
+  SELECT source, text, {_tokens_sql()} AS t
   FROM documents
 ), feat AS (
   SELECT source,
@@ -1058,7 +1234,7 @@ def _t_repetition(spark, sf_dir):
                     repetition_gate(ml).alias("keep"))
 
 
-_REPETITION_SQL = r"""
+_REPETITION_SQL = f"""
 WITH planted AS (
   SELECT doc_id,
          coalesce(text, '') || chr(10) || 'boilerplate footer line'
@@ -1072,9 +1248,7 @@ WITH planted AS (
 ), feat AS (
   SELECT doc_id,
          string_split(t, chr(10)) AS ls,
-         CASE WHEN trim(t) = '' THEN []::VARCHAR[]
-              ELSE list_transform(regexp_split_to_array(trim(t), '\s+'),
-                                  x -> lower(x)) END AS toks
+         list_transform({_tokens_sql("t")}, x -> lower(x)) AS toks
   FROM planted
 ), m AS (
   SELECT doc_id,
@@ -1132,12 +1306,9 @@ def _pack_sequences(spark, sf_dir):
                       "oversize")
 
 
-_PACK_SEQUENCES_SQL = """
+_PACK_SEQUENCES_SQL = f"""
 WITH RECURSIVE items AS (
-  SELECT doc_id::VARCHAR AS id,
-         (CASE WHEN trim(text) = '' THEN 0
-               ELSE len(regexp_split_to_array(trim(text), '\\s+')) END)::BIGINT
-           AS len,
+  SELECT doc_id::VARCHAR AS id, len({_tokens_sql()})::BIGINT AS len,
          floor((('0x' || substr(sha256('0|' || coalesce(doc_id::VARCHAR, '')),
                                 1, 13))::UBIGINT / 4503599627370496.0)
                * 8)::INT AS grp
@@ -1196,11 +1367,9 @@ def _sample_token_budget(spark, sf_dir):
                    F.coalesce(F.sum("doc_id"), F.lit(0)).alias("id_sum"))
 
 
-_SAMPLE_BUDGET_SQL = """
+_SAMPLE_BUDGET_SQL = f"""
 WITH tok AS (
-  SELECT doc_id,
-         CASE WHEN text IS NULL OR trim(text) = '' THEN 0
-              ELSE len(regexp_split_to_array(trim(text), '\\s+')) END AS nt
+  SELECT doc_id, coalesce(len({_tokens_sql()}), 0) AS nt
   FROM documents
 ), tot AS (SELECT sum(nt) AS total FROM tok),
 sel AS (
@@ -1278,9 +1447,7 @@ def _quality_filter_sql():
     ratio_cols, best, case = _lang_ratio_sql()
     return f"""
 WITH base AS (
-  SELECT doc_id, text,
-         CASE WHEN trim(text) = '' THEN []::VARCHAR[]
-              ELSE regexp_split_to_array(trim(text), '\\s+') END AS t
+  SELECT doc_id, text, {_tokens_sql()} AS t
   FROM documents
 ), feat AS (
   SELECT doc_id, len(t) AS n_tokens,
@@ -1316,11 +1483,10 @@ def _dedup_exact(spark, sf_dir):
             .filter(F.col("dup_count") > 1))
 
 
-_DEDUP_EXACT_SQL = """
+_DEDUP_EXACT_SQL = f"""
 WITH fp AS (
-  SELECT doc_id,
-         sha256(array_to_string(list_sort(list_distinct(
-           string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' '))), ' ')) AS fp
+  SELECT doc_id, sha256(array_to_string(list_sort(list_distinct(
+           string_split({_norm_sql()}, ' '))), ' ')) AS fp
   FROM documents
 )
 SELECT fp, count(*) AS dup_count,
@@ -1329,20 +1495,10 @@ FROM fp GROUP BY fp HAVING count(*) > 1
 """
 
 
-_SHINGLE_SQL_BASE = """
-WITH norm AS (
-  SELECT doc_id, trim(regexp_replace(lower(text), '\\s+', ' ', 'g')) AS n
-  FROM documents
-), sh AS (
-  SELECT doc_id, unnest(CASE
-    WHEN n = '' THEN []::VARCHAR[]
-    WHEN len(string_split(n, ' ')) < 3 THEN [n]
-    ELSE [array_to_string((string_split(n, ' '))[i:i+2], ' ')
-          for i in generate_series(1, len(string_split(n, ' ')) - 2)]
-  END) AS shingle
-  FROM norm
-), dsh AS (SELECT DISTINCT doc_id, shingle FROM sh)
-"""
+# CTEs ``norm`` and ``dsh``: the 3-word shingles of every document
+_SHINGLE_SQL_BASE = f"""
+WITH norm AS (SELECT doc_id, {_norm_sql()} AS n FROM documents),
+{_shingles_sql("norm")}"""
 
 
 def _dedup_jaccard(spark, sf_dir):
@@ -1357,17 +1513,8 @@ def _dedup_jaccard(spark, sf_dir):
                          max_doc_freq=None)
 
 
-_JACCARD_SQL = _SHINGLE_SQL_BASE + """
-, sizes AS (SELECT doc_id, count(*) AS ns FROM dsh GROUP BY doc_id),
-inter AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS inter
-  FROM dsh a JOIN dsh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-)
-SELECT id_a, id_b, inter, sa.ns + sb.ns - inter AS "union",
-       round(inter * 1.0 / (sa.ns + sb.ns - inter), 6) AS jaccard
-FROM inter JOIN sizes sa ON id_a = sa.doc_id JOIN sizes sb ON id_b = sb.doc_id
-WHERE round(inter * 1.0 / (sa.ns + sb.ns - inter), 6) >= 0.1
+_JACCARD_SQL = f"""{_SHINGLE_SQL_BASE}, {_jaccard_sql("dsh", 0.1)}
+SELECT * FROM jac
 """
 
 
@@ -1383,20 +1530,11 @@ def _dedup_clusters(spark, sf_dir):
     return duplicate_clusters(pairs)
 
 
-_CLUSTERS_SQL = _SHINGLE_SQL_BASE + """
-, sizes AS (SELECT doc_id, count(*) AS ns FROM dsh GROUP BY doc_id),
-inter AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS inter
-  FROM dsh a JOIN dsh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-), pairs AS (
-  SELECT id_a, id_b
-  FROM inter JOIN sizes sa ON id_a = sa.doc_id JOIN sizes sb ON id_b = sb.doc_id
-  WHERE round(inter * 1.0 / (sa.ns + sb.ns - inter), 6) >= 0.3
-), edges AS (
-  SELECT id_a AS u, id_b AS v FROM pairs
+_CLUSTERS_SQL = f"""{_SHINGLE_SQL_BASE}, {_jaccard_sql("dsh", 0.3)},
+edges AS (
+  SELECT id_a AS u, id_b AS v FROM jac
   UNION
-  SELECT id_b, id_a FROM pairs
+  SELECT id_b, id_a FROM jac
 ), reach AS (
   WITH RECURSIVE r(src, dst) AS (
     SELECT u, u FROM (SELECT DISTINCT u FROM edges)
@@ -1434,31 +1572,13 @@ _JACCARD_CAPPED_SQL = f"""
 WITH docs AS (
   SELECT doc_id, '{_BOILERPLATE}' || coalesce(text, '') AS text
   FROM documents WHERE doc_id < 300
-), norm AS (
-  SELECT doc_id, trim(regexp_replace(lower(text), '\\s+', ' ', 'g')) AS n
-  FROM docs
-), sh AS (
-  SELECT doc_id, unnest(CASE
-    WHEN n = '' THEN []::VARCHAR[]
-    WHEN len(string_split(n, ' ')) < 3 THEN [n]
-    ELSE [array_to_string((string_split(n, ' '))[i:i+2], ' ')
-          for i in generate_series(1, len(string_split(n, ' ')) - 2)]
-  END) AS shingle
-  FROM norm
-), dsh AS (SELECT DISTINCT doc_id, shingle FROM sh),
+), norm AS (SELECT doc_id, {_norm_sql()} AS n FROM docs),
+{_shingles_sql("norm")},
 freq AS (SELECT shingle, count(*) AS df FROM dsh GROUP BY shingle),
 kept AS (SELECT dsh.doc_id, dsh.shingle
          FROM dsh JOIN freq USING (shingle) WHERE df <= 50),
-sizes AS (SELECT doc_id, count(*) AS ns FROM kept GROUP BY doc_id),
-inter AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS inter
-  FROM kept a JOIN kept b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-)
-SELECT id_a, id_b, inter, sa.ns + sb.ns - inter AS "union",
-       round(inter * 1.0 / (sa.ns + sb.ns - inter), 6) AS jaccard
-FROM inter JOIN sizes sa ON id_a = sa.doc_id JOIN sizes sb ON id_b = sb.doc_id
-WHERE round(inter * 1.0 / (sa.ns + sb.ns - inter), 6) >= 0.1
+{_jaccard_sql("kept", 0.1)}
+SELECT * FROM jac
 """
 
 
@@ -1470,13 +1590,12 @@ def _dedup_minhash_sigs(spark, sf_dir):
                        "sig_0", "sig_1", "sig_2", "sig_3")
 
 
-_MINHASH_SQL = _SHINGLE_SQL_BASE.replace("FROM documents",
-                                         "FROM documents WHERE doc_id < 100") + """
+_MINHASH_SQL = f"""
+WITH norm AS (
+  SELECT doc_id, {_norm_sql()} AS n FROM documents WHERE doc_id < 100
+), {_shingles_sql("norm")}
 SELECT doc_id,
-       min(substr(sha256('0|' || shingle), 1, 8))  AS sig_0,
-       min(substr(sha256('0|' || shingle), 9, 8))  AS sig_1,
-       min(substr(sha256('0|' || shingle), 17, 8)) AS sig_2,
-       min(substr(sha256('0|' || shingle), 25, 8)) AS sig_3
+       {_minhash_sql(4, "sig_")}
 FROM dsh GROUP BY doc_id
 """
 
@@ -1502,6 +1621,22 @@ def _dedup_lsh_pairs_fast(spark, sf_dir):
     # uncapped to stay pair-for-pair comparable with dedup_lsh_pairs
     return lsh_candidate_pairs(d, "doc_id", "text", num_hashes=8, bands=4,
                                n=3, engine="xxhash64", max_bucket_size=None)
+
+
+def _flood_stats(pairs, hot, n_col, hot_name, dropped_name):
+    """The one-row result of a ``*_flood_guard`` query: kept pairs and kept
+    flood pairs (both ids >= 1000000) of ``pairs``, and the hot keys of
+    ``hot`` with the pairs their ``n_col`` sizes drop."""
+    hot_stats = hot.agg(
+        F.count(F.lit(1)).alias(hot_name),
+        F.coalesce(F.sum(F.expr(f"{n_col} * ({n_col} - 1) div 2")), F.lit(0))
+         .cast("long").alias(dropped_name))
+    pair_stats = pairs.agg(
+        F.count(F.lit(1)).alias("n_pairs_kept"),
+        F.coalesce(F.sum(((F.col("id_a") >= 1000000)
+                          & (F.col("id_b") >= 1000000)).cast("long")),
+                   F.lit(0)).alias("n_flood_pairs_kept"))
+    return pair_stats.crossJoin(hot_stats)
 
 
 def _dedup_lsh_flood_guard(spark, sf_dir):
@@ -1544,24 +1679,15 @@ def _dedup_lsh_flood_guard(spark, sf_dir):
         lsh_banded(docs, "doc_id", "text", num_hashes=8, bands=4, n=3))
     hot = buckets.select(F.size("ids").alias("sz")) \
                  .filter(F.col("sz") > DEFAULT_MAX_BUCKET_SIZE)
-    hot_stats = hot.agg(
-        F.count(F.lit(1)).alias("n_hot_buckets"),
-        F.coalesce(F.sum(F.expr("sz * (sz - 1) div 2")), F.lit(0))
-         .cast("long").alias("n_bucket_pairs_dropped"))
     pairs = (buckets.filter(F.size("ids") <= DEFAULT_MAX_BUCKET_SIZE)
              .select(F.explode(_bucket_pairs(F.col("ids"))).alias("p"))
              .select("p.id_a", "p.id_b").distinct())
-    pair_stats = pairs.agg(
-        F.count(F.lit(1)).alias("n_pairs_kept"),
-        F.coalesce(F.sum(((F.col("id_a") >= 1000000)
-                          & (F.col("id_b") >= 1000000)).cast("long")),
-                   F.lit(0)).alias("n_flood_pairs_kept"))
-    return pair_stats.crossJoin(hot_stats)
+    return _flood_stats(pairs, hot, "sz", "n_hot_buckets",
+                        "n_bucket_pairs_dropped")
 
 
 def _lsh_flood_sql():
     from docext_spark.operators.dedup import DEFAULT_MAX_BUCKET_SIZE
-    cap = DEFAULT_MAX_BUCKET_SIZE
     return f"""
 WITH tpl AS (SELECT text AS t FROM documents WHERE doc_id = 0),
 flood AS (
@@ -1571,83 +1697,13 @@ flood AS (
 docs AS (
   SELECT doc_id, text FROM documents
   UNION ALL SELECT doc_id, text FROM flood
-),
-norm AS (
-  SELECT doc_id, trim(regexp_replace(lower(text), '\\s+', ' ', 'g')) AS n
-  FROM docs
-), sh AS (
-  SELECT doc_id, unnest(CASE
-    WHEN n = '' THEN []::VARCHAR[]
-    WHEN len(string_split(n, ' ')) < 3 THEN [n]
-    ELSE [array_to_string((string_split(n, ' '))[i:i+2], ' ')
-          for i in generate_series(1, len(string_split(n, ' ')) - 2)]
-  END) AS shingle
-  FROM norm
-), dsh AS (SELECT DISTINCT doc_id, shingle FROM sh),
-sigs AS (
-  SELECT doc_id,
-         min(substr(sha256('0|' || shingle), 1, 8))  AS s0,
-         min(substr(sha256('0|' || shingle), 9, 8))  AS s1,
-         min(substr(sha256('0|' || shingle), 17, 8)) AS s2,
-         min(substr(sha256('0|' || shingle), 25, 8)) AS s3,
-         min(substr(sha256('0|' || shingle), 33, 8)) AS s4,
-         min(substr(sha256('0|' || shingle), 41, 8)) AS s5,
-         min(substr(sha256('0|' || shingle), 49, 8)) AS s6,
-         min(substr(sha256('0|' || shingle), 57, 8)) AS s7
-  FROM dsh GROUP BY doc_id
-), banded AS (
-  SELECT doc_id, band, key FROM (
-    SELECT doc_id, 0 AS band, sha256(s0 || '|' || s1) AS key FROM sigs
-    UNION ALL SELECT doc_id, 1, sha256(s2 || '|' || s3) FROM sigs
-    UNION ALL SELECT doc_id, 2, sha256(s4 || '|' || s5) FROM sigs
-    UNION ALL SELECT doc_id, 3, sha256(s6 || '|' || s7) FROM sigs)
-),
-szs AS (SELECT band, key, count(*) AS sz FROM banded GROUP BY band, key),
-hot AS (SELECT band, key, sz FROM szs WHERE sz > {cap}),
-kept AS (
-  SELECT b.doc_id, b.band, b.key FROM banded b
-  ANTI JOIN hot h ON b.band = h.band AND b.key = h.key
-),
-pairs AS (
-  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM kept a JOIN kept b ON a.band = b.band AND a.key = b.key
-       AND a.doc_id < b.doc_id
-),
-hot_stats AS (
-  SELECT count(*) AS n_hot_buckets,
-         coalesce(sum(sz * (sz - 1) // 2), 0)::BIGINT AS n_bucket_pairs_dropped
-  FROM hot
-),
-pair_stats AS (
-  SELECT count(*) AS n_pairs_kept,
-         coalesce(sum(CASE WHEN id_a >= 1000000 AND id_b >= 1000000
-                           THEN 1 ELSE 0 END), 0)::BIGINT AS n_flood_pairs_kept
-  FROM pairs
-)
-SELECT n_pairs_kept, n_flood_pairs_kept, n_hot_buckets, n_bucket_pairs_dropped
-FROM pair_stats, hot_stats
-"""
+), norm AS (SELECT doc_id, {_norm_sql()} AS n FROM docs),
+{_shingles_sql("norm")}, {_lsh_banded_sql()},
+{_flood_guard_sql("banded", ["band", "key"], DEFAULT_MAX_BUCKET_SIZE,
+                  "n_hot_buckets", "n_bucket_pairs_dropped")}"""
 
 
-_LSH_SQL = _SHINGLE_SQL_BASE + """
-, sigs AS (
-  SELECT doc_id,
-         min(substr(sha256('0|' || shingle), 1, 8))  AS s0,
-         min(substr(sha256('0|' || shingle), 9, 8))  AS s1,
-         min(substr(sha256('0|' || shingle), 17, 8)) AS s2,
-         min(substr(sha256('0|' || shingle), 25, 8)) AS s3,
-         min(substr(sha256('0|' || shingle), 33, 8)) AS s4,
-         min(substr(sha256('0|' || shingle), 41, 8)) AS s5,
-         min(substr(sha256('0|' || shingle), 49, 8)) AS s6,
-         min(substr(sha256('0|' || shingle), 57, 8)) AS s7
-  FROM dsh GROUP BY doc_id
-), banded AS (
-  SELECT doc_id, band, key FROM (
-    SELECT doc_id, 0 AS band, sha256(s0 || '|' || s1) AS key FROM sigs
-    UNION ALL SELECT doc_id, 1, sha256(s2 || '|' || s3) FROM sigs
-    UNION ALL SELECT doc_id, 2, sha256(s4 || '|' || s5) FROM sigs
-    UNION ALL SELECT doc_id, 3, sha256(s6 || '|' || s7) FROM sigs)
-)
+_LSH_SQL = f"""{_SHINGLE_SQL_BASE}, {_lsh_banded_sql()}
 SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
 FROM banded a JOIN banded b ON a.band = b.band AND a.key = b.key
      AND a.doc_id < b.doc_id
@@ -2370,28 +2426,8 @@ def _simhash_signatures(spark, sf_dir):
     return d.select("doc_id", simhash_udf(F.col("text")).alias("simhash"))
 
 
-def _simhash_sql():
-    votes = ",\n         ".join(
-        f"sum(CASE WHEN (h >> {b}) & 1 = 1 THEN 1 ELSE -1 END) AS v{b}"
-        for b in range(64))
-    bits = " + ".join(
-        f"(CASE WHEN v{b} > 0 THEN (1::HUGEINT << {b}) ELSE 0 END)"
-        for b in range(64))
-    return f"""
-WITH norm AS (
-  SELECT doc_id, trim(regexp_replace(lower(coalesce(text, '')), '\\s+', ' ', 'g')) AS n
-  FROM documents
-), toks AS (
-  SELECT doc_id, unnest(string_split(n, ' ')) AS tok FROM norm WHERE n <> ''
-), hashed AS (
-  SELECT doc_id, ('0x' || substr(md5(tok), 1, 16))::UBIGINT AS h
-  FROM toks WHERE tok <> ''
-), voted AS (
-  SELECT doc_id, {votes}
-  FROM hashed GROUP BY doc_id
-), sims AS (
-  SELECT doc_id, ({bits}) AS u FROM voted
-)
+_SIMHASH_SQL = f"""
+WITH {_simhash_ctes_sql("documents")}
 SELECT d.doc_id,
        coalesce(CASE WHEN u >= (1::HUGEINT << 63)
                      THEN (u - (1::HUGEINT << 64))::BIGINT
@@ -2415,33 +2451,9 @@ def _dedup_winnow_pairs(spark, sf_dir):
     return winnow_overlap_pairs(d, min_shared=2, max_doc_freq=None)
 
 
-def _winnow_sql(k: int = 8, window: int = 4) -> str:
-    mod = (1 << 61) - 1
-    poly = " + ".join(
-        f"unicode(substr(n, i+{j}, 1))::HUGEINT * {257 ** (k - 1 - j)}"
-        for j in range(k))
-    return f"""
-WITH norm AS (
-  SELECT doc_id, trim(regexp_replace(lower(coalesce(text,'')), '\\s+', ' ', 'g')) AS n
-  FROM documents WHERE doc_id < 200
-), pos AS (
-  SELECT doc_id, n, unnest(generate_series(1, len(n) - {k - 1})) AS i
-  FROM norm WHERE len(n) >= {k}
-), grams AS (
-  SELECT doc_id, i, (({poly}) % {mod})::BIGINT AS h FROM pos
-), wmin AS (
-  SELECT doc_id, i,
-         min(h) OVER (PARTITION BY doc_id ORDER BY i
-                      ROWS BETWEEN CURRENT ROW AND {window - 1} FOLLOWING) AS m,
-         count(*) OVER (PARTITION BY doc_id) AS nh
-  FROM grams
-), fps AS (
-  SELECT DISTINCT doc_id, m AS fp
-  FROM wmin WHERE nh > {window} AND i <= nh - {window - 1}
-  UNION
-  SELECT doc_id, min(h) AS fp FROM grams
-  GROUP BY doc_id HAVING count(*) <= {window}
-)
+_WINNOW_SQL = f"""
+WITH docs AS (SELECT doc_id, text FROM documents WHERE doc_id < 200),
+{_winnow_fps_sql("docs")}
 SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS shared_fps
 FROM fps a JOIN fps b ON a.fp = b.fp AND a.doc_id < b.doc_id
 GROUP BY 1, 2 HAVING count(*) >= 2
@@ -2484,75 +2496,21 @@ def _dedup_winnow_flood_guard(spark, sf_dir):
     pairs = winnow_overlap_pairs(docs, min_shared=2)
     hot = hot_keys(winnow_fingerprint_table(docs), ["fp"],
                    DEFAULT_MAX_DOC_FREQ)
-    hot_stats = hot.agg(
-        F.count(F.lit(1)).alias("n_hot_fps"),
-        F.coalesce(F.sum(F.expr("n_refs * (n_refs - 1) div 2")), F.lit(0))
-         .cast("long").alias("n_fp_pairs_dropped"))
-    pair_stats = pairs.agg(
-        F.count(F.lit(1)).alias("n_pairs_kept"),
-        F.coalesce(F.sum(((F.col("id_a") >= 1000000)
-                          & (F.col("id_b") >= 1000000)).cast("long")),
-                   F.lit(0)).alias("n_flood_pairs_kept"))
-    return pair_stats.crossJoin(hot_stats)
+    return _flood_stats(pairs, hot, "n_refs", "n_hot_fps",
+                        "n_fp_pairs_dropped")
 
 
-def _winnow_flood_sql(k: int = 8, window: int = 4) -> str:
+def _winnow_flood_sql():
     from docext_spark.operators.dedup import DEFAULT_MAX_DOC_FREQ
-    cap = DEFAULT_MAX_DOC_FREQ
-    mod = (1 << 61) - 1
-    poly = " + ".join(
-        f"unicode(substr(n, i+{j}, 1))::HUGEINT * {257 ** (k - 1 - j)}"
-        for j in range(k))
     return f"""
 WITH docs AS (
   SELECT doc_id, text FROM documents WHERE doc_id < 200
   UNION ALL
   SELECT 1000000 + i AS doc_id, '{_WINNOW_TPL}' AS text
   FROM generate_series(0, 1199) s(i)
-), norm AS (
-  SELECT doc_id, trim(regexp_replace(lower(coalesce(text,'')), '\\s+', ' ', 'g')) AS n
-  FROM docs
-), pos AS (
-  SELECT doc_id, n, unnest(generate_series(1, len(n) - {k - 1})) AS i
-  FROM norm WHERE len(n) >= {k}
-), grams AS (
-  SELECT doc_id, i, (({poly}) % {mod})::BIGINT AS h FROM pos
-), wmin AS (
-  SELECT doc_id, i,
-         min(h) OVER (PARTITION BY doc_id ORDER BY i
-                      ROWS BETWEEN CURRENT ROW AND {window - 1} FOLLOWING) AS m,
-         count(*) OVER (PARTITION BY doc_id) AS nh
-  FROM grams
-), fps AS (
-  SELECT DISTINCT doc_id, m AS fp
-  FROM wmin WHERE nh > {window} AND i <= nh - {window - 1}
-  UNION
-  SELECT doc_id, min(h) AS fp FROM grams
-  GROUP BY doc_id HAVING count(*) <= {window}
-), dfs AS (
-  SELECT fp, count(*) AS n_refs FROM fps GROUP BY fp
-), hot AS (
-  SELECT fp, n_refs FROM dfs WHERE n_refs > {cap}
-), kept AS (
-  SELECT f.doc_id, f.fp FROM fps f ANTI JOIN hot h ON f.fp = h.fp
-), pairs AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM kept a JOIN kept b ON a.fp = b.fp AND a.doc_id < b.doc_id
-  GROUP BY 1, 2 HAVING count(*) >= 2
-), hot_stats AS (
-  SELECT count(*) AS n_hot_fps,
-         coalesce(sum(n_refs * (n_refs - 1) // 2), 0)::BIGINT
-           AS n_fp_pairs_dropped
-  FROM hot
-), pair_stats AS (
-  SELECT count(*) AS n_pairs_kept,
-         coalesce(sum(CASE WHEN id_a >= 1000000 AND id_b >= 1000000
-                           THEN 1 ELSE 0 END), 0)::BIGINT AS n_flood_pairs_kept
-  FROM pairs
-)
-SELECT n_pairs_kept, n_flood_pairs_kept, n_hot_fps, n_fp_pairs_dropped
-FROM pair_stats, hot_stats
-"""
+), {_winnow_fps_sql("docs")},
+{_flood_guard_sql("fps", ["fp"], DEFAULT_MAX_DOC_FREQ, "n_hot_fps",
+                  "n_fp_pairs_dropped", min_shared=2)}"""
 
 
 _SIMHASH_TPL = ("mirrored boilerplate navigation header repeated verbatim "
@@ -2583,27 +2541,12 @@ def _simhash_flood_guard(spark, sf_dir):
     pairs = simhash_near_dups(docs)
     hot = hot_keys(simhash_banded(docs), ["band", "key"],
                    DEFAULT_MAX_BUCKET_SIZE)
-    hot_stats = hot.agg(
-        F.count(F.lit(1)).alias("n_hot_buckets"),
-        F.coalesce(F.sum(F.expr("n_refs * (n_refs - 1) div 2")), F.lit(0))
-         .cast("long").alias("n_bucket_pairs_dropped"))
-    pair_stats = pairs.agg(
-        F.count(F.lit(1)).alias("n_pairs_kept"),
-        F.coalesce(F.sum(((F.col("id_a") >= 1000000)
-                          & (F.col("id_b") >= 1000000)).cast("long")),
-                   F.lit(0)).alias("n_flood_pairs_kept"))
-    return pair_stats.crossJoin(hot_stats)
+    return _flood_stats(pairs, hot, "n_refs", "n_hot_buckets",
+                        "n_bucket_pairs_dropped")
 
 
 def _simhash_flood_sql():
     from docext_spark.operators.dedup import DEFAULT_MAX_BUCKET_SIZE
-    cap = DEFAULT_MAX_BUCKET_SIZE
-    votes = ",\n         ".join(
-        f"sum(CASE WHEN (h >> {b}) & 1 = 1 THEN 1 ELSE -1 END) AS v{b}"
-        for b in range(64))
-    bits = " + ".join(
-        f"(CASE WHEN v{b} > 0 THEN (1::HUGEINT << {b}) ELSE 0 END)"
-        for b in range(64))
     # band keys are derived from the UNSIGNED u as (u >> 16b) & 0xffff —
     # bit-identical grouping to Spark's signed mask sim & (0xffff << 16b)
     # (two's complement preserves the bit pattern); key VALUES never appear
@@ -2614,50 +2557,14 @@ WITH docs AS (
   UNION ALL
   SELECT 1000000 + i AS doc_id, '{_SIMHASH_TPL}' AS text
   FROM generate_series(0, 1499) s(i)
-), norm AS (
-  SELECT doc_id, trim(regexp_replace(lower(coalesce(text, '')), '\\s+', ' ', 'g')) AS n
-  FROM docs
-), toks AS (
-  SELECT doc_id, unnest(string_split(n, ' ')) AS tok FROM norm WHERE n <> ''
-), hashed AS (
-  SELECT doc_id, ('0x' || substr(md5(tok), 1, 16))::UBIGINT AS h
-  FROM toks WHERE tok <> ''
-), voted AS (
-  SELECT doc_id, {votes}
-  FROM hashed GROUP BY doc_id
-), sims AS (
-  SELECT doc_id, ({bits}) AS u FROM voted
-), allsims AS (
+), {_simhash_ctes_sql("docs")}, allsims AS (
   SELECT d.doc_id, coalesce(u, 0::HUGEINT)::UBIGINT AS u
   FROM docs d LEFT JOIN sims USING (doc_id)
 ), banded AS (
   SELECT doc_id, band, ((u >> (band * 16)) & 65535)::BIGINT AS key
   FROM allsims, (SELECT unnest(generate_series(0, 3)) AS band) b
-), szs AS (
-  SELECT band, key, count(*) AS n_refs FROM banded GROUP BY band, key
-), hot AS (
-  SELECT band, key, n_refs FROM szs WHERE n_refs > {cap}
-), kept AS (
-  SELECT x.doc_id, x.band, x.key FROM banded x
-  ANTI JOIN hot h ON x.band = h.band AND x.key = h.key
-), pairs AS (
-  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM kept a JOIN kept b ON a.band = b.band AND a.key = b.key
-       AND a.doc_id < b.doc_id
-), hot_stats AS (
-  SELECT count(*) AS n_hot_buckets,
-         coalesce(sum(n_refs * (n_refs - 1) // 2), 0)::BIGINT
-           AS n_bucket_pairs_dropped
-  FROM hot
-), pair_stats AS (
-  SELECT count(*) AS n_pairs_kept,
-         coalesce(sum(CASE WHEN id_a >= 1000000 AND id_b >= 1000000
-                           THEN 1 ELSE 0 END), 0)::BIGINT AS n_flood_pairs_kept
-  FROM pairs
-)
-SELECT n_pairs_kept, n_flood_pairs_kept, n_hot_buckets, n_bucket_pairs_dropped
-FROM pair_stats, hot_stats
-"""
+), {_flood_guard_sql("banded", ["band", "key"], DEFAULT_MAX_BUCKET_SIZE,
+                     "n_hot_buckets", "n_bucket_pairs_dropped")}"""
 
 
 def _idp_benchmark_matrix(spark, sf_dir):
@@ -3008,6 +2915,10 @@ def _jpeg_resample_pixels(spark, sf_dir):
 
 _JPEG_RESAMPLE_SQL = _resample_twin_sql(_JPEG_DIMS_SQL, 12, 1,
                                         _jpeg_block_v, "jpeg")
+# JPEG-in-TIFF decodes to the same closed-form block rule as the
+# standalone gray JPEG pair — only the sniffed container differs
+_TIFF_JPEG_SQL = _resample_twin_sql(_JPEG_DIMS_SQL, 12, 1,
+                                    _jpeg_block_v, "tiff")
 
 
 def _jpeg_progressive_pixels(spark, sf_dir):
@@ -3503,11 +3414,10 @@ def _gif_animation_frames(spark, sf_dir):
     return gif_frames(_media(spark, payloads, kind=None))
 
 
-_GIF_ANIM_SQL = """
+_GIF_ANIM_SQL = f"""
 WITH files AS (
-  SELECT i AS media_id, (6 + i % 7)::INT AS w, (5 + (i * 3) % 8)::INT AS h,
-         (2 + i % 3)::INT AS nf, (i % 4)::INT AS loop_count
-  FROM (SELECT unnest(generate_series(0, 59)) AS i)
+  {_fixture_ids_sql(60, "(6 + i % 7)::INT AS w, (5 + (i * 3) % 8)::INT AS h, "
+                        "(2 + i % 3)::INT AS nf, (i % 4)::INT AS loop_count")}
 ), frames AS (
   SELECT media_id, w, h, nf, loop_count,
          unnest(generate_series(0, nf - 1)) AS k
@@ -3672,11 +3582,9 @@ def _audio_adpcm_features(spark, sf_dir):
     return audio_features(_media(spark, payloads, kind=None))
 
 
-_ADPCM_SQL = _audio_twin_sql("""RECURSIVE params AS (
-  SELECT i AS media_id,
-         ((i * 37) % 2001 - 1000)::INT AS pred0,
-         (i % 89)::INT AS idx0
-  FROM (SELECT unnest(generate_series(0, 59)) AS i)
+_ADPCM_SQL = _audio_twin_sql(f"""RECURSIVE params AS (
+  {_fixture_ids_sql(60, "((i * 37) % 2001 - 1000)::INT AS pred0, "
+                        "(i % 89)::INT AS idx0")}
 ), steps AS (
   SELECT media_id, 0 AS k, pred0 AS pred, idx0 AS idx FROM params
   UNION ALL
@@ -3747,12 +3655,11 @@ def _video_mp4_metadata(spark, sf_dir):
                     "duration_ms"))
 
 
-_MP4_META_SQL = """
+_MP4_META_SQL = f"""
 WITH files AS (
-  SELECT i AS media_id, (1000 + i * 777)::BIGINT AS dur,
-         (1 + i % 3)::INT AS nt,
-         CASE WHEN i % 3 = 0 THEN 'isom' ELSE 'mp42' END AS brand
-  FROM (SELECT unnest(generate_series(0, 59)) AS i)
+  {_fixture_ids_sql(60, "(1000 + i * 777)::BIGINT AS dur, (1 + i % 3)::INT AS nt,"
+                        " CASE WHEN i % 3 = 0 THEN 'isom' ELSE 'mp42' END"
+                        " AS brand")}
 ), tracks AS (
   SELECT media_id, brand, dur, unnest(generate_series(0, nt - 1)) AS k
   FROM files
@@ -3803,14 +3710,12 @@ def _video_webm_metadata(spark, sf_dir):
                     "duration_ms", "sample_rate", "channels"))
 
 
-_WEBM_META_SQL = """
+_WEBM_META_SQL = f"""
 WITH files AS (
-  SELECT i AS media_id,
-         [500000, 1000000, 2000000][i % 3 + 1]::BIGINT AS ts,
-         (1000 + i * 333)::BIGINT AS dur_units,
-         (1 + i % 3)::INT AS nt,
-         CASE WHEN i % 2 = 1 THEN 'webm' ELSE 'matroska' END AS brand
-  FROM (SELECT unnest(generate_series(0, 59)) AS i)
+  {_fixture_ids_sql(60, "[500000, 1000000, 2000000][i % 3 + 1]::BIGINT AS ts,"
+                        " (1000 + i * 333)::BIGINT AS dur_units,"
+                        " (1 + i % 3)::INT AS nt, CASE WHEN i % 2 = 1"
+                        " THEN 'webm' ELSE 'matroska' END AS brand")}
 ), tracks AS (
   SELECT media_id, brand, ts, dur_units,
          unnest(generate_series(0, nt - 1)) AS k
@@ -3857,16 +3762,13 @@ def _audio_mp3_metadata(spark, sf_dir):
                     "bitrate_kbps", "n_frames", "vbr"))
 
 
-_MP3_META_SQL = """
+_MP3_META_SQL = f"""
 WITH files AS (
-  SELECT i AS media_id,
-         ['1', '2', '2.5'][i % 3 + 1] AS version,
-         (CASE WHEN i % 3 = 0 THEN 1 ELSE 2 END) AS vgroup,
-         (1 + (i // 3) % 3)::INT AS layer,
-         (i % 3) AS ridx,
-         (2 + i % 6)::INT AS nf,
-         (1 + (i // 2) % 2)::INT AS channels
-  FROM (SELECT unnest(generate_series(0, 59)) AS i)
+  {_fixture_ids_sql(60, "['1', '2', '2.5'][i % 3 + 1] AS version,"
+                        " (CASE WHEN i % 3 = 0 THEN 1 ELSE 2 END) AS vgroup,"
+                        " (1 + (i // 3) % 3)::INT AS layer, (i % 3) AS ridx,"
+                        " (2 + i % 6)::INT AS nf,"
+                        " (1 + (i // 2) % 2)::INT AS channels")}
 ), rates AS (
   SELECT *, CASE version
               WHEN '1' THEN [44100, 48000, 32000][ridx + 1]
@@ -3939,15 +3841,14 @@ def _audio_ogg_metadata(spark, sf_dir):
                     F.col("n_frames").alias("n_pages")))
 
 
-_OGG_META_SQL = """
+_OGG_META_SQL = f"""
 WITH files AS (
-  SELECT i AS media_id,
-         CASE WHEN i % 2 = 1 THEN 'vorbis' ELSE 'opus' END AS codec,
-         CASE WHEN i % 2 = 1 THEN [8000, 44100, 48000][i % 3 + 1]
-              ELSE 48000 END AS rate,
-         (1000 + i * 997)::BIGINT AS dur_samples,
-         (1 + i % 4)::INT AS ndata
-  FROM (SELECT unnest(generate_series(0, 59)) AS i)
+  {_fixture_ids_sql(60, "CASE WHEN i % 2 = 1 THEN 'vorbis' ELSE 'opus' END"
+                        " AS codec, CASE WHEN i % 2 = 1"
+                        " THEN [8000, 44100, 48000][i % 3 + 1]"
+                        " ELSE 48000 END AS rate,"
+                        " (1000 + i * 997)::BIGINT AS dur_samples,"
+                        " (1 + i % 4)::INT AS ndata")}
 )
 SELECT media_id, 'ogg' AS container, codec,
        (dur_samples * 1000 // rate)::INT AS duration_ms,
@@ -3977,10 +3878,9 @@ def _audio_pcm24_features(spark, sf_dir):
     return audio_features(_media(spark, payloads, kind=None))
 
 
-_PCM24_SQL = _audio_twin_sql("""files AS (
-  SELECT i AS media_id, (1 + (i // 2) % 2)::INT AS ch,
-         ((40 + 7 * i) * (1 + (i // 2) % 2))::INT AS n
-  FROM (SELECT unnest(generate_series(0, 59)) AS i)
+_PCM24_SQL = _audio_twin_sql(f"""files AS (
+  {_fixture_ids_sql(60, "(1 + (i // 2) % 2)::INT AS ch, "
+                        "((40 + 7 * i) * (1 + (i // 2) % 2))::INT AS n")}
 ), vals AS (
   SELECT media_id, ch, i,
          ((i * 9973 + 77 * media_id) % 2000000 - 1000000) AS v
@@ -4029,11 +3929,10 @@ def _audio_flac_features(spark, sf_dir):
     return audio_features(_media(spark, payloads, kind=None))
 
 
-_FLAC_SQL = _audio_twin_sql("""files AS (
-  SELECT i AS media_id, (1 + i % 2)::INT AS ch,
-         (50 + (i * 37) % 300)::INT AS n,
-         CASE WHEN i % 7 = 0 THEN 2 ELSE 1 END AS m
-  FROM (SELECT unnest(generate_series(0, 69)) AS i)
+_FLAC_SQL = _audio_twin_sql(f"""files AS (
+  {_fixture_ids_sql(70, "(1 + i % 2)::INT AS ch, "
+                        "(50 + (i * 37) % 300)::INT AS n, "
+                        "CASE WHEN i % 7 = 0 THEN 2 ELSE 1 END AS m")}
 ), vals AS (
   SELECT media_id, ch, i,
          (((i * 997 + 11 * media_id) % 4096) - 2048) * m AS v
@@ -4066,12 +3965,10 @@ def _audio_g711_features(spark, sf_dir):
     return audio_features(_media(spark, payloads, kind=None))
 
 
-_G711_SQL = _audio_twin_sql("""params AS (
-  SELECT i AS media_id,
-         CASE WHEN i % 2 = 0 THEN 'u' ELSE 'a' END AS law,
-         (1 + (i // 2) % 2)::INT AS ch,
-         (40 + 3 * i)::INT AS n_frames
-  FROM (SELECT unnest(generate_series(0, 79)) AS i)
+_G711_SQL = _audio_twin_sql(f"""params AS (
+  {_fixture_ids_sql(80, "CASE WHEN i % 2 = 0 THEN 'u' ELSE 'a' END AS law, "
+                        "(1 + (i // 2) % 2)::INT AS ch, "
+                        "(40 + 3 * i)::INT AS n_frames")}
 ), codes AS (
   SELECT media_id, law, ch,
          unnest(generate_series(0, n_frames * ch - 1)) AS j
@@ -4162,13 +4059,12 @@ def _training_samples(spark, sf_dir):
                       "sample_end", "sample_text")
 
 
-_TRAINING_SAMPLES_SQL = """
+_TRAINING_SAMPLES_SQL = f"""
 WITH ev AS (
   SELECT user_id, event_id, ts, event_type || ' ' || props AS text
   FROM events
 ), tokd AS (
-  SELECT *, CASE WHEN trim(text) = '' THEN 0
-                 ELSE len(regexp_split_to_array(trim(text), '\\s+')) END AS tok
+  SELECT *, len({_tokens_sql()}) AS tok
   FROM ev
 ), lagged AS (
   SELECT *, CASE WHEN lag(ts) OVER w IS NULL
@@ -4210,16 +4106,18 @@ def _curate_funnel(spark, sf_dir):
     pinned cross-engine."""
     from docext_spark.plans.curate import curate
     d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
-    # persist=False: the harness evaluates the funnel once and has no
-    # unpersist hook — staged frames would leak for the session otherwise
     # max_bucket_size=None: the DuckDB funnel replay has no bucket cap, so
     # the fixture pins the uncapped path (parity must not depend on no
     # bucket happening to top 1000 members at a given SF)
-    out = curate(d, persist=False,
-                 fuzzy_kwargs={"engine": "sha256",
-                               "jaccard_threshold": 0.5,
-                               "max_bucket_size": None})
-    return out["funnel"]
+    out = curate(d, fuzzy_kwargs={"engine": "sha256",
+                                  "jaccard_threshold": 0.5,
+                                  "max_bucket_size": None})
+    # the four counts are collected here so the staged frames can be
+    # released before the caller sees the result
+    funnel = out["funnel"]
+    rows = funnel.collect()
+    out["unpersist"]()
+    return spark.createDataFrame(rows, funnel.schema)
 
 
 def _curate_funnel_sql():
@@ -4405,30 +4303,14 @@ def _decontam_filter(spark, sf_dir):
                     F.sum("doc_id").alias("id_sum"))
 
 
-_DECONTAM_SQL_BASE = r"""
-WITH norm AS (
-  SELECT doc_id, trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS n
-  FROM documents
-), evtxt AS (
+_DECONTAM_SQL_BASE = f"""
+WITH norm AS (SELECT doc_id, {_norm_sql()} AS n FROM documents),
+evtxt AS (
   SELECT doc_id AS eval_id,
          array_to_string((string_split(n, ' '))[4:15], ' ') AS n
   FROM norm WHERE doc_id % 23 = 0
-), esh AS (
-  SELECT eval_id, unnest(CASE
-    WHEN n = '' THEN []::VARCHAR[]
-    WHEN len(string_split(n, ' ')) < 8 THEN [n]
-    ELSE [array_to_string((string_split(n, ' '))[i:i+7], ' ')
-          for i in generate_series(1, len(string_split(n, ' ')) - 7)]
-  END) AS shingle FROM evtxt
-), desh AS (SELECT DISTINCT eval_id, shingle FROM esh),
-sh AS (
-  SELECT doc_id, unnest(CASE
-    WHEN n = '' THEN []::VARCHAR[]
-    WHEN len(string_split(n, ' ')) < 8 THEN [n]
-    ELSE [array_to_string((string_split(n, ' '))[i:i+7], ' ')
-          for i in generate_series(1, len(string_split(n, ' ')) - 7)]
-  END) AS shingle FROM norm
-), dsh AS (SELECT DISTINCT doc_id, shingle FROM sh)
+), {_shingles_sql("evtxt", 8, "eval_id", "desh")},
+{_shingles_sql("norm", 8)}
 """
 
 _DECONTAM_REPORT_SQL = _DECONTAM_SQL_BASE + """
@@ -4643,20 +4525,10 @@ FROM p JOIN i ON p.user_id = i.user_id
 # contract surface
 # --------------------------------------------------------------------------
 
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Ordered so the driver's 50-entry correctness window exercises the
-    NEWEST work each round (VERDICT r4 #10) while keeping one
-    representative per operator family. 116 queries carry an oracle_sql
-    twin; the 66 overflow pairs (positions 51-116, all long-green) and
-    the 7 rows-only tail entries are full-sweep-verified every round via
-    tools/check_oracle.py (CORRECTNESS_FULL_r6.md, three SFs). The
-    rows-only ones are genuinely non-SQL-replayable: HLL sketch,
-    approx-percentile sketch (error-bounded in pytest), perception pUDFs
-    (byte-pinned by pytest goldens), the full GRITS DP on arbitrary
-    tables (its closed-form cases ARE hash-checked: grits_closed_form),
-    VLM message assembly, and the xxhash64 LSH variant (pytest
-    parity-gated vs the sha256 oracle path)."""
-    return {
+def _table():
+    """(name, Spark function, DuckDB twin or None) for every query, in the
+    driver's order."""
+    return [
         # -- oracle-paired, window positions 1-50 (round-6 final
         #    rotation, EXACTLY 50): every pair new or changed this round
         #    — the full codec fleet (arith JPEG, FLAC, ADPCM, G.711,
@@ -4664,263 +4536,165 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         #    data surface, and the decimal-sum-fixed aggregates
         #    (q1/q10/a9/event_sessionization — r5's one red row) —
         #    plus one representative per long-green operator family --
-        "q1_pricing_summary": _q1_pricing_summary,
-        "asof_forward_next_purchase": _asof_forward_next_purchase,
-        "decontam_report": _decontam_report,
-        "q10_returned_items": _q10_returned_items,
-        "asof_recent_view": _asof_recent_view,
-        "j1_field_alignment": _j1_field_alignment,
-        "a1_edit_similarity": _a1_edit_similarity,
-        "decontam_pairs": _decontam_pairs,
-        "a9_cost_accounting": _a9_cost_accounting,
-        "w1_stable_order_concat": _w1_stable_order_concat,
-        "asof_tolerance": _asof_tolerance,
-        "p9_enclosing_bbox": _p9_enclosing_bbox,
-        "rollup_cascade": _rollup_cascade,
-        "range_join_error_windows": _range_join_error_windows,
-        "decontam_filter": _decontam_filter,
-        "dedup_exact": _dedup_exact,
-        "dedup_jaccard_capped": _dedup_jaccard_capped,
-        "dedup_clusters": _dedup_clusters,
-        "curate_funnel": _curate_funnel,
-        "dedup_lsh_pairs": _dedup_lsh_pairs,
-        "dedup_lsh_flood_guard": _dedup_lsh_flood_guard,
-        "ann_cosine_topk": _ann_cosine_topk,
-        "ann_ivf_topk_farthest": _ann_ivf_topk_farthest,
-        "ann_lsh_topk": _ann_lsh_topk,
-        "x4_kie_fields": _x4_kie_fields,
-        "x5_pipe_table": _x5_pipe_table,
-        "x7_classification": _x7_classification,
-        "x3_pdf_layout": _x3_pdf_layout,
-        "png_palette_pixels": _png_palette_pixels,
-        "jpeg_lossless_pixels": _jpeg_lossless_pixels,
-        "jpeg_arith_pixels": _jpeg_arith_pixels,
-        "bmp_pixels": _bmp_pixels,
-        "tiff_pixels": _tiff_pixels,
-        "tiff_jpeg_pixels": _tiff_jpeg_pixels,
-        "gif_animation_frames": _gif_animation_frames,
-        "tiff_16bit_pixels": _tiff_16bit_pixels,
-        "tiff_g4_pixels": _tiff_g4_pixels,
-        "webp_pixels": _webp_pixels,
-        "grits_closed_form": _grits_closed_form,
-        "audio_adpcm_features": _audio_adpcm_features,
-        "audio_flac_features": _audio_flac_features,
-        "audio_pcm24_features": _audio_pcm24_features,
-        "video_mp4_metadata": _video_mp4_metadata,
-        "video_webm_metadata": _video_webm_metadata,
-        "audio_mp3_metadata": _audio_mp3_metadata,
-        "audio_ogg_metadata": _audio_ogg_metadata,
-        "audio_g711_features": _audio_g711_features,
-        "event_sessionization": _event_sessionization,
-        "training_samples": _training_samples,
-        "pack_sequences": _pack_sequences,
+        ("q1_pricing_summary", _q1_pricing_summary, _Q1_SQL),
+        ("asof_forward_next_purchase", _asof_forward_next_purchase,
+         _ASOF_FORWARD_SQL),
+        ("decontam_report", _decontam_report, _DECONTAM_REPORT_SQL),
+        ("q10_returned_items", _q10_returned_items, _Q10_SQL),
+        ("asof_recent_view", _asof_recent_view, _ASOF_SQL),
+        ("j1_field_alignment", _j1_field_alignment, _J1_SQL),
+        ("a1_edit_similarity", _a1_edit_similarity, _A1_SQL),
+        ("decontam_pairs", _decontam_pairs, _DECONTAM_PAIRS_SQL),
+        ("a9_cost_accounting", _a9_cost_accounting, _A9_SQL),
+        ("w1_stable_order_concat", _w1_stable_order_concat, _W1_SQL),
+        ("asof_tolerance", _asof_tolerance, _ASOF_TOLERANCE_SQL),
+        ("p9_enclosing_bbox", _p9_enclosing_bbox, _P9_SQL),
+        ("rollup_cascade", _rollup_cascade, _ROLLUP_CASCADE_SQL),
+        ("range_join_error_windows", _range_join_error_windows,
+         _RANGE_JOIN_SQL),
+        ("decontam_filter", _decontam_filter, _DECONTAM_FILTER_SQL),
+        ("dedup_exact", _dedup_exact, _DEDUP_EXACT_SQL),
+        ("dedup_jaccard_capped", _dedup_jaccard_capped, _JACCARD_CAPPED_SQL),
+        ("dedup_clusters", _dedup_clusters, _CLUSTERS_SQL),
+        ("curate_funnel", _curate_funnel, _curate_funnel_sql()),
+        ("dedup_lsh_pairs", _dedup_lsh_pairs, _LSH_SQL),
+        ("dedup_lsh_flood_guard", _dedup_lsh_flood_guard, _lsh_flood_sql()),
+        ("ann_cosine_topk", _ann_cosine_topk, _ANN_SQL),
+        ("ann_ivf_topk_farthest", _ann_ivf_topk_farthest, _IVF_FARTHEST_SQL),
+        ("ann_lsh_topk", _ann_lsh_topk, _ann_lsh_sql()),
+        ("x4_kie_fields", _x4_kie_fields, _X4_SQL),
+        ("x5_pipe_table", _x5_pipe_table, _X5_SQL),
+        ("x7_classification", _x7_classification, _X7_SQL),
+        ("x3_pdf_layout", _x3_pdf_layout, _X3_SQL),
+        ("png_palette_pixels", _png_palette_pixels, _PNG_PALETTE_SQL),
+        ("jpeg_lossless_pixels", _jpeg_lossless_pixels, _JPEG_LOSSLESS_SQL),
+        ("jpeg_arith_pixels", _jpeg_arith_pixels, _JPEG_RESAMPLE_SQL),
+        ("bmp_pixels", _bmp_pixels, _BMP_SQL),
+        ("tiff_pixels", _tiff_pixels, _TIFF_SQL),
+        ("tiff_jpeg_pixels", _tiff_jpeg_pixels, _TIFF_JPEG_SQL),
+        ("gif_animation_frames", _gif_animation_frames, _GIF_ANIM_SQL),
+        # 16-bit v*257 storage decodes back to the same 8-bit rule at
+        # the tiled dims formula — sharing that twin IS the claim
+        ("tiff_16bit_pixels", _tiff_16bit_pixels, _TIFF_TILED_SQL),
+        ("tiff_g4_pixels", _tiff_g4_pixels, _TIFF_G4_SQL),
+        ("webp_pixels", _webp_pixels, _WEBP_SQL),
+        ("grits_closed_form", _grits_closed_form, _GRITS_CLOSED_SQL),
+        ("audio_adpcm_features", _audio_adpcm_features, _ADPCM_SQL),
+        ("audio_flac_features", _audio_flac_features, _FLAC_SQL),
+        ("audio_pcm24_features", _audio_pcm24_features, _PCM24_SQL),
+        ("video_mp4_metadata", _video_mp4_metadata, _MP4_META_SQL),
+        ("video_webm_metadata", _video_webm_metadata, _WEBM_META_SQL),
+        ("audio_mp3_metadata", _audio_mp3_metadata, _MP3_META_SQL),
+        ("audio_ogg_metadata", _audio_ogg_metadata, _OGG_META_SQL),
+        ("audio_g711_features", _audio_g711_features, _G711_SQL),
+        ("event_sessionization", _event_sessionization, _SESSION_SQL),
+        ("training_samples", _training_samples, _TRAINING_SAMPLES_SQL),
+        ("pack_sequences", _pack_sequences, _PACK_SEQUENCES_SQL),
         # -- oracle-paired overflow (positions 51+, long-green; rotated
         #    out to make window room — full-sweep-verified every round
         #    via tools/check_oracle.py, logged in CORRECTNESS_FULL) ----
-        "q3_shipping_priority": _q3_shipping_priority,
-        "s1_extension_predicate": _s1_extension_predicate,
-        "q5_revenue_by_nation": _q5_revenue_by_nation,
-        "a14_cube": _a14_cube,
-        "p1_field_norm": _p1_field_norm,
-        "scalar_sha_b64": _scalar_sha_b64,
-        "q7_volume_shipping": _q7_volume_shipping,
-        "a4_exact_match": _a4_exact_match,
-        "doc_length_percentiles": _doc_length_percentiles,
-        "q6_forecast_revenue": _q6_forecast_revenue,
-        "q14_promo_effect": _q14_promo_effect,
-        "a3_vqa_best_of": _a3_vqa_best_of,
-        "a10_score_matrix": _a10_score_matrix,
-        "w5_event_time_window": _w5_event_time_window,
-        "t_lang_id": _t_lang_id,
-        "dedup_cosine_lsh": _dedup_cosine_lsh,
-        "idp_benchmark_matrix": _idp_benchmark_matrix,
-        "loader_benchmark_corpus": _loader_benchmark_corpus,
-        "tiff_lzw_pixels": _tiff_lzw_pixels,
-        "tiff_tiled_pixels": _tiff_tiled_pixels,
-        "audio_waveform_features": _audio_waveform_features,
-        "image_resample_pixels": _image_resample_pixels,
-        "t_quality": _t_quality,
-        "jpeg_progressive_pixels": _jpeg_progressive_pixels,
-        "jpeg_subsampled_pixels": _jpeg_subsampled_pixels,
-        "p3_json_field_default": _p3_json_field_default,
-        "s5_resize_dims": _s5_resize_dims,
-        "dedup_minhash_sigs": _dedup_minhash_sigs,
-        "dedup_winnow_flood_guard": _dedup_winnow_flood_guard,
-        "simhash_flood_guard": _simhash_flood_guard,
-        "ann_ivf_topk": _ann_ivf_topk,
-        "dedup_cosine_pairs": _dedup_cosine_pairs,
-        "jpeg_resample_pixels": _jpeg_resample_pixels,
-        "jpeg_color_pixels": _jpeg_color_pixels,
-        "t_bpe_token_count": _t_bpe_token_count,
-        "t_token_count": _t_token_count,
-        "dedup_jaccard": _dedup_jaccard,
-        "gif_resample_pixels": _gif_resample_pixels,
-        "a5_multivalue_fold": _a5_multivalue_fold,
-        "a6_distinct_labels": _a6_distinct_labels,
-        "a11_stratified_topk": _a11_stratified_topk,
-        "w3_first_match": _w3_first_match,
-        "p6_key_remap": _p6_key_remap,
-        "p7_bbox_denorm": _p7_bbox_denorm,
-        "p10_validity_filter": _p10_validity_filter,
-        "s8_payload_truncation": _s8_payload_truncation,
-        "t_quality_filter": _t_quality_filter,
-        "w4_topn": _w4_topn,
-        "j5_table_pairing": _j5_table_pairing,
-        "p5_strip_normalize": _p5_strip_normalize,
-        "p4_tag_escape": _p4_tag_escape,
-        "p8_polygon_bbox": _p8_polygon_bbox,
-        "a12_union_frames": _a12_union_frames,
-        "scalar_iou": _scalar_iou,
-        "s2_posexplode_pages": _s2_posexplode_pages,
-        "simhash_signatures": _simhash_signatures,
-        "dedup_winnow_pairs": _dedup_winnow_pairs,
-        "multimodal_features": _multimodal_features,
-        "t_redact_pii": _t_redact_pii,
-        "t_repetition": _t_repetition,
-        "q4_order_priority": _q4_order_priority,
-        "q12_priority_class": _q12_priority_class,
-        "sample_split": _sample_split,
-        "sample_token_budget": _sample_token_budget,
-        "mixture_sources": _mixture_sources,
-        "frame_sample_plan": _frame_sample_plan,
+        ("q3_shipping_priority", _q3_shipping_priority, _Q3_SQL),
+        ("s1_extension_predicate", _s1_extension_predicate, _S1_SQL),
+        ("q5_revenue_by_nation", _q5_revenue_by_nation, _Q5_SQL),
+        ("a14_cube", _a14_cube, _A14_SQL),
+        ("p1_field_norm", _p1_field_norm, _P1_SQL),
+        ("scalar_sha_b64", _scalar_sha_b64, _SHA_SQL),
+        ("q7_volume_shipping", _q7_volume_shipping, _Q7_SQL),
+        ("a4_exact_match", _a4_exact_match, _A4_SQL),
+        ("doc_length_percentiles", _doc_length_percentiles, _PERCENTILES_SQL),
+        ("q6_forecast_revenue", _q6_forecast_revenue, _Q6_SQL),
+        ("q14_promo_effect", _q14_promo_effect, _Q14_SQL),
+        ("a3_vqa_best_of", _a3_vqa_best_of, _A3_SQL),
+        ("a10_score_matrix", _a10_score_matrix, _A10_SQL),
+        ("w5_event_time_window", _w5_event_time_window, _W5_SQL),
+        ("t_lang_id", _t_lang_id, _lang_sql()),
+        ("dedup_cosine_lsh", _dedup_cosine_lsh, _COSDUP_SQL),
+        ("idp_benchmark_matrix", _idp_benchmark_matrix, _IDP_GOLDEN_SQL),
+        ("loader_benchmark_corpus", _loader_benchmark_corpus,
+         _LOADER_CORPUS_SQL),
+        # LZW re-codes the same pixels losslessly, so the baseline TIFF
+        # twin applies verbatim — sharing it IS the claim
+        ("tiff_lzw_pixels", _tiff_lzw_pixels, _TIFF_SQL),
+        # tiling is a lossless re-layout of the same pixel rule at the
+        # tiled dims formula — sharing the strip twin IS the claim
+        ("tiff_tiled_pixels", _tiff_tiled_pixels, _TIFF_TILED_SQL),
+        ("audio_waveform_features", _audio_waveform_features, _AUDIO_SQL),
+        ("image_resample_pixels", _image_resample_pixels, _RESAMPLE_SQL),
+        ("t_quality", _t_quality, _quality_sql()),
+        # progressive re-codes the same coefficients losslessly, so the
+        # baseline-gray SQL twin applies verbatim — sharing it IS the claim
+        ("jpeg_progressive_pixels", _jpeg_progressive_pixels,
+         _JPEG_RESAMPLE_SQL),
+        ("jpeg_subsampled_pixels", _jpeg_subsampled_pixels,
+         _JPEG_SUBSAMPLED_SQL),
+        ("p3_json_field_default", _p3_json_field_default, _P3_SQL),
+        ("s5_resize_dims", _s5_resize_dims, _S5_SQL),
+        ("dedup_minhash_sigs", _dedup_minhash_sigs, _MINHASH_SQL),
+        ("dedup_winnow_flood_guard", _dedup_winnow_flood_guard,
+         _winnow_flood_sql()),
+        ("simhash_flood_guard", _simhash_flood_guard, _simhash_flood_sql()),
+        ("ann_ivf_topk", _ann_ivf_topk, _IVF_SQL),
+        ("dedup_cosine_pairs", _dedup_cosine_pairs, _COSDUP_SQL),
+        ("jpeg_resample_pixels", _jpeg_resample_pixels, _JPEG_RESAMPLE_SQL),
+        ("jpeg_color_pixels", _jpeg_color_pixels, _JPEG_COLOR_SQL),
+        ("t_bpe_token_count", _t_bpe_token_count, _BPE_SQL),
+        ("t_token_count", _t_token_count, _TOK_SQL),
+        ("dedup_jaccard", _dedup_jaccard, _JACCARD_SQL),
+        ("gif_resample_pixels", _gif_resample_pixels, _GIF_RESAMPLE_SQL),
+        ("a5_multivalue_fold", _a5_multivalue_fold, _A5_SQL),
+        ("a6_distinct_labels", _a6_distinct_labels, _A6_SQL),
+        ("a11_stratified_topk", _a11_stratified_topk, _A11_SQL),
+        ("w3_first_match", _w3_first_match, _W3_SQL),
+        ("p6_key_remap", _p6_key_remap, _P6_SQL),
+        ("p7_bbox_denorm", _p7_bbox_denorm, _P7_SQL),
+        ("p10_validity_filter", _p10_validity_filter, _P10_SQL),
+        ("s8_payload_truncation", _s8_payload_truncation, _S8_SQL),
+        ("t_quality_filter", _t_quality_filter, _quality_filter_sql()),
+        ("w4_topn", _w4_topn, _W4_SQL),
+        ("j5_table_pairing", _j5_table_pairing, _J5_SQL),
+        ("p5_strip_normalize", _p5_strip_normalize, _P5_SQL),
+        ("p4_tag_escape", _p4_tag_escape, _P4_SQL),
+        ("p8_polygon_bbox", _p8_polygon_bbox, _P8_SQL),
+        ("a12_union_frames", _a12_union_frames, _A12_SQL),
+        ("scalar_iou", _scalar_iou, _IOU_SQL),
+        ("s2_posexplode_pages", _s2_posexplode_pages, _S2_SQL),
+        ("simhash_signatures", _simhash_signatures, _SIMHASH_SQL),
+        ("dedup_winnow_pairs", _dedup_winnow_pairs, _WINNOW_SQL),
+        ("multimodal_features", _multimodal_features, _MULTIMODAL_SQL),
+        ("t_redact_pii", _t_redact_pii, _redact_sql()),
+        ("t_repetition", _t_repetition, _REPETITION_SQL),
+        ("q4_order_priority", _q4_order_priority, _Q4_SQL),
+        ("q12_priority_class", _q12_priority_class, _Q12_SQL),
+        ("sample_split", _sample_split, _SAMPLE_SPLIT_SQL),
+        ("sample_token_budget", _sample_token_budget, _SAMPLE_BUDGET_SQL),
+        ("mixture_sources", _mixture_sources, _mixture_sql()),
+        ("frame_sample_plan", _frame_sample_plan, _FRAME_SAMPLE_SQL),
         # -- rows-only (perception / sketches / non-SQL-expressible) --
-        "a15_approx_distinct": _a15_approx_distinct,
-        "approx_percentiles": _approx_percentiles,
-        "x1_turn_markdown": _x1_turn_markdown,
-        "flagship_reassembly": _flagship_reassembly,
-        "grits_similarity": _grits_similarity,
-        "vlm_messages": _vlm_messages,
-        "dedup_lsh_pairs_fast": _dedup_lsh_pairs_fast,
-    }
+        ("a15_approx_distinct", _a15_approx_distinct, None),
+        ("approx_percentiles", _approx_percentiles, None),
+        ("x1_turn_markdown", _x1_turn_markdown, None),
+        ("flagship_reassembly", _flagship_reassembly, None),
+        ("grits_similarity", _grits_similarity, None),
+        ("vlm_messages", _vlm_messages, None),
+        ("dedup_lsh_pairs_fast", _dedup_lsh_pairs_fast, None),
+    ]
+
+
+def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    """Ordered so the driver's 50-entry correctness window exercises the
+    NEWEST work each round (VERDICT r4 #10) while keeping one
+    representative per operator family. 116 queries carry an oracle_sql
+    twin; the 66 overflow pairs (positions 51-116, all long-green) and
+    the 7 rows-only tail entries are full-sweep-verified every round via
+    tools/check_oracle.py (CORRECTNESS_FULL_r7.md, three SFs). The
+    rows-only ones are genuinely non-SQL-replayable: HLL sketch,
+    approx-percentile sketch (error-bounded in pytest), perception pUDFs
+    (byte-pinned by pytest goldens), the full GRITS DP on arbitrary
+    tables (its closed-form cases ARE hash-checked: grits_closed_form),
+    VLM message assembly, and the xxhash64 LSH variant (pytest
+    parity-gated vs the sha256 oracle path)."""
+    return {name: fn for name, fn, _ in _table()}
 
 
 def oracle_sql() -> dict[str, str]:
-    return {
-        "q1_pricing_summary": _Q1_SQL,
-        "q5_revenue_by_nation": _Q5_SQL,
-        "q3_shipping_priority": _Q3_SQL,
-        "q6_forecast_revenue": _Q6_SQL,
-        "a14_cube": _A14_SQL,
-        "j1_field_alignment": _J1_SQL,
-        "a1_edit_similarity": _A1_SQL,
-        "a3_vqa_best_of": _A3_SQL,
-        "a4_exact_match": _A4_SQL,
-        "a5_multivalue_fold": _A5_SQL,
-        "a6_distinct_labels": _A6_SQL,
-        "a9_cost_accounting": _A9_SQL,
-        "a10_score_matrix": _A10_SQL,
-        "a11_stratified_topk": _A11_SQL,
-        "w1_stable_order_concat": _W1_SQL,
-        "w3_first_match": _W3_SQL,
-        "w4_topn": _W4_SQL,
-        "p1_field_norm": _P1_SQL,
-        "p6_key_remap": _P6_SQL,
-        "p7_bbox_denorm": _P7_SQL,
-        "p9_enclosing_bbox": _P9_SQL,
-        "p10_validity_filter": _P10_SQL,
-        "s1_extension_predicate": _S1_SQL,
-        "s8_payload_truncation": _S8_SQL,
-        "p3_json_field_default": _P3_SQL,
-        "scalar_sha_b64": _SHA_SQL,
-        "t_token_count": _TOK_SQL,
-        "t_lang_id": _lang_sql(),
-        "t_quality": _quality_sql(),
-        "t_quality_filter": _quality_filter_sql(),
-        "s5_resize_dims": _S5_SQL,
-        "t_bpe_token_count": _BPE_SQL,
-        "dedup_exact": _DEDUP_EXACT_SQL,
-        "dedup_jaccard": _JACCARD_SQL,
-        "dedup_jaccard_capped": _JACCARD_CAPPED_SQL,
-        "dedup_clusters": _CLUSTERS_SQL,
-        "asof_recent_view": _ASOF_SQL,
-        "asof_forward_next_purchase": _ASOF_FORWARD_SQL,
-        "rollup_cascade": _ROLLUP_CASCADE_SQL,
-        "asof_tolerance": _ASOF_TOLERANCE_SQL,
-        "range_join_error_windows": _RANGE_JOIN_SQL,
-        "decontam_report": _DECONTAM_REPORT_SQL,
-        "decontam_pairs": _DECONTAM_PAIRS_SQL,
-        "decontam_filter": _DECONTAM_FILTER_SQL,
-        "curate_funnel": _curate_funnel_sql(),
-        "dedup_minhash_sigs": _MINHASH_SQL,
-        "dedup_lsh_pairs": _LSH_SQL,
-        "ann_cosine_topk": _ANN_SQL,
-        "ann_ivf_topk": _IVF_SQL,
-        "ann_ivf_topk_farthest": _IVF_FARTHEST_SQL,
-        "ann_lsh_topk": _ann_lsh_sql(),
-        "simhash_signatures": _simhash_sql(),
-        "dedup_winnow_pairs": _winnow_sql(),
-        "dedup_lsh_flood_guard": _lsh_flood_sql(),
-        "dedup_winnow_flood_guard": _winnow_flood_sql(),
-        "simhash_flood_guard": _simhash_flood_sql(),
-        "image_resample_pixels": _RESAMPLE_SQL,
-        "gif_resample_pixels": _GIF_RESAMPLE_SQL,
-        "jpeg_resample_pixels": _JPEG_RESAMPLE_SQL,
-        "jpeg_color_pixels": _JPEG_COLOR_SQL,
-        "jpeg_subsampled_pixels": _JPEG_SUBSAMPLED_SQL,
-        "jpeg_lossless_pixels": _JPEG_LOSSLESS_SQL,
-        "png_palette_pixels": _PNG_PALETTE_SQL,
-        # progressive re-codes the same coefficients losslessly, so the
-        # baseline-gray SQL twin applies verbatim — sharing it IS the claim
-        "jpeg_progressive_pixels": _JPEG_RESAMPLE_SQL,
-        "jpeg_arith_pixels": _JPEG_RESAMPLE_SQL,
-        "bmp_pixels": _BMP_SQL,
-        "tiff_pixels": _TIFF_SQL,
-        # LZW re-codes the same pixels losslessly, so the baseline TIFF
-        # twin applies verbatim — sharing it IS the claim
-        "tiff_lzw_pixels": _TIFF_SQL,
-        # tiling is a lossless re-layout of the same pixel rule at the
-        # tiled dims formula — sharing the strip twin IS the claim
-        "tiff_tiled_pixels": _TIFF_TILED_SQL,
-        "gif_animation_frames": _GIF_ANIM_SQL,
-        # JPEG-in-TIFF decodes to the same closed-form block rule as the
-        # standalone gray JPEG pair — only the sniffed container differs
-        "tiff_jpeg_pixels": _resample_twin_sql(_JPEG_DIMS_SQL, 12, 1,
-                                               _jpeg_block_v, "tiff"),
-        # 16-bit v*257 storage decodes back to the same 8-bit rule at
-        # the tiled dims formula — sharing that twin IS the claim
-        "tiff_16bit_pixels": _TIFF_TILED_SQL,
-        "tiff_g4_pixels": _TIFF_G4_SQL,
-        "webp_pixels": _WEBP_SQL,
-        "grits_closed_form": _GRITS_CLOSED_SQL,
-        "audio_waveform_features": _AUDIO_SQL,
-        "audio_adpcm_features": _ADPCM_SQL,
-        "audio_flac_features": _FLAC_SQL,
-        "audio_pcm24_features": _PCM24_SQL,
-        "video_mp4_metadata": _MP4_META_SQL,
-        "video_webm_metadata": _WEBM_META_SQL,
-        "audio_mp3_metadata": _MP3_META_SQL,
-        "audio_ogg_metadata": _OGG_META_SQL,
-        "audio_g711_features": _G711_SQL,
-        "event_sessionization": _SESSION_SQL,
-        "training_samples": _TRAINING_SAMPLES_SQL,
-        "multimodal_features": _MULTIMODAL_SQL,
-        "t_redact_pii": _redact_sql(),
-        "t_repetition": _REPETITION_SQL,
-        "q4_order_priority": _Q4_SQL,
-        "q12_priority_class": _Q12_SQL,
-        "q7_volume_shipping": _Q7_SQL,
-        "q10_returned_items": _Q10_SQL,
-        "q14_promo_effect": _Q14_SQL,
-        "doc_length_percentiles": _PERCENTILES_SQL,
-        "pack_sequences": _PACK_SEQUENCES_SQL,
-        "sample_split": _SAMPLE_SPLIT_SQL,
-        "sample_token_budget": _SAMPLE_BUDGET_SQL,
-        "mixture_sources": _mixture_sql(),
-        "frame_sample_plan": _FRAME_SAMPLE_SQL,
-        "dedup_cosine_pairs": _COSDUP_SQL,
-        "dedup_cosine_lsh": _COSDUP_SQL,
-        "idp_benchmark_matrix": _IDP_GOLDEN_SQL,
-        "loader_benchmark_corpus": _LOADER_CORPUS_SQL,
-        "x4_kie_fields": _X4_SQL,
-        "x5_pipe_table": _X5_SQL,
-        "x7_classification": _X7_SQL,
-        "x3_pdf_layout": _X3_SQL,
-        "p4_tag_escape": _P4_SQL,
-        "p5_strip_normalize": _P5_SQL,
-        "p8_polygon_bbox": _P8_SQL,
-        "j5_table_pairing": _J5_SQL,
-        "a12_union_frames": _A12_SQL,
-        "scalar_iou": _IOU_SQL,
-        "s2_posexplode_pages": _S2_SQL,
-        "w5_event_time_window": _W5_SQL,
-    }
+    return {name: sql for name, _, sql in _table() if sql is not None}

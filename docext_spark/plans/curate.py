@@ -154,8 +154,7 @@ def fuzzy_dedup_keep_first(docs: DataFrame, id_col: str = "doc_id",
 
 def curate(docs: DataFrame, id_col: str = "doc_id",
            text_col: str = "text", fuzzy_kwargs: dict | None = None,
-           persist: bool = True, redact: bool = False,
-           stage_path: str | None = None,
+           redact: bool = False, stage_path: str | None = None,
            **quality_kwargs) -> dict:
     """Full pipeline. Returns {"corpus": DataFrame, "funnel": DataFrame,
     "unpersist": callable} — funnel is the per-stage survivorship count
@@ -164,7 +163,7 @@ def curate(docs: DataFrame, id_col: str = "doc_id",
     Stage frames are reused by several consumers (the corpus write plus
     the funnel counts), and without staging every consumer re-runs the
     pipeline prefix (the quality scan would run ~5x, the LSH verify plan
-    2-3x). Three staging modes:
+    2-3x). Two staging modes:
 
     * ``stage_path=<dir>`` (the 100TB shape): each stage is WRITTEN to
       parquet under the directory and read back — executor loss replays
@@ -173,13 +172,9 @@ def curate(docs: DataFrame, id_col: str = "doc_id",
       block-manager spill of any realistic cluster fraction), and the
       intermediates double as restart points. This is what a production
       run should use.
-    * ``persist=True`` (default, sandbox scale): MEMORY_AND_DISK persist;
-      the caller releases storage via result["unpersist"]() once its
-      consumers are materialized (job.py does).
-    * ``persist=False``: no staging at all — for callers that evaluate
-      the result exactly once and cannot call unpersist (e.g. the
-      oracle-parity harness), where leaked cached frames would outlive
-      the query."""
+    * no ``stage_path`` (default, sandbox scale): MEMORY_AND_DISK
+      persist; the caller releases storage via result["unpersist"]() once
+      its consumers are materialized (job.py does)."""
     from pyspark import StorageLevel
 
     _stage_no = [0]
@@ -190,8 +185,7 @@ def curate(docs: DataFrame, id_col: str = "doc_id",
             _stage_no[0] += 1
             frame.write.mode("overwrite").parquet(path)
             return frame.sparkSession.read.parquet(path)
-        return frame.persist(StorageLevel.MEMORY_AND_DISK) if persist \
-            else frame
+        return frame.persist(StorageLevel.MEMORY_AND_DISK)
 
     gated = stage(quality_gate(docs, text_col, **quality_kwargs))
     exact = stage(exact_dedup_keep_first(gated, id_col, text_col))
@@ -212,7 +206,7 @@ def curate(docs: DataFrame, id_col: str = "doc_id",
                                         F.count(F.lit(1)).alias("n_docs"))))
 
     def unpersist():
-        if persist and stage_path is None:
+        if stage_path is None:
             for frame in (gated, exact, fuzzy):
                 frame.unpersist()
 

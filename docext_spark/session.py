@@ -1,7 +1,9 @@
 """SparkSession builder with the engine's standard configs.
 
-Arrow on (all heavy ops are Arrow-batched pandas UDFs), AQE on (runtime
-coalesce + skew-join handling), UTC session timezone (oracle parity),
+Arrow on (all heavy ops are Arrow-batched pandas UDFs), AQE left at
+Spark's defaults (on, with runtime coalesce and skew-join handling; only
+the coalescer's minimum partition size is lowered), UTC session timezone
+(oracle parity),
 shuffle partitions sized for the local-mode core count rather than the 200
 default — on a real cluster this is set per-job from executor count.
 """
@@ -38,8 +40,6 @@ def get_spark(app_name: str = "docext_spark", master: str | None = None,
     builder = (
         SparkSession.builder.master(master).appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         # AQE's coalescer folds post-shuffle partitions below
         # minPartitionSize (default 1 MB) together "for efficiency" — but a
         # CPU-heavy post-shuffle stage (levenshtein scoring, pUDF batches)
@@ -50,7 +50,6 @@ def get_spark(app_name: str = "docext_spark", master: str | None = None,
         # dominates compute.
         .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
                 "64k")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # Prefer shuffled-hash over sort-merge when a side's per-partition
         # build fits (guide §3.1/§9): the engine's equi-joins key on ids
         # whose per-partition hash tables are small, and skipping two full
@@ -79,7 +78,6 @@ def get_spark(app_name: str = "docext_spark", master: str | None = None,
         # rely on maxPartitionBytes for the split ceiling.
         .config("spark.sql.files.openCostInBytes", "131072")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.driver.memory",
                 os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory())
         .config("spark.ui.enabled", "false")

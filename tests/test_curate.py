@@ -79,11 +79,12 @@ def test_curate_stage_path_matches_persisted(spark, tmp_path):
     corpus = sorted((r["doc_id"], r["text"])
                     for r in staged["corpus"].collect())
     funnel = {r["stage"]: r["n_docs"] for r in staged["funnel"].collect()}
-    baseline = curate(_docs(spark), persist=False)
+    baseline = curate(_docs(spark))
     assert corpus == sorted((r["doc_id"], r["text"])
                             for r in baseline["corpus"].collect())
     assert funnel == {r["stage"]: r["n_docs"]
                       for r in baseline["funnel"].collect()}
+    baseline["unpersist"]()
     stages = sorted(os.listdir(tmp_path / "stages"))
     assert stages == ["stage_0", "stage_1", "stage_2"]
     staged["unpersist"]()  # must be a safe no-op in staged mode

@@ -16,7 +16,6 @@ DuckDB side is pinned to the same file by test_entry_contract.
 """
 from __future__ import annotations
 
-import importlib.util
 import json
 from pathlib import Path
 
@@ -35,15 +34,6 @@ _RUNTIME_KEYS = ("spark.sql.shuffle.partitions",
                  "spark.sql.files.maxPartitionBytes")
 
 
-def _load_checker():
-    spec = importlib.util.spec_from_file_location(
-        "check_oracle",
-        Path(__file__).resolve().parents[1] / "tools" / "check_oracle.py")
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
-
-
 def _digest_under(spark, fn, cfg):
     old = [spark.conf.get(k) for k in _RUNTIME_KEYS]
     for k, v in zip(_RUNTIME_KEYS, cfg):
@@ -60,7 +50,7 @@ def _digest_under(spark, fn, cfg):
 
 def test_oracle_paired_digests_stable_across_parallelism(spark):
     import __spark_entry__ as entry
-    checker = _load_checker()
+    from tools.check_oracle import table_digest
     qs = entry.queries()
     paired = sorted(entry.oracle_sql())
     pinned = json.loads(MANIFEST.read_text())["digests"]
@@ -72,8 +62,8 @@ def test_oracle_paired_digests_stable_across_parallelism(spark):
         except Exception as exc:  # noqa: BLE001 — collect, report all
             failures.append(f"{name}: ERROR {exc}")
             continue
-        da = checker.table_digest(ca, ra)
-        db = checker.table_digest(cb, rb)
+        da = table_digest(ca, ra)
+        db = table_digest(cb, rb)
         if ca != cb or da != db:
             failures.append(
                 f"{name}: digest {da[:12]} (cfg A, {len(ra)} rows) != "

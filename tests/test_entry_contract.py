@@ -8,22 +8,14 @@ import json
 import sys
 from pathlib import Path
 
-import duckdb
 import pytest
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 import __spark_entry__ as entry  # noqa: E402
+from tools.check_oracle import duckdb_views  # noqa: E402
 
 SF = "/root/testdata/sf0.001"
 MANIFEST = Path(__file__).with_name("oracle_digests.json")
-
-
-def _duckdb():
-    con = duckdb.connect()
-    for t in entry.TABLES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM "
-                f"read_parquet('{SF}/{t}.parquet')")
-    return con
 
 
 def test_entry_smoke(spark):
@@ -46,7 +38,7 @@ def test_oracle_spot_check(spark, name):
     q = entry.queries()[name]
     sdf = q(spark, SF)
     srows = [tuple(r) for r in sdf.collect()]
-    con = _duckdb()
+    con = duckdb_views(SF)
     rel = con.sql(entry.oracle_sql()[name])
     dcols = [d[0] for d in rel.description]
     drows = rel.fetchall()
@@ -66,7 +58,7 @@ def test_oracle_twins_match_digest_manifest():
     assert list(entry.queries()) == pinned["queries"]
     twins = entry.oracle_sql()
     assert sorted(twins) == sorted(pinned["digests"])
-    con = _duckdb()
+    con = duckdb_views(SF)
     failures = []
     for name, sql in sorted(twins.items()):
         rel = con.sql(sql)

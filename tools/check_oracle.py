@@ -57,6 +57,18 @@ def table_digest(cols, rows):
     return h.hexdigest()
 
 
+def duckdb_views(sf_dir):
+    """A DuckDB connection with one view per ``TABLES`` parquet file of
+    ``sf_dir``, the names every ``oracle_sql()`` twin reads."""
+    import duckdb
+    import __spark_entry__ as entry
+    con = duckdb.connect()
+    for t in entry.TABLES:
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM "
+                f"read_parquet('{sf_dir}/{t}.parquet')")
+    return con
+
+
 def main():
     global STRICT
     args = [a for a in sys.argv[1:] if a != "--strict"]
@@ -66,14 +78,11 @@ def main():
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
     only = set(args[1:])
 
-    import duckdb
     import __spark_entry__ as entry
     from docext_spark.session import get_spark
 
     spark = get_spark()
-    con = duckdb.connect()
-    for t in entry.TABLES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
+    con = duckdb_views(sf_dir)
 
     qs = entry.queries()
     oracles = entry.oracle_sql()
