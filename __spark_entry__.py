@@ -805,8 +805,9 @@ FROM events
 
 # ---- DuckDB twin builders shared by the text and dedup pairs --------------
 # Each rule of operators/textops.py and operators/dedup.py that more than
-# one twin replays is spelled once here. The whitespace class '\s' appears
-# only in _norm_sql and _tokens_sql (and in the frozen _curate_funnel_sql).
+# one twin replays is spelled once here. Whitespace runs ('\s+') are
+# matched only in _norm_sql and _tokens_sql, and in the frozen
+# _curate_funnel_sql.
 
 def _norm_sql(col="text"):
     """Twin of textops.normalized: lowercase, whitespace runs to one
@@ -853,8 +854,8 @@ def _minhash_sql(num_hashes, prefix="s"):
         for k in range(num_hashes))
 
 
-def _lsh_banded_sql(src="dsh"):
-    """CTEs ``sigs`` (the 8-way sha256 MinHash of each ``src`` doc) and
+def _lsh_banded_sql():
+    """CTEs ``sigs`` (the 8-way sha256 MinHash of each ``dsh`` doc) and
     ``banded`` (doc_id, band, key): 4 bands of 2 slots, key = sha256 of
     the band's slots joined by '|' (dedup.lsh_banded, sha256 engine)."""
     bands = "\n    UNION ALL ".join(
@@ -863,7 +864,7 @@ def _lsh_banded_sql(src="dsh"):
     return f"""sigs AS (
   SELECT doc_id,
          {_minhash_sql(8)}
-  FROM {src} GROUP BY doc_id
+  FROM dsh GROUP BY doc_id
 ), banded AS (
   SELECT doc_id, band, key FROM (
     {bands})
@@ -912,12 +913,14 @@ def _simhash_ctes_sql(src):
 )"""
 
 
-def _winnow_fps_sql(src, k=8, window=4):
+def _winnow_fps_sql(src):
     """CTEs ending in ``fps`` (doc_id, fp): the winnowed fingerprint set
-    of each ``src`` text, NULL read as ''. A k-gram hashes to
-    sum(ord(c) * 257^j) mod 2^61-1, position-independent, so the set is
-    the min over each window of ``window`` consecutive grams (the single
-    min when a text has at most ``window``) (dedup.winnow_*)."""
+    of each ``src`` text, NULL read as '', with the winnow kernel's
+    k = 8 chars and window = 4. A k-gram hashes to sum(ord(c) * 257^j)
+    mod 2^61-1, position-independent, so the set is the min over each
+    window of consecutive grams, or the single min when a text has at
+    most ``window`` grams (dedup.winnow_*)."""
+    k, window = 8, 4
     poly = " + ".join(
         f"unicode(substr(n, i+{j}, 1))::HUGEINT * {257 ** (k - 1 - j)}"
         for j in range(k))

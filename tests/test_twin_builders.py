@@ -5,7 +5,8 @@ and no tabs or newlines, so the digest manifest cannot see a builder that
 changes how those are handled. Each test runs a builder over a VALUES
 relation holding such rows and compares it with the inline SQL the twins
 spelled out before the builders existed (the ``*_INLINE`` texts below,
-kept verbatim)."""
+copied from those twins; only the shingle width, the cap and the
+threshold are parameters)."""
 from __future__ import annotations
 
 import sys
