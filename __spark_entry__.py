@@ -2912,7 +2912,7 @@ def _jpeg_resample_pixels(spark, sf_dir):
     own baseline encoder."""
     from docext_spark.core import jpegpix
     return _resampled(_media(spark, [
-        jpegpix.encode_jpeg_gray(w, h, px)
+        jpegpix.encode_jpeg_sequential(w, h, [px])
         for _, w, h, px in _jpeg_block_fixtures()]), max_size=12)
 
 
@@ -2954,8 +2954,8 @@ def _jpeg_arith_pixels(spark, sf_dir):
     progressive pair makes."""
     from docext_spark.core import jpegpix
     return _resampled(_media(spark, [
-        jpegpix.encode_jpeg_arith_gray(
-            w, h, px,
+        jpegpix.encode_jpeg_sequential(
+            w, h, [px], arith=True,
             restart_interval=(1 + i % 3) if i % 3 == 1 else 0,
             dc_cond=(0, 2) if i % 3 == 2 else (0, 1),
             kx=2 if i % 3 == 2 else 5)
@@ -2989,10 +2989,10 @@ def _jpeg_color_pixels(spark, sf_dir):
         def plane(f):
             return bytes((f(x // 8, y // 8) % 128) * 2
                          for y in range(h) for x in range(w))
-        payloads.append(jpegpix.encode_jpeg_ycbcr(
-            w, h, luma,
+        payloads.append(jpegpix.encode_jpeg_sequential(w, h, [
+            luma,
             plane(lambda bx, by: bx * 7 + i * 2),
-            plane(lambda bx, by: by * 11 + i * 3)))
+            plane(lambda bx, by: by * 11 + i * 3)]))
     return _resampled(_media(spark, payloads), max_size=12, with_f0=False)
 
 
@@ -3028,8 +3028,8 @@ def _jpeg_subsampled_pixels(spark, sf_dir):
                    for yy in range(chh) for x in range(cw))
         cr = bytes((((yy // 8) * 11 + i * 3) % 128) * 2
                    for yy in range(chh) for x in range(cw))
-        payloads.append(jpegpix.encode_jpeg_ycbcr_sub(
-            w, h, luma, cb, cr, 2, sv,
+        payloads.append(jpegpix.encode_jpeg_sequential(
+            w, h, [luma, cb, cr], sh=2, sv=sv,
             restart_interval=2 if i % 3 == 0 else 0))
     return _resampled(_media(spark, payloads), max_size=12, with_f0=False)
 

@@ -159,13 +159,61 @@ def decode_gif(payload: bytes | None):
     return None
 
 
-# -- fixture encoder (fixed-width "ungif" LZW — valid by construction) ------
+# -- fixture encoders (fixed-width "ungif" LZW — valid by construction) -----
+
+def _color_table(palette: list[tuple[int, int, int]]) -> tuple[int, bytes]:
+    """(size bits, table): the palette padded with black to a power of
+    two of at least 2 entries."""
+    pal_bits = max(1, (max(1, len(palette) - 1)).bit_length())
+    table = b"".join(bytes(palette[i]) if i < len(palette) else b"\0\0\0"
+                     for i in range(1 << pal_bits))
+    return pal_bits, table
+
+
+def _lzw_image_data(indices: list[int], pal_bits: int) -> bytes:
+    """An image's table-based data: the LZW minimum code size, then the
+    indices as fixed-width LZW (every symbol a root code, CLEAR before
+    the decoder's dictionary would force a width change) in 255-byte
+    sub-blocks, then the block terminator."""
+    if any(i >= 1 << pal_bits for i in indices):
+        raise ValueError("index out of palette range")
+    min_code = max(2, pal_bits)
+    clear = 1 << min_code
+    eoi = clear + 1
+    width = min_code + 1
+    codes = [clear]
+    next_code = eoi + 1
+    for sym in indices:
+        codes.append(sym)
+        next_code += 1                           # decoder adds one entry
+        if next_code >= (1 << width) - 1:        # stay fixed-width
+            codes.append(clear)
+            next_code = eoi + 1
+    codes.append(eoi)
+    acc = nbits = 0
+    data = bytearray()
+    for code in codes:
+        acc |= code << nbits
+        nbits += width
+        while nbits >= 8:
+            data.append(acc & 0xFF)
+            acc >>= 8
+            nbits -= 8
+    if nbits:
+        data.append(acc & 0xFF)
+    out = bytearray([min_code])
+    for i in range(0, len(data), 255):
+        chunk = data[i:i + 255]
+        out.append(len(chunk))
+        out += chunk
+    out.append(0x00)
+    return bytes(out)
+
 
 def encode_gif(w: int, h: int, palette: list[tuple[int, int, int]],
                indices: list[int], interlace: bool = False) -> bytes:
     """A fully valid GIF87a: global color table sized to the palette,
-    image data as fixed-width LZW (every symbol emitted as a root code,
-    CLEAR before the decoder's dictionary would force a width change).
+    image data as fixed-width LZW (_lzw_image_data).
     ``interlace=True`` stores rows in the four-pass order and sets the
     descriptor flag — a row-preserving re-arrangement, so
     decode(interlaced) == decode(plain) for every input."""
@@ -174,50 +222,16 @@ def encode_gif(w: int, h: int, palette: list[tuple[int, int, int]],
     if interlace:
         indices = [indices[y * w + x]
                    for y in interlace_rows(h) for x in range(w)]
-    pal_bits = max(1, (max(1, len(palette) - 1)).bit_length())
-    pal_n = 1 << pal_bits
-    if any(i >= pal_n for i in indices):
-        raise ValueError("index out of palette range")
-    min_code = max(2, pal_bits)
-    clear = 1 << min_code
-    eoi = clear + 1
-    width = min_code + 1
-    bits: list[tuple[int, int]] = [(clear, width)]
-    next_code = eoi + 1
-    for sym in indices:
-        bits.append((sym, width))
-        next_code += 1                           # decoder adds one entry
-        if next_code >= (1 << width) - 1:        # stay fixed-width
-            bits.append((clear, width))
-            next_code = eoi + 1
-    bits.append((eoi, width))
-    acc = nbits = 0
-    data = bytearray()
-    for code, cw in bits:
-        acc |= code << nbits
-        nbits += cw
-        while nbits >= 8:
-            data.append(acc & 0xFF)
-            acc >>= 8
-            nbits -= 8
-    if nbits:
-        data.append(acc & 0xFF)
-    pal = bytearray()
-    for i in range(pal_n):
-        r, g, b = palette[i] if i < len(palette) else (0, 0, 0)
-        pal += bytes((r, g, b))
+    pal_bits, table = _color_table(palette)
+    image = _lzw_image_data(indices, pal_bits)
     out = bytearray()
     out += b"GIF87a" + struct.pack("<HH", w, h)
     out.append(0x80 | (pal_bits - 1))            # GCT present, size bits
-    out += b"\x00\x00" + pal
+    out += b"\x00\x00" + table
     out += b"\x2C" + struct.pack("<HHHH", 0, 0, w, h)
     out.append(0x40 if interlace else 0x00)
-    out.append(min_code)
-    for i in range(0, len(data), 255):
-        chunk = data[i:i + 255]
-        out.append(len(chunk))
-        out += chunk
-    out += b"\x00\x3B"
+    out += image
+    out += b"\x3B"
     return bytes(out)
 
 
@@ -408,19 +422,14 @@ def encode_gif_animated(w: int, h: int,
     loop extension, one Graphic Control Extension + image descriptor
     per frame. Each frame dict: {left, top, w, h, indices, delay_ms,
     disposal (0-3), transparent (palette index or None)}. Image data is
-    the fixed-width "ungif" LZW of encode_gif."""
-    pal_bits = max(1, (max(1, len(palette) - 1)).bit_length())
-    pal_n = 1 << pal_bits
-    pal = bytearray()
-    for i in range(pal_n):
-        r, g, b = palette[i] if i < len(palette) else (0, 0, 0)
-        pal += bytes((r, g, b))
+    the fixed-width "ungif" LZW of _lzw_image_data."""
+    pal_bits, table = _color_table(palette)
     out = bytearray()
     out += b"GIF89a" + struct.pack("<HH", w, h)
     out.append(0x80 | (pal_bits - 1))
     out.append(bg_idx)
     out.append(0)
-    out += pal
+    out += table
     if loop is not None:
         out += b"\x21\xff\x0bNETSCAPE2.0\x03\x01"
         out += struct.pack("<H", loop) + b"\x00"
@@ -441,37 +450,6 @@ def encode_gif_animated(w: int, h: int,
         out += b"\x00"
         out += b"\x2C" + struct.pack("<HHHH", fl, ft, fw, fh)
         out.append(0x00)                         # no LCT, no interlace
-        min_code = max(2, pal_bits)
-        clear = 1 << min_code
-        eoi = clear + 1
-        width = min_code + 1
-        bits: list[tuple[int, int]] = [(clear, width)]
-        next_code = eoi + 1
-        for sym in indices:
-            if sym >= pal_n:
-                raise ValueError("index out of palette range")
-            bits.append((sym, width))
-            next_code += 1
-            if next_code >= (1 << width) - 1:
-                bits.append((clear, width))
-                next_code = eoi + 1
-        bits.append((eoi, width))
-        acc = nbits = 0
-        data = bytearray()
-        for code, cw in bits:
-            acc |= code << nbits
-            nbits += cw
-            while nbits >= 8:
-                data.append(acc & 0xFF)
-                acc >>= 8
-                nbits -= 8
-        if nbits:
-            data.append(acc & 0xFF)
-        out.append(min_code)
-        for i in range(0, len(data), 255):
-            chunk = data[i:i + 255]
-            out.append(len(chunk))
-            out += chunk
-        out += b"\x00"
+        out += _lzw_image_data(indices, pal_bits)
     out += b"\x3B"
     return bytes(out)

@@ -25,9 +25,10 @@ T.81 Annex H sequential DPCM process (predictors 1-7 with the spec's
 first-line/first-column overrides, Huffman-coded SSSS difference
 categories, point transform, mod-2^16 reconstruction) used by DNG raws
 and DICOM archives; no DCT, no quantization, so EVERY pixel value
-round-trips exactly. Arithmetic/hierarchical SOFs and sampling factors
->2 return None — at 100 TB those route to a codec fleet; the scan must
-never die on one blob.
+round-trips exactly. **SEQUENTIAL ARITHMETIC (SOF9)** is decoded by
+core/jpegarith.py. Progressive or lossless arithmetic, hierarchical SOFs
+and sampling factors >2 return None — at 100 TB those route to a codec
+fleet; the scan must never die on one blob.
 
 Exactness: JPEG is lossy in general, but a block whose 64 samples are one
 CONSTANT EVEN value round-trips EXACTLY through FDCT → /16 quant → IDCT
@@ -36,6 +37,16 @@ even) — which is what lets a planted fixture be replayed analytically by
 a SQL oracle while the decoder still chews real entropy-coded bytes. The
 general (non-constant) path is pinned by encoder↔decoder near-roundtrip
 bounds and a NumPy cross-check of the IDCT.
+
+Encoders (fixture/test side): encode_jpeg_sequential writes the T.81
+sequential DCT process — one walk over the MCUs of a gray plane or of
+Y plus pre-subsampled Cb/Cr, each block coded with Huffman codes (SOF0,
+Annex K tables, F.1.2) or the adaptive arithmetic coder (SOF9, Annex F
+via core/jpegarith.py), with optional restart intervals and DAC
+conditioning. encode_jpeg_progressive_gray/_ycbcr_sub re-code the same
+quantized coefficients as SOF2 scan scripts and encode_jpeg_lossless
+writes SOF3. All DCT encoders share _quantize_block, so for the same
+planes every one of them decodes to the same pixels.
 """
 from __future__ import annotations
 
@@ -904,7 +915,7 @@ def _ycbcr_to_rgb(y: bytearray, cb: bytearray, cr: bytearray) -> bytes:
     return bytes(out)
 
 
-# -- encoder (fixture/test side): real baseline grayscale JPEG --------------
+# -- encoders (fixture/test side) -------------------------------------------
 
 # Annex K.3 luminance Huffman tables (the standard ones every camera uses)
 _DC_COUNTS = bytes([0, 1, 5, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0, 0, 0])
@@ -973,18 +984,26 @@ def _size_of(v: int) -> int:
     return v.bit_length() if v >= 0 else (-v).bit_length()
 
 
-def _encode_block(writer: _BitWriter, block: list[float], pred: int,
-                  qt: list[int], dc_codes, ac_codes) -> int:
-    """FDCT + quantize + entropy-code one centered 8×8 block; returns the
-    new DC predictor."""
-    coef = fdct2d(block)
-    q = [int(round(coef[ZIGZAG[k]] / qt[k])) for k in range(64)]
-    diff = q[0] - pred
+def _seg(marker: int, body: bytes) -> bytes:
+    """One marker segment: 0xFF, the marker, the 16-bit length, the body."""
+    return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
+
+
+def _write_diff(writer: _BitWriter, dc_codes, diff: int):
+    """Huffman-code one DC (or lossless DPCM) difference: the SSSS
+    category symbol, then SSSS magnitude bits (F.1.2.1)."""
     size = _size_of(diff)
     code, ln = dc_codes[size]
     writer.write(code, ln)
     if size:
         writer.write(diff if diff > 0 else diff + (1 << size) - 1, size)
+
+
+def _encode_block(writer: _BitWriter, q: list[int], pred: int,
+                  dc_codes, ac_codes) -> int:
+    """Huffman-code one zigzag-ordered quantized block (F.1.2); returns
+    the new DC predictor."""
+    _write_diff(writer, dc_codes, q[0] - pred)
     # AC run-length coding
     last_nz = 0
     for k in range(63, 0, -1):
@@ -1023,56 +1042,112 @@ def _block_at(plane: bytes, w: int, h: int, bx: int, by: int) -> list[float]:
     return block
 
 
-def _jpeg_file(w: int, h: int, qt: list[int], ncomp: int,
-               entropy: bytes,
-               samplings: list[int] | None = None,
-               restart_interval: int = 0) -> bytes:
-    def seg(marker: int, body: bytes) -> bytes:
-        return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
-
-    samplings = samplings or [0x11] * ncomp
-    dqt = seg(0xDB, bytes([0x00]) + bytes(qt))
-    dht = seg(0xC4, bytes([0x00]) + _DC_COUNTS + _DC_SYMBOLS) \
-        + seg(0xC4, bytes([0x10]) + _AC_COUNTS + _AC_SYMBOLS)
-    dri = seg(0xDD, struct.pack(">H", restart_interval)) \
-        if restart_interval else b""
-    sof_comps = b"".join(bytes([c + 1, samplings[c], 0])
-                         for c in range(ncomp))
-    sof = seg(0xC0, bytes([8]) + struct.pack(">HH", h, w)
-              + bytes([ncomp]) + sof_comps)
-    sos_comps = b"".join(bytes([c + 1, 0x00]) for c in range(ncomp))
-    sos = seg(0xDA, bytes([ncomp]) + sos_comps + bytes([0, 63, 0]))
-    return b"\xff\xd8" + dqt + sof + dht + dri + sos + entropy + b"\xff\xd9"
+def _quantize_block(plane: bytes, w: int, h: int, bx: int, by: int,
+                    qt: list[int]) -> list[int]:
+    """FDCT + quantize one centered block to zigzag-ordered ints — the one
+    quantization every encoder here shares, which is what makes
+    decode(arithmetic) == decode(progressive) == decode(Huffman) exact."""
+    coef = fdct2d(_block_at(plane, w, h, bx, by))
+    return [int(round(coef[ZIGZAG[k]] / qt[k])) for k in range(64)]
 
 
-def encode_jpeg_gray(w: int, h: int, pixels: bytes,
-                     quant: int = 16, restart_interval: int = 0) -> bytes:
-    """A real baseline grayscale JPEG: float FDCT, flat quantization table
-    (all entries = ``quant``), spec Annex K Huffman tables, byte-stuffed
-    entropy stream. Lossy in general; EXACT for blockwise-constant even
-    sample values when quant=16 (see module docstring).
-    ``restart_interval`` > 0 emits DRI + RSTn markers every that many MCUs
-    with DC-predictor resets (the camera-JPEG error-resilience layout)."""
-    if len(pixels) != w * h:
-        raise ValueError("pixel buffer does not match dims")
+def encode_jpeg_sequential(w: int, h: int, planes: list[bytes],
+                           sh: int = 1, sv: int = 1, quant: int = 16,
+                           restart_interval: int = 0, arith: bool = False,
+                           dc_cond: tuple[int, int] = (0, 1),
+                           kx: int = 5) -> bytes:
+    """A real sequential-DCT JPEG (T.81 Annexes F/G): float FDCT, flat
+    quantization table (all entries = ``quant``), one interleaved scan.
+
+    ``planes`` is [gray] (w×h) or [Y, Cb, Cr]: full-resolution luma and
+    PRE-SUBSAMPLED chroma at ceil(w/sh) × ceil(h/sv). Luma sampling
+    (sh, sv) ∈ {1,2}², chroma (1,1): 1/1 is 4:4:4, 2/1 is 4:2:2, 2/2 is
+    4:2:0. Each MCU codes sv×sh luma blocks then one block per chroma
+    plane, with edge-replicated padding. Fixtures pick the plane values
+    directly, so the blockwise-constant-even exactness property holds per
+    plane and the decoder's upsample + BT.601 output stays closed-form.
+
+    ``arith=False`` writes SOF0 with the Annex K Huffman tables and a
+    byte-stuffed stream. ``arith=True`` writes SOF9, coded by the Annex D
+    adaptive binary arithmetic coder (core/jpegarith.py) — luma on
+    statistics areas 0, chroma sharing areas 1 — with the DAC
+    conditioning ``dc_cond`` (L, U) and ``kx`` on every area (a DAC
+    segment only when non-default). Both code the same quantized
+    coefficients, so they decode to the same pixels.
+    ``restart_interval`` > 0 emits DRI + RSTn markers every that many
+    MCUs with the coder reset (the camera-JPEG error-resilience layout)."""
+    ncomp = len(planes)
+    if sh not in (1, 2) or sv not in (1, 2) \
+            or (ncomp == 1 and (sh, sv) != (1, 1)):
+        raise ValueError("sampling factors must be 1 or 2 (1 for gray)")
+    cw, ch = (w + sh - 1) // sh, (h + sv - 1) // sv
+    if ncomp not in (1, 3) or len(planes[0]) != w * h \
+            or any(len(p) != cw * ch for p in planes[1:]):
+        raise ValueError("plane buffers do not match dims")
     qt = [quant] * 64
-    dc_codes = _encode_codes(_DC_COUNTS, _DC_SYMBOLS)
-    ac_codes = _encode_codes(_AC_COUNTS, _AC_SYMBOLS)
-    writer = _BitWriter()
-    pred = 0
+    # (plane, plane w, plane h, blocks across, blocks down) per MCU
+    comps = [(planes[0], w, h, sh, sv)] + [(p, cw, ch, 1, 1)
+                                           for p in planes[1:]]
+    areas = [0] + [1] * (ncomp - 1)
+    if arith:
+        from docext_spark.core.jpegarith import ArithScanEncoder
+        enc = ArithScanEncoder([{"dc": a, "ac": a} for a in areas],
+                               dict.fromkeys(areas, dc_cond),
+                               dict.fromkeys(areas, kx))
+        code_block, restart = enc.encode_block, enc.restart
+    else:
+        writer = _BitWriter()
+        preds = [0] * ncomp
+        dc_codes = _encode_codes(_DC_COUNTS, _DC_SYMBOLS)
+        ac_codes = _encode_codes(_AC_COUNTS, _AC_SYMBOLS)
+
+        def code_block(ci: int, q: list[int]):
+            preds[ci] = _encode_block(writer, q, preds[ci],
+                                      dc_codes, ac_codes)
+
+        def restart(n: int):
+            writer.emit_rst(n)
+            preds[:] = [0] * ncomp
     mcu_no = 0
-    for by in range((h + 7) // 8):
-        for bx in range((w + 7) // 8):
+    for my in range((h + 8 * sv - 1) // (8 * sv)):
+        for mx in range((w + 8 * sh - 1) // (8 * sh)):
             if restart_interval and mcu_no \
                     and mcu_no % restart_interval == 0:
-                writer.emit_rst((mcu_no // restart_interval - 1) % 8)
-                pred = 0
+                restart((mcu_no // restart_interval - 1) % 8)
             mcu_no += 1
-            pred = _encode_block(writer, _block_at(pixels, w, h, bx, by),
-                                 pred, qt, dc_codes, ac_codes)
-    writer.flush()
-    return _jpeg_file(w, h, qt, 1, bytes(writer.out),
-                      restart_interval=restart_interval)
+            for ci, (plane, pw, ph, nx, ny) in enumerate(comps):
+                for bi in range(ny):
+                    for bj in range(nx):
+                        code_block(ci, _quantize_block(
+                            plane, pw, ph, mx * nx + bj, my * ny + bi, qt))
+    if arith:
+        entropy = enc.finish()
+        # DAC entries only for non-default conditioning (F.1.4.4.1.4)
+        dac = b"".join(
+            (bytes([a, (dc_cond[1] << 4) | dc_cond[0]])
+             if dc_cond != (0, 1) else b"")
+            + (bytes([0x10 | a, kx]) if kx != 5 else b"")
+            for a in sorted(set(areas)))
+        tables = _seg(0xCC, dac) if dac else b""
+    else:
+        writer.flush()
+        entropy = bytes(writer.out)
+        tables = _seg(0xC4, bytes([0x00]) + _DC_COUNTS + _DC_SYMBOLS) \
+            + _seg(0xC4, bytes([0x10]) + _AC_COUNTS + _AC_SYMBOLS)
+    samplings = [(sh << 4) | sv] + [0x11] * (ncomp - 1)
+    out = b"\xff\xd8" + _seg(0xDB, bytes([0x00]) + bytes(qt))
+    out += _seg(0xC9 if arith else 0xC0, bytes([8])
+                + struct.pack(">HH", h, w) + bytes([ncomp])
+                + b"".join(bytes([c + 1, samplings[c], 0])
+                           for c in range(ncomp)))
+    out += tables
+    if restart_interval:
+        out += _seg(0xDD, struct.pack(">H", restart_interval))
+    out += _seg(0xDA, bytes([ncomp])
+                + b"".join(bytes([c + 1, 0x11 * a if arith else 0x00])
+                           for c, a in enumerate(areas))
+                + bytes([0, 63, 0]))
+    return out + entropy + b"\xff\xd9"
 
 
 # Progressive AC scans need EOBn symbols ((r<<4)|0 for r>0), which Annex
@@ -1082,14 +1157,6 @@ def encode_jpeg_gray(w: int, h: int, pixels: bytes,
 # canonical Huffman, terrible compression, perfect for fixtures.
 _PROG_AC_SYMBOLS = bytes((r << 4) | s for r in range(16) for s in range(11))
 _PROG_AC_COUNTS = bytes([0] * 8 + [len(_PROG_AC_SYMBOLS)] + [0] * 7)
-
-
-def _quantized_blocks(plane: bytes, w: int, h: int,
-                      qt: list[int]) -> list[list[int]]:
-    """Row-major blocks of zigzag-ordered quantized coefficients — the
-    shared input for the progressive scan encoders."""
-    return _quantized_blocks_grid(plane, w, h, qt,
-                                  (w + 7) // 8, (h + 7) // 8)
 
 
 class _EobRun:
@@ -1215,22 +1282,20 @@ def encode_jpeg_progressive_gray(w: int, h: int, pixels: bytes,
     if len(pixels) != w * h:
         raise ValueError("pixel buffer does not match dims")
     qt = [quant] * 64
-    blocks = _quantized_blocks(pixels, w, h, qt)
+    blocks = _quantized_blocks_grid(pixels, w, h, qt,
+                                    (w + 7) // 8, (h + 7) // 8)
     dc_codes = _encode_codes(_DC_COUNTS, _DC_SYMBOLS)
     ac_codes = _encode_codes(_PROG_AC_COUNTS, _PROG_AC_SYMBOLS)
 
-    def seg(marker: int, body: bytes) -> bytes:
-        return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
-
     def sos(ss: int, se: int, ah: int, al: int, data: bytearray) -> bytes:
-        return seg(0xDA, bytes([1, 1, 0x00, ss, se, (ah << 4) | al])) \
+        return _seg(0xDA, bytes([1, 1, 0x00, ss, se, (ah << 4) | al])) \
             + bytes(data)
 
-    out = b"\xff\xd8" + seg(0xDB, bytes([0x00]) + bytes(qt))
-    out += seg(0xC2, bytes([8]) + struct.pack(">HH", h, w)
+    out = b"\xff\xd8" + _seg(0xDB, bytes([0x00]) + bytes(qt))
+    out += _seg(0xC2, bytes([8]) + struct.pack(">HH", h, w)
                + bytes([1, 1, 0x11, 0]))
-    out += seg(0xC4, bytes([0x00]) + _DC_COUNTS + _DC_SYMBOLS) \
-        + seg(0xC4, bytes([0x10]) + _PROG_AC_COUNTS + _PROG_AC_SYMBOLS)
+    out += _seg(0xC4, bytes([0x00]) + _DC_COUNTS + _DC_SYMBOLS) \
+        + _seg(0xC4, bytes([0x10]) + _PROG_AC_COUNTS + _PROG_AC_SYMBOLS)
 
     # 1: DC first, Al=1 (arithmetic shift: floor semantics match the
     # decoder's pred << 1 + refinement-bit reconstruction exactly)
@@ -1238,13 +1303,8 @@ def encode_jpeg_progressive_gray(w: int, h: int, pixels: bytes,
     pred = 0
     for q in blocks:
         v = q[0] >> 1
-        diff = v - pred
+        _write_diff(wtr, dc_codes, v - pred)
         pred = v
-        size = _size_of(diff)
-        code, ln = dc_codes[size]
-        wtr.write(code, ln)
-        if size:
-            wtr.write(diff if diff > 0 else diff + (1 << size) - 1, size)
     wtr.flush()
     out += sos(0, 0, 0, 1, wtr.out)
     # 2-3: AC first scans at Al=1
@@ -1270,16 +1330,12 @@ def encode_jpeg_progressive_gray(w: int, h: int, pixels: bytes,
 
 def _quantized_blocks_grid(plane: bytes, cw: int, ch: int, qt: list[int],
                            bw: int, bh: int) -> list[list[int]]:
-    """Like _quantized_blocks but over an explicit (bw × bh) block grid —
-    interleaved scans also code the MCU padding blocks beyond ceil dims
-    (edge-replicated, exactly like the baseline encoder emits them)."""
-    out = []
-    for by in range(bh):
-        for bx in range(bw):
-            coef = fdct2d(_block_at(plane, cw, ch, bx, by))
-            out.append([int(round(coef[ZIGZAG[k]] / qt[k]))
-                        for k in range(64)])
-    return out
+    """Row-major quantized blocks over a (bw × bh) block grid — the input
+    of the progressive scan encoders. Interleaved scans also code the MCU
+    padding blocks beyond ceil dims (edge-replicated, exactly like the
+    sequential encoder emits them)."""
+    return [_quantize_block(plane, cw, ch, bx, by, qt)
+            for by in range(bh) for bx in range(bw)]
 
 
 def encode_jpeg_progressive_ycbcr_sub(w: int, h: int, y: bytes, cb: bytes,
@@ -1290,7 +1346,7 @@ def encode_jpeg_progressive_ycbcr_sub(w: int, h: int, y: bytes, cb: bytes,
     predictors) followed by per-component AC band scans with successive
     approximation, then DC/AC refinement — the full real-world progressive
     layout. Same lossless-re-coding property as the gray encoder:
-    decode(progressive) == decode(encode_jpeg_ycbcr_sub) for every input
+    decode(progressive) == decode(encode_jpeg_sequential) for every input
     (identical quantized coefficients, different scan arrangement)."""
     if sh not in (1, 2) or sv not in (1, 2):
         raise ValueError("sampling factors must be 1 or 2")
@@ -1315,16 +1371,13 @@ def encode_jpeg_progressive_ycbcr_sub(w: int, h: int, y: bytes, cb: bytes,
     dc_codes = _encode_codes(_DC_COUNTS, _DC_SYMBOLS)
     ac_codes = _encode_codes(_PROG_AC_COUNTS, _PROG_AC_SYMBOLS)
 
-    def seg(marker: int, body: bytes) -> bytes:
-        return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
-
-    out = b"\xff\xd8" + seg(0xDB, bytes([0x00]) + bytes(qt))
+    out = b"\xff\xd8" + _seg(0xDB, bytes([0x00]) + bytes(qt))
     sof_comps = bytes([1, (sh << 4) | sv, 0]) + bytes([2, 0x11, 0]) \
         + bytes([3, 0x11, 0])
-    out += seg(0xC2, bytes([8]) + struct.pack(">HH", h, w) + bytes([3])
+    out += _seg(0xC2, bytes([8]) + struct.pack(">HH", h, w) + bytes([3])
                + sof_comps)
-    out += seg(0xC4, bytes([0x00]) + _DC_COUNTS + _DC_SYMBOLS) \
-        + seg(0xC4, bytes([0x10]) + _PROG_AC_COUNTS + _PROG_AC_SYMBOLS)
+    out += _seg(0xC4, bytes([0x00]) + _DC_COUNTS + _DC_SYMBOLS) \
+        + _seg(0xC4, bytes([0x10]) + _PROG_AC_COUNTS + _PROG_AC_SYMBOLS)
 
     def mcu_blocks():
         """(comp_idx, block_idx) in interleaved MCU order."""
@@ -1341,15 +1394,10 @@ def encode_jpeg_progressive_ycbcr_sub(w: int, h: int, y: bytes, cb: bytes,
     preds = [0, 0, 0]
     for ci, idx in mcu_blocks():
         v = grids[ci]["blocks"][idx][0] >> 1
-        diff = v - preds[ci]
+        _write_diff(wtr, dc_codes, v - preds[ci])
         preds[ci] = v
-        size = _size_of(diff)
-        code, ln = dc_codes[size]
-        wtr.write(code, ln)
-        if size:
-            wtr.write(diff if diff > 0 else diff + (1 << size) - 1, size)
     wtr.flush()
-    out += seg(0xDA, bytes([3, 1, 0x00, 2, 0x00, 3, 0x00, 0, 0, 0x01])) \
+    out += _seg(0xDA, bytes([3, 1, 0x00, 2, 0x00, 3, 0x00, 0, 0, 0x01])) \
         + bytes(wtr.out)
 
     def visible_blocks(g):
@@ -1362,90 +1410,21 @@ def encode_jpeg_progressive_ycbcr_sub(w: int, h: int, y: bytes, cb: bytes,
         wtr = _BitWriter()
         _encode_ac_first(wtr, ac_codes, visible_blocks(g), 1, 63, 1)
         wtr.flush()
-        out += seg(0xDA, bytes([1, cid, 0x00, 1, 63, 0x01])) + bytes(wtr.out)
+        out += _seg(0xDA, bytes([1, cid, 0x00, 1, 63, 0x01])) + bytes(wtr.out)
     # 8: interleaved DC refine (raw bits)
     wtr = _BitWriter()
     for ci, idx in mcu_blocks():
         wtr.write(grids[ci]["blocks"][idx][0] & 1, 1)
     wtr.flush()
-    out += seg(0xDA, bytes([3, 1, 0x00, 2, 0x00, 3, 0x00, 0, 0, 0x10])) \
+    out += _seg(0xDA, bytes([3, 1, 0x00, 2, 0x00, 3, 0x00, 0, 0, 0x10])) \
         + bytes(wtr.out)
     # 9-11: per-component AC refinement (Ah=1 → Al=0)
     for cid, g in ((1, grids[0]), (2, grids[1]), (3, grids[2])):
         wtr = _BitWriter()
         _encode_ac_refine(wtr, ac_codes, visible_blocks(g), 1, 63, 0)
         wtr.flush()
-        out += seg(0xDA, bytes([1, cid, 0x00, 1, 63, 0x10])) + bytes(wtr.out)
+        out += _seg(0xDA, bytes([1, cid, 0x00, 1, 63, 0x10])) + bytes(wtr.out)
     return out + b"\xff\xd9"
-
-
-def encode_jpeg_ycbcr(w: int, h: int, y: bytes, cb: bytes, cr: bytes,
-                      quant: int = 16) -> bytes:
-    """A real baseline COLOR JPEG (3 components, 4:4:4, interleaved MCUs,
-    per-component DC predictors, shared flat quant + Annex K tables).
-    Takes the Y/Cb/Cr planes directly — fixtures choose plane values, so
-    the blockwise-constant-even exactness property applies per plane and
-    the decoder's BT.601 output is analytically predictable."""
-    if len(y) != w * h or len(cb) != w * h or len(cr) != w * h:
-        raise ValueError("plane buffers do not match dims")
-    qt = [quant] * 64
-    dc_codes = _encode_codes(_DC_COUNTS, _DC_SYMBOLS)
-    ac_codes = _encode_codes(_AC_COUNTS, _AC_SYMBOLS)
-    writer = _BitWriter()
-    preds = [0, 0, 0]
-    for by in range((h + 7) // 8):
-        for bx in range((w + 7) // 8):
-            for ci, plane in enumerate((y, cb, cr)):
-                preds[ci] = _encode_block(
-                    writer, _block_at(plane, w, h, bx, by),
-                    preds[ci], qt, dc_codes, ac_codes)
-    writer.flush()
-    return _jpeg_file(w, h, qt, 3, bytes(writer.out))
-
-
-def encode_jpeg_ycbcr_sub(w: int, h: int, y: bytes, cb: bytes, cr: bytes,
-                          sh: int = 2, sv: int = 2,
-                          quant: int = 16,
-                          restart_interval: int = 0) -> bytes:
-    """A real CHROMA-SUBSAMPLED baseline color JPEG: luma sampling
-    (sh, sv) ∈ {1,2}², chroma (1,1) — sh=sv=2 is 4:2:0 (the format most
-    real-world JPEGs use), sh=2/sv=1 is 4:2:2. ``y`` is the full w×h luma
-    plane; ``cb``/``cr`` are the PRE-SUBSAMPLED chroma planes at
-    ceil(w/sh) × ceil(h/sv) — fixtures pick the plane values directly, so
-    the blockwise-constant-even exactness property holds per plane and the
-    decoder's replicated-upsample + BT.601 output stays closed-form."""
-    if sh not in (1, 2) or sv not in (1, 2):
-        raise ValueError("sampling factors must be 1 or 2")
-    cw, ch = (w + sh - 1) // sh, (h + sv - 1) // sv
-    if len(y) != w * h or len(cb) != cw * ch or len(cr) != cw * ch:
-        raise ValueError("plane buffers do not match dims")
-    qt = [quant] * 64
-    dc_codes = _encode_codes(_DC_COUNTS, _DC_SYMBOLS)
-    ac_codes = _encode_codes(_AC_COUNTS, _AC_SYMBOLS)
-    writer = _BitWriter()
-    preds = [0, 0, 0]
-    mcu_no = 0
-    for my in range((h + 8 * sv - 1) // (8 * sv)):
-        for mx in range((w + 8 * sh - 1) // (8 * sh)):
-            if restart_interval and mcu_no \
-                    and mcu_no % restart_interval == 0:
-                writer.emit_rst((mcu_no // restart_interval - 1) % 8)
-                preds = [0, 0, 0]
-            mcu_no += 1
-            for bi in range(sv):                    # luma: sv×sh blocks
-                for bj in range(sh):
-                    preds[0] = _encode_block(
-                        writer,
-                        _block_at(y, w, h, mx * sh + bj, my * sv + bi),
-                        preds[0], qt, dc_codes, ac_codes)
-            for ci, plane in ((1, cb), (2, cr)):    # chroma: one block each
-                preds[ci] = _encode_block(
-                    writer, _block_at(plane, cw, ch, mx, my),
-                    preds[ci], qt, dc_codes, ac_codes)
-    writer.flush()
-    return _jpeg_file(w, h, qt, 3, bytes(writer.out),
-                      samplings=[(sh << 4) | sv, 0x11, 0x11],
-                      restart_interval=restart_interval)
 
 
 def encode_jpeg_lossless(w: int, h: int, planes: list[bytes],
@@ -1475,146 +1454,15 @@ def encode_jpeg_lossless(w: int, h: int, planes: list[bytes],
             for ci, plane in enumerate(shifted):
                 px = _px_predict(recon[ci], w, xx, yy, predictor, default)
                 diff = plane[row + xx] - px
-                size = _size_of(diff)
-                code, ln = dc_codes[size]
-                writer.write(code, ln)
-                if size:
-                    writer.write(diff if diff > 0
-                                 else diff + (1 << size) - 1, size)
+                _write_diff(writer, dc_codes, diff)
                 recon[ci][row + xx] = (px + diff) & 0xFF
     writer.flush()
 
-    def seg(marker: int, body: bytes) -> bytes:
-        return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
-
     ncomp = len(planes)
-    out = b"\xff\xd8" + seg(0xC4, bytes([0x00]) + _DC_COUNTS + _DC_SYMBOLS)
-    out += seg(0xC3, bytes([8]) + struct.pack(">HH", h, w) + bytes([ncomp])
+    out = b"\xff\xd8" + _seg(0xC4, bytes([0x00]) + _DC_COUNTS + _DC_SYMBOLS)
+    out += _seg(0xC3, bytes([8]) + struct.pack(">HH", h, w) + bytes([ncomp])
                + b"".join(bytes([c + 1, 0x11, 0]) for c in range(ncomp)))
-    out += seg(0xDA, bytes([ncomp])
+    out += _seg(0xDA, bytes([ncomp])
                + b"".join(bytes([c + 1, 0x00]) for c in range(ncomp))
                + bytes([predictor, 0, pt]))
     return out + bytes(writer.out) + b"\xff\xd9"
-
-
-# -- encoder (fixture/test side): SEQUENTIAL ARITHMETIC (SOF9) ---------------
-
-def _arith_file(w: int, h: int, qt: list[int], ncomp: int,
-                entropy: bytes,
-                samplings: list[int] | None = None,
-                restart_interval: int = 0,
-                dc_cond: tuple[int, int] = (0, 1),
-                kx: int = 5,
-                tables: list[int] | None = None) -> bytes:
-    """Assemble a SOF9 file: DQT + SOF9 + DAC (only when the
-    conditioning is non-default — defaults L=0/U=1/Kx=5 need no DAC
-    segment, F.1.4.4.1.4) + optional DRI + single interleaved SOS."""
-    def seg(marker: int, body: bytes) -> bytes:
-        return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
-
-    samplings = samplings or [0x11] * ncomp
-    out = b"\xff\xd8" + seg(0xDB, bytes([0x00]) + bytes(qt))
-    out += seg(0xC9, bytes([8]) + struct.pack(">HH", h, w) + bytes([ncomp])
-               + b"".join(bytes([c + 1, samplings[c], 0])
-                          for c in range(ncomp)))
-    dac = b""
-    if dc_cond != (0, 1):
-        dac += bytes([0x00, (dc_cond[1] << 4) | dc_cond[0]])
-    if kx != 5:
-        dac += bytes([0x10, kx])
-    if dac:
-        out += seg(0xCC, dac)
-    if restart_interval:
-        out += seg(0xDD, struct.pack(">H", restart_interval))
-    tables = tables or [0x00] * ncomp
-    out += seg(0xDA, bytes([ncomp])
-               + b"".join(bytes([c + 1, tables[c]]) for c in range(ncomp))
-               + bytes([0, 63, 0]))
-    return out + entropy + b"\xff\xd9"
-
-
-def _quantize_block(plane: bytes, w: int, h: int, bx: int, by: int,
-                    qt: list[int]) -> list[int]:
-    """FDCT + quantize one centered block to zigzag-ordered ints — the
-    IDENTICAL quantization _encode_block performs, which is what makes
-    decode(arith) == decode(baseline) for the same pixels exact."""
-    coef = fdct2d(_block_at(plane, w, h, bx, by))
-    return [int(round(coef[ZIGZAG[k]] / qt[k])) for k in range(64)]
-
-
-def encode_jpeg_arith_gray(w: int, h: int, pixels: bytes,
-                           quant: int = 16, restart_interval: int = 0,
-                           dc_cond: tuple[int, int] = (0, 1),
-                           kx: int = 5) -> bytes:
-    """A real ARITHMETIC-CODED grayscale JPEG (SOF9): the same FDCT +
-    flat quantization as encode_jpeg_gray, entropy-coded with the T.81
-    Annex F adaptive binary arithmetic coder instead of Huffman codes.
-    Same quantized coefficients => decodes to the exact pixels the
-    baseline twin decodes to. ``dc_cond``/``kx`` set DAC conditioning
-    (emitted only when non-default)."""
-    from docext_spark.core.jpegarith import ArithScanEncoder
-    if len(pixels) != w * h:
-        raise ValueError("pixel buffer does not match dims")
-    qt = [quant] * 64
-    enc = ArithScanEncoder([{"dc": 0, "ac": 0}], {0: dc_cond}, {0: kx})
-    mcu_no = 0
-    for by in range((h + 7) // 8):
-        for bx in range((w + 7) // 8):
-            if restart_interval and mcu_no \
-                    and mcu_no % restart_interval == 0:
-                enc.restart((mcu_no // restart_interval - 1) % 8)
-            mcu_no += 1
-            enc.encode_block(0, _quantize_block(pixels, w, h, bx, by, qt))
-    return _arith_file(w, h, qt, 1, enc.finish(),
-                       restart_interval=restart_interval,
-                       dc_cond=dc_cond, kx=kx)
-
-
-def encode_jpeg_arith_ycbcr(w: int, h: int, y: bytes, cb: bytes, cr: bytes,
-                            quant: int = 16) -> bytes:
-    """ARITHMETIC-CODED color JPEG (SOF9, 4:4:4 interleaved): the
-    arithmetic twin of encode_jpeg_ycbcr — identical quantized planes,
-    component 0 on DC/AC statistics areas 0 and the chroma components
-    sharing areas 1 (the two-table layout real encoders use)."""
-    from docext_spark.core.jpegarith import ArithScanEncoder
-    if len(y) != w * h or len(cb) != w * h or len(cr) != w * h:
-        raise ValueError("plane buffers do not match dims")
-    qt = [quant] * 64
-    comps = [{"dc": 0, "ac": 0}, {"dc": 1, "ac": 1}, {"dc": 1, "ac": 1}]
-    enc = ArithScanEncoder(comps, {0: (0, 1), 1: (0, 1)}, {0: 5, 1: 5})
-    for by in range((h + 7) // 8):
-        for bx in range((w + 7) // 8):
-            for ci, plane in enumerate((y, cb, cr)):
-                enc.encode_block(ci, _quantize_block(plane, w, h,
-                                                     bx, by, qt))
-    return _arith_file(w, h, qt, 3, enc.finish(),
-                       tables=[0x00, 0x11, 0x11])
-
-
-def encode_jpeg_arith_ycbcr_sub(w: int, h: int, y: bytes, cb: bytes,
-                                cr: bytes, sh: int = 2, sv: int = 2,
-                                quant: int = 16) -> bytes:
-    """ARITHMETIC-CODED chroma-subsampled color JPEG: the SOF9 twin of
-    encode_jpeg_ycbcr_sub (same pre-subsampled chroma plane contract,
-    same MCU block order: sv×sh luma blocks then one block per chroma)."""
-    from docext_spark.core.jpegarith import ArithScanEncoder
-    if sh not in (1, 2) or sv not in (1, 2):
-        raise ValueError("sampling factors must be 1 or 2")
-    cw, ch = (w + sh - 1) // sh, (h + sv - 1) // sv
-    if len(y) != w * h or len(cb) != cw * ch or len(cr) != cw * ch:
-        raise ValueError("plane buffers do not match dims")
-    qt = [quant] * 64
-    comps = [{"dc": 0, "ac": 0}, {"dc": 1, "ac": 1}, {"dc": 1, "ac": 1}]
-    enc = ArithScanEncoder(comps, {0: (0, 1), 1: (0, 1)}, {0: 5, 1: 5})
-    for my in range((h + 8 * sv - 1) // (8 * sv)):
-        for mx in range((w + 8 * sh - 1) // (8 * sh)):
-            for bi in range(sv):
-                for bj in range(sh):
-                    enc.encode_block(0, _quantize_block(
-                        y, w, h, mx * sh + bj, my * sv + bi, qt))
-            for ci, plane in ((1, cb), (2, cr)):
-                enc.encode_block(ci, _quantize_block(plane, cw, ch,
-                                                     mx, my, qt))
-    return _arith_file(w, h, qt, 3, enc.finish(),
-                       samplings=[(sh << 4) | sv, 0x11, 0x11],
-                       tables=[0x00, 0x11, 0x11])

@@ -413,10 +413,8 @@ def encode_tiff_jpeg(width: int, height: int, channels: int,
     rps = rows_per_strip or height
 
     def enc(buf, cw, ch_):
-        if channels == 1:
-            return jpegpix.encode_jpeg_gray(cw, ch_, bytes(buf))
-        return jpegpix.encode_jpeg_ycbcr(
-            cw, ch_, bytes(buf[0::3]), bytes(buf[1::3]), bytes(buf[2::3]))
+        return jpegpix.encode_jpeg_sequential(
+            cw, ch_, [bytes(buf[c::channels]) for c in range(channels)])
 
     chunks = []
     if tile_size:

@@ -61,28 +61,31 @@ def _jpeg_cases(seed, ncomp, sub):
 JPEG_GROUPS = {
     "jpeg_gray": (1, 1, False,
                   lambda w, h, p, sh, sv, q, ri, dc, kx:
-                  J.encode_jpeg_gray(w, h, p[0], quant=q,
-                                     restart_interval=ri)),
+                  J.encode_jpeg_sequential(w, h, p, quant=q,
+                                           restart_interval=ri)),
     "jpeg_ycbcr": (2, 3, False,
                    lambda w, h, p, sh, sv, q, ri, dc, kx:
-                   J.encode_jpeg_ycbcr(w, h, *p, quant=q)),
+                   J.encode_jpeg_sequential(w, h, p, quant=q)),
     "jpeg_ycbcr_sub": (3, 3, True,
                        lambda w, h, p, sh, sv, q, ri, dc, kx:
-                       J.encode_jpeg_ycbcr_sub(w, h, *p, sh=sh, sv=sv,
-                                               quant=q,
-                                               restart_interval=ri)),
+                       J.encode_jpeg_sequential(w, h, p, sh=sh, sv=sv,
+                                                quant=q,
+                                                restart_interval=ri)),
     "jpeg_arith_gray": (4, 1, False,
                         lambda w, h, p, sh, sv, q, ri, dc, kx:
-                        J.encode_jpeg_arith_gray(w, h, p[0], quant=q,
+                        J.encode_jpeg_sequential(w, h, p, quant=q,
                                                  restart_interval=ri,
+                                                 arith=True,
                                                  dc_cond=dc, kx=kx)),
     "jpeg_arith_ycbcr": (5, 3, False,
                          lambda w, h, p, sh, sv, q, ri, dc, kx:
-                         J.encode_jpeg_arith_ycbcr(w, h, *p, quant=q)),
+                         J.encode_jpeg_sequential(w, h, p, quant=q,
+                                                  arith=True)),
     "jpeg_arith_ycbcr_sub": (6, 3, True,
                              lambda w, h, p, sh, sv, q, ri, dc, kx:
-                             J.encode_jpeg_arith_ycbcr_sub(
-                                 w, h, *p, sh=sh, sv=sv, quant=q)),
+                             J.encode_jpeg_sequential(
+                                 w, h, p, sh=sh, sv=sv, quant=q,
+                                 arith=True)),
 }
 
 EXPECTED = {

@@ -201,7 +201,7 @@ def test_jpeg_blockconst_roundtrip_exact(bw, bh, seed):
     w, h = bw * 8, bh * 8
     px = bytes(((((x // 8) * 3 + (y // 8) * 5 + seed) % 128) * 2)
                for y in range(h) for x in range(w))
-    assert jpegpix.decode_jpeg(jpegpix.encode_jpeg_gray(w, h, px)) \
+    assert jpegpix.decode_jpeg(jpegpix.encode_jpeg_sequential(w, h, [px])) \
         == (w, h, 1, px)
 
 
@@ -231,7 +231,7 @@ def test_jpeg_subsampled_blockconst_roundtrip_exact(bw, bh, seed, samp):
     cr = bytes((((yy // 8) * 11 + seed) % 128) * 2
                for yy in range(ch) for x in range(cw))
     dec = jpegpix.decode_jpeg(
-        jpegpix.encode_jpeg_ycbcr_sub(w, h, y, cb, cr, sh, sv))
+        jpegpix.encode_jpeg_sequential(w, h, [y, cb, cr], sh=sh, sv=sv))
     assert dec is not None and dec[:3] == (w, h, 3)
     import math
     rgb = dec[3]

@@ -98,10 +98,10 @@ def test_cross_coder_gray():
         px = bytes(rng.randrange(256) for _ in range(w * h))
         quant = rng.choice([1, 2, 16])
         ri = rng.choice([0, 0, 1, 3])
-        base = J.decode_jpeg(J.encode_jpeg_gray(
-            w, h, px, quant=quant, restart_interval=ri))
-        ar = J.decode_jpeg(J.encode_jpeg_arith_gray(
-            w, h, px, quant=quant, restart_interval=ri,
+        base = J.decode_jpeg(J.encode_jpeg_sequential(
+            w, h, [px], quant=quant, restart_interval=ri))
+        ar = J.decode_jpeg(J.encode_jpeg_sequential(
+            w, h, [px], quant=quant, restart_interval=ri, arith=True,
             dc_cond=rng.choice([(0, 1), (0, 2), (1, 3)]),
             kx=rng.choice([5, 1, 63])))
         assert base is not None and base == ar, (trial, w, h, quant, ri)
@@ -113,8 +113,8 @@ def test_cross_coder_color_and_subsampled():
         w, h = rng.randint(1, 25), rng.randint(1, 25)
         pl = [bytes(rng.randrange(256) for _ in range(w * h))
               for _ in range(3)]
-        base = J.decode_jpeg(J.encode_jpeg_ycbcr(w, h, *pl))
-        ar = J.decode_jpeg(J.encode_jpeg_arith_ycbcr(w, h, *pl))
+        base = J.decode_jpeg(J.encode_jpeg_sequential(w, h, pl))
+        ar = J.decode_jpeg(J.encode_jpeg_sequential(w, h, pl, arith=True))
         assert base is not None and base == ar, trial
     for trial in range(15):
         sh, sv = rng.choice([(2, 2), (2, 1), (1, 2)])
@@ -123,22 +123,44 @@ def test_cross_coder_color_and_subsampled():
         y = bytes(rng.randrange(256) for _ in range(w * h))
         cb = bytes(rng.randrange(256) for _ in range(cw * ch))
         cr = bytes(rng.randrange(256) for _ in range(cw * ch))
-        base = J.decode_jpeg(J.encode_jpeg_ycbcr_sub(
-            w, h, y, cb, cr, sh=sh, sv=sv))
-        ar = J.decode_jpeg(J.encode_jpeg_arith_ycbcr_sub(
-            w, h, y, cb, cr, sh=sh, sv=sv))
+        base = J.decode_jpeg(J.encode_jpeg_sequential(
+            w, h, [y, cb, cr], sh=sh, sv=sv))
+        ar = J.decode_jpeg(J.encode_jpeg_sequential(
+            w, h, [y, cb, cr], sh=sh, sv=sv, arith=True))
         assert base is not None and base == ar, (trial, sh, sv)
+
+
+def test_cross_coder_color_restart_and_dac():
+    """Colour SOF9 with restart intervals and non-default DAC
+    conditioning on both statistics areas decodes like its SOF0 twin."""
+    rng = random.Random(44)
+    for trial in range(12):
+        sh, sv = rng.choice([(1, 1), (2, 1), (1, 2), (2, 2)])
+        w, h = rng.randint(1, 25), rng.randint(1, 25)
+        cw, ch = (w + sh - 1) // sh, (h + sv - 1) // sv
+        pl = [bytes(rng.randrange(256) for _ in range(w * h))] + [
+            bytes(rng.randrange(256) for _ in range(cw * ch))
+            for _ in range(2)]
+        ri = rng.choice([1, 2, 3])
+        base = J.decode_jpeg(J.encode_jpeg_sequential(
+            w, h, pl, sh=sh, sv=sv, quant=4, restart_interval=ri))
+        ar = J.decode_jpeg(J.encode_jpeg_sequential(
+            w, h, pl, sh=sh, sv=sv, quant=4, restart_interval=ri,
+            arith=True, dc_cond=rng.choice([(0, 2), (1, 3)]),
+            kx=rng.choice([2, 9])))
+        assert base is not None and base == ar, (trial, sh, sv, ri)
 
 
 def test_dac_conditioning_changes_stream_not_pixels():
     """Non-default DAC L/U/Kx re-bins the statistics (different
     compressed bytes) but decodes to the same image."""
     px = bytes(((x * 7 + y * 13) % 251) for y in range(24) for x in range(24))
-    ref = J.decode_jpeg(J.encode_jpeg_arith_gray(24, 24, px, quant=2))
+    ref = J.decode_jpeg(J.encode_jpeg_sequential(24, 24, [px], quant=2,
+                                                 arith=True))
     streams = set()
     for dc_cond, kx in [((0, 1), 5), ((0, 2), 5), ((1, 3), 2),
                         ((0, 0), 63)]:
-        f = J.encode_jpeg_arith_gray(24, 24, px, quant=2,
+        f = J.encode_jpeg_sequential(24, 24, [px], quant=2, arith=True,
                                      dc_cond=dc_cond, kx=kx)
         assert J.decode_jpeg(f) == ref
         streams.add(f)
@@ -151,7 +173,7 @@ def test_arith_defensive():
     walk)."""
     rng = random.Random(5)
     px = bytes(rng.randrange(256) for _ in range(16 * 16))
-    good = J.encode_jpeg_arith_gray(16, 16, px, quant=2)
+    good = J.encode_jpeg_sequential(16, 16, [px], quant=2, arith=True)
     for cut in range(0, len(good), 2):
         r = J.decode_jpeg(good[:cut])
         assert r is None or isinstance(r, tuple)
@@ -171,6 +193,6 @@ def test_arith_compresses():
     """Sanity: on a smooth image the adaptive coder beats the Annex K
     Huffman stream (the reason SOF9 exists)."""
     px = bytes(((x + y) // 4 * 8) % 256 for y in range(64) for x in range(64))
-    hf = J.encode_jpeg_gray(64, 64, px, quant=2)
-    ar = J.encode_jpeg_arith_gray(64, 64, px, quant=2)
+    hf = J.encode_jpeg_sequential(64, 64, [px], quant=2)
+    ar = J.encode_jpeg_sequential(64, 64, [px], quant=2, arith=True)
     assert len(ar) < len(hf)

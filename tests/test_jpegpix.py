@@ -21,13 +21,13 @@ def test_blockwise_constant_even_exact_roundtrip(w, h):
     bit-exactly (only DC survives and it is divisible by 16) — through a
     REAL entropy-coded stream (Huffman, byte stuffing, DC prediction)."""
     px = _block_image(w, h, seed=w + h)
-    assert jpegpix.decode_jpeg(jpegpix.encode_jpeg_gray(w, h, px)) \
+    assert jpegpix.decode_jpeg(jpegpix.encode_jpeg_sequential(w, h, [px])) \
         == (w, h, 1, px)
 
 
 def test_gradient_bounded_error():
     px = bytes(min(255, x * 7 + y * 2) for y in range(16) for x in range(16))
-    dec = jpegpix.decode_jpeg(jpegpix.encode_jpeg_gray(16, 16, px))
+    dec = jpegpix.decode_jpeg(jpegpix.encode_jpeg_sequential(16, 16, [px]))
     assert dec is not None and dec[:3] == (16, 16, 1)
     assert max(abs(a - b) for a, b in zip(dec[3], px)) <= 16
 
@@ -37,7 +37,7 @@ def test_checkerboard_exercises_ac_coefficients():
     run/size + ZRL + EOB coding — the paths a DC-only image never hits."""
     px = bytes(200 if (x + y) % 2 == 0 else 40
                for y in range(8) for x in range(8))
-    dec = jpegpix.decode_jpeg(jpegpix.encode_jpeg_gray(8, 8, px))
+    dec = jpegpix.decode_jpeg(jpegpix.encode_jpeg_sequential(8, 8, [px]))
     assert dec is not None
     # lossy but structure-preserving: every decoded pixel lands on the
     # correct side of the midline
@@ -68,7 +68,7 @@ def test_idct_matches_reference_formula():
 
 def test_defensive_never_raises():
     px = _block_image(24, 16)
-    good = jpegpix.encode_jpeg_gray(24, 16, px)
+    good = jpegpix.encode_jpeg_sequential(24, 16, [px])
     assert jpegpix.decode_jpeg(None) is None
     assert jpegpix.decode_jpeg(b"") is None
     assert jpegpix.decode_jpeg(b"\xff\xd8 junk") is None
@@ -93,7 +93,7 @@ def test_resample_operator_decodes_jpeg(spark):
     from docext_spark.operators.multimodal import (extract_features,
                                                    resample_images)
     px = _block_image(24, 16, seed=5)
-    payload = jpegpix.encode_jpeg_gray(24, 16, px)
+    payload = jpegpix.encode_jpeg_sequential(24, 16, [px])
     media = spark.createDataFrame(
         pd.DataFrame([(0, "image", payload)],
                      columns=["media_id", "kind", "payload"]),
@@ -117,7 +117,7 @@ def test_decode_bomb_guard():
     buffer or driving millions of IDCT calls."""
     import struct
     px = _block_image(8, 8)
-    good = jpegpix.encode_jpeg_gray(8, 8, px)
+    good = jpegpix.encode_jpeg_sequential(8, 8, [px])
     # patch the SOF0 height/width words (marker FF C0, dims at offset +5)
     i = good.index(b"\xff\xc0")
     bomb = (good[:i + 5] + struct.pack(">HH", 60000, 60000) + good[i + 9:])
@@ -143,7 +143,8 @@ def test_color_blockconst_exact_and_bt601():
     import math
     w, h = 24, 16
     y, cb, cr = _planes(w, h, seed=4)
-    dec = jpegpix.decode_jpeg(jpegpix.encode_jpeg_ycbcr(w, h, y, cb, cr))
+    dec = jpegpix.decode_jpeg(jpegpix.encode_jpeg_sequential(w, h,
+                                                             [y, cb, cr]))
     assert dec is not None and dec[:3] == (w, h, 3)
     rgb = dec[3]
     for i in range(w * h):
@@ -162,15 +163,15 @@ def test_color_gray_identity():
     y = bytes(((x // 8 + (yy // 8) * 2) % 128) * 2
               for yy in range(h) for x in range(w))
     neutral = bytes([128]) * (w * h)
-    dec = jpegpix.decode_jpeg(jpegpix.encode_jpeg_ycbcr(w, h, y, neutral,
-                                                        neutral))
+    dec = jpegpix.decode_jpeg(jpegpix.encode_jpeg_sequential(
+        w, h, [y, neutral, neutral]))
     assert all(dec[3][i * 3] == dec[3][i * 3 + 1] == dec[3][i * 3 + 2]
                == y[i] for i in range(w * h))
 
 
 def test_color_truncation_robustness():
     w, h = 16, 16
-    b = jpegpix.encode_jpeg_ycbcr(w, h, *_planes(w, h, seed=1))
+    b = jpegpix.encode_jpeg_sequential(w, h, _planes(w, h, seed=1))
     for cut in range(0, len(b), 9):
         r = jpegpix.decode_jpeg(b[:cut])
         assert r is None or isinstance(r, tuple)
@@ -195,7 +196,7 @@ def test_subsampled_420_blockconst_exact():
     w, h = 24, 16
     y, cb, cr, cw, ch = _sub_planes(w, h, 2, seed=5)
     dec = jpegpix.decode_jpeg(
-        jpegpix.encode_jpeg_ycbcr_sub(w, h, y, cb, cr, 2, 2))
+        jpegpix.encode_jpeg_sequential(w, h, [y, cb, cr], sh=2, sv=2))
     assert dec is not None and dec[:3] == (w, h, 3)
     rgb = dec[3]
     for i in range(w * h):
@@ -219,7 +220,7 @@ def test_subsampled_422_odd_dims_exact():
     cb = bytes([128]) * (cw * ch)
     cr = bytes([128]) * (cw * ch)
     dec = jpegpix.decode_jpeg(
-        jpegpix.encode_jpeg_ycbcr_sub(w, h, y, cb, cr, 2, 1))
+        jpegpix.encode_jpeg_sequential(w, h, [y, cb, cr], sh=2, sv=1))
     assert dec is not None and dec[:3] == (w, h, 3)
     assert all(v == 88 for v in dec[3])
 
@@ -230,17 +231,17 @@ def test_subsampled_equals_444_when_neutral_chroma():
     w, h = 16, 16
     y = bytes((((x // 8) + (yy // 8) * 2) % 128) * 2
               for yy in range(h) for x in range(w))
-    full = jpegpix.decode_jpeg(jpegpix.encode_jpeg_ycbcr(
-        w, h, y, bytes([128]) * (w * h), bytes([128]) * (w * h)))
-    sub = jpegpix.decode_jpeg(jpegpix.encode_jpeg_ycbcr_sub(
-        w, h, y, bytes([128]) * 64, bytes([128]) * 64, 2, 2))
+    full = jpegpix.decode_jpeg(jpegpix.encode_jpeg_sequential(
+        w, h, [y, bytes([128]) * (w * h), bytes([128]) * (w * h)]))
+    sub = jpegpix.decode_jpeg(jpegpix.encode_jpeg_sequential(
+        w, h, [y, bytes([128]) * 64, bytes([128]) * 64], sh=2, sv=2))
     assert full[3] == sub[3]
 
 
 def test_subsampled_truncation_robustness():
     w, h = 16, 16
     y, cb, cr, _, _ = _sub_planes(w, h, 2, seed=2)
-    b = jpegpix.encode_jpeg_ycbcr_sub(w, h, y, cb, cr, 2, 2)
+    b = jpegpix.encode_jpeg_sequential(w, h, [y, cb, cr], sh=2, sv=2)
     for cut in range(0, len(b), 7):
         r = jpegpix.decode_jpeg(b[:cut])
         assert r is None or isinstance(r, tuple)
@@ -251,7 +252,8 @@ def test_sampling_factor_above_two_returns_none():
     to the codec fleet, not crash or mis-decode."""
     w, h = 16, 16
     y, cb, cr, _, _ = _sub_planes(w, h, 2, seed=3)
-    b = bytearray(jpegpix.encode_jpeg_ycbcr_sub(w, h, y, cb, cr, 2, 2))
+    b = bytearray(jpegpix.encode_jpeg_sequential(w, h, [y, cb, cr],
+                                                 sh=2, sv=2))
     i = bytes(b).find(b"\xff\xc0")
     # component 1's sampling byte sits at SOF body offset 7 (id,samp,tq)
     assert b[i + 4 + 7] == 0x22
@@ -266,7 +268,7 @@ def test_restart_interval_gray_exact():
     w, h = 32, 16            # 8 MCUs
     px = bytes((((x // 8) * 3 + (yy // 8) * 5) % 128) * 2
                for yy in range(h) for x in range(w))
-    b = jpegpix.encode_jpeg_gray(w, h, px, restart_interval=2)
+    b = jpegpix.encode_jpeg_sequential(w, h, [px], restart_interval=2)
     assert b"\xff\xdd" in b  # DRI present
     n_rst = sum(b.count(bytes([0xFF, 0xD0 + i])) for i in range(8))
     assert n_rst == 3        # 8 MCUs / interval 2 -> boundaries at 2,4,6
@@ -278,16 +280,16 @@ def test_restart_interval_subsampled_exact():
     y = bytes((((x // 8) * 3 + (yy // 8) * 5) % 128) * 2
               for yy in range(h) for x in range(w))
     cb, cr = bytes([120]) * 128, bytes([140]) * 128
-    b = jpegpix.encode_jpeg_ycbcr_sub(w, h, y, cb, cr, 2, 2,
-                                      restart_interval=1)
-    plain = jpegpix.encode_jpeg_ycbcr_sub(w, h, y, cb, cr, 2, 2)
+    b = jpegpix.encode_jpeg_sequential(w, h, [y, cb, cr], sh=2, sv=2,
+                                       restart_interval=1)
+    plain = jpegpix.encode_jpeg_sequential(w, h, [y, cb, cr], sh=2, sv=2)
     assert jpegpix.decode_jpeg(b)[3] == jpegpix.decode_jpeg(plain)[3]
 
 
 def test_restart_bad_sequence_and_truncation_rejected():
     w, h = 32, 16
     px = bytes([100]) * (w * h)
-    b = jpegpix.encode_jpeg_gray(w, h, px, restart_interval=2)
+    b = jpegpix.encode_jpeg_sequential(w, h, [px], restart_interval=2)
     i = b.find(b"\xff\xd0")
     bad = bytearray(b)
     bad[i + 1] = 0xD5        # wrong modulo-8 sequence
@@ -310,7 +312,8 @@ def test_progressive_equals_baseline_gray():
         px = bytes(rng.randrange(256) for _ in range(w * h))
         assert jpegpix.decode_jpeg(
             jpegpix.encode_jpeg_progressive_gray(w, h, px)) \
-            == jpegpix.decode_jpeg(jpegpix.encode_jpeg_gray(w, h, px)), (w, h)
+            == jpegpix.decode_jpeg(
+                jpegpix.encode_jpeg_sequential(w, h, [px])), (w, h)
 
 
 def test_progressive_equals_baseline_color_subsampled():
@@ -326,7 +329,8 @@ def test_progressive_equals_baseline_color_subsampled():
             jpegpix.encode_jpeg_progressive_ycbcr_sub(w, h, y, cb, cr,
                                                       sh, sv)) \
             == jpegpix.decode_jpeg(
-                jpegpix.encode_jpeg_ycbcr_sub(w, h, y, cb, cr, sh, sv)), \
+                jpegpix.encode_jpeg_sequential(w, h, [y, cb, cr],
+                                               sh=sh, sv=sv)), \
             (w, h, sh, sv)
 
 
@@ -386,7 +390,7 @@ def test_refine_correction_beyond_zrl_run():
     spatial = idct2d(natural)
     px = bytes(min(255, max(0, int(round(s)) + 128)) for s in spatial)
     assert jpegpix.decode_jpeg(jpegpix.encode_jpeg_progressive_gray(8, 8, px)) \
-        == jpegpix.decode_jpeg(jpegpix.encode_jpeg_gray(8, 8, px))
+        == jpegpix.decode_jpeg(jpegpix.encode_jpeg_sequential(8, 8, [px]))
 
 
 def test_progressive_smooth_with_detail_equality():
@@ -401,7 +405,8 @@ def test_progressive_smooth_with_detail_equality():
                    for y in range(h) for x in range(w))
         assert jpegpix.decode_jpeg(
             jpegpix.encode_jpeg_progressive_gray(w, h, px)) \
-            == jpegpix.decode_jpeg(jpegpix.encode_jpeg_gray(w, h, px)), \
+            == jpegpix.decode_jpeg(
+                jpegpix.encode_jpeg_sequential(w, h, [px])), \
             (cx, cy)
 
 
@@ -416,7 +421,7 @@ def test_duplicate_sof_returns_none():
     dup = b[:i + 2 + ln] + b[i:i + 2 + ln] + b[i + 2 + ln:]
     assert jpegpix.decode_jpeg(dup) is None
     # baseline too
-    g = jpegpix.encode_jpeg_gray(8, 8, bytes([7]) * 64)
+    g = jpegpix.encode_jpeg_sequential(8, 8, [bytes([7]) * 64])
     j = g.find(b"\xff\xc0")
     ln = struct.unpack(">H", g[j + 2:j + 4])[0]
     assert jpegpix.decode_jpeg(g[:j + 2 + ln] + g[j:j + 2 + ln]
@@ -511,7 +516,7 @@ def test_scan_order_must_follow_frame_order():
     px = bytes((3 * x + 7 * y) % 256 for y in range(8) for x in range(8))
     for payload in (
             jpegpix.encode_jpeg_lossless(8, 8, [px, px, px]),
-            jpegpix.encode_jpeg_ycbcr(8, 8, px, px, px)):
+            jpegpix.encode_jpeg_sequential(8, 8, [px, px, px])):
         sos = payload.find(b"\xff\xda")
         b = bytearray(payload)
         assert (b[sos + 5], b[sos + 7], b[sos + 9]) == (1, 2, 3)

@@ -646,8 +646,8 @@ def test_jpeg_in_tiff_color_matches_plain_jpeg():
         w, h = 16, 16
         ycc = bytes(((x // 8) * 2 + (y // 8) * 7 + c * 31 + i) % 128 * 2
                     for y in range(h) for x in range(w) for c in range(3))
-        jd = jpegpix.decode_jpeg(jpegpix.encode_jpeg_ycbcr(
-            w, h, ycc[0::3], ycc[1::3], ycc[2::3]))
+        jd = jpegpix.decode_jpeg(jpegpix.encode_jpeg_sequential(
+            w, h, [ycc[0::3], ycc[1::3], ycc[2::3]]))
         for kw in (dict(rows_per_strip=8),
                    dict(tile_size=(16, 16), use_jpeg_tables=True)):
             assert tiffpix.decode_tiff(
