@@ -17,7 +17,6 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
@@ -53,12 +52,15 @@ def conversation_sessions_stream(spark: SparkSession, input_dir: str,
                                  schema, checkpoint_dir: str,
                                  output_dir: str) -> DataFrame:
     """availableNow run of the stateful tracker over (conv_id, turn_idx,
-    kind) rows landing as parquet files. Session updates append to
+    kind) rows landing as parquet files. Session updates land in
     ``output_dir`` via foreachBatch (memory sinks cannot recover from a
     checkpoint); rerunning with the same checkpoint resumes the accumulated
-    per-key state. Each appended row carries its ``batch_id``, so the
-    current summary per conv_id is the max-batch_id row — parquet preserves
-    no ordering, so "latest" must be an explicit column."""
+    per-key state. Each micro-batch overwrites its own ``batch_id=<id>``
+    partition, so a batch replayed after a crash between the sink write
+    and the checkpoint commit replaces its rows instead of appending them
+    twice (the decontam_stream layout). The current summary per conv_id
+    is the max-batch_id row — parquet preserves no ordering, so "latest"
+    must be an explicit column."""
     stream = (spark.readStream.schema(schema).parquet(input_dir)
               .select("conv_id", "turn_idx", "kind"))
     tracked = (stream.groupBy("conv_id")
@@ -67,12 +69,12 @@ def conversation_sessions_stream(spark: SparkSession, input_dir: str,
                                        GroupStateTimeout.NoTimeout))
 
     def _sink(batch_df, batch_id):
-        (batch_df.withColumn("batch_id", F.lit(batch_id))
-         .write.mode("append").parquet(output_dir))
+        batch_df.write.mode("overwrite").parquet(
+            f"{output_dir}/batch_id={batch_id}")
 
     q = (tracked.writeStream.foreachBatch(_sink)
          .outputMode("update")
          .option("checkpointLocation", checkpoint_dir)
          .trigger(availableNow=True).start())
     q.awaitTermination()
-    return spark.read.parquet(output_dir)
+    return spark.read.option("basePath", output_dir).parquet(output_dir)
