@@ -1049,26 +1049,38 @@ def _t_quality(spark, sf_dir):
                  F.count(F.lit(1)).alias("n_docs")))
 
 
+def _quality_parts_sql():
+    """textops.quality_score in DuckDB, shared by the quality and
+    quality-filter twins: the alpha-ratio CASE over ``text``, and the
+    score over the columns alpha_ratio, n_tokens and r_en (the English
+    stop-word ratio). The frozen _curate_funnel_sql keeps its own copy."""
+    alpha_ratio = """CASE WHEN length(text) = 0 THEN 0.0
+              ELSE length(regexp_replace(text, '[^A-Za-z]', '', 'g')) * 1.0 / length(text)
+         END"""
+    score = ("0.4 * least(1.0, n_tokens / 100.0) + 0.3 * alpha_ratio "
+             "+ 0.3 * least(1.0, r_en / 0.4)")
+    return alpha_ratio, score
+
+
 def _quality_sql():
     from docext_spark.core.textstats import EN_STOPWORDS
     stop = ", ".join(f"'{s}'" for s in EN_STOPWORDS)
+    alpha_ratio, score = _quality_parts_sql()
     return f"""
 WITH base AS (
   SELECT source, text, {_tokens_sql()} AS t
   FROM documents
 ), feat AS (
   SELECT source,
-         len(t) AS n_tok,
-         CASE WHEN length(text) = 0 THEN 0.0
-              ELSE length(regexp_replace(text, '[^A-Za-z]', '', 'g')) * 1.0 / length(text)
-         END AS alpha_ratio,
+         len(t) AS n_tokens,
+         {alpha_ratio} AS alpha_ratio,
          CASE WHEN len(t) = 0 THEN 0.0
               ELSE len(list_filter(t, x -> lower(x) IN ({stop}))) * 1.0 / len(t)
-         END AS sr
+         END AS r_en
   FROM base
 )
 SELECT source,
-       {_dmean_sql("0.4 * least(1.0, n_tok / 100.0) + 0.3 * alpha_ratio + 0.3 * least(1.0, sr / 0.4)")} AS avg_quality,
+       {_dmean_sql(score)} AS avg_quality,
        count(*) AS n_docs
 FROM feat GROUP BY source
 """
@@ -1309,12 +1321,19 @@ def _pack_sequences(spark, sf_dir):
                       "oversize")
 
 
+def _unit_hash_sql(seed_sql):
+    """The content-addressed draw in [0, 1) of operators/sampling: the
+    first 13 hex digits (52 bits) of sha256(seed || '|' || doc_id) over
+    2**52. ``seed_sql`` is a SQL expression: a quoted literal or a column."""
+    return (f"('0x' || substr(sha256({seed_sql} || '|' || "
+            f"coalesce(doc_id::VARCHAR, '')), 1, 13))::UBIGINT "
+            f"/ 4503599627370496.0")
+
+
 _PACK_SEQUENCES_SQL = f"""
 WITH RECURSIVE items AS (
   SELECT doc_id::VARCHAR AS id, len({_tokens_sql()})::BIGINT AS len,
-         floor((('0x' || substr(sha256('0|' || coalesce(doc_id::VARCHAR, '')),
-                                1, 13))::UBIGINT / 4503599627370496.0)
-               * 8)::INT AS grp
+         floor(({_unit_hash_sql("'0'")}) * 8)::INT AS grp
   FROM documents
 ), ranked AS (
   -- the id tiebreak is the STRING id (the operator packs over a string
@@ -1339,12 +1358,9 @@ FROM packed
 """
 
 
-_SAMPLE_SPLIT_SQL = """
+_SAMPLE_SPLIT_SQL = f"""
 WITH u AS (
-  SELECT doc_id,
-         ('0x' || substr(sha256('0|' || coalesce(doc_id::VARCHAR, '')),
-                         1, 13))::UBIGINT
-           / 4503599627370496.0 AS u
+  SELECT doc_id, {_unit_hash_sql("'0'")} AS u
   FROM documents
 )
 SELECT CASE WHEN u < 0.1 THEN 'val' ELSE 'train' END AS side,
@@ -1378,9 +1394,7 @@ WITH tok AS (
 sel AS (
   SELECT doc_id, nt FROM tok, tot
   WHERE total > 8000
-    AND ('0x' || substr(sha256('0|' || coalesce(doc_id::VARCHAR, '')),
-                        1, 13))::UBIGINT
-        / 4503599627370496.0 < 8000.0 / total
+    AND {_unit_hash_sql("'0'")} < 8000.0 / total
   UNION ALL
   SELECT doc_id, nt FROM tok, tot WHERE total <= 8000
 )
@@ -1417,10 +1431,7 @@ def _mixture_sql():
     return f"""
 WITH draws AS (
   SELECT doc_id, source,
-         ('0x' || substr(sha256(s.seed || '|'
-                                || coalesce(doc_id::VARCHAR, '')),
-                         1, 13))::UBIGINT
-           / 4503599627370496.0 AS u,
+         {_unit_hash_sql("s.seed")} AS u,
          s.frac
   FROM documents
   JOIN (VALUES {values}) AS s(src, seed, frac)
@@ -1448,22 +1459,20 @@ def _t_quality_filter(spark, sf_dir):
 
 def _quality_filter_sql():
     ratio_cols, best, case = _lang_ratio_sql()
+    alpha_ratio, score = _quality_parts_sql()
     return f"""
 WITH base AS (
   SELECT doc_id, text, {_tokens_sql()} AS t
   FROM documents
 ), feat AS (
   SELECT doc_id, len(t) AS n_tokens,
-         CASE WHEN length(text) = 0 THEN 0.0
-              ELSE length(regexp_replace(text, '[^A-Za-z]', '', 'g')) * 1.0 / length(text)
-         END AS alpha_ratio,
+         {alpha_ratio} AS alpha_ratio,
          {ratio_cols}
   FROM base
 ), scored AS (
   SELECT doc_id, n_tokens,
          CASE WHEN {best} < 0.08 THEN 'unknown' {case} ELSE 'unknown' END AS lang,
-         round(0.4 * least(1.0, n_tokens / 100.0) + 0.3 * alpha_ratio
-               + 0.3 * least(1.0, r_en / 0.4), 4) AS q
+         round({score}, 4) AS q
   FROM feat
 )
 SELECT doc_id, n_tokens, q FROM scored

@@ -188,8 +188,7 @@ def embedding_near_dups(vectors: DataFrame, threshold: float = 0.95,
                         id_col: str = "vec_id", vec_col: str = "embedding",
                         exact: bool = False, n_planes: int = 8,
                         n_tables: int = 4,
-                        dim: int | None = None,
-                        planes_impl: str = "udf") -> DataFrame:
+                        dim: int | None = None) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (id_a < id_b, cos_sim ≥ τ).
 
     Default (exact=False) is the scale path: hyperplane-LSH with
@@ -221,8 +220,7 @@ def embedding_near_dups(vectors: DataFrame, threshold: float = 0.95,
                     .filter(F.col("cos_sim") >= threshold)
                     .select("id_a", "id_b", "cos_sim").distinct())
     v = v.withColumn("vec", _dim_guard(F.col("vec"), dim))
-    banded = banded_signatures(v, "vec", dim, n_planes, n_tables,
-                               impl=planes_impl) \
+    banded = banded_signatures(v, "vec", dim, n_planes, n_tables) \
         .select("id", "bucket")
     a = banded.withColumnRenamed("id", "id_a")
     b = banded.withColumnRenamed("id", "id_b")
@@ -494,18 +492,14 @@ def ivf_topk(vectors: DataFrame, queries: DataFrame, k: int = 5,
 def lsh_topk(vectors: DataFrame, queries: DataFrame, dim: int, k: int = 5,
              n_planes: int = 8, n_tables: int = 1, id_col: str = "vec_id",
              vec_col: str = "embedding", qid_col: str = "qid",
-             qvec_col: str = "qvec", planes_impl: str = "udf") -> DataFrame:
+             qvec_col: str = "qvec") -> DataFrame:
     """Approximate top-k: candidates share the query's hyperplane bucket in
     ANY of ``n_tables`` independent plane sets (OR-amplification), exact
     cosine re-rank inside the union of buckets. A candidate colliding in
     several tables is deduped before scoring (max_by keeps one row per
-    (qid, vec_id)), so amplification raises recall without rescoring.
-    ``planes_impl`` as in banded_signatures (default: worker-side planes,
-    no plan literals)."""
-    v = banded_signatures(vectors, vec_col, dim, n_planes, n_tables,
-                          impl=planes_impl)
-    q = banded_signatures(queries, qvec_col, dim, n_planes, n_tables,
-                          impl=planes_impl)
+    (qid, vec_id)), so amplification raises recall without rescoring."""
+    v = banded_signatures(vectors, vec_col, dim, n_planes, n_tables)
+    q = banded_signatures(queries, qvec_col, dim, n_planes, n_tables)
     scored = (v.join(F.broadcast(q), "bucket")
               .select(F.col(qid_col), F.col(id_col),
                       F.round(cosine(F.col(vec_col), F.col(qvec_col)), 6)

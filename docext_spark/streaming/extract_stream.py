@@ -33,22 +33,19 @@ RESULT_COLS = [f.name for f in RESULT_SCHEMA.fields]
 
 def start_extraction_stream(spark: SparkSession, input_dir: str,
                             checkpoint_dir: str, output_dir: str,
-                            max_files_per_trigger: int | None = None,
-                            available_now: bool = True):
-    """Start (and return) the streaming query: parquet source →
-    extract_turns pUDF → parquet sink. ``max_files_per_trigger`` bounds
+                            max_files_per_trigger: int | None = None):
+    """Start (and return) the availableNow streaming query: parquet source
+    → extract_turns pUDF → parquet sink. ``max_files_per_trigger`` bounds
     microbatch size (memory control at scale, and the lever tests use to
     force multiple batches so a mid-stream kill lands BETWEEN commits)."""
     reader = spark.readStream.schema(TRANSCRIPT_SCHEMA)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     turns = extract_turns(reader.parquet(input_dir)).select(*RESULT_COLS)
-    writer = (turns.writeStream.outputMode("append").format("parquet")
-              .option("path", output_dir)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return (turns.writeStream.outputMode("append").format("parquet")
+            .option("path", output_dir)
+            .option("checkpointLocation", checkpoint_dir)
+            .trigger(availableNow=True).start())
 
 
 def run_extraction_stream(spark: SparkSession, input_dir: str,

@@ -42,13 +42,8 @@ def windowed_counts_stream(spark: SparkSession, input_dir: str, schema,
     checkpoint recovery; a memory sink does not).
     """
     stream = spark.readStream.schema(schema).parquet(input_dir)
-    agg = (stream.withWatermark(ts_col, watermark)
-           .groupBy(F.window(F.col(ts_col), window).alias("w"),
-                    F.col(key_col))
-           .agg(F.count(F.lit(1)).alias("n"))
-           .select(F.date_format("w.start", "yyyy-MM-dd HH:mm:ss")
-                    .alias("window_start"),
-                   key_col, "n"))
+    agg = windowed_counts(stream.withWatermark(ts_col, watermark), ts_col,
+                          key_col, window)
     q = (agg.writeStream.outputMode("append").format("parquet")
          .option("path", output_dir)
          .option("checkpointLocation", checkpoint_dir)
