@@ -223,14 +223,13 @@ def encode_gif(w: int, h: int, palette: list[tuple[int, int, int]],
         indices = [indices[y * w + x]
                    for y in interlace_rows(h) for x in range(w)]
     pal_bits, table = _color_table(palette)
-    image = _lzw_image_data(indices, pal_bits)
     out = bytearray()
     out += b"GIF87a" + struct.pack("<HH", w, h)
     out.append(0x80 | (pal_bits - 1))            # GCT present, size bits
     out += b"\x00\x00" + table
     out += b"\x2C" + struct.pack("<HHHH", 0, 0, w, h)
     out.append(0x40 if interlace else 0x00)
-    out += image
+    out += _lzw_image_data(indices, pal_bits)
     out += b"\x3B"
     return bytes(out)
 

@@ -41,8 +41,8 @@ bounds and a NumPy cross-check of the IDCT.
 Encoders (fixture/test side): encode_jpeg_sequential writes the T.81
 sequential DCT process — one walk over the MCUs of a gray plane or of
 Y plus pre-subsampled Cb/Cr, each block coded with Huffman codes (SOF0,
-Annex K tables, F.1.2) or the adaptive arithmetic coder (SOF9, Annex F
-via core/jpegarith.py), with optional restart intervals and DAC
+Annex K tables, F.1.2) or the adaptive arithmetic coder (SOF9, F.1.4 and
+Annex D via core/jpegarith.py), with optional restart intervals and DAC
 conditioning. encode_jpeg_progressive_gray/_ycbcr_sub re-code the same
 quantized coefficients as SOF2 scan scripts and encode_jpeg_lossless
 writes SOF3. All DCT encoders share _quantize_block, so for the same
@@ -1056,7 +1056,7 @@ def encode_jpeg_sequential(w: int, h: int, planes: list[bytes],
                            restart_interval: int = 0, arith: bool = False,
                            dc_cond: tuple[int, int] = (0, 1),
                            kx: int = 5) -> bytes:
-    """A real sequential-DCT JPEG (T.81 Annexes F/G): float FDCT, flat
+    """A real sequential-DCT JPEG (T.81 Annex F): float FDCT, flat
     quantization table (all entries = ``quant``), one interleaved scan.
 
     ``planes`` is [gray] (w×h) or [Y, Cb, Cr]: full-resolution luma and
@@ -1293,7 +1293,7 @@ def encode_jpeg_progressive_gray(w: int, h: int, pixels: bytes,
 
     out = b"\xff\xd8" + _seg(0xDB, bytes([0x00]) + bytes(qt))
     out += _seg(0xC2, bytes([8]) + struct.pack(">HH", h, w)
-               + bytes([1, 1, 0x11, 0]))
+                + bytes([1, 1, 0x11, 0]))
     out += _seg(0xC4, bytes([0x00]) + _DC_COUNTS + _DC_SYMBOLS) \
         + _seg(0xC4, bytes([0x10]) + _PROG_AC_COUNTS + _PROG_AC_SYMBOLS)
 
@@ -1375,7 +1375,7 @@ def encode_jpeg_progressive_ycbcr_sub(w: int, h: int, y: bytes, cb: bytes,
     sof_comps = bytes([1, (sh << 4) | sv, 0]) + bytes([2, 0x11, 0]) \
         + bytes([3, 0x11, 0])
     out += _seg(0xC2, bytes([8]) + struct.pack(">HH", h, w) + bytes([3])
-               + sof_comps)
+                + sof_comps)
     out += _seg(0xC4, bytes([0x00]) + _DC_COUNTS + _DC_SYMBOLS) \
         + _seg(0xC4, bytes([0x10]) + _PROG_AC_COUNTS + _PROG_AC_SYMBOLS)
 
@@ -1461,8 +1461,8 @@ def encode_jpeg_lossless(w: int, h: int, planes: list[bytes],
     ncomp = len(planes)
     out = b"\xff\xd8" + _seg(0xC4, bytes([0x00]) + _DC_COUNTS + _DC_SYMBOLS)
     out += _seg(0xC3, bytes([8]) + struct.pack(">HH", h, w) + bytes([ncomp])
-               + b"".join(bytes([c + 1, 0x11, 0]) for c in range(ncomp)))
+                + b"".join(bytes([c + 1, 0x11, 0]) for c in range(ncomp)))
     out += _seg(0xDA, bytes([ncomp])
-               + b"".join(bytes([c + 1, 0x00]) for c in range(ncomp))
-               + bytes([predictor, 0, pt]))
+                + b"".join(bytes([c + 1, 0x00]) for c in range(ncomp))
+                + bytes([predictor, 0, pt]))
     return out + bytes(writer.out) + b"\xff\xd9"
