@@ -33,7 +33,11 @@ MAX_PIXELS = 4_000_000
 
 def _lzw_decode(min_code_size: int, data: bytes, max_pixels: int):
     """GIF-variant LZW: variable width starting min+1, LSB-first packing,
-    CLEAR/EOI codes, width growth at next == 2^width (cap 12)."""
+    CLEAR/EOI codes, width growth at next == 2^width (cap 12). The
+    minimum code size must be 2-8 (the root codes are byte values);
+    anything else returns None."""
+    if not 2 <= min_code_size <= 8:
+        return None
     clear = 1 << min_code_size
     eoi = clear + 1
     width = min_code_size + 1
@@ -126,8 +130,6 @@ def decode_gif(payload: bytes | None):
                 return None                  # decode-bomb guard (see above)
             min_code_size = payload[pos]
             pos += 1
-            if not 2 <= min_code_size <= 11:
-                return None
             data = bytearray()                   # reassemble sub-blocks
             while pos < n and payload[pos] != 0:
                 ln = payload[pos]
@@ -368,8 +370,6 @@ def decode_gif_frames(payload: bytes | None, max_frames: int = 64):
                 return None
             min_code_size = payload[pos]
             pos += 1
-            if not 2 <= min_code_size <= 11:
-                return None
             data = bytearray()
             while pos < n and payload[pos] != 0:
                 ln = payload[pos]

@@ -212,3 +212,19 @@ def test_animation_defensive():
         b[_r.randrange(len(b))] ^= 0xFF
         r = gifpix.decode_gif_frames(bytes(b))
         assert r is None or isinstance(r, tuple)
+
+
+@pytest.mark.parametrize("code_size", [0, 1, 9, 10, 11, 12, 255])
+def test_lzw_code_size_outside_2_to_8_returns_none(code_size):
+    """GIF limits the LZW minimum code size to 2-8. A larger one used to
+    reach the root-code table build and raise ValueError (bytes must be
+    in range(0, 256)) out of decode_gif and decode_gif_frames."""
+    palette, idx = _fixture(4, 6, 6)
+    for payload in (gifpix.encode_gif(6, 6, palette, idx),
+                    gifpix.encode_gif_animated(
+                        6, 6, palette, [dict(w=6, h=6, indices=idx)])):
+        bad = bytearray(payload)
+        bad[bad.index(0x2C) + 10] = code_size
+        assert gifpix.decode_gif(bytes(bad)) is None
+        assert gifpix.decode_gif_frames(bytes(bad)) is None
+    assert gifpix._lzw_decode(code_size, b"\x00" * 4, 100) is None
