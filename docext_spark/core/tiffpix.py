@@ -251,8 +251,11 @@ def _predictor2_encode16(row: bytes, spp: int, bo: str) -> bytes:
 
 def _read_values(payload: bytes, bo: str, typ: int, count: int,
                  raw: bytes) -> list[int] | None:
+    """A field's values, or None for an unknown type, a field with no
+    values (every field the decoder reads needs one) or values past the
+    end of the payload."""
     size = _TYPE_SIZE.get(typ)
-    if size is None:
+    if size is None or count == 0:
         return None
     total = size * count
     if total <= 4:

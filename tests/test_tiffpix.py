@@ -113,6 +113,20 @@ def test_defensive_returns_none():
     assert tiffpix.decode_tiff(bytes(bad)) is None
 
 
+@pytest.mark.parametrize("tag,typ", [(256, 4), (257, 4), (259, 3),
+                                     (262, 3), (277, 3), (278, 4),
+                                     (284, 3), (317, 3)])
+def test_field_without_values_returns_none(tag, typ):
+    """A field whose count is 0 used to reach a ``[0]`` index on an
+    empty value list and raise IndexError out of decode_tiff."""
+    good = tiffpix.encode_tiff(5, 4, 1, _samples(5, 4, 1), compression=5,
+                               predictor=2)
+    i = good.index(struct.pack("<HHI", tag, typ, 1))
+    bad = bytearray(good)
+    struct.pack_into("<I", bad, i + 4, 0)
+    assert tiffpix.decode_tiff(bytes(bad)) is None
+
+
 def test_decode_bomb_guard():
     """IFD dims are attacker-controlled: a tiny payload claiming 65535² must
     bail before the output allocates, and PackBits expansion is bounded."""
