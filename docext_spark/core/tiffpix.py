@@ -555,8 +555,9 @@ def decode_tiff(payload: bytes | None):
         if any(b != 8 for b in bits) or spp not in (1, 3) \
                 or planar != 1 or photometric not in (1, 6) \
                 or predictor != 1 \
-                or len(chunk_offs) != len(chunk_counts):
-            return None
+                or len(chunk_offs) != len(chunk_counts) \
+                or any(v > 255 for v in tags.get(347, ())):
+            return None                   # JPEGTables hold bytes
         return _decode_tiff_jpeg(payload, w, h, spp, rows_per_strip,
                                  chunk_offs, chunk_counts,
                                  (tw, tl) if tiled else None,

@@ -127,6 +127,19 @@ def test_field_without_values_returns_none(tag, typ):
     assert tiffpix.decode_tiff(bytes(bad)) is None
 
 
+def test_jpeg_tables_wider_than_bytes_returns_none():
+    """JPEGTables (tag 347) re-typed as SHORT used to reach bytes() with
+    values above 255 and raise ValueError out of decode_tiff."""
+    good = tiffpix.encode_tiff_jpeg(8, 8, 3, bytes(192),
+                                    use_jpeg_tables=True)
+    i = good.index(struct.pack("<HH", 347, 7))
+    count = struct.unpack_from("<I", good, i + 4)[0]
+    bad = bytearray(good)
+    struct.pack_into("<HI", bad, i + 2, 3, count // 2)
+    assert tiffpix.decode_tiff(good) is not None
+    assert tiffpix.decode_tiff(bytes(bad)) is None
+
+
 def test_decode_bomb_guard():
     """IFD dims are attacker-controlled: a tiny payload claiming 65535² must
     bail before the output allocates, and PackBits expansion is bounded."""
