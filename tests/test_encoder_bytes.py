@@ -4,16 +4,19 @@ The other codec tests check decode round-trips, which a change to the
 entropy stream, the marker layout or the LZW packing can pass while
 still moving every payload the oracle pairs read. This file pins the
 sha256 of every output of the sequential JPEG encoders (Huffman and
-arithmetic, gray, 4:4:4 and subsampled colour) and of both GIF encoders
-over a seeded parameter sweep. Each group folds the per-output digests
-into one sha256, so a single changed byte in any case fails its group.
+arithmetic, gray, 4:4:4 and subsampled colour), the progressive and
+lossless JPEG encoders, both GIF encoders and the TIFF encoders (every
+bit depth, compression, predictor, planar and strip/tile layout, and
+JPEG-in-TIFF with and without JPEGTables) over a seeded parameter
+sweep. Each group folds the per-output digests into one sha256, so a
+single changed byte in any case fails its group.
 """
 import hashlib
 import random
 
 import pytest
 
-from docext_spark.core import gifpix
+from docext_spark.core import gifpix, tiffpix
 from docext_spark.core import jpegpix as J
 
 QUANTS = (1, 4, 16, 40)
@@ -86,6 +89,14 @@ JPEG_GROUPS = {
                              J.encode_jpeg_sequential(
                                  w, h, p, sh=sh, sv=sv, quant=q,
                                  arith=True)),
+    "jpeg_progressive_gray": (7, 1, False,
+                              lambda w, h, p, sh, sv, q, ri, dc, kx:
+                              J.encode_jpeg_progressive_gray(w, h, p[0],
+                                                             quant=q)),
+    "jpeg_progressive_ycbcr_sub": (8, 3, True,
+                                   lambda w, h, p, sh, sv, q, ri, dc, kx:
+                                   J.encode_jpeg_progressive_ycbcr_sub(
+                                       w, h, *p, sh=sh, sv=sv, quant=q)),
 }
 
 EXPECTED = {
@@ -107,6 +118,16 @@ EXPECTED = {
         "45b36124ec9a5c6b7fe7048a6a034f87454e24754c16820b1b5b95718bcaacc7",
     "gif_animated":
         "1bbd500feaee5ddcd746120f3172b2a7d48b1b1414f22725c9d67f720a8b05a7",
+    "jpeg_progressive_gray":
+        "c2e3ceb622480b5ac943a79c67c1162570d10fa0ef0962ca6722e7a62f615cb7",
+    "jpeg_progressive_ycbcr_sub":
+        "8daefb35aec56b42b2ee317d6431360fc666952884d05515c8aab461f3041d91",
+    "jpeg_lossless":
+        "dfe4dc6d4f13c284985be550eb0384f95248c90ccf2f54709a5e180238dfabfe",
+    "tiff":
+        "74f3d06bc406cde3d7c0f3494a11017e7a8674ae2eab69c5ad53df8aa51b1439",
+    "tiff_jpeg":
+        "3dd12871ff50f98ab7e6b8ff89c6a3333d6bae1265f4170377a5a9c98a686b64",
 }
 
 
@@ -171,3 +192,70 @@ def test_gif_encoder_bytes():
 
 def test_gif_animated_encoder_bytes():
     assert _fold(_gif_animated_outputs()) == EXPECTED["gif_animated"]
+
+
+def _lossless_outputs():
+    """Gray and three-component planes, every predictor 1-7, Pt 0-2."""
+    rng = random.Random(9)
+    for i in range(42):
+        w, h = _dims(rng, i % 21)
+        ncomp = (1, 3)[i // 21]
+        planes = [_plane(rng, w, h, i % 3) for _ in range(ncomp)]
+        yield J.encode_jpeg_lossless(w, h, planes, predictor=1 + i % 7,
+                                     pt=(i // 7) % 3)
+
+
+def _tiff_outputs():
+    """8/16-bit × compressions 1/5/8/32773 × gray/RGB over both byte
+    orders, the predictor, planar 2, WhiteIsZero and three strip/tile
+    layouts; then bilevel compressions 1/2/4 in both photometrics."""
+    rng = random.Random(10)
+    layouts = ({}, {"rows_per_strip": 4}, {"tile_size": (16, 32)})
+    for i in range(64):
+        w, h = _dims(rng, i)
+        comp = (1, 5, 8, 32773)[i % 4]
+        ch = (1, 3)[(i // 4) % 2]
+        kw = dict(layouts[i % 3], byte_order="<>"[(i // 8) % 2],
+                  compression=comp, bits=(8, 16)[(i // 16) % 2],
+                  predictor=2 if comp != 1 and (i // 2) % 2 else 1,
+                  planar=2 if ch == 3 and (i // 3) % 2 else 1)
+        if ch == 1 and i % 5 == 0:
+            kw["photometric"] = 0
+        yield tiffpix.encode_tiff(
+            w, h, ch, b"".join(_plane(rng, w, h, i % 3) for _ in range(ch)),
+            **kw)
+    for i in range(12):
+        w, h = _dims(rng, i)
+        px = bytes(rng.choice((0, 255)) for _ in range(w * h))
+        yield tiffpix.encode_tiff(
+            w, h, 1, px, compression=(1, 2, 4)[i % 3], bits=1,
+            photometric=(i // 3) % 2, rows_per_strip=(None, 5)[(i // 6)],
+            byte_order="<>"[i % 2])
+
+
+def _tiff_jpeg_outputs():
+    """Gray and YCbCr strips and tiles, with and without JPEGTables."""
+    rng = random.Random(13)
+    layouts = ({}, {"rows_per_strip": 8}, {"tile_size": (16, 16)},
+               {"tile_size": (32, 16)})
+    for i in range(16):
+        w, h = _dims(rng, i)
+        ch = (1, 3)[i % 2]
+        px = b"".join(_plane(rng, w, h, i % 3) for _ in range(ch))
+        yield tiffpix.encode_tiff_jpeg(
+            w, h, ch, bytes(px[c * w * h + k] for k in range(w * h)
+                            for c in range(ch)),
+            byte_order="<>"[(i // 2) % 2], use_jpeg_tables=bool(i // 8),
+            **layouts[(i // 2) % 4])
+
+
+def test_jpeg_lossless_encoder_bytes():
+    assert _fold(_lossless_outputs()) == EXPECTED["jpeg_lossless"]
+
+
+def test_tiff_encoder_bytes():
+    assert _fold(_tiff_outputs()) == EXPECTED["tiff"]
+
+
+def test_tiff_jpeg_encoder_bytes():
+    assert _fold(_tiff_jpeg_outputs()) == EXPECTED["tiff_jpeg"]
