@@ -15,7 +15,10 @@ non-interlaced OR interlaced (the GIF89a four-pass row order — rows
 0,8,16…, then 4,12…, then 2,6…, then odd rows — undone on decode), and
 FULL ANIMATION (decode_gif_frames: sub-rect frame compositing, GCE
 transparency + delays, disposal methods 0-3, NETSCAPE2.0 loop count via
-gif_animation_info). Malformed → None
+gif_animation_info), LZW minimum code sizes 2-8 (the GIF89a range; the
+root codes are byte values). All three readers take the header from
+_gif_screen and walk the blocks with the one _gif_blocks generator;
+each keeps its own checks on the events it reads. Malformed → None
 (a 100TB scan never dies on one blob; route exotica to a codec fleet).
 """
 from __future__ import annotations
@@ -93,71 +96,120 @@ def interlace_rows(h: int) -> list[int]:
             for y in range(start, h, step)]
 
 
-def decode_gif(payload: bytes | None):
-    """(width, height, 3, rgb_bytes) of the FIRST image frame, or None."""
+def _gif_screen(payload: bytes | None):
+    """(width, height, background index, global color table or None,
+    offset of the first block) from the header and logical screen
+    descriptor, or None if the payload is not a GIF."""
     if not payload or len(payload) < 13 \
             or payload[:6] not in (b"GIF87a", b"GIF89a"):
         return None
+    w, h = struct.unpack("<HH", payload[6:10])
     packed = payload[10]
     pos = 13
-    n = len(payload)
-    palette = None
+    gct = None
     if packed & 0x80:                            # global color table
         size = 3 * (2 << (packed & 0x07))
-        palette = payload[pos:pos + size]
+        gct = payload[pos:pos + size]
         pos += size
+    return w, h, payload[11], gct, pos
+
+
+def _sub_blocks(payload: bytes, pos: int) -> tuple[list[bytes], int]:
+    """A data sub-block chain at ``pos``: (blocks, offset past its
+    terminator)."""
+    blocks = []
+    while pos < len(payload) and payload[pos] != 0:
+        ln = payload[pos]
+        blocks.append(payload[pos + 1:pos + 1 + ln])
+        pos += 1 + ln
+    return blocks, pos + 1
+
+
+def _gif_blocks(payload: bytes, pos: int):
+    """Walk the GIF89a block grammar from ``pos``. Yields
+    ("ext", label, sub-blocks) per extension, ("image", (left, top, w,
+    h), interlaced, local color table or None, LZW minimum code size,
+    LZW data) per image and, as the last event, ("bad",) for a truncated
+    or unknown block. The trailer or the end of the payload ends the
+    walk."""
+    n = len(payload)
     while pos < n:
         b = payload[pos]
-        if b == 0x21:                            # extension: skip sub-blocks
-            pos += 2
-            while pos < n and payload[pos] != 0:
-                pos += 1 + payload[pos]
-            pos += 1
-        elif b == 0x2C:                          # image descriptor
-            if pos + 10 > n:
-                return None
-            w, h = struct.unpack("<HH", payload[pos + 5:pos + 9])
+        if b == 0x21 and pos + 2 <= n:           # extension
+            blocks, end = _sub_blocks(payload, pos + 2)
+            yield "ext", payload[pos + 1], blocks
+            pos = end
+        elif b == 0x2C and pos + 10 <= n:        # image descriptor
+            rect = struct.unpack("<HHHH", payload[pos + 1:pos + 9])
             ipacked = payload[pos + 9]
             pos += 10
-            interlaced = bool(ipacked & 0x40)
+            lct = None
             if ipacked & 0x80:                   # local color table
                 size = 3 * (2 << (ipacked & 0x07))
-                palette = payload[pos:pos + size]
+                lct = payload[pos:pos + size]
                 pos += size
-            if palette is None or pos >= n or w == 0 or h == 0:
-                return None
-            if w * h > MAX_PIXELS:
-                return None                  # decode-bomb guard (see above)
-            min_code_size = payload[pos]
-            pos += 1
-            data = bytearray()                   # reassemble sub-blocks
-            while pos < n and payload[pos] != 0:
-                ln = payload[pos]
-                data += payload[pos + 1:pos + 1 + ln]
-                pos += 1 + ln
-            indices = _lzw_decode(min_code_size, bytes(data), w * h)
-            if indices is None or len(indices) < w * h:
-                return None
-            rgb = bytearray(w * h * 3)
-            npal = len(palette) // 3
-            # interlaced streams carry rows in the GIF89a four-pass
-            # order; map stream row j back to its display row
-            row_of = (interlace_rows(h) if interlaced else range(h))
-            for j in range(h):
-                src = j * w
-                dst = row_of[j] * w * 3
-                for x in range(w):
-                    idx = indices[src + x]
-                    if idx >= npal:
-                        return None
-                    p = idx * 3
-                    o = dst + x * 3
-                    rgb[o:o + 3] = palette[p:p + 3]
-            return (w, h, 3, bytes(rgb))
-        elif b == 0x3B:                          # trailer before any image
-            return None
+            if pos >= n:
+                yield ("bad",)
+                return
+            blocks, end = _sub_blocks(payload, pos + 1)
+            yield ("image", rect, bool(ipacked & 0x40), lct, payload[pos],
+                   b"".join(blocks))
+            pos = end
+        elif b == 0x3B:                          # trailer
+            return
         else:
+            yield ("bad",)
+            return
+
+
+def _paint(canvas: bytearray, cw: int, palette: bytes, indices: bytes,
+           rect: tuple[int, int, int, int], interlaced: bool,
+           transparent: int | None) -> bool:
+    """Draw one image's palette indices into an RGB canvas ``cw`` pixels
+    wide at ``rect`` = (left, top, w, h), skipping the transparent index.
+    Interlaced streams carry rows in the GIF89a four-pass order, so
+    stream row j lands on display row interlace_rows(h)[j]. False if an
+    index is past the palette."""
+    left, top, fw, fh = rect
+    npal = len(palette) // 3
+    row_of = interlace_rows(fh) if interlaced else range(fh)
+    for j in range(fh):
+        src = j * fw
+        dst = (top + row_of[j]) * cw + left
+        for x in range(fw):
+            idx = indices[src + x]
+            if idx == transparent:
+                continue
+            if idx >= npal:
+                return False
+            o = (dst + x) * 3
+            canvas[o:o + 3] = palette[idx * 3:idx * 3 + 3]
+    return True
+
+
+def decode_gif(payload: bytes | None):
+    """(width, height, 3, rgb_bytes) of the FIRST image frame, or None."""
+    screen = _gif_screen(payload)
+    if screen is None:
+        return None
+    for event in _gif_blocks(payload, screen[4]):
+        if event[0] != "image":
+            if event[0] == "bad":
+                return None
+            continue
+        _, rect, interlaced, lct, min_code_size, data = event
+        w, h = rect[2:]
+        palette = screen[3] if lct is None else lct
+        if palette is None or w == 0 or h == 0 or w * h > MAX_PIXELS:
+            return None                          # decode-bomb guard too
+        indices = _lzw_decode(min_code_size, data, w * h)
+        if indices is None or len(indices) < w * h:
             return None
+        rgb = bytearray(w * h * 3)
+        if not _paint(rgb, w, palette, indices, (0, 0, w, h), interlaced,
+                      None):
+            return None
+        return (w, h, 3, bytes(rgb))
     return None
 
 
@@ -244,63 +296,31 @@ def gif_animation_info(payload: bytes | None):
     frame's Graphic Control Extension (1/100 s units); loop_count from
     the NETSCAPE2.0 application extension (0 = infinite), None if
     absent. Frames without a GCE contribute 0 ms (the spec default)."""
-    if not payload or len(payload) < 13 \
-            or payload[:6] not in (b"GIF87a", b"GIF89a"):
+    screen = _gif_screen(payload)
+    if screen is None:
         return None
-    w, h = struct.unpack("<HH", payload[6:10])
-    packed = payload[10]
-    pos = 13
-    n = len(payload)
-    if packed & 0x80:
-        pos += 3 * (2 << (packed & 0x07))
     n_frames = 0
     total_ms = 0
     loop = None
     pending_delay = 0
-    while pos < n:
-        b = payload[pos]
-        if b == 0x21:                            # extension
-            if pos + 2 > n:
-                return None
-            label = payload[pos + 1]
-            pos += 2
-            blocks = []
-            while pos < n and payload[pos] != 0:
-                ln = payload[pos]
-                blocks.append(payload[pos + 1:pos + 1 + ln])
-                pos += 1 + ln
-            pos += 1
-            if label == 0xF9 and blocks and len(blocks[0]) >= 3:
-                pending_delay = struct.unpack(
-                    "<H", blocks[0][1:3])[0] * 10
-            elif label == 0xFF and blocks \
-                    and blocks[0] == b"NETSCAPE2.0" \
-                    and len(blocks) > 1 and len(blocks[1]) >= 3 \
-                    and blocks[1][0] == 1:
-                loop = struct.unpack("<H", blocks[1][1:3])[0]
-        elif b == 0x2C:                          # image descriptor
-            if pos + 10 > n:
-                return None
-            ipacked = payload[pos + 9]
-            pos += 10
-            if ipacked & 0x80:
-                pos += 3 * (2 << (ipacked & 0x07))
-            if pos >= n:
-                return None
-            pos += 1                             # min code size
-            while pos < n and payload[pos] != 0:
-                pos += 1 + payload[pos]
-            pos += 1
+    for event in _gif_blocks(payload, screen[4]):
+        if event[0] == "bad":
+            return None
+        if event[0] == "image":
             n_frames += 1
             total_ms += pending_delay
             pending_delay = 0
-        elif b == 0x3B:
-            break
-        else:
-            return None
+            continue
+        _, label, blocks = event
+        if label == 0xF9 and blocks and len(blocks[0]) >= 3:
+            pending_delay = struct.unpack("<H", blocks[0][1:3])[0] * 10
+        elif label == 0xFF and blocks and blocks[0] == b"NETSCAPE2.0" \
+                and len(blocks) > 1 and len(blocks[1]) >= 3 \
+                and blocks[1][0] == 1:
+            loop = struct.unpack("<H", blocks[1][1:3])[0]
     if n_frames == 0:
         return None
-    return (w, h, n_frames, total_ms, loop)
+    return (screen[0], screen[1], n_frames, total_ms, loop)
 
 
 def decode_gif_frames(payload: bytes | None, max_frames: int = 64):
@@ -312,19 +332,10 @@ def decode_gif_frames(payload: bytes | None, max_frames: int = 64):
     background color) and 3 (restore the pre-frame canvas). The canvas
     starts as the logical-screen background color (black if the
     background index is out of table range)."""
-    if not payload or len(payload) < 13 \
-            or payload[:6] not in (b"GIF87a", b"GIF89a"):
+    screen = _gif_screen(payload)
+    if screen is None:
         return None
-    w, h = struct.unpack("<HH", payload[6:10])
-    packed = payload[10]
-    bg_idx = payload[11]
-    pos = 13
-    n = len(payload)
-    gct = None
-    if packed & 0x80:
-        size = 3 * (2 << (packed & 0x07))
-        gct = payload[pos:pos + size]
-        pos += size
+    w, h, bg_idx, gct, pos = screen
     if w == 0 or h == 0 or w * h > MAX_PIXELS:
         return None
     bg = (bytes(gct[bg_idx * 3:bg_idx * 3 + 3])
@@ -334,80 +345,43 @@ def decode_gif_frames(payload: bytes | None, max_frames: int = 64):
     delay_ms = 0
     disposal = 0
     transparent = None
-    while pos < n and len(frames) < max_frames:
-        b = payload[pos]
-        if b == 0x21:
-            if pos + 2 > n:
-                return None
-            label = payload[pos + 1]
-            pos += 2
-            blocks = []
-            while pos < n and payload[pos] != 0:
-                ln = payload[pos]
-                blocks.append(payload[pos + 1:pos + 1 + ln])
-                pos += 1 + ln
-            pos += 1
+    for event in _gif_blocks(payload, pos):
+        if len(frames) >= max_frames:
+            break
+        if event[0] == "bad":
+            return None
+        if event[0] == "ext":
+            _, label, blocks = event
             if label == 0xF9 and blocks and len(blocks[0]) >= 4:
                 flags = blocks[0][0]
                 disposal = (flags >> 2) & 0x7
                 delay_ms = struct.unpack("<H", blocks[0][1:3])[0] * 10
                 transparent = blocks[0][3] if flags & 1 else None
-        elif b == 0x2C:
-            if pos + 10 > n:
-                return None
-            left, top, fw, fh = struct.unpack("<HHHH",
-                                              payload[pos + 1:pos + 9])
-            ipacked = payload[pos + 9]
-            pos += 10
-            interlaced = bool(ipacked & 0x40)
-            palette = gct
-            if ipacked & 0x80:
-                size = 3 * (2 << (ipacked & 0x07))
-                palette = payload[pos:pos + size]
-                pos += size
-            if palette is None or fw == 0 or fh == 0 \
-                    or left + fw > w or top + fh > h or pos >= n:
-                return None
-            min_code_size = payload[pos]
-            pos += 1
-            data = bytearray()
-            while pos < n and payload[pos] != 0:
-                ln = payload[pos]
-                data += payload[pos + 1:pos + 1 + ln]
-                pos += 1 + ln
-            pos += 1
-            indices = _lzw_decode(min_code_size, bytes(data), fw * fh)
-            if indices is None or len(indices) < fw * fh:
-                return None
-            npal = len(palette) // 3
-            before = bytes(canvas) if disposal == 3 else None
-            row_of = (interlace_rows(fh) if interlaced else range(fh))
-            for j in range(fh):
-                src = j * fw
-                yy = top + row_of[j]
-                for x in range(fw):
-                    idx = indices[src + x]
-                    if idx == transparent:
-                        continue
-                    if idx >= npal:
-                        return None
-                    o = (yy * w + left + x) * 3
-                    canvas[o:o + 3] = palette[idx * 3:idx * 3 + 3]
-            frames.append((delay_ms, bytes(canvas)))
-            if disposal == 2:                    # restore rect to bg
-                for yy in range(top, top + fh):
-                    for x in range(left, left + fw):
-                        o = (yy * w + x) * 3
-                        canvas[o:o + 3] = bg
-            elif disposal == 3 and before is not None:
-                canvas = bytearray(before)
-            delay_ms = 0
-            disposal = 0
-            transparent = None
-        elif b == 0x3B:
-            break
-        else:
+            continue
+        _, rect, interlaced, lct, min_code_size, data = event
+        left, top, fw, fh = rect
+        palette = gct if lct is None else lct
+        if palette is None or fw == 0 or fh == 0 \
+                or left + fw > w or top + fh > h:
             return None
+        indices = _lzw_decode(min_code_size, data, fw * fh)
+        if indices is None or len(indices) < fw * fh:
+            return None
+        before = bytes(canvas) if disposal == 3 else None
+        if not _paint(canvas, w, palette, indices, rect, interlaced,
+                      transparent):
+            return None
+        frames.append((delay_ms, bytes(canvas)))
+        if disposal == 2:                        # restore rect to bg
+            for yy in range(top, top + fh):
+                for x in range(left, left + fw):
+                    o = (yy * w + x) * 3
+                    canvas[o:o + 3] = bg
+        elif disposal == 3 and before is not None:
+            canvas = bytearray(before)
+        delay_ms = 0
+        disposal = 0
+        transparent = None
     if not frames:
         return None
     return (w, h, frames)
