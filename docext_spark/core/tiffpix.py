@@ -32,9 +32,17 @@ compression 2, or Group 4 MMR = T.6 compression 4, via
 core/ccittfax.py — fax state fresh per strip), and NEW-STYLE JPEG
 (Compression 7, TIFF Tech Note 2: each strip/tile a standalone JPEG
 routed through core/jpegpix.py, JPEGTables tag 347 spliced in).
-Anything else — e.g. floating-point or palette TIFF — returns None: a 100TB scan must never
-die on one odd blob; filter on the null and route exotica to a codec
-fleet.
+Anything else — e.g. floating-point or palette TIFF — returns None: a
+100TB scan must never die on one odd blob; filter on the null and route
+exotica to a codec fleet. A field with no values, or a JPEGTables field
+holding values above 255, is malformed and returns None too.
+
+Decode layout: every path (raw/LZW/Deflate/PackBits, bilevel, JPEG)
+goes through the one _read_chunks, which lists the strip or tile
+regions, checks coverage and bounds, and crops each decoded chunk into
+place; a path supplies only how one chunk's bytes become rows. Planar 2
+runs it once per sample plane. The encoders write their IFD through the
+one field list in _assemble_tiff.
 Cross-ecosystem bit-compat: LZW, CCITT RLE/G4, and 16-bit fixtures
 written by Java 17 ImageIO's independent TIFF plugin decode exactly,
 and Java reads THIS encoder's JPEG-in-TIFF layouts pixel-exact
@@ -269,103 +277,48 @@ def _read_values(payload: bytes, bo: str, typ: int, count: int,
     return list(struct.unpack(bo + fmt * count, buf))
 
 
-def _decode_bilevel(payload, w, h, compression, photometric,
-                    rows_per_strip, offs, cnts):
-    """1-bit strips → (w, h, 1, 8-bit samples, black=0). Compression 1
-    = byte-aligned bit-packed rows (MSB first); 2 = CCITT RLE (per-row
-    Modified Huffman, T.4); 4 = Group 4 MMR (T.6). Stored bit 1 scales
-    to 255, then PhotometricInterpretation 0 (the fax default:
-    WhiteIsZero, ink=1) inverts so consumers always see black=0."""
-    from docext_spark.core import ccittfax
-    out = bytearray()
-    rows_left = h
-    for off, cnt in zip(offs, cnts):
-        strip_rows = min(rows_per_strip, rows_left)
-        if strip_rows <= 0 or off + cnt > len(payload):
+def _read_chunks(payload, w, h, spp, offs, cnts, rows_per_strip, tile,
+                 decode):
+    """One top-down w×h image of ``spp`` bytes per pixel from its strips
+    or, with ``tile`` = (tw, tl), from its tiles (§15: raster order,
+    edge tiles stored at full size). Owns the region list, the coverage
+    and bounds checks and the crop-and-blit. ``decode(raw, cw, rows)``
+    turns one chunk's bytes, stored as cw × rows pixels, into (stride,
+    data) or None; data must hold every row the image keeps, and may be
+    wider or taller (JPEG pads to whole MCUs). A bytearray or None."""
+    if tile:
+        tw, tl = tile
+        across = (w + tw - 1) // tw
+        if len(offs) != across * ((h + tl - 1) // tl):
             return None
-        raw = payload[off:off + cnt]
-        if compression == 1:
-            row_bytes = (w + 7) // 8
-            if len(raw) != strip_rows * row_bytes:
-                return None
-            bits = bytearray(strip_rows * w)
-            for y in range(strip_rows):
-                base = y * row_bytes
-                for x in range(w):
-                    bits[y * w + x] = \
-                        (raw[base + (x >> 3)] >> (7 - (x & 7))) & 1
-            bits = bytes(bits)
-        elif compression == 2:
-            bits = ccittfax.rle_decode(raw, w, strip_rows)
-        else:
-            bits = ccittfax.g4_decode(raw, w, strip_rows)
-        if bits is None:
+        regions = [(t % across * tw, t // across * tl, tw, tl)
+                   for t in range(len(offs))]
+    else:
+        regions, y = [], 0
+        for _ in offs:
+            rows = min(rows_per_strip, h - y)
+            if rows <= 0:
+                return None               # more strips than rows claim
+            regions.append((0, y, w, rows))
+            y += rows
+        if y != h:
             return None
-        out += bits
-        rows_left -= strip_rows
-    if rows_left:
-        return None
-    samples = bytes(255 * b for b in out)
-    if photometric == 0:
-        samples = bytes(255 - b for b in samples)
-    return (w, h, 1, samples)
-
-
-def _decode_tiff_jpeg(payload, w, h, spp, rows_per_strip, offs, cnts,
-                      tile_dims, jpeg_tables):
-    """Compression 7: decode each strip/tile through core/jpegpix.py.
-    Strip/tile JPEG dims may exceed the nominal region (encoders pad to
-    MCU multiples) — the excess is cropped. A JPEGTables stream (SOI +
-    DQT/DHT + EOI) is spliced after each chunk's SOI."""
-    from docext_spark.core import jpegpix
-    tables_body = b""
-    if jpeg_tables:
-        if len(jpeg_tables) < 4 or jpeg_tables[:2] != b"\xff\xd8" \
-                or jpeg_tables[-2:] != b"\xff\xd9":
-            return None
-        tables_body = jpeg_tables[2:-2]
-
-    def dec(chunk):
-        if len(chunk) < 2 or chunk[:2] != b"\xff\xd8":
-            return None
-        return jpegpix.decode_jpeg(b"\xff\xd8" + tables_body + chunk[2:])
-
-    def blit(out, d, x0, y0, want_w, want_h):
-        dw, dh, dspp, data = d
-        if dspp != spp or dw < want_w or dh < want_h:
-            return False
-        cols = want_w * spp
-        for yy in range(want_h):
-            dst = ((y0 + yy) * w + x0) * spp
-            out[dst:dst + cols] = data[yy * dw * spp:
-                                       yy * dw * spp + cols]
-        return True
-
     out = bytearray(w * h * spp)
-    if tile_dims:
-        tw, tl = tile_dims
-        ta, td = (w + tw - 1) // tw, (h + tl - 1) // tl
-        if len(offs) != ta * td:
+    for (x0, y0, cw, rows), off, cnt in zip(regions, offs, cnts):
+        if off + cnt > len(payload):
             return None
-        for t, (off, cnt) in enumerate(zip(offs, cnts)):
-            if off + cnt > len(payload):
-                return None
-            d = dec(payload[off:off + cnt])
-            tx, ty = (t % ta) * tw, (t // ta) * tl
-            if d is None or not blit(out, d, tx, ty,
-                                     min(tw, w - tx), min(tl, h - ty)):
-                return None
-        return (w, h, spp, bytes(out))
-    y = 0
-    for off, cnt in zip(offs, cnts):
-        strip_rows = min(rows_per_strip, h - y)
-        if strip_rows <= 0 or off + cnt > len(payload):
+        chunk = decode(payload[off:off + cnt], cw, rows)
+        if chunk is None:
             return None
-        d = dec(payload[off:off + cnt])
-        if d is None or not blit(out, d, 0, y, w, strip_rows):
+        stride, data = chunk
+        cols = min(cw, w - x0) * spp
+        keep = min(rows, h - y0)
+        if stride < cols or len(data) < keep * stride:
             return None
-        y += strip_rows
-    return (w, h, spp, bytes(out)) if y == h else None
+        for yy in range(keep):
+            dst = ((y0 + yy) * w + x0) * spp
+            out[dst:dst + cols] = data[yy * stride:yy * stride + cols]
+    return out
 
 
 def split_jpeg_tables(jpeg: bytes) -> tuple[bytes, bytes]:
@@ -451,26 +404,9 @@ def encode_tiff_jpeg(width: int, height: int, channels: int,
         tables = split_jpeg_tables(chunks[0])[0]
         chunks = [split_jpeg_tables(c)[1] for c in chunks]
 
-    def make_fields(offs, cnts):
-        fields = [
-            (256, 4, [width]), (257, 4, [height]),
-            (258, 3, [8] * channels), (259, 3, [7]),
-            (262, 3, [6 if channels == 3 else 1]),
-        ]
-        if not tile_size:
-            fields.append((273, 4, offs))
-        fields.append((277, 3, [channels]))
-        if not tile_size:
-            fields += [(278, 4, [rps]), (279, 4, cnts)]
-        fields.append((284, 3, [1]))
-        if tile_size:
-            fields += [(322, 3, [tw_]), (323, 3, [tl_]),
-                       (324, 4, offs), (325, 4, cnts)]
-        if tables:
-            fields.append((347, 7, list(tables)))
-        return fields
-
-    return _assemble_tiff(bo, chunks, make_fields)
+    return _assemble_tiff(bo, chunks, width, height, [8] * channels, 7,
+                          6 if channels == 3 else 1, rps, tile=tile_size,
+                          tables=tables)
 
 
 def decode_tiff(payload: bytes | None):
@@ -536,125 +472,99 @@ def decode_tiff(payload: bytes | None):
             > 4 * MAX_PIXELS:
         return None                       # padded-tile allocation bound
     if spp not in (1, 3) or planar not in (1, 2) \
-            or photometric not in (0, 1, 2, 6):
+            or photometric not in (0, 1, 2, 6) \
+            or len(chunk_offs) != len(chunk_counts):
         return None
     if bits == [1]:
-        # BILEVEL: uncompressed bit-packed rows, CCITT RLE (Modified
-        # Huffman, compression 2) or Group 4 MMR (compression 4) —
-        # strips only, one sample plane, fax state fresh per strip
+        # BILEVEL: uncompressed bit-packed rows (MSB first), CCITT RLE
+        # (Modified Huffman, T.4, compression 2) or Group 4 MMR (T.6,
+        # compression 4) — strips only, one sample plane, fax state
+        # fresh per strip; stored bit 1 scales to 255
         if spp != 1 or planar != 1 or photometric not in (0, 1) \
                 or compression not in (1, 2, 4) or predictor != 1 \
-                or tiled or len(chunk_offs) != len(chunk_counts):
+                or tiled:
             return None
-        return _decode_bilevel(payload, w, h, compression, photometric,
-                               rows_per_strip, chunk_offs, chunk_counts)
-    if compression == 7:
+        from docext_spark.core import ccittfax
+
+        def decode(raw, cw, rows):
+            if compression == 1:
+                row_bytes = (cw + 7) // 8
+                if len(raw) != rows * row_bytes:
+                    return None
+                ink = [(raw[y * row_bytes + (x >> 3)] >> (7 - (x & 7))) & 1
+                       for y in range(rows) for x in range(cw)]
+            else:
+                ink = (ccittfax.rle_decode if compression == 2
+                       else ccittfax.g4_decode)(raw, cw, rows)
+            return None if ink is None else (cw, bytes(255 * b for b in ink))
+    elif compression == 7:
         # new-style JPEG-in-TIFF (TIFF Tech Note 2): every strip/tile is
         # a standalone JPEG stream; abbreviated streams pull their
-        # DQT/DHT segments from the JPEGTables tag (347)
-        if any(b != 8 for b in bits) or spp not in (1, 3) \
-                or planar != 1 or photometric not in (1, 6) \
-                or predictor != 1 \
-                or len(chunk_offs) != len(chunk_counts) \
-                or any(v > 255 for v in tags.get(347, ())):
+        # DQT/DHT segments from the JPEGTables tag (347), spliced in
+        # after each chunk's SOI
+        tables = tags.get(347, [])
+        if any(b != 8 for b in bits) or planar != 1 \
+                or photometric not in (1, 6) or predictor != 1 \
+                or any(v > 255 for v in tables):
             return None                   # JPEGTables hold bytes
-        return _decode_tiff_jpeg(payload, w, h, spp, rows_per_strip,
-                                 chunk_offs, chunk_counts,
-                                 (tw, tl) if tiled else None,
-                                 bytes(tags.get(347, [])))
-    if photometric == 6:
-        return None                       # raw YCbCr samples: only as JPEG
-    if all(b == 8 for b in bits) and len(bits) in (1, spp):
-        sb = 1                            # bytes per stored sample
-    elif all(b == 16 for b in bits) and len(bits) in (1, spp):
-        sb = 2                            # 16-bit: decode high byte
+        tables = bytes(tables)
+        if tables and (len(tables) < 4 or tables[:2] != b"\xff\xd8"
+                       or tables[-2:] != b"\xff\xd9"):
+            return None
+        from docext_spark.core import jpegpix
+
+        def decode(raw, cw, rows):
+            if raw[:2] != b"\xff\xd8":
+                return None
+            d = jpegpix.decode_jpeg(b"\xff\xd8" + tables[2:-2] + raw[2:])
+            return None if d is None or d[2] != spp else (d[0] * spp, d[3])
     else:
-        return None
-    if compression not in (1, 5, 8, 32946, 32773):
-        return None
-    if predictor not in (1, 2) or (predictor == 2 and compression == 1):
-        return None                       # predictor only with compression
-    if len(chunk_offs) != len(chunk_counts):
-        return None
-    hi = 1 if bo == "<" else 0            # offset of the high sample byte
-
-    def decode_chunk(off, cnt, rows, row_px, pred_spp):
-        """One strip or one tile: slice, decompress (bounded: a tiny
-        stream claiming huge output is cut at expect+1 and rejected),
-        verify exact length, undo the per-row predictor (byte-wise for
-        8-bit, per-16-bit-value for 16-bit), then downscale 16-bit
-        samples to their high byte so every downstream step is
-        byte-per-sample. ``row_px`` = samples per row in this plane."""
-        if off + cnt > len(payload):
+        if photometric == 6:
+            return None                   # raw YCbCr samples: only as JPEG
+        if all(b == 8 for b in bits) and len(bits) in (1, spp):
+            sb = 1                        # bytes per stored sample
+        elif all(b == 16 for b in bits) and len(bits) in (1, spp):
+            sb = 2                        # 16-bit: decode high byte
+        else:
             return None
-        row_bytes = row_px * sb
-        expect = rows * row_bytes
-        raw = payload[off:off + cnt]
-        if compression == 32773:
-            raw = packbits_decode(raw, expect)
-        elif compression == 5:
-            raw = lzw_decode(raw, expect)
-        elif compression in (8, 32946):
-            try:
-                raw = zlib.decompressobj().decompress(raw, expect + 1)
-            except zlib.error:
-                return None
-        if raw is None or len(raw) != expect:
+        if compression not in (1, 5, 8, 32946, 32773):
             return None
-        if predictor == 2:                # per-row horizontal differencing
-            dec = bytearray(raw)
-            for y0 in range(0, expect, row_bytes):
-                row = dec[y0:y0 + row_bytes]
-                if sb == 1:
-                    _predictor2_decode(row, pred_spp)
-                else:
-                    _predictor2_decode16(row, pred_spp, bo)
-                dec[y0:y0 + row_bytes] = row
-            raw = bytes(dec)
-        if sb == 2:
-            raw = raw[hi::2]
-        return raw
+        if predictor not in (1, 2) or (predictor == 2 and compression == 1):
+            return None                   # predictor only with compression
+        hi = 1 if bo == "<" else 0        # offset of the high sample byte
 
-    def read_strips(offs, cnts, row_px, pred_spp):
-        """Decode one chunky image or one planar-2 sample plane: h rows
-        of ``row_px`` samples across these strips, predictor stride
-        ``pred_spp``. Returns the (byte-per-sample) buffer or None."""
-        buf = bytearray()
-        rows_left = h
-        for off, cnt in zip(offs, cnts):
-            strip_rows = min(rows_per_strip, rows_left)
-            if strip_rows <= 0:
-                return None               # more strips than rows claim
-            raw = decode_chunk(off, cnt, strip_rows, row_px, pred_spp)
-            if raw is None:
+        def decode(raw, cw, rows, ps=spp):
+            """Decompress one chunk of ``ps`` samples per pixel (bounded:
+            a tiny stream claiming huge output is cut at expect+1 and
+            rejected), verify its exact length, undo the per-row
+            predictor (byte-wise for 8-bit, per-16-bit-value for 16-bit)
+            and downscale 16-bit samples to their high byte."""
+            row_bytes = cw * ps * sb
+            expect = rows * row_bytes
+            if compression == 32773:
+                raw = packbits_decode(raw, expect)
+            elif compression == 5:
+                raw = lzw_decode(raw, expect)
+            elif compression in (8, 32946):
+                try:
+                    raw = zlib.decompressobj().decompress(raw, expect + 1)
+                except zlib.error:
+                    return None
+            if raw is None or len(raw) != expect:
                 return None
-            buf += raw
-            rows_left -= strip_rows
-        return buf if rows_left == 0 else None
+            if predictor == 2:            # per-row horizontal differencing
+                dec = bytearray(raw)
+                for y0 in range(0, expect, row_bytes):
+                    row = dec[y0:y0 + row_bytes]
+                    if sb == 1:
+                        _predictor2_decode(row, ps)
+                    else:
+                        _predictor2_decode16(row, ps, bo)
+                    dec[y0:y0 + row_bytes] = row
+                raw = bytes(dec)
+            return cw * ps, raw[hi::2] if sb == 2 else raw
 
-    def read_tiles(offs, cnts, pred_spp):
-        """Decode one chunky image or one planar-2 plane from tiles
-        (§15): raster-ordered left-to-right top-to-bottom, every tile
-        stored padded to the full tw×tl; edge padding cropped on blit."""
-        ta, td = (w + tw - 1) // tw, (h + tl - 1) // tl
-        if len(offs) != ta * td:
-            return None
-        row_bytes = tw * pred_spp         # decoded: byte per sample
-        out = bytearray(w * h * pred_spp)
-        for t, (off, cnt) in enumerate(zip(offs, cnts)):
-            tile = decode_chunk(off, cnt, tl, tw * pred_spp, pred_spp)
-            if tile is None:
-                return None
-            tx, ty = (t % ta) * tw, (t // ta) * tl
-            cols = min(tw, w - tx) * pred_spp
-            for yy in range(min(tl, h - ty)):
-                dst = ((ty + yy) * w + tx) * pred_spp
-                out[dst:dst + cols] = tile[yy * row_bytes:
-                                           yy * row_bytes + cols]
-        return out
-
-    read_plane = ((lambda o, c, rb, ps: read_tiles(o, c, ps)) if tiled
-                  else read_strips)
+    tile = (tw, tl) if tiled else None
     if planar == 2 and spp > 1:
         # §Planar Configuration: StripsPerImage strips (or TilesPerImage
         # tiles) per sample plane, all plane-0 chunks first; each plane
@@ -665,14 +575,16 @@ def decode_tiff(payload: bytes | None):
         per = len(chunk_offs) // spp
         out = bytearray(w * h * spp)
         for ci in range(spp):
-            plane = read_plane(chunk_offs[ci * per:(ci + 1) * per],
-                               chunk_counts[ci * per:(ci + 1) * per],
-                               w, 1)
+            plane = _read_chunks(
+                payload, w, h, 1, chunk_offs[ci * per:(ci + 1) * per],
+                chunk_counts[ci * per:(ci + 1) * per], rows_per_strip, tile,
+                lambda raw, cw, rows: decode(raw, cw, rows, 1))
             if plane is None:
                 return None
             out[ci::spp] = plane
     else:
-        out = read_plane(chunk_offs, chunk_counts, w * spp, spp)
+        out = _read_chunks(payload, w, h, spp, chunk_offs, chunk_counts,
+                           rows_per_strip, tile, decode)
         if out is None:
             return None
     if photometric == 0:                  # WhiteIsZero → normalize black=0
@@ -784,32 +696,21 @@ def encode_tiff(width: int, height: int, channels: int, samples: bytes,
     else:
         strips = chunk_up(widen(samples), width * channels, channels)
 
-    def make_fields(offs, cnts):
-        # IFD layout: count + entries + next=0, then overflow value blobs
-        fields = [
-            (256, 4, [width]), (257, 4, [height]),
-            (258, 3, [bits] * channels), (259, 3, [compression]),
-            (262, 3, [photometric]),
-        ]
-        if not tile_size:
-            fields.append((273, 4, offs))
-        fields.append((277, 3, [channels]))
-        if not tile_size:
-            fields += [(278, 4, [rps]), (279, 4, cnts)]
-        fields.append((284, 3, [planar]))
-        if predictor == 2:
-            fields.append((317, 3, [2]))  # tags stay in ascending order
-        if tile_size:
-            fields += [(322, 3, [tw_]), (323, 3, [tl_]),
-                       (324, 4, offs), (325, 4, cnts)]
-        return fields
-
-    return _assemble_tiff(bo, strips, make_fields)
+    return _assemble_tiff(bo, strips, width, height, [bits] * channels,
+                          compression, photometric, rps, planar, predictor,
+                          tile_size)
 
 
-def _assemble_tiff(bo: str, strips: list[bytes], make_fields) -> bytes:
-    """header + chunk data + trailing IFD + overflow value blobs.
-    ``make_fields(offs, cnts)`` returns the ascending-tag field list."""
+def _assemble_tiff(bo: str, strips: list[bytes], width: int, height: int,
+                   bits: list[int], compression: int, photometric: int,
+                   rps: int, planar: int = 1, predictor: int = 1,
+                   tile: tuple[int, int] | None = None,
+                   tables: bytes = b"") -> bytes:
+    """header + chunk data + trailing IFD (count + entries + next=0) +
+    overflow value blobs. The one IFD field list of every encoder here,
+    in ascending tag order: ``bits`` per sample, strips (RowsPerStrip
+    ``rps``) or ``tile`` = (tw, tl), Predictor only when 2 and
+    JPEGTables only when ``tables`` is set."""
     head = (b"II*\x00" if bo == "<" else b"MM\x00*")
     pos = 8
     offs, cnts = [], []
@@ -830,7 +731,21 @@ def _assemble_tiff(bo: str, strips: list[bytes], make_fields) -> bytes:
         blob = struct.pack(bo + fmt * count, *vals)
         return (struct.pack(bo + "HHII", tag, typ, count, extra_off), blob)
 
-    fields = make_fields(offs, cnts)
+    fields = [(256, 4, [width]), (257, 4, [height]), (258, 3, bits),
+              (259, 3, [compression]), (262, 3, [photometric])]
+    if not tile:
+        fields.append((273, 4, offs))
+    fields.append((277, 3, [len(bits)]))
+    if not tile:
+        fields += [(278, 4, [rps]), (279, 4, cnts)]
+    fields.append((284, 3, [planar]))
+    if predictor == 2:
+        fields.append((317, 3, [2]))
+    if tile:
+        fields += [(322, 3, [tile[0]]), (323, 3, [tile[1]]),
+                   (324, 4, offs), (325, 4, cnts)]
+    if tables:
+        fields.append((347, 7, list(tables)))
     n = len(fields)
     blob_off = ifd_off + 2 + 12 * n + 4
     entries, blobs = b"", b""
@@ -887,13 +802,5 @@ def _encode_bilevel(width, height, channels, samples, byte_order,
         else:
             strips.append(ccittfax.g4_encode(part, width, rows))
 
-    def make_fields(offs, cnts):
-        return [
-            (256, 4, [width]), (257, 4, [height]),
-            (258, 3, [1]), (259, 3, [compression]),
-            (262, 3, [photometric]), (273, 4, offs),
-            (277, 3, [1]), (278, 4, [rps]), (279, 4, cnts),
-            (284, 3, [1]),
-        ]
-
-    return _assemble_tiff(bo, strips, make_fields)
+    return _assemble_tiff(bo, strips, width, height, [1], compression,
+                          photometric, rps)
