@@ -2945,7 +2945,7 @@ def _jpeg_progressive_pixels(spark, sf_dir):
     itself the strongest statement of the decoder's correctness."""
     from docext_spark.core import jpegpix
     return _resampled(_media(spark, [
-        jpegpix.encode_jpeg_progressive_gray(w, h, px)
+        jpegpix.encode_jpeg_progressive(w, h, [px])
         for _, w, h, px in _jpeg_block_fixtures()]), max_size=12)
 
 

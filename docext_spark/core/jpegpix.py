@@ -43,10 +43,13 @@ sequential DCT process — one walk over the MCUs of a gray plane or of
 Y plus pre-subsampled Cb/Cr, each block coded with Huffman codes (SOF0,
 Annex K tables, F.1.2) or the adaptive arithmetic coder (SOF9, F.1.4 and
 Annex D via core/jpegarith.py), with optional restart intervals and DAC
-conditioning. encode_jpeg_progressive_gray/_ycbcr_sub re-code the same
-quantized coefficients as SOF2 scan scripts and encode_jpeg_lossless
-writes SOF3. All DCT encoders share _quantize_block, so for the same
-planes every one of them decodes to the same pixels.
+conditioning. encode_jpeg_progressive takes the same planes and
+sampling factors and re-codes the same quantized coefficients as one
+SOF2 scan script (interleaved DC scans, per-component AC band scans:
+1-5 and 6-63 for gray, 1-63 for colour, each first at Al=1 and then
+refined). encode_jpeg_lossless writes SOF3. All DCT encoders share
+_quantize_block, so for the same planes every one of them decodes to
+the same pixels.
 """
 from __future__ import annotations
 
@@ -1266,164 +1269,89 @@ def _encode_ac_refine(wtr: _BitWriter, ac_codes, blocks, ss: int, se: int,
     eob.flush()
 
 
-def encode_jpeg_progressive_gray(w: int, h: int, pixels: bytes,
-                                 quant: int = 16) -> bytes:
-    """A real PROGRESSIVE grayscale JPEG (SOF2) with the classic
-    spectral-selection + successive-approximation scan script:
+def encode_jpeg_progressive(w: int, h: int, planes: list[bytes],
+                            sh: int = 1, sv: int = 1,
+                            quant: int = 16) -> bytes:
+    """A real PROGRESSIVE JPEG (SOF2, T.81 Annex G) over the same
+    ``planes``, sampling and flat quantization as encode_jpeg_sequential,
+    with the classic spectral-selection + successive-approximation scan
+    script:
 
-        1. DC first  (Al=1)         4. DC refine (Ah=1 → Al=0)
-        2. AC 1-5    first (Al=1)   5. AC 1-5  refine
-        3. AC 6-63   first (Al=1)   6. AC 6-63 refine
+        1. DC first (Al=1), interleaved over every component
+        2. per component, AC first (Al=1) per band
+        3. DC refine (Ah=1 → Al=0, raw bits), interleaved
+        4. per component, AC refine per band
 
-    Progressive coding is a LOSSLESS re-arrangement of the same quantized
-    coefficients, so decode(progressive(px)) == decode(baseline(px)) for
-    EVERY input — the equality the tests pin. Uses the same Annex K
-    Huffman tables and flat quant as the baseline encoder."""
-    if len(pixels) != w * h:
-        raise ValueError("pixel buffer does not match dims")
-    qt = [quant] * 64
-    blocks = _quantized_blocks_grid(pixels, w, h, qt,
-                                    (w + 7) // 8, (h + 7) // 8)
-    dc_codes = _encode_codes(_DC_COUNTS, _DC_SYMBOLS)
-    ac_codes = _encode_codes(_PROG_AC_COUNTS, _PROG_AC_SYMBOLS)
-
-    def sos(ss: int, se: int, ah: int, al: int, data: bytearray) -> bytes:
-        return _seg(0xDA, bytes([1, 1, 0x00, ss, se, (ah << 4) | al])) \
-            + bytes(data)
-
-    out = b"\xff\xd8" + _seg(0xDB, bytes([0x00]) + bytes(qt))
-    out += _seg(0xC2, bytes([8]) + struct.pack(">HH", h, w)
-                + bytes([1, 1, 0x11, 0]))
-    out += _seg(0xC4, bytes([0x00]) + _DC_COUNTS + _DC_SYMBOLS) \
-        + _seg(0xC4, bytes([0x10]) + _PROG_AC_COUNTS + _PROG_AC_SYMBOLS)
-
-    # 1: DC first, Al=1 (arithmetic shift: floor semantics match the
-    # decoder's pred << 1 + refinement-bit reconstruction exactly)
-    wtr = _BitWriter()
-    pred = 0
-    for q in blocks:
-        v = q[0] >> 1
-        _write_diff(wtr, dc_codes, v - pred)
-        pred = v
-    wtr.flush()
-    out += sos(0, 0, 0, 1, wtr.out)
-    # 2-3: AC first scans at Al=1
-    for band in ((1, 5), (6, 63)):
-        wtr = _BitWriter()
-        _encode_ac_first(wtr, ac_codes, blocks, band[0], band[1], 1)
-        wtr.flush()
-        out += sos(band[0], band[1], 0, 1, wtr.out)
-    # 4: DC refine (raw bits, no Huffman)
-    wtr = _BitWriter()
-    for q in blocks:
-        wtr.write(q[0] & 1, 1)
-    wtr.flush()
-    out += sos(0, 0, 1, 0, wtr.out)
-    # 5-6: AC refinement scans to full precision
-    for band in ((1, 5), (6, 63)):
-        wtr = _BitWriter()
-        _encode_ac_refine(wtr, ac_codes, blocks, band[0], band[1], 0)
-        wtr.flush()
-        out += sos(band[0], band[1], 1, 0, wtr.out)
-    return out + b"\xff\xd9"
-
-
-def _quantized_blocks_grid(plane: bytes, cw: int, ch: int, qt: list[int],
-                           bw: int, bh: int) -> list[list[int]]:
-    """Row-major quantized blocks over a (bw × bh) block grid — the input
-    of the progressive scan encoders. Interleaved scans also code the MCU
-    padding blocks beyond ceil dims (edge-replicated, exactly like the
-    sequential encoder emits them)."""
-    return [_quantize_block(plane, cw, ch, bx, by, qt)
-            for by in range(bh) for bx in range(bw)]
-
-
-def encode_jpeg_progressive_ycbcr_sub(w: int, h: int, y: bytes, cb: bytes,
-                                      cr: bytes, sh: int = 2, sv: int = 2,
-                                      quant: int = 16) -> bytes:
-    """PROGRESSIVE color JPEG with chroma subsampling: an interleaved DC
-    scan (all three components, Vi×Hi luma blocks per MCU, per-component
-    predictors) followed by per-component AC band scans with successive
-    approximation, then DC/AC refinement — the full real-world progressive
-    layout. Same lossless-re-coding property as the gray encoder:
-    decode(progressive) == decode(encode_jpeg_sequential) for every input
-    (identical quantized coefficients, different scan arrangement)."""
-    if sh not in (1, 2) or sv not in (1, 2):
-        raise ValueError("sampling factors must be 1 or 2")
+    The AC bands are 1-5 and 6-63 for gray, 1-63 for colour. Progressive
+    coding is a LOSSLESS re-arrangement of the same quantized
+    coefficients, so decode(progressive) == decode(encode_jpeg_sequential)
+    for EVERY input — the equality the tests pin."""
+    ncomp = len(planes)
+    if sh not in (1, 2) or sv not in (1, 2) \
+            or (ncomp == 1 and (sh, sv) != (1, 1)):
+        raise ValueError("sampling factors must be 1 or 2 (1 for gray)")
     cw, ch = (w + sh - 1) // sh, (h + sv - 1) // sv
-    if len(y) != w * h or len(cb) != cw * ch or len(cr) != cw * ch:
+    if ncomp not in (1, 3) or len(planes[0]) != w * h \
+            or any(len(p) != cw * ch for p in planes[1:]):
         raise ValueError("plane buffers do not match dims")
     qt = [quant] * 64
     mcux = (w + 8 * sh - 1) // (8 * sh)
     mcuy = (h + 8 * sv - 1) // (8 * sv)
-    # per-component padded block grids (luma bw = mcux*sh etc.)
-    grids = [
-        {"sh": sh, "sv": sv, "bw": mcux * sh, "bh": mcuy * sv,
-         "cw": w, "ch": h, "plane": y},
-        {"sh": 1, "sv": 1, "bw": mcux, "bh": mcuy,
-         "cw": cw, "ch": ch, "plane": cb},
-        {"sh": 1, "sv": 1, "bw": mcux, "bh": mcuy,
-         "cw": cw, "ch": ch, "plane": cr},
-    ]
-    for g in grids:
-        g["blocks"] = _quantized_blocks_grid(g["plane"], g["cw"], g["ch"],
-                                             qt, g["bw"], g["bh"])
+    comps = [(planes[0], w, h, sh, sv)] + [(p, cw, ch, 1, 1)
+                                           for p in planes[1:]]
+    # per component: the block grid padded to whole MCUs (interleaved DC
+    # scans also code the padding blocks, edge-replicated like the
+    # sequential encoder), and the blocks inside ceil(dims / 8) that a
+    # single-component AC scan codes
+    grids = [[[_quantize_block(plane, pw, ph, bx, by, qt)
+               for bx in range(mcux * nx)] for by in range(mcuy * ny)]
+             for plane, pw, ph, nx, ny in comps]
+    visible = [[q for row in grid[:(ph + 7) // 8] for q in row[:(pw + 7) // 8]]
+               for grid, (_, pw, ph, _, _) in zip(grids, comps)]
+    mcu_order = [(ci, grids[ci][my * ny + bi][mx * nx + bj])
+                 for my in range(mcuy) for mx in range(mcux)
+                 for ci, (_, _, _, nx, ny) in enumerate(comps)
+                 for bi in range(ny) for bj in range(nx)]
+    bands = ((1, 5), (6, 63)) if ncomp == 1 else ((1, 63),)
     dc_codes = _encode_codes(_DC_COUNTS, _DC_SYMBOLS)
     ac_codes = _encode_codes(_PROG_AC_COUNTS, _PROG_AC_SYMBOLS)
 
     out = b"\xff\xd8" + _seg(0xDB, bytes([0x00]) + bytes(qt))
-    sof_comps = bytes([1, (sh << 4) | sv, 0]) + bytes([2, 0x11, 0]) \
-        + bytes([3, 0x11, 0])
-    out += _seg(0xC2, bytes([8]) + struct.pack(">HH", h, w) + bytes([3])
-                + sof_comps)
+    out += _seg(0xC2, bytes([8]) + struct.pack(">HH", h, w) + bytes([ncomp])
+                + b"".join(bytes([c + 1, (sh << 4) | sv if c == 0 else 0x11,
+                                  0]) for c in range(ncomp)))
     out += _seg(0xC4, bytes([0x00]) + _DC_COUNTS + _DC_SYMBOLS) \
         + _seg(0xC4, bytes([0x10]) + _PROG_AC_COUNTS + _PROG_AC_SYMBOLS)
 
-    def mcu_blocks():
-        """(comp_idx, block_idx) in interleaved MCU order."""
-        for my in range(mcuy):
-            for mx in range(mcux):
-                for ci, g in enumerate(grids):
-                    for bi in range(g["sv"]):
-                        for bj in range(g["sh"]):
-                            yield ci, (my * g["sv"] + bi) * g["bw"] \
-                                + mx * g["sh"] + bj
-
-    # 1: interleaved DC first (Al=1)
-    wtr = _BitWriter()
-    preds = [0, 0, 0]
-    for ci, idx in mcu_blocks():
-        v = grids[ci]["blocks"][idx][0] >> 1
-        _write_diff(wtr, dc_codes, v - preds[ci])
-        preds[ci] = v
-    wtr.flush()
-    out += _seg(0xDA, bytes([3, 1, 0x00, 2, 0x00, 3, 0x00, 0, 0, 0x01])) \
-        + bytes(wtr.out)
-
-    def visible_blocks(g):
-        nbw, nbh = (g["cw"] + 7) // 8, (g["ch"] + 7) // 8
-        return [g["blocks"][by * g["bw"] + bx]
-                for by in range(nbh) for bx in range(nbw)]
-
-    # 2-7: per-component AC first scans at Al=1
-    for cid, g in ((1, grids[0]), (2, grids[1]), (3, grids[2])):
+    def scan(header: bytes, fill) -> bytes:
         wtr = _BitWriter()
-        _encode_ac_first(wtr, ac_codes, visible_blocks(g), 1, 63, 1)
+        fill(wtr)
         wtr.flush()
-        out += _seg(0xDA, bytes([1, cid, 0x00, 1, 63, 0x01])) + bytes(wtr.out)
-    # 8: interleaved DC refine (raw bits)
-    wtr = _BitWriter()
-    for ci, idx in mcu_blocks():
-        wtr.write(grids[ci]["blocks"][idx][0] & 1, 1)
-    wtr.flush()
-    out += _seg(0xDA, bytes([3, 1, 0x00, 2, 0x00, 3, 0x00, 0, 0, 0x10])) \
-        + bytes(wtr.out)
-    # 9-11: per-component AC refinement (Ah=1 → Al=0)
-    for cid, g in ((1, grids[0]), (2, grids[1]), (3, grids[2])):
-        wtr = _BitWriter()
-        _encode_ac_refine(wtr, ac_codes, visible_blocks(g), 1, 63, 0)
-        wtr.flush()
-        out += _seg(0xDA, bytes([1, cid, 0x00, 1, 63, 0x10])) + bytes(wtr.out)
+        return _seg(0xDA, header) + bytes(wtr.out)
+
+    def dc_first(wtr: _BitWriter):
+        # arithmetic shift: floor semantics match the decoder's
+        # pred << 1 + refinement-bit reconstruction exactly
+        preds = [0] * ncomp
+        for ci, q in mcu_order:
+            v = q[0] >> 1
+            _write_diff(wtr, dc_codes, v - preds[ci])
+            preds[ci] = v
+
+    def dc_refine(wtr: _BitWriter):
+        for _, q in mcu_order:
+            wtr.write(q[0] & 1, 1)
+
+    dc_header = bytes([ncomp]) + b"".join(bytes([c + 1, 0x00])
+                                          for c in range(ncomp))
+    for ah, al, dc_fill, ac_coder in ((0, 1, dc_first, _encode_ac_first),
+                                      (1, 0, dc_refine, _encode_ac_refine)):
+        out += scan(dc_header + bytes([0, 0, (ah << 4) | al]), dc_fill)
+        for ci in range(ncomp):
+            for ss, se in bands:
+                out += scan(bytes([1, ci + 1, 0x00, ss, se, (ah << 4) | al]),
+                            lambda wtr: ac_coder(wtr, ac_codes, visible[ci],
+                                                 ss, se, al))
     return out + b"\xff\xd9"
 
 

@@ -91,12 +91,11 @@ JPEG_GROUPS = {
                                  arith=True)),
     "jpeg_progressive_gray": (7, 1, False,
                               lambda w, h, p, sh, sv, q, ri, dc, kx:
-                              J.encode_jpeg_progressive_gray(w, h, p[0],
-                                                             quant=q)),
+                              J.encode_jpeg_progressive(w, h, p, quant=q)),
     "jpeg_progressive_ycbcr_sub": (8, 3, True,
                                    lambda w, h, p, sh, sv, q, ri, dc, kx:
-                                   J.encode_jpeg_progressive_ycbcr_sub(
-                                       w, h, *p, sh=sh, sv=sv, quant=q)),
+                                   J.encode_jpeg_progressive(
+                                       w, h, p, sh=sh, sv=sv, quant=q)),
 }
 
 EXPECTED = {

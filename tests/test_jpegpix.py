@@ -311,7 +311,7 @@ def test_progressive_equals_baseline_gray():
         h = 8 * rng.randint(1, 4) + rng.choice([0, 2, 7])
         px = bytes(rng.randrange(256) for _ in range(w * h))
         assert jpegpix.decode_jpeg(
-            jpegpix.encode_jpeg_progressive_gray(w, h, px)) \
+            jpegpix.encode_jpeg_progressive(w, h, [px])) \
             == jpegpix.decode_jpeg(
                 jpegpix.encode_jpeg_sequential(w, h, [px])), (w, h)
 
@@ -326,8 +326,7 @@ def test_progressive_equals_baseline_color_subsampled():
         cb = bytes(rng.randrange(256) for _ in range(cw * ch))
         cr = bytes(rng.randrange(256) for _ in range(cw * ch))
         assert jpegpix.decode_jpeg(
-            jpegpix.encode_jpeg_progressive_ycbcr_sub(w, h, y, cb, cr,
-                                                      sh, sv)) \
+            jpegpix.encode_jpeg_progressive(w, h, [y, cb, cr], sh, sv)) \
             == jpegpix.decode_jpeg(
                 jpegpix.encode_jpeg_sequential(w, h, [y, cb, cr],
                                                sh=sh, sv=sv)), \
@@ -341,7 +340,7 @@ def test_progressive_smooth_image_exercises_eob_runs():
     w, h = 32, 24
     px = bytes((((x // 8) * 3 + (yy // 8) * 5) % 128) * 2
                for yy in range(h) for x in range(w))
-    dec = jpegpix.decode_jpeg(jpegpix.encode_jpeg_progressive_gray(w, h, px))
+    dec = jpegpix.decode_jpeg(jpegpix.encode_jpeg_progressive(w, h, [px]))
     assert dec == (w, h, 1, px)
 
 
@@ -351,7 +350,7 @@ def test_progressive_truncation_total():
     point) but must stay total."""
     w, h = 16, 16
     px = bytes((i * 7) % 256 for i in range(w * h))
-    b = jpegpix.encode_jpeg_progressive_gray(w, h, px)
+    b = jpegpix.encode_jpeg_progressive(w, h, [px])
     for cut in range(0, len(b), 13):
         r = jpegpix.decode_jpeg(b[:cut])
         assert r is None or (isinstance(r, tuple) and r[0] == w)
@@ -363,7 +362,7 @@ def test_progressive_dc_only_prefix_renders():
     import struct
     w = h = 16
     px = bytes([100] * 128 + [200] * 128)
-    b = jpegpix.encode_jpeg_progressive_gray(w, h, px)
+    b = jpegpix.encode_jpeg_progressive(w, h, [px])
     # locate the end of the first SOS scan (next 0xFF-marker after it)
     i = b.find(b"\xff\xda")
     seg_len = struct.unpack(">H", b[i + 2:i + 4])[0]
@@ -389,7 +388,7 @@ def test_refine_correction_beyond_zrl_run():
         natural[ZIGZAG[k]] = v * 16
     spatial = idct2d(natural)
     px = bytes(min(255, max(0, int(round(s)) + 128)) for s in spatial)
-    assert jpegpix.decode_jpeg(jpegpix.encode_jpeg_progressive_gray(8, 8, px)) \
+    assert jpegpix.decode_jpeg(jpegpix.encode_jpeg_progressive(8, 8, [px])) \
         == jpegpix.decode_jpeg(jpegpix.encode_jpeg_sequential(8, 8, [px]))
 
 
@@ -404,7 +403,7 @@ def test_progressive_smooth_with_detail_equality():
         px = bytes(min(255, (x + y) * 4 + (200 if (x, y) == (cx, cy) else 0))
                    for y in range(h) for x in range(w))
         assert jpegpix.decode_jpeg(
-            jpegpix.encode_jpeg_progressive_gray(w, h, px)) \
+            jpegpix.encode_jpeg_progressive(w, h, [px])) \
             == jpegpix.decode_jpeg(
                 jpegpix.encode_jpeg_sequential(w, h, [px])), \
             (cx, cy)
@@ -415,7 +414,7 @@ def test_duplicate_sof_returns_none():
     never-raise totality contract), not a KeyError from an orphaned
     progressive coefficient store."""
     import struct
-    b = jpegpix.encode_jpeg_progressive_gray(16, 16, bytes(range(256)))
+    b = jpegpix.encode_jpeg_progressive(16, 16, [bytes(range(256))])
     i = b.find(b"\xff\xc2")
     ln = struct.unpack(">H", b[i + 2:i + 4])[0]
     dup = b[:i + 2 + ln] + b[i:i + 2 + ln] + b[i + 2 + ln:]
