@@ -315,6 +315,9 @@ def _read_chunks(payload, w, h, spp, offs, cnts, rows_per_strip, tile,
         keep = min(rows, h - y0)
         if stride < cols or len(data) < keep * stride:
             return None
+        if cols == stride == w * spp:     # whole rows: one contiguous copy
+            out[y0 * cols:(y0 + keep) * cols] = data[:keep * cols]
+            continue
         for yy in range(keep):
             dst = ((y0 + yy) * w + x0) * spp
             out[dst:dst + cols] = data[yy * stride:yy * stride + cols]
