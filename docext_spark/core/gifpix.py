@@ -137,7 +137,7 @@ def _gif_blocks(payload: bytes, pos: int):
         b = payload[pos]
         if b == 0x21 and pos + 2 <= n:           # extension
             blocks, end = _sub_blocks(payload, pos + 2)
-            yield "ext", payload[pos + 1], blocks
+            yield ("ext", payload[pos + 1], blocks)
             pos = end
         elif b == 0x2C and pos + 10 <= n:        # image descriptor
             rect = struct.unpack("<HHHH", payload[pos + 1:pos + 9])

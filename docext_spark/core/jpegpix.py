@@ -1054,6 +1054,35 @@ def _quantize_block(plane: bytes, w: int, h: int, bx: int, by: int,
     return [int(round(coef[ZIGZAG[k]] / qt[k])) for k in range(64)]
 
 
+def _dct_components(w: int, h: int, planes: list[bytes], sh: int,
+                    sv: int) -> list[tuple[bytes, int, int, int, int]]:
+    """Check the planes of a DCT encoder — [gray] (w×h) or [Y, Cb, Cr]
+    with full-resolution luma and PRE-SUBSAMPLED chroma at ceil(w/sh) ×
+    ceil(h/sv), luma sampling (sh, sv) ∈ {1,2}² — and return, per
+    component, (plane, plane w, plane h, blocks across, blocks down per
+    MCU)."""
+    ncomp = len(planes)
+    if sh not in (1, 2) or sv not in (1, 2) \
+            or (ncomp == 1 and (sh, sv) != (1, 1)):
+        raise ValueError("sampling factors must be 1 or 2 (1 for gray)")
+    cw, ch = (w + sh - 1) // sh, (h + sv - 1) // sv
+    if ncomp not in (1, 3) or len(planes[0]) != w * h \
+            or any(len(p) != cw * ch for p in planes[1:]):
+        raise ValueError("plane buffers do not match dims")
+    return [(planes[0], w, h, sh, sv)] + [(p, cw, ch, 1, 1)
+                                          for p in planes[1:]]
+
+
+def _dct_frame(marker: int, w: int, h: int, comps, qt: list[int]) -> bytes:
+    """SOI, the one flat quantization table and the frame header (SOFn)
+    of a DCT encoder's components."""
+    return b"\xff\xd8" + _seg(0xDB, bytes([0x00]) + bytes(qt)) \
+        + _seg(marker, bytes([8]) + struct.pack(">HH", h, w)
+               + bytes([len(comps)])
+               + b"".join(bytes([c + 1, (nx << 4) | ny, 0])
+                          for c, (_, _, _, nx, ny) in enumerate(comps)))
+
+
 def encode_jpeg_sequential(w: int, h: int, planes: list[bytes],
                            sh: int = 1, sv: int = 1, quant: int = 16,
                            restart_interval: int = 0, arith: bool = False,
@@ -1079,18 +1108,9 @@ def encode_jpeg_sequential(w: int, h: int, planes: list[bytes],
     coefficients, so they decode to the same pixels.
     ``restart_interval`` > 0 emits DRI + RSTn markers every that many
     MCUs with the coder reset (the camera-JPEG error-resilience layout)."""
-    ncomp = len(planes)
-    if sh not in (1, 2) or sv not in (1, 2) \
-            or (ncomp == 1 and (sh, sv) != (1, 1)):
-        raise ValueError("sampling factors must be 1 or 2 (1 for gray)")
-    cw, ch = (w + sh - 1) // sh, (h + sv - 1) // sv
-    if ncomp not in (1, 3) or len(planes[0]) != w * h \
-            or any(len(p) != cw * ch for p in planes[1:]):
-        raise ValueError("plane buffers do not match dims")
+    comps = _dct_components(w, h, planes, sh, sv)
+    ncomp = len(comps)
     qt = [quant] * 64
-    # (plane, plane w, plane h, blocks across, blocks down) per MCU
-    comps = [(planes[0], w, h, sh, sv)] + [(p, cw, ch, 1, 1)
-                                           for p in planes[1:]]
     areas = [0] + [1] * (ncomp - 1)
     if arith:
         from docext_spark.core.jpegarith import ArithScanEncoder
@@ -1137,13 +1157,7 @@ def encode_jpeg_sequential(w: int, h: int, planes: list[bytes],
         entropy = bytes(writer.out)
         tables = _seg(0xC4, bytes([0x00]) + _DC_COUNTS + _DC_SYMBOLS) \
             + _seg(0xC4, bytes([0x10]) + _AC_COUNTS + _AC_SYMBOLS)
-    samplings = [(sh << 4) | sv] + [0x11] * (ncomp - 1)
-    out = b"\xff\xd8" + _seg(0xDB, bytes([0x00]) + bytes(qt))
-    out += _seg(0xC9 if arith else 0xC0, bytes([8])
-                + struct.pack(">HH", h, w) + bytes([ncomp])
-                + b"".join(bytes([c + 1, samplings[c], 0])
-                           for c in range(ncomp)))
-    out += tables
+    out = _dct_frame(0xC9 if arith else 0xC0, w, h, comps, qt) + tables
     if restart_interval:
         out += _seg(0xDD, struct.pack(">H", restart_interval))
     out += _seg(0xDA, bytes([ncomp])
@@ -1286,19 +1300,11 @@ def encode_jpeg_progressive(w: int, h: int, planes: list[bytes],
     coding is a LOSSLESS re-arrangement of the same quantized
     coefficients, so decode(progressive) == decode(encode_jpeg_sequential)
     for EVERY input — the equality the tests pin."""
-    ncomp = len(planes)
-    if sh not in (1, 2) or sv not in (1, 2) \
-            or (ncomp == 1 and (sh, sv) != (1, 1)):
-        raise ValueError("sampling factors must be 1 or 2 (1 for gray)")
-    cw, ch = (w + sh - 1) // sh, (h + sv - 1) // sv
-    if ncomp not in (1, 3) or len(planes[0]) != w * h \
-            or any(len(p) != cw * ch for p in planes[1:]):
-        raise ValueError("plane buffers do not match dims")
+    comps = _dct_components(w, h, planes, sh, sv)
+    ncomp = len(comps)
     qt = [quant] * 64
     mcux = (w + 8 * sh - 1) // (8 * sh)
     mcuy = (h + 8 * sv - 1) // (8 * sv)
-    comps = [(planes[0], w, h, sh, sv)] + [(p, cw, ch, 1, 1)
-                                           for p in planes[1:]]
     # per component: the block grid padded to whole MCUs (interleaved DC
     # scans also code the padding blocks, edge-replicated like the
     # sequential encoder), and the blocks inside ceil(dims / 8) that a
@@ -1316,10 +1322,7 @@ def encode_jpeg_progressive(w: int, h: int, planes: list[bytes],
     dc_codes = _encode_codes(_DC_COUNTS, _DC_SYMBOLS)
     ac_codes = _encode_codes(_PROG_AC_COUNTS, _PROG_AC_SYMBOLS)
 
-    out = b"\xff\xd8" + _seg(0xDB, bytes([0x00]) + bytes(qt))
-    out += _seg(0xC2, bytes([8]) + struct.pack(">HH", h, w) + bytes([ncomp])
-                + b"".join(bytes([c + 1, (sh << 4) | sv if c == 0 else 0x11,
-                                  0]) for c in range(ncomp)))
+    out = _dct_frame(0xC2, w, h, comps, qt)
     out += _seg(0xC4, bytes([0x00]) + _DC_COUNTS + _DC_SYMBOLS) \
         + _seg(0xC4, bytes([0x10]) + _PROG_AC_COUNTS + _PROG_AC_SYMBOLS)
 
