@@ -129,7 +129,7 @@ def _gif_blocks(payload: bytes, pos: int):
     """Walk the GIF89a block grammar from ``pos``. Yields
     ("ext", label, sub-blocks) per extension, ("image", (left, top, w,
     h), interlaced, local color table or None, LZW minimum code size,
-    LZW data) per image and, as the last event, ("bad",) for a truncated
+    LZW data sub-blocks) per image and, as the last event, ("bad",) for a truncated
     or unknown block. The trailer or the end of the payload ends the
     walk."""
     n = len(payload)
@@ -153,7 +153,7 @@ def _gif_blocks(payload: bytes, pos: int):
                 return
             blocks, end = _sub_blocks(payload, pos + 1)
             yield ("image", rect, bool(ipacked & 0x40), lct, payload[pos],
-                   b"".join(blocks))
+                   blocks)
             pos = end
         elif b == 0x3B:                          # trailer
             return
@@ -202,7 +202,7 @@ def decode_gif(payload: bytes | None):
         palette = screen[3] if lct is None else lct
         if palette is None or w == 0 or h == 0 or w * h > MAX_PIXELS:
             return None                          # decode-bomb guard too
-        indices = _lzw_decode(min_code_size, data, w * h)
+        indices = _lzw_decode(min_code_size, b"".join(data), w * h)
         if indices is None or len(indices) < w * h:
             return None
         rgb = bytearray(w * h * 3)
@@ -364,7 +364,7 @@ def decode_gif_frames(payload: bytes | None, max_frames: int = 64):
         if palette is None or fw == 0 or fh == 0 \
                 or left + fw > w or top + fh > h:
             return None
-        indices = _lzw_decode(min_code_size, data, fw * fh)
+        indices = _lzw_decode(min_code_size, b"".join(data), fw * fh)
         if indices is None or len(indices) < fw * fh:
             return None
         before = bytes(canvas) if disposal == 3 else None
