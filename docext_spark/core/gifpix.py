@@ -192,14 +192,15 @@ def decode_gif(payload: bytes | None):
     screen = _gif_screen(payload)
     if screen is None:
         return None
-    for event in _gif_blocks(payload, screen[4]):
+    _, _, _, gct, pos = screen
+    for event in _gif_blocks(payload, pos):
         if event[0] != "image":
             if event[0] == "bad":
                 return None
             continue
         _, rect, interlaced, lct, min_code_size, data = event
         w, h = rect[2:]
-        palette = screen[3] if lct is None else lct
+        palette = gct if lct is None else lct
         if palette is None or w == 0 or h == 0 or w * h > MAX_PIXELS:
             return None                          # decode-bomb guard too
         indices = _lzw_decode(min_code_size, b"".join(data), w * h)
@@ -299,11 +300,12 @@ def gif_animation_info(payload: bytes | None):
     screen = _gif_screen(payload)
     if screen is None:
         return None
+    w, h, _, _, pos = screen
     n_frames = 0
     total_ms = 0
     loop = None
     pending_delay = 0
-    for event in _gif_blocks(payload, screen[4]):
+    for event in _gif_blocks(payload, pos):
         if event[0] == "bad":
             return None
         if event[0] == "image":
@@ -320,7 +322,7 @@ def gif_animation_info(payload: bytes | None):
             loop = struct.unpack("<H", blocks[1][1:3])[0]
     if n_frames == 0:
         return None
-    return (screen[0], screen[1], n_frames, total_ms, loop)
+    return (w, h, n_frames, total_ms, loop)
 
 
 def decode_gif_frames(payload: bytes | None, max_frames: int = 64):
