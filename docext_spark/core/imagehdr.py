@@ -51,12 +51,13 @@ def sniff_format(payload: bytes | None) -> str | None:
 
 def png_dims(payload: bytes) -> tuple[int, int] | None:
     """PNG IHDR is mandated to be the first chunk: width/height are
-    big-endian u32 at fixed offsets 16/20."""
+    big-endian u32 at fixed offsets 16/20, limited to 1..2**31-1 (PNG
+    spec section 7.1); anything outside that range is not a PNG."""
     if len(payload) < 24 or payload[:8] != PNG_SIG \
             or payload[12:16] != b"IHDR":
         return None
     w, h = struct.unpack(">II", payload[16:24])
-    return (w, h) if w > 0 and h > 0 else None
+    return (w, h) if 0 < w < 2**31 and 0 < h < 2**31 else None
 
 
 def jpeg_dims(payload: bytes) -> tuple[int, int] | None:

@@ -204,12 +204,14 @@ def png_dims_native(payload: Column) -> Column:
     PNG mandates IHDR first, so width/height are big-endian u32 at fixed
     offsets 16/20 (1-based 17/21). Non-PNG payloads decode to null."""
     # full twin of core.imagehdr.png_dims: signature AND IHDR-first-chunk
-    # AND positive dims — a PNG-signature payload with a junk first chunk
-    # must decode to null, not to whatever u32s sit at the offsets
+    # AND dims in 1..2**31-1 — a PNG-signature payload with a junk first
+    # chunk must decode to null, not to whatever u32s sit at the offsets;
+    # try_cast nulls a u32 past Int32 instead of failing the ANSI cast
     is_png = ((F.hex(F.substring(payload, 1, 8)) == "89504E470D0A1A0A")
               & (F.hex(F.substring(payload, 13, 4)) == "49484452"))
     def be_u32(pos: int) -> Column:
-        return F.conv(F.hex(F.substring(payload, pos, 4)), 16, 10).cast("int")
+        return F.conv(F.hex(F.substring(payload, pos, 4)), 16,
+                      10).try_cast("int")
     w, h = be_u32(17), be_u32(21)
     return F.when(is_png & (w > 0) & (h > 0),
                   F.struct(w.alias("width"), h.alias("height")))

@@ -80,6 +80,13 @@ def test_png_dims_native_matches_python_decoder(spark):
     # the python twin (signature + IHDR + positive-dim checks all enforced)
     rows.append((98, ih.PNG_SIG + b"\x00" * 16))   # junk first chunk
     rows.append((97, ih.make_png(0, 10)))          # zero width invalid
+    # PNG dims are limited to 2**31-1 (spec 7.1): a larger u32 is not a
+    # PNG, and the native cast must null it instead of failing the task
+    big = [(96, ih.make_png(3_992_977_415, 10)), (95, ih.make_png(10, 2**31)),
+           (94, ih.make_png(2**31 - 1, 2**31 - 1))]
+    assert [ih.png_dims(p) for _, p in big] == [None, None,
+                                                (2**31 - 1, 2**31 - 1)]
+    rows += big
     df = spark.createDataFrame(rows, "media_id int, payload binary")
     out = {r["media_id"]: r["d"] for r in
            df.select("media_id",

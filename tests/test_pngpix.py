@@ -168,6 +168,24 @@ def test_resample_images_undecodable_yields_nulls(spark):
     assert feats == {0: "bytes", 1: "bytes", 2: "bytes"}
 
 
+def test_extract_features_png_dims_past_int32(spark):
+    """A flipped IHDR byte can claim a width of 2**31 or more: that is not
+    a PNG (spec 7.1), so the row keeps null dims and the task survives."""
+    import pandas as pd
+    from docext_spark.operators.multimodal import extract_features
+    good = pngpix.encode_png(4, 3, 3, _pattern(4, 3, 3))
+    bad = bytearray(good)
+    bad[16] = 0xEE
+    media = spark.createDataFrame(
+        pd.DataFrame([(0, "image", good), (1, "image", bytes(bad))],
+                     columns=["media_id", "kind", "payload"]),
+        "media_id long, kind string, payload binary")
+    got = {r["media_id"]: r for r in extract_features(media).collect()}
+    assert (got[0]["width"], got[0]["height"]) == (4, 3)
+    assert got[1]["width"] is None and got[1]["height"] is None
+    assert got[1]["feature_src"] == "bytes"
+
+
 def test_decode_bomb_guard():
     """Review r4b: IHDR dims are attacker-controlled and the zlib stream
     can be a decompression bomb — both must be bounded before allocation."""
