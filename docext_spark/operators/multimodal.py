@@ -37,8 +37,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from docext_spark.core import (bmppix, gifpix, imagehdr, jpegpix, pngpix,
-                               tiffpix, vp8lpix)
+from docext_spark.core import (bmppix, ebml, flacdec, gifpix, imagehdr,
+                               isobmff, jpegpix, mpegaudio, oggmeta, pngpix,
+                               tiffpix, vp8lpix, wavpcm)
 
 
 def _decode_image_pixels(payload):
@@ -76,8 +77,8 @@ FEATURE_SCHEMA = T.StructType([
     T.StructField("n_bytes", T.IntegerType(), False),
     T.StructField("feature", T.ArrayType(T.FloatType()), False),
     # 'pixels' when the feature was computed from fully decoded samples
-    # (PNG / GIF / JPEG / BMP / TIFF, via _decode_image_pixels), 'bytes'
-    # for the opaque-payload fallback
+    # (PNG / GIF / JPEG / BMP / TIFF / lossless WebP, via
+    # _decode_image_pixels), 'bytes' for the opaque-payload fallback
     T.StructField("feature_src", T.StringType(), False),
 ])
 
@@ -85,8 +86,8 @@ FEATURE_SCHEMA = T.StructType([
 def _histogram8(data: bytes) -> list[float]:
     """Deterministic 8-bin value histogram over a byte buffer — applied to
     DECODED PIXEL SAMPLES when the payload fully decodes (PNG / GIF /
-    JPEG / BMP / TIFF), else to the raw payload bytes (the fallback a real
-    extractor would route to a codec fleet)."""
+    JPEG / BMP / TIFF / lossless WebP), else to the raw payload bytes (the
+    fallback a real extractor would route to a codec fleet)."""
     buckets = [0] * 8
     for b in data or b"":
         buckets[b >> 5] += 1
@@ -104,39 +105,54 @@ def _decode(payload: bytes, kind: str):
     return parsed if parsed else (None, None, None)
 
 
+def _map_payloads(media: DataFrame, schema: T.StructType, rows_of,
+                  *cols: str) -> DataFrame:
+    """The one Python-to-Arrow boundary of the operators below: for each
+    input row, ``rows_of(*values of cols)`` returns zero or more output
+    tuples (every schema field after media_id), and each batch becomes one
+    pandas frame typed from ``schema``. Integer fields become nullable
+    Int32/Int64 with any value outside the type's range nulled (parsed
+    header fields are attacker-controlled: one out-of-range value must
+    null one cell, never fail the task); booleans become ``boolean`` and
+    doubles ``float64``."""
+    def column(field: T.StructField, values):
+        t = field.dataType
+        if isinstance(t, (T.IntegerType, T.LongType)):
+            bits = 32 if isinstance(t, T.IntegerType) else 64
+            lim = 2 ** (bits - 1)
+            return pd.array([v if v is not None and -lim <= v < lim else None
+                             for v in values], dtype=f"Int{bits}")
+        if isinstance(t, T.BooleanType):
+            return pd.array(values, dtype="boolean")
+        if isinstance(t, T.DoubleType):
+            return pd.array(values, dtype="float64")
+        return list(values)
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = [(mid,) + row for mid, *vals
+                    in zip(pdf["media_id"], *(pdf[c] for c in cols))
+                    for row in rows_of(*vals)]
+            values = list(zip(*rows)) or [()] * len(schema.fields)
+            yield pd.DataFrame({f.name: column(f, v)
+                                for f, v in zip(schema.fields, values)})
+    return media.select("media_id", *cols).mapInPandas(run, schema=schema)
+
+
 def extract_features(media: DataFrame) -> DataFrame:
     """mapInPandas perception: Arrow batches of binary payloads in; sniffed
     format + dims decoded from the real header bytes + fixed-width features
     out. Payloads with a decodable pixel stream (PNG, GIF, baseline or
-    progressive JPEG incl. subsampled color, BMP, baseline TIFF) get their
-    feature from the REAL decoded samples (feature_src='pixels');
-    everything else falls back to the payload-byte histogram ('bytes').
-    Partition-parallel, no shuffle."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            decoded = [_decode(p, k)
-                       for p, k in zip(pdf["payload"], pdf["kind"])]
-            feats, srcs = [], []
-            for p in pdf["payload"]:
-                pix = _decode_image_pixels(p)
-                if pix is not None:
-                    feats.append(_histogram8(pix[3]))
-                    srcs.append("pixels")
-                else:
-                    feats.append(_histogram8(p))
-                    srcs.append("bytes")
-            yield pd.DataFrame({
-                "media_id": pdf["media_id"],
-                "kind": pdf["kind"],
-                "format": [d[0] for d in decoded],
-                "width": pd.array([d[1] for d in decoded], dtype="Int32"),
-                "height": pd.array([d[2] for d in decoded], dtype="Int32"),
-                "n_bytes": [len(p or b"") for p in pdf["payload"]],
-                "feature": feats,
-                "feature_src": srcs,
-            })
-    cols = media.select("media_id", "kind", "payload")
-    return cols.mapInPandas(run, schema=FEATURE_SCHEMA)
+    progressive JPEG incl. subsampled color, BMP, baseline TIFF, lossless
+    WebP) get their feature from the REAL decoded samples
+    (feature_src='pixels'); everything else falls back to the payload-byte
+    histogram ('bytes'). Partition-parallel, no shuffle."""
+    def rows_of(kind, p):
+        pix = _decode_image_pixels(p)
+        return [(kind, *_decode(p, kind), len(p or b""),
+                 _histogram8(p if pix is None else pix[3]),
+                 "bytes" if pix is None else "pixels")]
+    return _map_payloads(media, FEATURE_SCHEMA, rows_of, "kind", "payload")
 
 
 RESAMPLE_SCHEMA = T.StructType([
@@ -155,7 +171,8 @@ RESAMPLE_SCHEMA = T.StructType([
 def resample_images(media: DataFrame, max_size: int = 2048) -> DataFrame:
     """REAL pixel resample (the formerly stubbed codec step): decode the
     pixel stream (PNG via stdlib zlib, GIF via full LZW, JPEG via
-    Huffman+IDCT, BMP, baseline TIFF — _decode_image_pixels), bound the
+    Huffman+IDCT, BMP, baseline TIFF, lossless WebP via VP8L —
+    _decode_image_pixels), bound the
     longest side to ``max_size`` (reference core/utils.py:49-53 rule, never
     upscale), nearest-neighbor resample with the integer floor map
     src = dst·src_dim // dst_dim, and emit a position-weighted checksum +
@@ -163,38 +180,18 @@ def resample_images(media: DataFrame, max_size: int = 2048) -> DataFrame:
     can replay without decoding anything. Undecodable payloads yield null
     decode fields, never an exception (100TB scans outlive corrupt blobs).
     Partition-parallel mapInPandas, no shuffle."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            n = len(pdf)
-            fmt, dims = [], {k: [None] * n for k in
-                            ("w", "h", "ch", "nw", "nh", "cs", "mean")}
-            for i, p in enumerate(pdf["payload"]):
-                fmt.append(imagehdr.sniff_format(p))
-                dec = _decode_image_pixels(p)
-                if dec is None:
-                    continue
-                w, h, ch, px = dec
-                nw, nh = pngpix.bounded_dims(w, h, max_size)
-                out = (pngpix.resize_nearest(w, h, ch, px, nw, nh)
-                       if (nw, nh) != (w, h) else px)
-                d = dims
-                d["w"][i], d["h"][i], d["ch"][i] = w, h, ch
-                d["nw"][i], d["nh"][i] = nw, nh
-                d["cs"][i] = sum(b * (j + 1) for j, b in enumerate(out))
-                d["mean"][i] = sum(out) / len(out)
-            yield pd.DataFrame({
-                "media_id": pdf["media_id"],
-                "format": fmt,
-                "width": pd.array(dims["w"], dtype="Int32"),
-                "height": pd.array(dims["h"], dtype="Int32"),
-                "channels": pd.array(dims["ch"], dtype="Int32"),
-                "new_width": pd.array(dims["nw"], dtype="Int32"),
-                "new_height": pd.array(dims["nh"], dtype="Int32"),
-                "px_checksum": pd.array(dims["cs"], dtype="Int64"),
-                "px_mean": pd.array(dims["mean"], dtype="float64"),
-            })
-    cols = media.select("media_id", "payload")
-    return cols.mapInPandas(run, schema=RESAMPLE_SCHEMA)
+    def rows_of(p):
+        fmt, dec = imagehdr.sniff_format(p), _decode_image_pixels(p)
+        if dec is None:
+            return [(fmt,) + (None,) * 7]
+        w, h, ch, px = dec
+        nw, nh = pngpix.bounded_dims(w, h, max_size)
+        out = (pngpix.resize_nearest(w, h, ch, px, nw, nh)
+               if (nw, nh) != (w, h) else px)
+        return [(fmt, w, h, ch, nw, nh,
+                 sum(b * (j + 1) for j, b in enumerate(out)),
+                 sum(out) / len(out))]
+    return _map_payloads(media, RESAMPLE_SCHEMA, rows_of, "payload")
 
 
 def png_dims_native(payload: Column) -> Column:
@@ -358,34 +355,12 @@ def audio_features(media: DataFrame) -> DataFrame:
     from the sample generator (for ADPCM: a recursive-CTE replay of the
     adaptation fold). Perceptual-codec/undecodable payloads yield nulls,
     never an exception. Partition-parallel mapInPandas, no shuffle."""
-    from docext_spark.core import flacdec, wavpcm
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            n = len(pdf)
-            cols = {k: [None] * n for k in
-                    ("rate", "ch", "fr", "dur", "peak", "zc", "cs")}
-            for i, p in enumerate(pdf["payload"]):
-                # container sniff is the first check in each decoder, so
-                # chaining costs a magic-bytes compare on the miss
-                f = wavpcm.wav_features(p) or flacdec.flac_features(p)
-                if f is None:
-                    continue
-                (cols["rate"][i], cols["ch"][i], cols["fr"][i],
-                 cols["dur"][i], cols["peak"][i], cols["zc"][i],
-                 cols["cs"][i]) = f
-            yield pd.DataFrame({
-                "media_id": pdf["media_id"],
-                "sample_rate": pd.array(cols["rate"], dtype="Int32"),
-                "n_channels": pd.array(cols["ch"], dtype="Int32"),
-                "n_frames": pd.array(cols["fr"], dtype="Int32"),
-                "duration_ms": pd.array(cols["dur"], dtype="Int32"),
-                "peak": pd.array(cols["peak"], dtype="Int32"),
-                "zero_crossings": pd.array(cols["zc"], dtype="Int32"),
-                "amp_checksum": pd.array(cols["cs"], dtype="Int64"),
-            })
-    return media.select("media_id", "payload").mapInPandas(
-        run, schema=AUDIO_SCHEMA)
+    def rows_of(p):
+        # container sniff is the first check in each decoder, so chaining
+        # costs a magic-bytes compare on the miss
+        return [wavpcm.wav_features(p) or flacdec.flac_features(p)
+                or (None,) * 7]
+    return _map_payloads(media, AUDIO_SCHEMA, rows_of, "payload")
 
 
 def wav_pcm_fixture_hex(seed: Column, n_samples: Column,
@@ -467,49 +442,20 @@ def gif_frames(media: DataFrame) -> DataFrame:
     frame_sample_plan: for GIFs the frame decode is REAL, not stubbed.
     Undecodable payloads yield one all-null row (filter on frame_idx IS
     NULL). Partition-parallel mapInPandas, no shuffle."""
-    from docext_spark.core import gifpix
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("media_id", "frame_idx", "delay_ms",
-                                   "width", "height", "n_frames",
-                                   "loop_count", "px_checksum")}
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                dec = gifpix.decode_gif_frames(p)
-                info = gifpix.gif_animation_info(p)
-                if dec is None or info is None:
-                    for k in out:
-                        out[k].append(mid if k == "media_id" else None)
-                    continue
-                w, h, frames = dec
-                for fi, (delay, rgb) in enumerate(frames):
-                    out["media_id"].append(mid)
-                    out["frame_idx"].append(fi)
-                    out["delay_ms"].append(delay)
-                    out["width"].append(w)
-                    out["height"].append(h)
-                    out["n_frames"].append(info[2])
-                    out["loop_count"].append(info[4])
-                    out["px_checksum"].append(
-                        sum(b * (i + 1) for i, b in enumerate(rgb)))
-            yield pd.DataFrame({
-                "media_id": out["media_id"],
-                "frame_idx": pd.array(out["frame_idx"], dtype="Int32"),
-                "delay_ms": pd.array(out["delay_ms"], dtype="Int32"),
-                "width": pd.array(out["width"], dtype="Int32"),
-                "height": pd.array(out["height"], dtype="Int32"),
-                "n_frames": pd.array(out["n_frames"], dtype="Int32"),
-                "loop_count": pd.array(out["loop_count"], dtype="Int32"),
-                "px_checksum": pd.array(out["px_checksum"],
-                                        dtype="Int64"),
-            })
-    return media.select("media_id", "payload").mapInPandas(
-        run, schema=GIF_FRAMES_SCHEMA)
+    def rows_of(p):
+        dec, info = gifpix.decode_gif_frames(p), gifpix.gif_animation_info(p)
+        if dec is None or info is None:
+            return [(None,) * 7]
+        w, h, frames = dec
+        return [(fi, delay, w, h, info[2], info[4],
+                 sum(b * (i + 1) for i, b in enumerate(rgb)))
+                for fi, (delay, rgb) in enumerate(frames)]
+    return _map_payloads(media, GIF_FRAMES_SCHEMA, rows_of, "payload")
 
 
 CONTAINER_META_SCHEMA = T.StructType([
     T.StructField("media_id", T.LongType(), False),
-    T.StructField("container", T.StringType(), True),   # mp4 | mp3
+    T.StructField("container", T.StringType(), True),   # mp4 | mkv | ogg | mp3
     T.StructField("brand", T.StringType(), True),       # ftyp / mpeg ver
     T.StructField("track_id", T.IntegerType(), True),
     T.StructField("handler", T.StringType(), True),     # vide | soun
@@ -539,72 +485,33 @@ def container_metadata(media: DataFrame) -> DataFrame:
     decode for these perceptual codecs stays honest codec-fleet
     territory. Unparseable payloads yield one all-null row (filter on
     container IS NULL). Partition-parallel mapInPandas, no shuffle."""
-    from docext_spark.core import (ebml, isobmff, mpegaudio,
-                                   oggmeta)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in CONTAINER_META_SCHEMA.fields]
-        for pdf in batches:
-            rows = []
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                m = isobmff.parse_mp4(p)
-                if m is not None:
-                    if not m["tracks"]:
-                        # parseable container, empty track list: keep the
-                        # media_id visible with container set (ADVICE r6:
-                        # silently dropping the id contradicts the
-                        # all-null-row contract)
-                        rows.append((mid, "mp4", m["brand"]) + (None,) * 11)
-                        continue
-                    for t in m["tracks"]:
-                        rows.append((mid, "mp4", m["brand"],
-                                     t["track_id"], t["handler"],
-                                     t["codec"], t["width"],
-                                     t["height"], t["duration_ms"],
-                                     None, None, None, None, None))
-                    continue
-                k = ebml.parse_matroska(p)
-                if k is not None:
-                    if not k["tracks"]:
-                        rows.append((mid, "mkv", k["doctype"]) + (None,) * 11)
-                        continue
-                    for t in k["tracks"]:
-                        rows.append((mid, "mkv", k["doctype"],
-                                     t["track_id"], t["kind"],
-                                     t["codec"], t["width"],
-                                     t["height"], k["duration_ms"],
-                                     t["sample_rate"], t["channels"],
-                                     None, None, None))
-                    continue
-                o = oggmeta.parse_ogg(p)
-                if o is not None:
-                    rows.append((mid, "ogg", o["codec"], None, "soun",
-                                 o["codec"], None, None,
-                                 o["duration_ms"], o["sample_rate"],
-                                 o["channels"], None, o["n_pages"],
-                                 None))
-                    continue
-                a = mpegaudio.parse_mp3(p)
-                if a is not None:
-                    rows.append((mid, "mp3", a["version"], None, "soun",
-                                 f"mp{a['layer']}", None, None,
-                                 a["duration_ms"], a["sample_rate"],
-                                 a["channels"], a["bitrate_kbps"],
-                                 a["n_frames"], a["vbr"]))
-                    continue
-                rows.append((mid,) + (None,) * 13)
-            pdf_out = pd.DataFrame(rows, columns=cols)
-            for c in ("track_id", "width", "height", "duration_ms",
-                      "sample_rate", "channels", "bitrate_kbps",
-                      "n_frames"):
-                # parsed values are unbounded (64-bit mvhd/mdhd v1
-                # durations, EBML varint uints): null anything outside
-                # Int32 rather than crash the task on the coercion
-                # (ADVICE r6: 'cannot safely cast non-equivalent int64')
-                pdf_out[c] = pd.array(
-                    [v if v is not None and -2**31 <= v < 2**31 else None
-                     for v in pdf_out[c]], dtype="Int32")
-            pdf_out["vbr"] = pd.array(pdf_out["vbr"], dtype="boolean")
-            yield pdf_out
-    return media.select("media_id", "payload").mapInPandas(
-        run, schema=CONTAINER_META_SCHEMA)
+    def rows_of(p):
+        # a parseable container with an empty track list still emits one
+        # row with container set (silently dropping the id would break the
+        # all-null-row contract)
+        m = isobmff.parse_mp4(p)
+        if m is not None:
+            return [("mp4", m["brand"], t["track_id"], t["handler"],
+                     t["codec"], t["width"], t["height"], t["duration_ms"])
+                    + (None,) * 5 for t in m["tracks"]] \
+                or [("mp4", m["brand"]) + (None,) * 11]
+        k = ebml.parse_matroska(p)
+        if k is not None:
+            return [("mkv", k["doctype"], t["track_id"], t["kind"],
+                     t["codec"], t["width"], t["height"], k["duration_ms"],
+                     t["sample_rate"], t["channels"], None, None, None)
+                    for t in k["tracks"]] \
+                or [("mkv", k["doctype"]) + (None,) * 11]
+        o = oggmeta.parse_ogg(p)
+        if o is not None:
+            return [("ogg", o["codec"], None, "soun", o["codec"], None, None,
+                     o["duration_ms"], o["sample_rate"], o["channels"], None,
+                     o["n_pages"], None)]
+        a = mpegaudio.parse_mp3(p)
+        if a is not None:
+            return [("mp3", a["version"], None, "soun", f"mp{a['layer']}",
+                     None, None, a["duration_ms"], a["sample_rate"],
+                     a["channels"], a["bitrate_kbps"], a["n_frames"],
+                     a["vbr"])]
+        return [(None,) * 13]
+    return _map_payloads(media, CONTAINER_META_SCHEMA, rows_of, "payload")

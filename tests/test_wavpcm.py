@@ -102,6 +102,27 @@ def test_audio_features_undecodable_yields_nulls(spark):
                for r in got)
 
 
+def test_audio_features_out_of_int32_yields_nulls(spark):
+    """A sample rate of 0xFFFFFFFF, or a duration past 2**31-1 ms (rate 1
+    with 2.2M frames), nulls that cell instead of failing the task."""
+    import struct
+
+    import pandas as pd
+    from docext_spark.operators.multimodal import audio_features
+    b = bytearray(wavpcm.encode_wav(8000, 1, [1, -1, 2]))
+    b[24:28] = struct.pack("<I", 0xFFFFFFFF)   # fmt sample_rate
+    slow = wavpcm.encode_wav(1, 1, [0] * 2_200_000, bits=8)
+    media = spark.createDataFrame(
+        pd.DataFrame([(0, bytes(b)), (1, slow)],
+                     columns=["media_id", "payload"]),
+        "media_id long, payload binary")
+    got = {r["media_id"]: r for r in audio_features(media).collect()}
+    assert got[0]["sample_rate"] is None
+    assert (got[0]["n_frames"], got[0]["duration_ms"]) == (3, 0)
+    assert (got[1]["sample_rate"], got[1]["n_frames"]) == (1, 2_200_000)
+    assert got[1]["duration_ms"] is None
+
+
 def test_zero_sample_rate_rejected():
     """A crafted fmt chunk with sample_rate=0 must decode to None, never
     reach duration math (ADVICE r4: ZeroDivisionError escaped the scan)."""
