@@ -28,6 +28,8 @@ from __future__ import annotations
 
 import hashlib
 
+from docext_spark.core import wavpcm
+
 # decode-bomb guard: a handful of tiny CONSTANT frames can claim 65535
 # samples each; bound the total expansion like MAX_PIXELS in the image
 # decoders
@@ -669,15 +671,4 @@ def flac_features(payload: bytes | None, checksum_offset: int = 32768):
     """Same analytic invariants as wavpcm.wav_features, from a real FLAC
     decode: (rate, channels, n_frames, duration_ms, peak,
     zero_crossings, amp_checksum) or None."""
-    dec = decode_flac(payload)
-    if dec is None:
-        return None
-    rate, channels, _, samples = dec
-    n_frames = len(samples) // channels
-    duration_ms = n_frames * 1000 // rate
-    peak = max((abs(s) for s in samples), default=0)
-    zc = sum(1 for i in range(channels, len(samples))
-             if samples[i - channels] * samples[i] < 0)
-    checksum = sum((s + checksum_offset) * (i + 1)
-                   for i, s in enumerate(samples))
-    return (rate, channels, n_frames, duration_ms, peak, zc, checksum)
+    return wavpcm.pcm_features(decode_flac(payload), checksum_offset)

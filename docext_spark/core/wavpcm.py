@@ -224,7 +224,12 @@ def wav_features(payload: bytes | None, checksum_offset: int = 32768):
     (sample_rate, n_channels, n_frames, duration_ms, peak, zero_crossings,
     amp_checksum). All pure integer arithmetic so a SQL oracle can replay
     them from the sample generator without parsing a byte."""
-    dec = decode_wav(payload)
+    return pcm_features(decode_wav(payload), checksum_offset)
+
+
+def pcm_features(dec, checksum_offset: int = 32768):
+    """The wav_features fold over any lossless decoder's
+    (rate, channels, bits, samples) result, or None for None."""
     if dec is None:
         return None
     rate, channels, _, samples = dec
