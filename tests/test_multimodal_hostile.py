@@ -66,7 +66,7 @@ def _fixtures():
     ]
 
 
-def hostile_media(seed, flips=48, cuts=24):
+def _hostile_media(seed, flips=48, cuts=24):
     """Each fixture, ``cuts`` seeded truncations of it and ``flips``
     seeded single-byte overwrites, as (kind, payload) rows."""
     rng = random.Random(seed)
@@ -92,7 +92,7 @@ def test_hostile_payloads_never_fail_a_task(spark):
                                                    extract_features,
                                                    gif_frames,
                                                    resample_images)
-    rows = hostile_media(15)
+    rows = _hostile_media(15)
     assert len(rows) >= 1000
     media = spark.createDataFrame(
         pd.DataFrame([(i, k, p) for i, (k, p) in enumerate(rows)],
