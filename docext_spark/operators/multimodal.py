@@ -70,7 +70,8 @@ MEDIA_SCHEMA = T.StructType([
 
 FEATURE_SCHEMA = T.StructType([
     T.StructField("media_id", T.LongType(), False),
-    T.StructField("kind", T.StringType(), False),
+    # nullable: the input kind is passed through as is, null included
+    T.StructField("kind", T.StringType(), True),
     T.StructField("format", T.StringType(), True),     # sniffed container
     T.StructField("width", T.IntegerType(), True),     # decoded from bytes
     T.StructField("height", T.IntegerType(), True),
@@ -96,12 +97,12 @@ def _histogram8(data: bytes) -> list[float]:
 
 
 def _decode(payload: bytes, kind: str):
-    """Header-level decode on real bytes: (format, width, height). Unknown
-    media kinds fail loudly; undecodable payloads yield nulls (a 100TB
-    scan must never die on one corrupt blob — filter on format IS NULL)."""
-    if kind not in ("image", "audio", "video"):
-        raise NotImplementedError(f"unknown media kind: {kind}")
-    parsed = imagehdr.parse_dims(payload)
+    """Header-level decode on real bytes: (format, width, height). A media
+    kind other than image/audio/video (null included) and an undecodable
+    payload both yield nulls (a 100TB scan must never die on one bad row —
+    filter on format IS NULL)."""
+    parsed = (kind in ("image", "audio", "video")
+              and imagehdr.parse_dims(payload))
     return parsed if parsed else (None, None, None)
 
 

@@ -5,7 +5,8 @@ fail a task: every decoded value either fits its column or is null. This
 file builds one small valid fixture per format (PNG, still and animated
 GIF, JPEG, BMP, TIFF, WebP, WAV, FLAC, MP4, MKV, Ogg, MP3), plus a TIFF
 whose ImageWidth is a LONG past Int32, then derives seeded truncations and
-byte flips from each and runs every operator over the lot.
+byte flips from each and runs every operator over the lot, together with
+rows whose media kind is neither image, audio nor video.
 """
 from __future__ import annotations
 
@@ -94,6 +95,11 @@ def test_hostile_payloads_never_fail_a_task(spark):
                                                    resample_images)
     rows = _hostile_media(15)
     assert len(rows) >= 1000
+    # a media kind outside image/audio/video, and a null one, null that
+    # row's decode fields instead of failing the extract_features task
+    png = pngpix.encode_png(2, 2, 1, bytes(range(4)))
+    odd_kinds = {len(rows): "document", len(rows) + 1: None}
+    rows += [(k, png) for k in odd_kinds.values()]
     media = spark.createDataFrame(
         pd.DataFrame([(i, k, p) for i, (k, p) in enumerate(rows)],
                      columns=["media_id", "kind", "payload"]),
@@ -114,3 +120,9 @@ def test_hostile_payloads_never_fail_a_task(spark):
         if op in (extract_features, resample_images):
             row = next(r for r in got if r["media_id"] == wide)
             assert row["width"] is None
+        if op is extract_features:
+            for r in got:
+                if r["media_id"] in odd_kinds:
+                    assert r["kind"] == odd_kinds[r["media_id"]]
+                    assert (r["format"], r["width"], r["height"]) == (
+                        None, None, None)
