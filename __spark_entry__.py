@@ -2740,23 +2740,18 @@ def _doc_media(spark, sf_dir, fixture_hex):
 def _resampled(media, max_size, with_f0=True):
     """The result every ``*_pixels`` query returns: decoded dims plus the
     NN resample's checksum and 6dp mean, and with ``with_f0`` histogram
-    bin 0 of the decoded pixels and the feature source, joined on
-    media_id."""
-    from docext_spark.operators.multimodal import (extract_features,
-                                                   resample_images)
+    bin 0 of the decoded pixels and the feature source. All of it comes
+    from one ``resample_images`` pass, so each payload is decoded once."""
+    from docext_spark.operators.multimodal import resample_images
     cols = ["media_id", "format", "width", "height", "channels",
             "new_width", "new_height", "px_checksum",
             F.round("px_mean", 6).alias("px_mean")]
-    rs = resample_images(media, max_size=max_size)
-    if not with_f0:
-        return rs.select(*cols)
-    feats = extract_features(media).select(
-        "media_id",
+    if with_f0:
         # f32 storage cast back to double before the 6dp round (same
         # pattern as multimodal_features)
-        F.round(F.element_at("feature", 1).cast("double"), 6).alias("f0"),
-        "feature_src")
-    return rs.join(feats, "media_id").select(*cols, "f0", "feature_src")
+        cols += [F.round(F.element_at("feature", 1).cast("double"), 6)
+                  .alias("f0"), "feature_src"]
+    return resample_images(media, max_size=max_size).select(*cols)
 
 
 def _fixture_ids_sql(n, cols):

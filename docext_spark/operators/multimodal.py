@@ -84,16 +84,21 @@ FEATURE_SCHEMA = T.StructType([
 ])
 
 
-def _histogram8(data: bytes) -> list[float]:
-    """Deterministic 8-bin value histogram over a byte buffer — applied to
-    DECODED PIXEL SAMPLES when the payload fully decodes (PNG / GIF /
-    JPEG / BMP / TIFF / lossless WebP), else to the raw payload bytes (the
-    fallback a real extractor would route to a codec fleet)."""
+def _histogram8(payload: bytes, dec) -> tuple[list[float], str]:
+    """(feature, feature_src) of one payload, given its
+    ``_decode_image_pixels`` result ``dec``: the deterministic 8-bin value
+    histogram of the DECODED PIXEL SAMPLES and 'pixels' when the payload
+    fully decodes (PNG / GIF / JPEG / BMP / TIFF / lossless WebP), else of
+    the raw payload bytes and 'bytes' (the fallback a real extractor would
+    route to a codec fleet). Both callers, extract_features and
+    resample_images, take their feature from here, so they agree on every
+    payload."""
+    data, src = ((payload or b"", "bytes") if dec is None
+                 else (dec[3], "pixels"))
     buckets = [0] * 8
-    for b in data or b"":
+    for b in data:
         buckets[b >> 5] += 1
-    total = max(1, len(data or b""))
-    return [round(c / total, 6) for c in buckets]
+    return [round(c / max(1, len(data)), 6) for c in buckets], src
 
 
 def _decode(payload: bytes, kind: str):
@@ -147,12 +152,11 @@ def extract_features(media: DataFrame) -> DataFrame:
     progressive JPEG incl. subsampled color, BMP, baseline TIFF, lossless
     WebP) get their feature from the REAL decoded samples
     (feature_src='pixels'); everything else falls back to the payload-byte
-    histogram ('bytes'). Partition-parallel, no shuffle."""
+    histogram ('bytes'), by the ``_histogram8`` rule resample_images shares.
+    Partition-parallel, no shuffle."""
     def rows_of(kind, p):
-        pix = _decode_image_pixels(p)
         return [(kind, *_decode(p, kind), len(p or b""),
-                 _histogram8(p if pix is None else pix[3]),
-                 "bytes" if pix is None else "pixels")]
+                 *_histogram8(p, _decode_image_pixels(p)))]
     return _map_payloads(media, FEATURE_SCHEMA, rows_of, "kind", "payload")
 
 
@@ -166,6 +170,12 @@ RESAMPLE_SCHEMA = T.StructType([
     T.StructField("new_height", T.IntegerType(), True),
     T.StructField("px_checksum", T.LongType(), True),   # Σ out[i]·(i+1)
     T.StructField("px_mean", T.DoubleType(), True),
+    # extract_features' feature and feature_src for the same payload, taken
+    # from this operator's one decode: the 8-bin histogram of the decoded
+    # (full-size, not resampled) samples and 'pixels', or of the payload
+    # bytes and 'bytes' when the payload does not decode
+    T.StructField("feature", T.ArrayType(T.FloatType()), False),
+    T.StructField("feature_src", T.StringType(), False),
 ])
 
 
@@ -178,20 +188,24 @@ def resample_images(media: DataFrame, max_size: int = 2048) -> DataFrame:
     upscale), nearest-neighbor resample with the integer floor map
     src = dst·src_dim // dst_dim, and emit a position-weighted checksum +
     mean over the RESAMPLED samples — exact analytic invariants an oracle
-    can replay without decoding anything. Undecodable payloads yield null
-    decode fields, never an exception (100TB scans outlive corrupt blobs).
+    can replay without decoding anything. The same decode also gives each
+    row extract_features' ``feature`` and ``feature_src``
+    (``_histogram8``), so a caller that wants both reads one operator and
+    decodes each payload once.
+    Undecodable payloads yield null decode fields and the payload-byte
+    feature, never an exception (100TB scans outlive corrupt blobs).
     Partition-parallel mapInPandas, no shuffle."""
     def rows_of(p):
         fmt, dec = imagehdr.sniff_format(p), _decode_image_pixels(p)
         if dec is None:
-            return [(fmt,) + (None,) * 7]
+            return [(fmt,) + (None,) * 7 + _histogram8(p, dec)]
         w, h, ch, px = dec
         nw, nh = pngpix.bounded_dims(w, h, max_size)
         out = (pngpix.resize_nearest(w, h, ch, px, nw, nh)
                if (nw, nh) != (w, h) else px)
         return [(fmt, w, h, ch, nw, nh,
                  sum(b * (j + 1) for j, b in enumerate(out)),
-                 sum(out) / len(out))]
+                 sum(out) / len(out), *_histogram8(p, dec))]
     return _map_payloads(media, RESAMPLE_SCHEMA, rows_of, "payload")
 
 

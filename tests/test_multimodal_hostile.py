@@ -105,6 +105,7 @@ def test_hostile_payloads_never_fail_a_task(spark):
                      columns=["media_id", "kind", "payload"]),
         "media_id long, kind string, payload binary").repartition(4)
     wide = rows.index(("image", _tiff_wide(2**31 + 5)))
+    features = {}
     for op in (extract_features, resample_images, audio_features,
                gif_frames, container_metadata):
         df = op(media)
@@ -120,9 +121,16 @@ def test_hostile_payloads_never_fail_a_task(spark):
         if op in (extract_features, resample_images):
             row = next(r for r in got if r["media_id"] == wide)
             assert row["width"] is None
+            features[op] = {r["media_id"]: (r["feature"], r["feature_src"])
+                            for r in got}
         if op is extract_features:
             for r in got:
                 if r["media_id"] in odd_kinds:
                     assert r["kind"] == odd_kinds[r["media_id"]]
                     assert (r["format"], r["width"], r["height"]) == (
                         None, None, None)
+    # resample_images carries extract_features' feature from its own
+    # decode, so a caller needs only one of the two operators
+    assert features[resample_images] == features[extract_features]
+    assert {src for _, src in features[extract_features].values()} == {
+        "bytes", "pixels"}

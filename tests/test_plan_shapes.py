@@ -444,3 +444,19 @@ def test_rollup_cascade_reaggregates_hourly_partials(spark):
     aggs = [ln for ln in final.splitlines() if "HashAggregate(" in ln]
     assert len(aggs) == 4 and all("*(" in ln for ln in aggs)
     assert any("as bigint)), count(1)" in ln for ln in aggs)
+
+
+def test_pixels_leaves_decode_each_payload_once(spark):
+    """Every ``*_pixels`` leaf reads dims, the resample and (with_f0) the
+    histogram feature from one resample_images pass: one Python worker
+    stage per payload, no second operator joined back on media_id and so
+    no broadcast of its result."""
+    import __spark_entry__ as entry
+    leaves = [n for n in entry.queries() if n.endswith("_pixels")]
+    assert len(leaves) == 17
+    for name in leaves:
+        nodes = [ln.lstrip(" :|+-").split(" ")[0]
+                 for ln in _query_plan(spark, name).splitlines()]
+        assert nodes.count("MapInPandas") == 1, name
+        assert "BroadcastExchange" not in nodes, name
+        assert not set(_JOINS) & set(nodes), name

@@ -149,7 +149,7 @@ def test_resample_images_operator(spark):
 
 def test_resample_images_undecodable_yields_nulls(spark):
     """Corrupt/foreign payloads produce null decode fields, never a task
-    failure, and keep the byte-histogram fallback in extract_features."""
+    failure, and keep the byte-histogram fallback in both operators."""
     import pandas as pd
     from docext_spark.operators.multimodal import (extract_features,
                                                    resample_images)
@@ -163,6 +163,11 @@ def test_resample_images_undecodable_yields_nulls(spark):
     assert got[0]["format"] == "jpeg" and got[0]["px_checksum"] is None
     assert got[1]["format"] is None and got[1]["new_width"] is None
     assert got[2]["format"] == "png" and got[2]["px_checksum"] is None
+    for mid, _, payload in rows:
+        assert got[mid]["feature_src"] == "bytes"
+        assert got[mid]["feature"] == pytest.approx(
+            [sum(b >> 5 == k for b in payload) / len(payload)
+             for k in range(8)], abs=1e-6)
     feats = {r["media_id"]: r["feature_src"]
              for r in extract_features(media).collect()}
     assert feats == {0: "bytes", 1: "bytes", 2: "bytes"}
